@@ -243,12 +243,13 @@ object Bench {
     // records truncated to an unparseable tail, so cross-round per-query
     // tables kept depending on a lossy channel. The same JSON line is
     // written to bench_rNN.json in the repo root; the round number comes
-    // from SPARK_GRAFT_ROUND or, for the driver's env-less run, from the
-    // committed BENCH_rNN.json artifacts (max + 1 = the round in flight).
+    // from SPARK_GRAFT_ROUND or, for an env-less run, from the committed
+    // BENCH_rNN.json and plain bench_rNN.json artifacts (max + 1 = the
+    // round in flight). An existing record is never overwritten.
     try {
       val repo = java.nio.file.Paths.get("/root/repo")
       val round = sys.env.get("SPARK_GRAFT_ROUND").map(_.toInt).getOrElse {
-        val rx = "BENCH_r(\\d+)\\.json".r
+        val rx = "(?:BENCH|bench)_r(\\d{2,})\\.json".r
         val listing = java.nio.file.Files.list(repo)
         val prev =
           try {
@@ -260,7 +261,8 @@ object Bench {
       }
       java.nio.file.Files.write(
         repo.resolve(f"bench_r$round%02d.json"),
-        (line + "\n").getBytes("UTF-8"))
+        (line + "\n").getBytes("UTF-8"),
+        java.nio.file.StandardOpenOption.CREATE_NEW)
     } catch {
       case t: Throwable => // the artifact must never fail the bench run
         System.err.println(s"BENCH artifact write skipped: $t")

@@ -219,8 +219,8 @@ object Queries {
       Dedup.appendFingerprintIndex(idx,
         corpus.join(doomed.filter(col("doc_id") % 2 === 0),
           Seq("doc_id"), "left_semi"))
-      Dedup.compactFingerprintIndex(s, idx, below = Some(1))
-      Dedup.vacuumFingerprintIndex(s, idx)
+      Dedup.index.compact(s, idx, below = Some(1))
+      Dedup.index.vacuum(s, idx)
     }
     idx
   }
@@ -259,9 +259,9 @@ object Queries {
         corpus.join(doomed.filter(col("doc_id") % 2 === 0),
           Seq("doc_id"), "left_semi"),
         commitTs = Some(4000L))
-      Dedup.compactFingerprintIndex(s, idx, below = Some(1),
+      Dedup.index.compact(s, idx, below = Some(1),
         commitTs = Some(5000L))
-      Dedup.vacuumFingerprintIndex(s, idx)
+      Dedup.index.vacuum(s, idx)
     }
     idx
   }
@@ -953,7 +953,7 @@ object Queries {
         Ann.writeCpIndex(corpus.filter(col("vec_id") % 11 =!= 5), idx,
           threshold = 0.4, hashesPerBand = k, bands = b)
         Ann.appendCpIndex(idx, slice.filter(col("vec_id") % 13 =!= 7))
-        Ann.compactCpIndex(s, idx)
+        Ann.index.compact(s, idx)
         Ann.appendCpIndex(idx, slice.filter(col("vec_id") % 13 === 7))
       }
       Ann.cosinePairsCpIndexed(idx, incoming, threshold = 0.4)
@@ -971,7 +971,7 @@ object Queries {
           corpus.filter(col("doc_id") % 11 =!= 5), idx, threshold = 0.6)
         TextIndex.appendJaccardIndex(idx,
           corpus.filter(col("doc_id") % 11 === 5))
-        TextIndex.compactJaccardIndex(s, idx)
+        TextIndex.index.compact(s, idx)
       }
       TextIndex.jaccardPairsIndexed(idx, incoming, threshold = 0.6)
     }),
@@ -993,8 +993,8 @@ object Queries {
           .filter(col("kept")).select("doc_id")
         Dedup.appendFingerprintIndex(idx,
           slice.join(kept, Seq("doc_id"), "left_semi"))
-        Dedup.compactFingerprintIndex(s, idx)
-        Dedup.vacuumFingerprintIndex(s, idx)
+        Dedup.index.compact(s, idx)
+        Dedup.index.vacuum(s, idx)
       }
       Dedup.dedupAgainstIndex(idx, incoming)
         .select(col("doc_id"), col("fp"), col("owner"),
@@ -1092,7 +1092,7 @@ object Queries {
       SharedStage.buildOnce(idx, s"bm25indexapp|$dir") {
         Bm25.writeBm25Index(d.filter(col("doc_id") % 11 =!= 5), idx)
         Bm25.appendBm25Index(idx, d.filter(col("doc_id") % 11 === 5))
-        Bm25.compactBm25Index(s, idx)
+        Bm25.index.compact(s, idx)
       }
       Bm25.topKIndexed(s, idx, Seq("spark", "hash", "window"), k = 50)
     }),
@@ -1138,8 +1138,8 @@ object Queries {
         Dedup.appendFingerprintIndex(idx,
           corpus.join(doomed.filter(col("doc_id") % 2 === 0),
             Seq("doc_id"), "left_semi"))
-        Dedup.compactFingerprintIndex(s, idx)
-        Dedup.vacuumFingerprintIndex(s, idx)
+        Dedup.index.compact(s, idx)
+        Dedup.index.vacuum(s, idx)
       }
       Dedup.dedupAgainstIndex(idx, incoming)
         .select(col("doc_id"), col("fp"), col("owner"),
@@ -1164,8 +1164,8 @@ object Queries {
         Bm25.appendBm25Index(idx,
           d.filter(col("doc_id") % 13 === 2 && col("doc_id") % 2 === 0)
             .select("doc_id", "text"))
-        Bm25.compactBm25Index(s, idx)
-        Bm25.vacuumBm25Index(s, idx)
+        Bm25.index.compact(s, idx)
+        Bm25.index.vacuum(s, idx)
       }
       Bm25.topKIndexed(s, idx, Seq("spark", "hash", "window"), k = 50)
     }),
@@ -1189,8 +1189,8 @@ object Queries {
         TextIndex.appendJaccardIndex(idx,
           corpus.join(doomed.filter(col("doc_id") % 2 === 0),
             Seq("doc_id"), "left_semi"))
-        TextIndex.compactJaccardIndex(s, idx)
-        TextIndex.vacuumJaccardIndex(s, idx)
+        TextIndex.index.compact(s, idx)
+        TextIndex.index.vacuum(s, idx)
       }
       TextIndex.jaccardPairsIndexed(idx, incoming, threshold = 0.6)
     }),
@@ -1224,8 +1224,8 @@ object Queries {
         Ann.appendCpIndex(idx,
           corpus.filter(col("vec_id") % 13 === 2 &&
             col("vec_id") % 2 === 0))
-        Ann.compactCpIndex(s, idx)
-        Ann.vacuumCpIndex(s, idx)
+        Ann.index.compact(s, idx)
+        Ann.index.vacuum(s, idx)
       }
       Ann.cosinePairsCpIndexed(idx, incoming, threshold = 0.4)
     }),
@@ -1250,8 +1250,8 @@ object Queries {
         Multimodal.appendDHashIndex(idx,
           corpus.filter(col("doc_id") % 13 === 2 &&
             col("doc_id") % 3 === 0 && col("doc_id") % 2 === 0))
-        Multimodal.compactDHashIndex(s, idx)
-        Multimodal.vacuumDHashIndex(s, idx)
+        Multimodal.index.compact(s, idx)
+        Multimodal.index.vacuum(s, idx)
       }
       Multimodal.imageDHashNearIndexed(idx, incoming)
     }),
@@ -1380,8 +1380,8 @@ object Queries {
         TextDedup.appendDeconIndex(idx,
           bench.join(doomed.filter(col("doc_id") % 3 === 0),
             Seq("doc_id"), "left_semi"))
-        TextDedup.compactDeconIndex(s, idx)
-        TextDedup.vacuumDeconIndex(s, idx)
+        TextDedup.index.compact(s, idx)
+        TextDedup.index.vacuum(s, idx)
       }
       TextDedup.decontaminateAgainstIndex(corpus, idx)
         .orderBy(col("doc_id"))
@@ -1582,7 +1582,7 @@ object Queries {
     // one id-projected scan at horizon 0.
     "q187_text_changes_between" -> ((s, dir) => {
       val idx = txtAsOfIndexDir(s, dir)
-      TextIndex.docChanges(s, idx, fromEpoch = 0, toEpoch = 2)
+      TextIndex.index.changes(s, idx, fromEpoch = 0, toEpoch = 2)
         .orderBy(col("change"), col("doc_id"))
     }),
 
@@ -1673,7 +1673,7 @@ object Queries {
       val (_, incoming) = textArrival(s, dir)
       val idx = fpTsIndexDir(s, dir)
       val resolved = Seq(2500L, 3500L, 9999L)
-        .map(ts => ts -> Dedup.fingerprintEpochAtTime(s, idx, ts))
+        .map(ts => ts -> Dedup.index.epochAtTime(s, idx, ts))
       require(resolved == Seq(2500L -> 1, 3500L -> 2, 9999L -> 4),
         "q192 premise violated: the injected commit timestamps must " +
           s"resolve to epochs 1/2/4, got $resolved — the artifact's " +
@@ -1707,7 +1707,7 @@ object Queries {
     }),
 
     // ---- The TEXT family's CDC consumer (r15, r14 VERDICT #4 —
-    // closing the loop docChanges opened): yesterday's near-dup
+    // closing the loop index.changes opened): yesterday's near-dup
     // verdicts (the q182 artifact at horizon 0) patch to the serving
     // state by dropping pairs whose stored side was removed and
     // re-probing the shard against ONLY the delta docs' stored bands
@@ -1980,8 +1980,8 @@ object Queries {
           corpus.filter(col("doc_id") % 11 =!= 5), idx)
         Multimodal.appendDHashIndex(idx,
           corpus.filter(col("doc_id") % 11 === 5))
-        Multimodal.compactDHashIndex(s, idx)
-        Multimodal.vacuumDHashIndex(s, idx)
+        Multimodal.index.compact(s, idx)
+        Multimodal.index.vacuum(s, idx)
       }
       Multimodal.imageDHashNearIndexed(idx, incoming)
     }),

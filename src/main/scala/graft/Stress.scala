@@ -513,8 +513,8 @@ object Stress {
         org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf)
       }
       CacheScope.withScope {
-        operators.Dedup.compactFingerprintIndex(spark, compacted)
-        operators.Dedup.vacuumFingerprintIndex(spark, compacted)
+        operators.Dedup.index.compact(spark, compacted)
+        operators.Dedup.index.vacuum(spark, compacted)
       }
       def fpProbeAt(idx: String): () => DataFrame = () =>
         operators.Dedup.dedupAgainstIndex(idx, txtShard())
@@ -592,11 +592,9 @@ object Stress {
           CacheScope.withScope {
             operators.TextIndex.appendJaccardIndex(idx,
               docs.filter(col("doc_id") % nShards === k))
-            policy.housekeep(spark, idx, k - 1L, "stress_pol",
-              "writeJaccardIndex")(
-              below => operators.TextIndex.compactJaccardIndex(spark,
-                idx, below),
-              () => operators.TextIndex.vacuumJaccardIndex(spark, idx))
+            val fam = operators.TextIndex.index
+            policy.housekeep(spark, idx, k - 1L, "stress_pol", fam.writer)(
+              fam.compact(spark, idx, _), () => fam.vacuum(spark, idx))
           }
         }
         (System.nanoTime() - t0) / 1e9
@@ -674,8 +672,8 @@ object Stress {
         org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf)
       }
       CacheScope.withScope {
-        operators.Dedup.compactFingerprintIndex(spark, folded10)
-        operators.Dedup.vacuumFingerprintIndex(spark, folded10)
+        operators.Dedup.index.compact(spark, folded10)
+        operators.Dedup.index.vacuum(spark, folded10)
       }
       def fpDelProbe(idx: String): () => DataFrame = () =>
         operators.Dedup.dedupAgainstIndex(idx, txtShard())
@@ -729,9 +727,9 @@ object Stress {
         f"t_asof50=$tMid%.2fs t_serving=$tServ%.2fs " +
         f"depth_ratio=${tServ / tEarly}%.2f")
       CacheScope.withScope {
-        operators.Dedup.compactFingerprintIndex(spark, idx,
+        operators.Dedup.index.compact(spark, idx,
           below = Some(95))
-        operators.Dedup.vacuumFingerprintIndex(spark, idx)
+        operators.Dedup.index.vacuum(spark, idx)
       }
       val tServC = probeAt(None)
       val tRetained = probeAt(Some(97))

@@ -684,11 +684,19 @@ object Ann {
   private def hintIfSmall(df: DataFrame, estRows: Long): DataFrame =
     if (estRows <= MaxBroadcastBandRows) broadcast(df) else df
 
-  /** The cross-polytope index artifact's layout version: bumped if the
-    * hash family's rotations/packing ever change, so an old artifact
-    * REFUSES against new probe code instead of silently losing recall.
+  /** The cross-polytope family on the shared lifecycle. The id is
+    * bumped if the hash family's rotations/packing ever change, so an
+    * old artifact REFUSES against new probe code instead of silently
+    * losing recall. Compaction keeps the frozen parameters (k, bands,
+    * dim, counts ride the carried meta), so every probe and premise is
+    * unchanged by construction (q161 gate).
     */
-  private[graft] val CpIndexFamily = "cplsh-fht-v1"
+  val index: graft.sources.IndexFamily = graft.sources.IndexFamily(
+    "cplsh-fht-v1", "writeCpIndex",
+    "probing across hash versions silently loses recall",
+    Seq(graft.sources.EpochStore.CompactTable("vectors", Some("vec_id")),
+      graft.sources.EpochStore.CompactTable("bands", Some("vec_id"))),
+    "vectors", "vec_id")
 
   /** Write the corpus half of incremental dedup as a stored artifact:
     * band rows, vectors, and derived parameters persisted as parquet,
@@ -757,7 +765,7 @@ object Ann {
     val bandRows = v.select(col("vec_id"),
       posexplode(expr(s"graft_cplsh(v, $k, $nBands, $dim)"))
         .as(Seq("band_id", "code")))
-    val meta = Seq((CpIndexFamily, k, nBands, dim, targetMiss, threshold,
+    val meta = Seq((index.id, k, nBands, dim, targetMiss, threshold,
         totalCount, epoch, paramsDerived))
       .toDF("family", "k", "bands", "dim", "target_miss", "threshold",
         "corpus_count", "epoch", "params_derived")
@@ -776,21 +784,14 @@ object Ann {
       targetMiss: Double, dim: Int, count: Long, epoch: Int,
       floor: Int, paramsDerived: Boolean)
 
-  private def cpIndexState(spark: org.apache.spark.sql.SparkSession,
+  private def cpState(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, who: String, asOf: Option[Int] = None)
       : CpIndexState = {
     // completeness = the meta READS (EpochStore's contract, r11
     // review): the highest READABLE meta serves; each lower epoch was
     // admitted by the same rule when it was current
-    val st = graft.sources.EpochStore.servingStateMaybeAt(spark,
-      indexDir, asOf, who, "writeCpIndex")
+    val st = index.serving(spark, indexDir, who, asOf)
     val meta = st.meta
-    val family = meta.getAs[String]("family")
-    require(family == CpIndexFamily,
-      s"$who: artifact at $indexDir was hashed by " +
-        s"family '$family' but this code probes '$CpIndexFamily' — " +
-        "rebuild the index; probing across hash versions silently " +
-        "loses recall")
     CpIndexState(meta.getAs[Int]("k"), meta.getAs[Int]("bands"),
       meta.getAs[Double]("threshold"), meta.getAs[Double]("target_miss"),
       meta.getAs[Int]("dim"), meta.getAs[Long]("corpus_count"), st.epoch,
@@ -807,7 +808,7 @@ object Ann {
       indexDir: String, who: String, threshold: Double, dim: Int,
       targetMiss: Double, asOf: Option[Int] = None)
       : (Int, Int, Int, Int) = {
-    val st = cpIndexState(spark, indexDir, who, asOf)
+    val st = cpState(spark, indexDir, who, asOf)
     def drift(name: String, stored: Any, asked: Any): Unit =
       require(stored == asked,
         s"$who: $name drift — artifact at $indexDir " +
@@ -847,29 +848,13 @@ object Ann {
     * the count; at worst the probe pays k-toolarge hash cost, and the
     * rebuild decision is the caller's. Loud premises: one id space;
     * every id CURRENTLY LIVE. A deleted id may be re-appended
-    * afterwards; physical reclaim = [[compactCpIndex]] +
-    * [[vacuumCpIndex]]. Single writer.
+    * afterwards; physical reclaim = `index.compact` + `index.vacuum`
+    * ([[graft.sources.IndexFamily]]). Single writer.
     */
-  /** DIFFERENTIAL read (r14 — the fp/text convention on the cp
-    * family): which stored vectors changed between two retained
-    * horizons — `('added', vec_id)` committed in `(from, to]` and
-    * live at `to`, `('removed', vec_id)` tombstoned in the window and
-    * live at `from` — so a downstream consumer re-verdicts only the
-    * delta. Bounds/floor refusals as in
-    * [[graft.sources.EpochStore.addedBetween]]; payloads never read.
-    */
-  def vecChanges(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, fromEpoch: Int, toEpoch: Int): DataFrame = {
-    cpIndexState(spark, indexDir, "vecChanges")
-    graft.sources.EpochStore.idChangesBetween(spark, indexDir,
-      "vectors", "vec_id", fromEpoch, toEpoch, "vecChanges",
-      "writeCpIndex")
-  }
-
   def deleteFromCpIndex(indexDir: String, ids: DataFrame,
       commitTs: Option[Long] = None): Unit = {
     val spark = ids.sparkSession
-    val st = cpIndexState(spark, indexDir, "deleteFromCpIndex")
+    val st = cpState(spark, indexDir, "deleteFromCpIndex")
     import spark.implicits._
     graft.sources.EpochStore.deleteEpochChecked(indexDir,
       "deleteFromCpIndex", ids, "vec_id",
@@ -879,7 +864,7 @@ object Ann {
         "retraction must name stored vectors (already-deleted or " +
         "never-stored ids refuse loudly, they do not no-op).",
       Seq.empty,
-      n => Seq((CpIndexFamily, st.k, st.bands, st.dim, st.targetMiss,
+      n => Seq((index.id, st.k, st.bands, st.dim, st.targetMiss,
           st.threshold, st.count - n, st.epoch + 1, st.paramsDerived))
         .toDF("family", "k", "bands", "dim", "target_miss",
           "threshold", "corpus_count", "epoch", "params_derived"),
@@ -923,7 +908,7 @@ object Ann {
       commitTs: Option[Long] = None): Unit = {
     val spark = more.sparkSession
     GraftFunctions.register(spark)
-    val st = cpIndexState(spark, indexDir, "appendCpIndex")
+    val st = cpState(spark, indexDir, "appendCpIndex")
     val v = graft.CacheScope.scoped(more.select(col("vec_id"),
       VecFns.toDouble(col("embedding")).as("v")))
     val nNew = requireDistinctIds(v, "appendCpIndex",
@@ -961,54 +946,6 @@ object Ann {
     writeEpoch(spark, indexDir, st.epoch + 1, v, st.k, st.bands, st.dim,
       st.targetMiss, st.threshold, total, st.paramsDerived, st.floor,
       commitTs = commitTs)
-  }
-
-  /** COMPACT the artifact — the fourth quarter of the lifecycle
-    * (write → probe → search → append → compact, r11 VERDICT #1): a
-    * production cadence appends one epoch per micro-batch (q156), so
-    * a long-lived index accumulates hundreds of small epochs and every
-    * probe pays their file fan-in plus [[graft.sources.EpochStore
-    * .servingState]]'s O(epochs) meta walk. Compaction rewrites the
-    * live row set into ONE fresh epoch under the same frozen
-    * parameters and meta-last/torn-safe discipline (the family meta —
-    * k, bands, dim, counts — is carried verbatim: compaction moves
-    * bytes, never rows, so every probe and premise is unchanged by
-    * construction, and the q161 gate pins it). Appends continue after
-    * a compaction (the floor carries forward); superseded epochs stay
-    * on disk until [[vacuumCpIndex]]. Returns false when the artifact
-    * is already a single live epoch. Single writer, like append.
-    */
-  def compactCpIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, below: Option[Int] = None,
-      commitTs: Option[Long] = None): Boolean = {
-    cpIndexState(spark, indexDir, "compactCpIndex") // family refusal
-    graft.sources.EpochStore.compactMaybeBelow(spark, indexDir,
-      Seq(graft.sources.EpochStore.CompactTable("vectors", Some("vec_id")),
-        graft.sources.EpochStore.CompactTable("bands", Some("vec_id"))),
-      below, "compactCpIndex", "writeCpIndex", commitTs)
-  }
-
-  /** Resolve a caller-clock TIMESTAMP to this artifact's retained read
-    * horizon (r15 — the `Dedup.fingerprintEpochAtTime` convention on
-    * the cp family). Refusals: see
-    * [[graft.sources.EpochStore.servingStateAtTime]].
-    */
-  def cpEpochAtTime(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, ts: Long): Int = {
-    cpIndexState(spark, indexDir, "cpEpochAtTime")
-    graft.sources.EpochStore.servingStateAtTime(spark, indexDir, ts,
-      "cpEpochAtTime", "writeCpIndex").epoch
-  }
-
-  /** Reclaim epochs a [[compactCpIndex]] superseded — see
-    * [[graft.sources.EpochStore.vacuum]] (safe against readers of the
-    * current serving state; quiesce pre-compaction probes first).
-    */
-  def vacuumCpIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, graceMs: Long = 0L): Unit = {
-    cpIndexState(spark, indexDir, "vacuumCpIndex") // family refusal
-    graft.sources.EpochStore.vacuum(spark, indexDir,
-      Seq("vectors", "bands"), "vacuumCpIndex", "writeCpIndex", graceMs)
   }
 
   /** Probe a [[writeCpIndex]] artifact with an arriving shard — the

@@ -157,11 +157,28 @@ object Bm25 {
   // through an append + compaction). Disjointness is the same one-id-
   // space premise every index family refuses on.
 
-  /** Artifact layout version: bumped if the tokenizer (whitespace
-    * split) or the posting schema ever change — scoring across
-    * tokenizer versions silently mis-weights every term.
+  /** The BM25 family on the shared lifecycle. The id is bumped if the
+    * tokenizer (whitespace split) or the posting schema ever change.
+    * Compaction turns per-epoch df rows for a term into multiple rows
+    * in one epoch, which the probe's sum-across-rows already
+    * aggregates, so it moves bytes, never scores. Changes report the
+    * doc grain (postings rows are an implementation detail; a
+    * re-scoring consumer re-fetches exactly these docs).
     */
-  private[graft] val Bm25IndexFamily = "bm25-ws-v1"
+  val index: graft.sources.IndexFamily = graft.sources.IndexFamily(
+    "bm25-ws-v1", "writeBm25Index",
+    "scoring across tokenizer versions silently mis-weights every term",
+    Seq(graft.sources.EpochStore.CompactTable("postings", Some("doc_id")),
+      graft.sources.EpochStore.CompactTable("docs", Some("doc_id")),
+      // per-epoch df rows are an ADDITIVE aggregate, not id-keyed:
+      // tombstones never suppress them (deletes wrote negative rows
+      // instead); the rewrite re-sums per term so those negatives
+      // physically cancel, and exact zeros (a term fully retracted)
+      // drop — sums, which are all any probe consumes, are unchanged
+      graft.sources.EpochStore.CompactTable("dfs", None,
+        d => d.groupBy(col("term")).agg(sum(col("df")).as("df"))
+          .filter(col("df") =!= 0))),
+    "docs", "doc_id")
 
   /** The tokenized corpus half: postings (term, doc_id, tf, dl —
     * dl denormalized so scoring never joins a lengths table) and the
@@ -188,7 +205,7 @@ object Bm25 {
     import spark.implicits._
     val dfs = postings.groupBy(col("term"))
       .agg(count(lit(1)).as("df"))
-    val meta = Seq((Bm25IndexFamily, nDocs, sumDl, epoch))
+    val meta = Seq((index.id, nDocs, sumDl, epoch))
       .toDF("family", "n_docs", "sum_dl", "epoch")
     graft.sources.EpochStore.writeEpoch(dir, epoch,
       Seq("postings" -> postings, "docs" -> lengths, "dfs" -> dfs),
@@ -225,16 +242,10 @@ object Bm25 {
   private case class Bm25IndexState(nDocs: Long, sumDl: Long,
       epoch: Int, floor: Int)
 
-  private def bm25IndexState(spark: org.apache.spark.sql.SparkSession,
+  private def bm25State(spark: org.apache.spark.sql.SparkSession,
       dir: String, who: String, asOf: Option[Int] = None)
       : Bm25IndexState = {
-    val st = graft.sources.EpochStore.servingStateMaybeAt(spark, dir,
-      asOf, who, "writeBm25Index")
-    val family = st.meta.getAs[String]("family")
-    require(family == Bm25IndexFamily,
-      s"$who: artifact at $dir was tokenized by family '$family' but " +
-        s"this code scores '$Bm25IndexFamily' — rebuild; scoring " +
-        "across tokenizer versions silently mis-weights every term")
+    val st = index.serving(spark, dir, who, asOf)
     Bm25IndexState(st.meta.getAs[Long]("n_docs"),
       st.meta.getAs[Long]("sum_dl"), st.epoch, st.floor)
   }
@@ -251,7 +262,7 @@ object Bm25 {
   def appendBm25Index(indexDir: String, moreDocs: DataFrame,
       commitTs: Option[Long] = None): Unit = {
     val spark = moreDocs.sparkSession
-    val st = bm25IndexState(spark, indexDir, "appendBm25Index")
+    val st = bm25State(spark, indexDir, "appendBm25Index")
     val d = graft.CacheScope.scoped(moreDocs.select("doc_id", "text"))
     // dup/Σdl aggregate + id-clash premises fused into ONE action
     // (r15 — Checks): each was its own driver job at drain cadence
@@ -293,26 +304,14 @@ object Bm25 {
     * premises: one id space; every id CURRENTLY LIVE in the stored
     * docs table. A deleted id may be re-appended afterwards (its new
     * postings bring new positive df rows — the sums compose); physical
-    * reclaim = [[compactBm25Index]] (which re-sums df so the negatives
-    * cancel) + [[vacuumBm25Index]]. Single writer.
+    * reclaim = `index.compact` (which re-sums df so the negatives
+    * cancel) + `index.vacuum` ([[graft.sources.IndexFamily]]). Single
+    * writer.
     */
-  /** DIFFERENTIAL read (r14 — the fp/text convention on the retrieval
-    * family): which stored DOCS changed between two retained horizons
-    * as `('added'|'removed', doc_id)` — the doc grain is the
-    * consumer-meaningful one (postings rows are an implementation
-    * detail; a re-scoring consumer re-fetches exactly these docs).
-    */
-  def docChanges(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, fromEpoch: Int, toEpoch: Int): DataFrame = {
-    bm25IndexState(spark, indexDir, "docChanges")
-    graft.sources.EpochStore.idChangesBetween(spark, indexDir, "docs",
-      "doc_id", fromEpoch, toEpoch, "docChanges", "writeBm25Index")
-  }
-
   def deleteFromBm25Index(indexDir: String, ids: DataFrame,
       commitTs: Option[Long] = None): Unit = {
     val spark = ids.sparkSession
-    val st = bm25IndexState(spark, indexDir, "deleteFromBm25Index")
+    val st = bm25State(spark, indexDir, "deleteFromBm25Index")
     val del = graft.CacheScope.scoped(
       ids.select(col("doc_id").cast("long").as("id")))
     val counts = del.agg(count(lit(1)).as("n"),
@@ -341,7 +340,7 @@ object Bm25 {
       .groupBy(col("term"))
       .agg((lit(0L) - count(lit(1))).as("df"))
     import spark.implicits._
-    val meta = Seq((Bm25IndexFamily, st.nDocs - hit.getLong(0),
+    val meta = Seq((index.id, st.nDocs - hit.getLong(0),
         st.sumDl - hit.getLong(1), st.epoch + 1))
       .toDF("family", "n_docs", "sum_dl", "epoch")
     graft.sources.EpochStore.writeDeleteEpoch(indexDir, st.epoch + 1,
@@ -372,7 +371,7 @@ object Bm25 {
       indexDir: String, queryTerms: Seq[String], k: Int,
       asOf: Option[Int] = None): DataFrame =
     topKIndexedState(spark, indexDir, queryTerms, k,
-      bm25IndexState(spark, indexDir, "topKIndexed", asOf))
+      bm25State(spark, indexDir, "topKIndexed", asOf))
 
   private def topKIndexedState(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, queryTerms: Seq[String], k: Int,
@@ -410,7 +409,7 @@ object Bm25 {
     */
   def topKPerQueryIndexed(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, queries: DataFrame, k: Int): DataFrame = {
-    val st = bm25IndexState(spark, indexDir, "topKPerQueryIndexed")
+    val st = bm25State(spark, indexDir, "topKPerQueryIndexed")
     val ad = st.sumDl / math.max(st.nDocs, 1L)
     // distinct query terms, pinned: feeds the postings pruning
     // semi-join, the df pruning, and the scoring fan-out
@@ -437,52 +436,5 @@ object Bm25 {
       .agg(sum(col("score_micro_t")).as("bm25_micro"))
       .withColumn("brank", row_number().over(w))
       .filter(col("brank") <= k)
-  }
-
-  /** COMPACT the artifact — live epochs rewritten into ONE fresh
-    * epoch, meta (cumulative N, Σdl) carried verbatim; per-epoch df
-    * rows for a term become multiple rows in one epoch, which the
-    * probe's sum-across-rows already aggregates, so compaction moves
-    * bytes, never scores. See [[graft.sources.EpochStore.compact]].
-    */
-  def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, below: Option[Int] = None,
-      commitTs: Option[Long] = None): Boolean = {
-    bm25IndexState(spark, indexDir, "compactBm25Index")
-    graft.sources.EpochStore.compactMaybeBelow(spark, indexDir,
-      Seq(graft.sources.EpochStore.CompactTable("postings",
-          Some("doc_id")),
-        graft.sources.EpochStore.CompactTable("docs", Some("doc_id")),
-        // per-epoch df rows are an ADDITIVE aggregate, not id-keyed:
-        // tombstones never suppress them (deletes wrote negative rows
-        // instead); the rewrite re-sums per term so those negatives
-        // physically cancel, and exact zeros (a term fully retracted)
-        // drop — sums, which are all any probe consumes, are unchanged
-        graft.sources.EpochStore.CompactTable("dfs", None,
-          d => d.groupBy(col("term")).agg(sum(col("df")).as("df"))
-            .filter(col("df") =!= 0))),
-      below, "compactBm25Index", "writeBm25Index", commitTs)
-  }
-
-  /** Resolve a caller-clock TIMESTAMP to this artifact's retained read
-    * horizon (r15 — the `Dedup.fingerprintEpochAtTime` convention on
-    * the BM25 family). Refusals: see
-    * [[graft.sources.EpochStore.servingStateAtTime]].
-    */
-  def bm25EpochAtTime(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, ts: Long): Int = {
-    bm25IndexState(spark, indexDir, "bm25EpochAtTime")
-    graft.sources.EpochStore.servingStateAtTime(spark, indexDir, ts,
-      "bm25EpochAtTime", "writeBm25Index").epoch
-  }
-
-  /** Reclaim epochs a [[compactBm25Index]] superseded — see
-    * [[graft.sources.EpochStore.vacuum]]. */
-  def vacuumBm25Index(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, graceMs: Long = 0L): Unit = {
-    bm25IndexState(spark, indexDir, "vacuumBm25Index")
-    graft.sources.EpochStore.vacuum(spark, indexDir,
-      Seq("postings", "docs", "dfs"), "vacuumBm25Index",
-      "writeBm25Index", graceMs)
   }
 }

@@ -66,11 +66,18 @@ object Dedup {
   // fingerprint is TextFns.fingerprint (normalize + md5, the q20
   // oracle-proven recipe), so the whole path is exactly gateable.
 
-  /** Artifact layout version (bumped if the normalize+md5 recipe ever
-    * changes — probing across fingerprint versions silently treats
-    * every stored doc as novel).
+  /** The fp family on the shared lifecycle. The id is bumped if the
+    * normalize+md5 recipe ever changes. Owners are disjoint across
+    * epochs by the append premise, so the compacted union IS the map —
+    * compaction moves bytes, never rows (q163 gate). Its id-only
+    * changes name owners; [[fingerprintIndexChanges]] carries the fp.
     */
-  private[graft] val FpIndexFamily = "fp-md5-norm-v1"
+  val index: graft.sources.IndexFamily = graft.sources.IndexFamily(
+    "fp-md5-norm-v1", "writeFingerprintIndex",
+    "probing across fingerprint versions treats every stored doc as " +
+      "novel",
+    Seq(graft.sources.EpochStore.CompactTable("fps", Some("owner"))),
+    "fps", "owner")
 
   /** (doc_id, fp) for the given docs. NULL text → NULL fp: such a doc
     * has no content to match and is always its own owner downstream.
@@ -110,7 +117,7 @@ object Dedup {
       allowAdditive: Boolean = false,
       commitTs: Option[Long] = None): Unit = {
     import spark.implicits._
-    val meta = Seq((FpIndexFamily, totalCount, epoch))
+    val meta = Seq((index.id, totalCount, epoch))
       .toDF("family", "corpus_count", "epoch")
     graft.sources.EpochStore.writeEpoch(dir, epoch,
       Seq("fps" -> owners), meta, floor,
@@ -132,16 +139,10 @@ object Dedup {
 
   private case class FpIndexState(floor: Int, epoch: Int, count: Long)
 
-  private def fpIndexState(spark: org.apache.spark.sql.SparkSession,
+  private def fpState(spark: org.apache.spark.sql.SparkSession,
       dir: String, who: String, asOf: Option[Int] = None)
       : FpIndexState = {
-    val st = graft.sources.EpochStore.servingStateMaybeAt(spark, dir,
-      asOf, who, "writeFingerprintIndex")
-    val family = st.meta.getAs[String]("family")
-    require(family == FpIndexFamily,
-      s"$who: artifact at $dir was fingerprinted by family '$family' " +
-        s"but this code probes '$FpIndexFamily' — rebuild; probing " +
-        "across fingerprint versions treats every stored doc as novel")
+    val st = index.serving(spark, dir, who, asOf)
     FpIndexState(st.floor, st.epoch,
       st.meta.getAs[Long]("corpus_count"))
   }
@@ -175,7 +176,7 @@ object Dedup {
     // has since appended, deleted, and re-appended. History retention
     // is the floor (compaction is snapshot expiry); same plan, pure
     // partition pruning.
-    val st = fpIndexState(spark, indexDir, "dedupAgainstIndex", asOf)
+    val st = fpState(spark, indexDir, "dedupAgainstIndex", asOf)
     probeAgainst(spark, indexDir, st, incoming, "dedupAgainstIndex")
   }
 
@@ -258,7 +259,7 @@ object Dedup {
       evolve: Seq[(String, Column)] = Seq.empty,
       commitTs: Option[Long] = None): Unit = {
     val spark = survivors.sparkSession
-    val st = fpIndexState(spark, indexDir, "appendFingerprintIndex")
+    val st = fpState(spark, indexDir, "appendFingerprintIndex")
     val f = graft.CacheScope.scoped(fps(survivors))
     val stored = graft.sources.EpochStore.tableThroughLive(spark,
       indexDir, "fps", "owner", st.floor, st.epoch)
@@ -309,7 +310,7 @@ object Dedup {
     */
   def storedOwners(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame = {
-    val st = fpIndexState(spark, indexDir, "storedOwners")
+    val st = fpState(spark, indexDir, "storedOwners")
     graft.sources.EpochStore.tableThroughLive(spark, indexDir, "fps",
       "owner", st.floor, st.epoch)
   }
@@ -332,7 +333,7 @@ object Dedup {
     */
   def fingerprintIndexChanges(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, fromEpoch: Int, toEpoch: Int): DataFrame = {
-    fpIndexState(spark, indexDir, "fingerprintIndexChanges")
+    fpState(spark, indexDir, "fingerprintIndexChanges")
     val added = graft.sources.EpochStore.addedBetween(spark, indexDir,
         "fps", "owner", fromEpoch, toEpoch, "fingerprintIndexChanges",
         "writeFingerprintIndex")
@@ -397,24 +398,6 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** Resolve a caller-clock TIMESTAMP to this artifact's retained read
-    * horizon (r15 — timestamp-based as-of, r14 VERDICT #3): the epoch
-    * a `dedupAgainstIndex(..., asOf = Some(_))` probe pins for "the
-    * index as it stood at `ts`" — the Delta `TIMESTAMP AS OF`
-    * composition on the fp family, resolved from the commit_ts values
-    * the mutations recorded (the caller supplies the clock, so gates
-    * stay deterministic — the P9 precedent). Refusals: an unstamped
-    * or partially-stamped history, a backwards clock, and a ts before
-    * the earliest retained horizon — see
-    * [[graft.sources.EpochStore.servingStateAtTime]].
-    */
-  def fingerprintEpochAtTime(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, ts: Long): Int = {
-    fpIndexState(spark, indexDir, "fingerprintEpochAtTime")
-    graft.sources.EpochStore.servingStateAtTime(spark, indexDir, ts,
-      "fingerprintEpochAtTime", "writeFingerprintIndex").epoch
-  }
-
   /** RETRACT stored documents (r13 — takedown / dedup retraction /
     * corrupted-shard replacement): one DELETE epoch tombstones the
     * given owner ids ([[graft.sources.EpochStore.writeDeleteEpoch]] —
@@ -426,13 +409,13 @@ object Dedup {
     * stored owner — retracting a doc that is not stored is a caller
     * bug, not a no-op. A tombstone names the PAST, so a deleted id may
     * be re-appended afterwards (it serves again); physical reclaim is
-    * [[compactFingerprintIndex]] + [[vacuumFingerprintIndex]], which
-    * fold the tombstones away. Single writer, like every mutation.
+    * `index.compact` + `index.vacuum` ([[graft.sources.IndexFamily]]),
+    * which fold the tombstones away. Single writer, like every mutation.
     */
   def deleteFromFingerprintIndex(indexDir: String, ids: DataFrame,
       commitTs: Option[Long] = None): Unit = {
     val spark = ids.sparkSession
-    val st = fpIndexState(spark, indexDir, "deleteFromFingerprintIndex")
+    val st = fpState(spark, indexDir, "deleteFromFingerprintIndex")
     import spark.implicits._
     graft.sources.EpochStore.deleteEpochChecked(indexDir,
       "deleteFromFingerprintIndex", ids, "doc_id",
@@ -442,42 +425,8 @@ object Dedup {
         "retraction must name stored docs (already-deleted or " +
         "never-stored ids refuse loudly, they do not no-op).",
       Seq.empty,
-      n => Seq((FpIndexFamily, st.count - n, st.epoch + 1))
+      n => Seq((index.id, st.count - n, st.epoch + 1))
         .toDF("family", "corpus_count", "epoch"),
       st.epoch + 1, st.floor, commitTs)
-  }
-
-  /** COMPACT the artifact — the (fp, owner) map's live epochs rewritten
-    * into ONE fresh epoch, meta last (see
-    * [[graft.sources.EpochStore.compact]]): the q164 streaming cadence
-    * appends one epoch per arriving shard, and every probe's columnar
-    * scan pays the small-file fan-in forever. Owners are disjoint
-    * across epochs by the append premise, so the union IS the map —
-    * compaction moves bytes, never rows (q163 gate). Returns false
-    * when already a single live epoch. Single writer; reclaim
-    * superseded epochs via [[vacuumFingerprintIndex]].
-    *
-    * `below` (r14): Some(h) compacts PARTIALLY — history up to epoch
-    * h folds into a checkpoint while every as-of horizon in
-    * [h, serving] keeps serving bit-for-bit (the q185 gate); see
-    * [[graft.sources.EpochStore.compactBelow]].
-    */
-  def compactFingerprintIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, below: Option[Int] = None,
-      commitTs: Option[Long] = None): Boolean = {
-    fpIndexState(spark, indexDir, "compactFingerprintIndex")
-    graft.sources.EpochStore.compactMaybeBelow(spark, indexDir,
-      Seq(graft.sources.EpochStore.CompactTable("fps", Some("owner"))),
-      below, "compactFingerprintIndex", "writeFingerprintIndex",
-      commitTs)
-  }
-
-  /** Reclaim epochs a [[compactFingerprintIndex]] superseded — see
-    * [[graft.sources.EpochStore.vacuum]]. */
-  def vacuumFingerprintIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, graceMs: Long = 0L): Unit = {
-    fpIndexState(spark, indexDir, "vacuumFingerprintIndex")
-    graft.sources.EpochStore.vacuum(spark, indexDir, Seq("fps"),
-      "vacuumFingerprintIndex", "writeFingerprintIndex", graceMs)
   }
 }

@@ -670,11 +670,18 @@ object Multimodal {
   // once on graft.sources.EpochStore; arriving shards decode ONLY
   // themselves.)
 
-  /** Artifact layout version: bumped if the grid convention (8×9 point
-    * samples), the packing, or the 4×16 banding ever change — probing
-    * across hash versions silently loses recall.
+  /** The dHash image family on the shared lifecycle. The id is bumped
+    * if the grid convention (8×9 point samples), the packing, or the
+    * 4×16 banding ever change. Changes report `media_id` only — the
+    * delta a takedown-audit consumer re-checks without a single
+    * re-decode (hashes and raster bytes never read).
     */
-  private[graft] val DHashIndexFamily = "dhash-8x9-b4x16-v1"
+  val index: graft.sources.IndexFamily = graft.sources.IndexFamily(
+    "dhash-8x9-b4x16-v1", "writeDHashIndex",
+    "probing across hash versions silently loses recall",
+    Seq(graft.sources.EpochStore.CompactTable("hashes", Some("media_id")),
+      graft.sources.EpochStore.CompactTable("bands", Some("media_id"))),
+    "hashes", "media_id")
 
   /** Broadcast cap for an incoming shard's band rows: (long, int, long)
     * ≈ the cp band-row width the 8M-row ≈ ~800 MB heap argument was
@@ -723,7 +730,7 @@ object Multimodal {
       dir: String, epoch: Int, hashes: DataFrame, totalCount: Long,
       floor: Int = 0, commitTs: Option[Long] = None): Unit = {
     import spark.implicits._
-    val meta = Seq((DHashIndexFamily, 4, totalCount, epoch))
+    val meta = Seq((index.id, 4, totalCount, epoch))
       .toDF("family", "bands", "corpus_count", "epoch")
     graft.sources.EpochStore.writeEpoch(dir, epoch,
       Seq("hashes" -> hashes.select("media_id", "dhash_hi", "dhash_lo"),
@@ -733,16 +740,10 @@ object Multimodal {
 
   private case class DHashIndexState(count: Long, epoch: Int, floor: Int)
 
-  private def dHashIndexState(spark: org.apache.spark.sql.SparkSession,
+  private def dHashState(spark: org.apache.spark.sql.SparkSession,
       dir: String, who: String, asOf: Option[Int] = None)
       : DHashIndexState = {
-    val st = graft.sources.EpochStore.servingStateMaybeAt(spark, dir,
-      asOf, who, "writeDHashIndex")
-    val family = st.meta.getAs[String]("family")
-    require(family == DHashIndexFamily,
-      s"$who: artifact at $dir was hashed by family '$family' but " +
-        s"this code probes '$DHashIndexFamily' — rebuild; probing " +
-        "across hash versions silently loses recall")
+    val st = index.serving(spark, dir, who, asOf)
     DHashIndexState(st.meta.getAs[Long]("corpus_count"), st.epoch,
       st.floor)
   }
@@ -782,7 +783,7 @@ object Multimodal {
   def appendDHashIndex(indexDir: String, more: DataFrame,
       commitTs: Option[Long] = None): Unit = {
     val spark = more.sparkSession
-    val st = dHashIndexState(spark, indexDir, "appendDHashIndex")
+    val st = dHashState(spark, indexDir, "appendDHashIndex")
     val h = graft.CacheScope.scoped(dHashes(more).toDF())
     // dup + id-clash premises fused into ONE action (r15 — Checks);
     // the decode cost lands once either way (h is cache-scoped)
@@ -826,7 +827,7 @@ object Multimodal {
     // asOf (r13): verdict against the corpus exactly as that epoch's
     // commit served it — the banding is parameter-free, so every
     // horizon is probe-valid; same plan, pure partition pruning
-    val st = dHashIndexState(spark, indexDir, "imageDHashNearIndexed",
+    val st = dHashState(spark, indexDir, "imageDHashNearIndexed",
       asOf)
     val inc = graft.CacheScope.scoped(dHashes(incoming).toDF())
     val storedHashes = graft.sources.EpochStore.tableThroughLive(spark,
@@ -881,29 +882,14 @@ object Multimodal {
     * parameter currency exists to re-derive (the 4×16 banding is
     * fixed). Loud premises: one id space; every id CURRENTLY LIVE. A
     * deleted id may be re-appended afterwards; physical reclaim =
-    * [[compactDHashIndex]] + [[vacuumDHashIndex]] — after which the
-    * retracted images' hashes are bytes on no disk, the
-    * right-to-be-forgotten end state. Single writer.
+    * `index.compact` + `index.vacuum` ([[graft.sources.IndexFamily]])
+    * — after which the retracted images' hashes are bytes on no disk,
+    * the right-to-be-forgotten end state. Single writer.
     */
-  /** DIFFERENTIAL read (r14 — the fp/text convention on the image
-    * family): which stored media changed between two retained
-    * horizons, as `('added'|'removed', media_id)` — the delta a
-    * takedown-audit consumer re-checks WITHOUT a single re-decode
-    * (hashes and raster bytes never read; the strongest differential
-    * asymmetry of the six families).
-    */
-  def mediaChanges(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, fromEpoch: Int, toEpoch: Int): DataFrame = {
-    dHashIndexState(spark, indexDir, "mediaChanges")
-    graft.sources.EpochStore.idChangesBetween(spark, indexDir,
-      "hashes", "media_id", fromEpoch, toEpoch, "mediaChanges",
-      "writeDHashIndex")
-  }
-
   def deleteFromDHashIndex(indexDir: String, ids: DataFrame,
       commitTs: Option[Long] = None): Unit = {
     val spark = ids.sparkSession
-    val st = dHashIndexState(spark, indexDir, "deleteFromDHashIndex")
+    val st = dHashState(spark, indexDir, "deleteFromDHashIndex")
     import spark.implicits._
     graft.sources.EpochStore.deleteEpochChecked(indexDir,
       "deleteFromDHashIndex", ids, "media_id",
@@ -914,43 +900,8 @@ object Multimodal {
         "retraction must name stored images (already-deleted or " +
         "never-stored ids refuse loudly, they do not no-op).",
       Seq.empty,
-      n => Seq((DHashIndexFamily, 4, st.count - n, st.epoch + 1))
+      n => Seq((index.id, 4, st.count - n, st.epoch + 1))
         .toDF("family", "bands", "corpus_count", "epoch"),
       st.epoch + 1, st.floor, commitTs)
-  }
-
-  /** COMPACT / reclaim the artifact — see
-    * [[graft.sources.EpochStore.compact]] / `vacuum`; the family meta
-    * carries verbatim (compaction moves bytes, never rows).
-    */
-  def compactDHashIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, below: Option[Int] = None,
-      commitTs: Option[Long] = None): Boolean = {
-    dHashIndexState(spark, indexDir, "compactDHashIndex")
-    graft.sources.EpochStore.compactMaybeBelow(spark, indexDir,
-      Seq(graft.sources.EpochStore.CompactTable("hashes",
-          Some("media_id")),
-        graft.sources.EpochStore.CompactTable("bands", Some("media_id"))),
-      below, "compactDHashIndex", "writeDHashIndex", commitTs)
-  }
-
-  /** Resolve a caller-clock TIMESTAMP to this artifact's retained read
-    * horizon (r15 — the `Dedup.fingerprintEpochAtTime` convention on
-    * the dHash family). Refusals: see
-    * [[graft.sources.EpochStore.servingStateAtTime]].
-    */
-  def dHashEpochAtTime(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, ts: Long): Int = {
-    dHashIndexState(spark, indexDir, "dHashEpochAtTime")
-    graft.sources.EpochStore.servingStateAtTime(spark, indexDir, ts,
-      "dHashEpochAtTime", "writeDHashIndex").epoch
-  }
-
-  def vacuumDHashIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, graceMs: Long = 0L): Unit = {
-    dHashIndexState(spark, indexDir, "vacuumDHashIndex")
-    graft.sources.EpochStore.vacuum(spark, indexDir,
-      Seq("hashes", "bands"), "vacuumDHashIndex", "writeDHashIndex",
-      graceMs)
   }
 }

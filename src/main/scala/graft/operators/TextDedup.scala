@@ -1021,25 +1021,28 @@ object TextDedup {
   // versions is this corpus clean against", with as-of reads for
   // "clean against LAST month's suite" (the layout's time-travel).
 
-  /** Artifact layout version — bumped if the window construction
-    * (verbatim-case, fixed-w substring) ever changes; probing across
-    * window conventions silently misses contamination.
+  /** The decon eval-suite family on the shared lifecycle. The id is
+    * bumped if the window construction (verbatim-case, fixed-w
+    * substring) ever changes. Compaction drops tombstoned benchmarks
+    * PHYSICALLY and is snapshot expiry: keep history on suites that must
+    * answer "clean against last month's suite". Changes name which
+    * BENCHMARKS entered/left the suite between two versions — the
+    * compliance question between two audits.
     */
-  private[graft] val DeconIndexFamily = "decon-win-v1"
+  val index: graft.sources.IndexFamily = graft.sources.IndexFamily(
+    "decon-win-v1", "writeDeconIndex",
+    "probing across window conventions silently misses contamination",
+    Seq(graft.sources.EpochStore.CompactTable("docs", Some("doc_id")),
+      graft.sources.EpochStore.CompactTable("grams", Some("doc_id"))),
+    "docs", "doc_id")
 
   private case class DeconIndexState(w: Int, benchCount: Long,
       epoch: Int, floor: Int)
 
-  private def deconIndexState(spark: org.apache.spark.sql.SparkSession,
+  private def deconState(spark: org.apache.spark.sql.SparkSession,
       dir: String, who: String, asOf: Option[Int] = None)
       : DeconIndexState = {
-    val st = graft.sources.EpochStore.servingStateMaybeAt(spark, dir,
-      asOf, who, "writeDeconIndex")
-    val family = st.meta.getAs[String]("family")
-    require(family == DeconIndexFamily,
-      s"$who: artifact at $dir was windowed by family '$family' but " +
-        s"this code probes '$DeconIndexFamily' — rebuild; probing " +
-        "across window conventions silently misses contamination")
+    val st = index.serving(spark, dir, who, asOf)
     DeconIndexState(st.meta.getAs[Int]("w"),
       st.meta.getAs[Long]("bench_count"), st.epoch, st.floor)
   }
@@ -1067,7 +1070,7 @@ object TextDedup {
       w: Int, benchCount: Long, floor: Int = 0,
       commitTs: Option[Long] = None): Unit = {
     import spark.implicits._
-    val meta = Seq((DeconIndexFamily, w, benchCount, epoch))
+    val meta = Seq((index.id, w, benchCount, epoch))
       .toDF("family", "w", "bench_count", "epoch")
     graft.sources.EpochStore.writeEpoch(dir, epoch,
       Seq("docs" -> docs, "grams" -> grams), meta, floor,
@@ -1113,7 +1116,7 @@ object TextDedup {
   def appendDeconIndex(indexDir: String, moreBench: DataFrame,
       commitTs: Option[Long] = None): Unit = {
     val spark = moreBench.sparkSession
-    val st = deconIndexState(spark, indexDir, "appendDeconIndex")
+    val st = deconState(spark, indexDir, "appendDeconIndex")
     val b = graft.CacheScope.scoped(moreBench.select("doc_id", "text"))
     // dup + id-clash premises fused into ONE action (r15 — Checks)
     val (n, nd, idClash) = Checks.dupAndClash(b, "doc_id",
@@ -1141,12 +1144,13 @@ object TextDedup {
     * premises: one id space; every id a CURRENTLY LIVE stored
     * benchmark. A retired id may be re-appended afterwards (a
     * benchmark version restored); physical reclaim is
-    * [[compactDeconIndex]] + [[vacuumDeconIndex]]. Single writer.
+    * `index.compact` + `index.vacuum` ([[graft.sources.IndexFamily]]).
+    * Single writer.
     */
   def deleteFromDeconIndex(indexDir: String, ids: DataFrame,
       commitTs: Option[Long] = None): Unit = {
     val spark = ids.sparkSession
-    val st = deconIndexState(spark, indexDir, "deleteFromDeconIndex")
+    val st = deconState(spark, indexDir, "deleteFromDeconIndex")
     import spark.implicits._
     graft.sources.EpochStore.deleteEpochChecked(indexDir,
       "deleteFromDeconIndex", ids, "doc_id",
@@ -1157,7 +1161,7 @@ object TextDedup {
         "retirement must name stored docs (already-retired or " +
         "never-stored ids refuse loudly, they do not no-op).",
       Seq.empty,
-      n => Seq((DeconIndexFamily, st.w, st.benchCount - n,
+      n => Seq((index.id, st.w, st.benchCount - n,
           st.epoch + 1))
         .toDF("family", "w", "bench_count", "epoch"),
       st.epoch + 1, st.floor, commitTs)
@@ -1170,23 +1174,9 @@ object TextDedup {
     */
   def storedDeconDocIds(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame = {
-    val st = deconIndexState(spark, indexDir, "storedDeconDocIds")
+    val st = deconState(spark, indexDir, "storedDeconDocIds")
     graft.sources.EpochStore.tableThroughLive(spark, indexDir, "docs",
       "doc_id", st.floor, st.epoch)
-  }
-
-  /** DIFFERENTIAL read (r14 — the fp/text convention on the eval-suite
-    * family): which BENCHMARKS entered/left the suite between two
-    * versions, as `('added'|'removed', doc_id)` — the compliance
-    * question between two suite audits ("what changed since the last
-    * review") answered from the delta epochs alone.
-    */
-  def benchmarkChanges(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, fromEpoch: Int, toEpoch: Int): DataFrame = {
-    deconIndexState(spark, indexDir, "benchmarkChanges")
-    graft.sources.EpochStore.idChangesBetween(spark, indexDir, "docs",
-      "doc_id", fromEpoch, toEpoch, "benchmarkChanges",
-      "writeDeconIndex")
   }
 
   /** Span-decontaminate an arriving corpus shard against the STORED
@@ -1209,50 +1199,11 @@ object TextDedup {
     // real compliance question, and the answer must use exactly the
     // windows that suite version held (later-added benchmarks must not
     // cut, later-retired ones must). Same plan; pure partition pruning.
-    val st = deconIndexState(spark, indexDir,
+    val st = deconState(spark, indexDir,
       "decontaminateAgainstIndex", asOf)
     val benchGrams = graft.sources.EpochStore.tableThroughLive(spark,
         indexDir, "grams", "doc_id", st.floor, st.epoch)
       .select(col("gram")).distinct()
     decontaminateWithGrams(corpus, benchGrams, st.w)
-  }
-
-  /** COMPACT the artifact — both tables' live epochs rewritten into ONE
-    * fresh epoch with tombstoned benchmarks dropped PHYSICALLY, meta
-    * carried verbatim; see [[graft.sources.EpochStore.compact]]. Note
-    * compaction is snapshot expiry: as-of reads below the new floor
-    * refuse afterwards — keep history on suites that must answer
-    * "clean against last month's suite".
-    */
-  def compactDeconIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, below: Option[Int] = None,
-      commitTs: Option[Long] = None): Boolean = {
-    deconIndexState(spark, indexDir, "compactDeconIndex")
-    graft.sources.EpochStore.compactMaybeBelow(spark, indexDir,
-      Seq(graft.sources.EpochStore.CompactTable("docs", Some("doc_id")),
-        graft.sources.EpochStore.CompactTable("grams", Some("doc_id"))),
-      below, "compactDeconIndex", "writeDeconIndex", commitTs)
-  }
-
-  /** Resolve a caller-clock TIMESTAMP to this suite's retained read
-    * horizon (r15 — the `Dedup.fingerprintEpochAtTime` convention on
-    * the decon family: "clean against the suite as it stood at ts").
-    * Refusals: see [[graft.sources.EpochStore.servingStateAtTime]].
-    */
-  def deconEpochAtTime(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, ts: Long): Int = {
-    deconIndexState(spark, indexDir, "deconEpochAtTime")
-    graft.sources.EpochStore.servingStateAtTime(spark, indexDir, ts,
-      "deconEpochAtTime", "writeDeconIndex").epoch
-  }
-
-  /** Reclaim epochs a [[compactDeconIndex]] superseded — see
-    * [[graft.sources.EpochStore.vacuum]]. */
-  def vacuumDeconIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, graceMs: Long = 0L): Unit = {
-    deconIndexState(spark, indexDir, "vacuumDeconIndex")
-    graft.sources.EpochStore.vacuum(spark, indexDir,
-      Seq("docs", "grams"), "vacuumDeconIndex", "writeDeconIndex",
-      graceMs)
   }
 }

@@ -48,12 +48,21 @@ import graft.sources.EpochStore
   */
 object TextIndex {
 
-  /** Artifact layout version: bumped if the shingling (w=3 word
-    * grams), the signature family (`graft_minhash64`), or the band
-    * hashing ever change, so an old artifact REFUSES against new probe
-    * code instead of silently losing recall.
+  /** The MinHash text family on the shared lifecycle. The id is
+    * bumped if the shingling (w=3 word grams), the signature family
+    * (`graft_minhash64`), or the band hashing ever change, so an old
+    * artifact REFUSES against new probe code instead of silently losing
+    * recall. Compaction rewrites under the FROZEN stored banding with
+    * the meta carried verbatim, so probes and the append's id-space
+    * premise are unchanged (q162 gate). Changes never read the shingle
+    * payloads; q187 gates them against a declarative recompute.
     */
-  private[graft] val JaccardIndexFamily = "minhash64-w3-v1"
+  val index: graft.sources.IndexFamily = graft.sources.IndexFamily(
+    "minhash64-w3-v1", "writeJaccardIndex",
+    "probing across hash versions silently loses recall",
+    Seq(EpochStore.CompactTable("docs", Some("doc_id")),
+      EpochStore.CompactTable("bands", Some("doc_id"))),
+    "docs", "doc_id")
 
   /** Signature budget: `graft_minhash64` emits 64 slots. */
   private val SigSlots = 64
@@ -252,7 +261,7 @@ object TextIndex {
       commitTs: Option[Long] = None): Unit = {
     val spark = sh.sparkSession
     import spark.implicits._
-    val meta = Seq((JaccardIndexFamily, r, b, threshold, targetMiss,
+    val meta = Seq((index.id, r, b, threshold, targetMiss,
         3, totalCount, epoch))
       .toDF("family", "rows_per_band", "bands", "threshold",
         "target_miss", "shingle_k", "corpus_count", "epoch")
@@ -265,17 +274,11 @@ object TextIndex {
       threshold: Double, targetMiss: Double, count: Long, epoch: Int,
       floor: Int)
 
-  private def indexState(spark: org.apache.spark.sql.SparkSession,
+  private def jaccardState(spark: org.apache.spark.sql.SparkSession,
       dir: String, who: String, asOf: Option[Int] = None)
       : JaccardIndexState = {
-    val st = EpochStore.servingStateMaybeAt(spark, dir, asOf, who,
-      "writeJaccardIndex")
+    val st = index.serving(spark, dir, who, asOf)
     val meta = st.meta
-    val family = meta.getAs[String]("family")
-    require(family == JaccardIndexFamily,
-      s"$who: artifact at $dir was hashed by family '$family' but " +
-        s"this code probes '$JaccardIndexFamily' — rebuild the index; " +
-        "probing across hash versions silently loses recall")
     JaccardIndexState(meta.getAs[Int]("rows_per_band"),
       meta.getAs[Int]("bands"), meta.getAs[Double]("threshold"),
       meta.getAs[Double]("target_miss"),
@@ -291,7 +294,7 @@ object TextIndex {
   private def readMeta(spark: org.apache.spark.sql.SparkSession,
       dir: String, who: String, threshold: Double, targetMiss: Double,
       asOf: Option[Int] = None): JaccardIndexState = {
-    val st = indexState(spark, dir, who, asOf)
+    val st = jaccardState(spark, dir, who, asOf)
     def drift(name: String, stored: Any, asked: Any): Unit =
       require(stored == asked,
         s"$who: $name drift — artifact at $dir stores $name = $stored " +
@@ -318,7 +321,7 @@ object TextIndex {
   def appendJaccardIndex(indexDir: String, more: DataFrame,
       commitTs: Option[Long] = None): Unit = {
     val spark = more.sparkSession
-    val st = indexState(spark, indexDir, "appendJaccardIndex")
+    val st = jaccardState(spark, indexDir, "appendJaccardIndex")
     val sh = graft.CacheScope.scoped(shingled(more))
     // dup + id-clash premises fused into ONE action (r15 — Checks)
     val (n, nd, nClash) = Checks.dupAndClash(sh, "doc_id",
@@ -345,33 +348,13 @@ object TextIndex {
     */
   def storedDocIds(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame = {
-    val st = indexState(spark, indexDir, "storedDocIds")
+    val st = jaccardState(spark, indexDir, "storedDocIds")
     EpochStore.tableThroughLive(spark, indexDir, "docs", "doc_id",
       st.floor, st.epoch).select("doc_id")
   }
 
-  /** DIFFERENTIAL read (r14 — r13 VERDICT #2): which stored docs
-    * changed between two retained horizons — `('added', doc_id)` for
-    * docs committed in `(fromEpoch, toEpoch]` and still live at
-    * `toEpoch`, `('removed', doc_id)` for docs tombstoned in that
-    * window that were live at `fromEpoch`. The incremental-downstream
-    * story: a consumer that verdicted against horizon `from`
-    * re-verdicts only this delta (CDC out of the stored index) instead
-    * of re-probing the corpus. Both horizons must be retained
-    * (floor ≤ from ≤ to ≤ serving; below the floor refuses like
-    * as-of); cost is the delta epochs plus one id-projected live scan
-    * at `from` — the shingle payloads never read. Gated as q187
-    * against a declarative recompute.
-    */
-  def docChanges(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, fromEpoch: Int, toEpoch: Int): DataFrame = {
-    indexState(spark, indexDir, "docChanges")
-    EpochStore.idChangesBetween(spark, indexDir, "docs", "doc_id",
-      fromEpoch, toEpoch, "docChanges", "writeJaccardIndex")
-  }
-
   /** The text family's CDC CONSUMER (r15 — r14 VERDICT #4, what
-    * [[docChanges]] exists FOR): patch a shard's horizon-`fromEpoch`
+    * `index.changes` exists FOR): patch a shard's horizon-`fromEpoch`
     * near-dup verdicts ([[jaccardPairsIndexed]] output — `prior`) to
     * the horizon-`toEpoch` state WITHOUT re-probing the corpus.
     * Unlike the fp family's `Dedup.patchVerdicts`, the id delta alone
@@ -472,15 +455,15 @@ object TextIndex {
     * the stored docs table — note only docs with ≥ 3 words were ever
     * stored, so retracting a shorter doc refuses (it was never
     * indexed). A tombstone names the past: the id may be re-appended
-    * afterwards. Physical reclaim = [[compactJaccardIndex]] +
-    * [[vacuumJaccardIndex]]. Banding is count-independent, so a
+    * afterwards. Physical reclaim = `index.compact` + `index.vacuum`
+    * ([[graft.sources.IndexFamily]]). Banding is count-independent, so a
     * shrunken corpus cannot rot the stored parameters (the same
     * argument as append, in reverse). Single writer.
     */
   def deleteFromJaccardIndex(indexDir: String, ids: DataFrame,
       commitTs: Option[Long] = None): Unit = {
     val spark = ids.sparkSession
-    val st = indexState(spark, indexDir, "deleteFromJaccardIndex")
+    val st = jaccardState(spark, indexDir, "deleteFromJaccardIndex")
     import spark.implicits._
     EpochStore.deleteEpochChecked(indexDir, "deleteFromJaccardIndex",
       ids, "doc_id",
@@ -491,55 +474,11 @@ object TextIndex {
         "never-stored, or sub-3-word ids refuse loudly, they do not " +
         "no-op).",
       Seq.empty,
-      n => Seq((JaccardIndexFamily, st.r, st.b, st.threshold,
+      n => Seq((index.id, st.r, st.b, st.threshold,
           st.targetMiss, 3, st.count - n, st.epoch + 1))
         .toDF("family", "rows_per_band", "bands", "threshold",
           "target_miss", "shingle_k", "corpus_count", "epoch"),
       st.epoch + 1, st.floor, commitTs)
-  }
-
-  /** COMPACT the artifact — rewrite the live epochs into ONE fresh
-    * epoch under the FROZEN stored banding, meta last (see
-    * [[graft.sources.EpochStore.compact]]): the q155/q164-style
-    * append cadence sprawls one epoch per shard, and every probe pays
-    * the file fan-in forever. The family meta (banding, counts) is
-    * carried verbatim — compaction moves bytes, never rows — so
-    * probes and the append's id-space premise are unchanged (q162
-    * gate). Returns false when already a single live epoch. Single
-    * writer; superseded epochs reclaim via [[vacuumJaccardIndex]].
-    */
-  def compactJaccardIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, below: Option[Int] = None,
-      commitTs: Option[Long] = None): Boolean = {
-    indexState(spark, indexDir, "compactJaccardIndex") // family refusal
-    EpochStore.compactMaybeBelow(spark, indexDir,
-      Seq(EpochStore.CompactTable("docs", Some("doc_id")),
-        EpochStore.CompactTable("bands", Some("doc_id"))),
-      below, "compactJaccardIndex", "writeJaccardIndex", commitTs)
-  }
-
-  /** Resolve a caller-clock TIMESTAMP to this artifact's retained read
-    * horizon (r15 — the `Dedup.fingerprintEpochAtTime` convention on
-    * the text family): the epoch an `asOf = Some(_)` probe pins for
-    * "the index as it stood at `ts`", resolved from the commit_ts
-    * values the mutations recorded. Refusals (unstamped history,
-    * backwards clock, pre-floor ts): see
-    * [[graft.sources.EpochStore.servingStateAtTime]].
-    */
-  def jaccardEpochAtTime(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, ts: Long): Int = {
-    indexState(spark, indexDir, "jaccardEpochAtTime")
-    EpochStore.servingStateAtTime(spark, indexDir, ts,
-      "jaccardEpochAtTime", "writeJaccardIndex").epoch
-  }
-
-  /** Reclaim epochs a [[compactJaccardIndex]] superseded — see
-    * [[graft.sources.EpochStore.vacuum]]. */
-  def vacuumJaccardIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, graceMs: Long = 0L): Unit = {
-    indexState(spark, indexDir, "vacuumJaccardIndex") // family refusal
-    EpochStore.vacuum(spark, indexDir, Seq("docs", "bands"),
-      "vacuumJaccardIndex", "writeJaccardIndex", graceMs)
   }
 
   /** Probe a [[writeJaccardIndex]] artifact with an arriving shard —

@@ -73,6 +73,8 @@ import org.apache.spark.sql.functions.{col, lit}
   * What stays with each index family: the meta SCHEMA, the hash-family
   * version string and its drift refusals, and parameter-currency
   * premises — those are semantics of the family's hashes, not of the
+  * layout. Each family declares its version string, refusal and tables
+  * once as an [[IndexFamily]], whose generic lifecycle rides this
   * layout.
   */
 object EpochStore {
@@ -690,17 +692,6 @@ object EpochStore {
     }
   }
 
-  /** The one as-of dispatch every family state reader rides (r13
-    * second review — six families carried the identical match block):
-    * None = the serving state, Some(e) = the historical horizon.
-    */
-  def servingStateMaybeAt(spark: SparkSession, dir: String,
-      asOf: Option[Int], who: String, rebuildHint: String): Serving =
-    asOf match {
-      case Some(e) => servingStateAt(spark, dir, e, who, rebuildHint)
-      case None => servingState(spark, dir, who, rebuildHint)
-    }
-
   /** The layout-owned `commit_ts` a meta row recorded — None when the
     * commit predates r15 or its writer passed no timestamp.
     */
@@ -1194,23 +1185,6 @@ object EpochStore {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** The `(change, <idCol>)` differential shape five of the six family
-    * wrappers share (r14 second review — the servingStateMaybeAt /
-    * compactMaybeBelow dedup precedent): 'added' ids from
-    * [[addedBetween]] (payload columns dropped) unioned with 'removed'
-    * ids from [[removedBetween]]. Only the fp family stays bespoke
-    * (its added rows carry the fingerprint).
-    */
-  def idChangesBetween(spark: SparkSession, dir: String, name: String,
-      idCol: String, from: Int, to: Int, who: String,
-      rebuildHint: String): DataFrame =
-    addedBetween(spark, dir, name, idCol, from, to, who, rebuildHint)
-      .select(lit("added").as("change"), col(idCol))
-      .unionByName(
-        removedBetween(spark, dir, name, idCol, from, to, who,
-          rebuildHint)
-        .select(lit("removed").as("change"), col(idCol)))
-
   private def dataFileBytes(fs: org.apache.hadoop.fs.FileSystem,
       d: org.apache.hadoop.fs.Path): Long =
     if (!fs.exists(d)) 0L
@@ -1529,22 +1503,6 @@ object EpochStore {
     true
     } finally { releaseLease(fs, dir, token) }
   }
-
-  /** The one compact dispatch every family entry point rides:
-    * None = full compaction ([[compact]] — floor becomes the fresh
-    * epoch, all history expires), Some(h) = partial
-    * ([[compactBelow]] — history below h folds into a checkpoint,
-    * horizons in [h, serving] stay servable).
-    */
-  def compactMaybeBelow(spark: SparkSession, dir: String,
-      tables: Seq[CompactTable], below: Option[Int], who: String,
-      rebuildHint: String, commitTs: Option[Long] = None): Boolean =
-    below match {
-      case Some(h) => compactBelow(spark, dir, tables, h, who,
-        rebuildHint, commitTs = commitTs)
-      case None => compact(spark, dir, tables, who, rebuildHint,
-        commitTs = commitTs)
-    }
 
   /** The hidden rewrite-staging dir inside each table root — dot-
     * prefixed, so Spark's file listing never reads it as data.

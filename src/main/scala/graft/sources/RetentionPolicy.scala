@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 
 /** The housekeeping POLICY an index-ingestion loop runs between
-  * micro-batches (r15 — r14 VERDICT #5): the five streaming gates
+  * micro-batches (r15 — r14 VERDICT #5): the streaming gates
   * hand-rolled this as per-loop lambdas (q164/q167/q170/q175
   * full-compact EVERY batch, q188 compactBelows every batch), and
   * every-batch compaction of a multi-table artifact is exactly where
@@ -31,9 +31,10 @@ import org.apache.spark.sql.SparkSession
   * reproduce the pre-r15 hardcoded cadence exactly, so every existing
   * gate's artifact end state is unchanged.
   *
-  * The policy is layout-level; the family's compact/vacuum entry
-  * points arrive as functions so one policy type serves all six
-  * EpochStore families.
+  * The policy is layout-level: a loop passes its family's
+  * [[IndexFamily]] — `compact` and `vacuum` as the two functions,
+  * `writer` as the rebuild hint — so one policy type serves all six
+  * families (and tests can drive it with recording fakes).
   */
 final case class RetentionPolicy(
     everyBatches: Int = 1,
@@ -51,7 +52,7 @@ final case class RetentionPolicy(
   /** Run the policy after micro-batch `batchIndex` (0-based, the
     * foreachBatch id): decide from the artifact's serving state, then
     * drive the family's `compact` (its `Option[Int]` is the
-    * compactMaybeBelow `below` convention) and `vacuum`.
+    * [[IndexFamily.compact]] `below` convention) and `vacuum`.
     */
   def housekeep(spark: SparkSession, dir: String, batchIndex: Long,
       who: String, rebuildHint: String)(

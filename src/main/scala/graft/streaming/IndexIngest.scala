@@ -334,11 +334,9 @@ object IndexIngest {
       val kept = verdict.filter(col("kept")).select("doc_id")
       graft.operators.Dedup.appendFingerprintIndex(idxDir,
         batch.join(kept, Seq("doc_id"), "left_semi"))
-      policy.housekeep(bs, idxDir, id, queryName,
-        "writeFingerprintIndex")(
-        below => graft.operators.Dedup.compactFingerprintIndex(bs,
-          idxDir, below),
-        () => graft.operators.Dedup.vacuumFingerprintIndex(bs, idxDir))
+      val fam = graft.operators.Dedup.index
+      policy.housekeep(bs, idxDir, id, queryName, fam.writer)(
+        fam.compact(bs, idxDir, _), () => fam.vacuum(bs, idxDir))
     })
 
     val verdicts = graft.CacheScope.scoped(spark.read.parquet(outDir))
@@ -517,10 +515,9 @@ object IndexIngest {
         .withColumn("batch_id", lit(id))
         .write.mode("append").parquet(outDir)
       graft.operators.TextIndex.appendJaccardIndex(idxDir, batch)
-      policy.housekeep(bs, idxDir, id, queryName, "writeJaccardIndex")(
-        below => graft.operators.TextIndex.compactJaccardIndex(bs,
-          idxDir, below),
-        () => graft.operators.TextIndex.vacuumJaccardIndex(bs, idxDir))
+      val fam = graft.operators.TextIndex.index
+      policy.housekeep(bs, idxDir, id, queryName, fam.writer)(
+        fam.compact(bs, idxDir, _), () => fam.vacuum(bs, idxDir))
     })
 
     val pairs = graft.CacheScope.scoped(spark.read.parquet(outDir))
@@ -606,10 +603,9 @@ object IndexIngest {
         .withColumn("batch_id", lit(id))
         .write.mode("append").parquet(outDir)
       graft.operators.Multimodal.appendDHashIndex(idxDir, batch)
-      policy.housekeep(bs, idxDir, id, queryName, "writeDHashIndex")(
-        below => graft.operators.Multimodal.compactDHashIndex(bs,
-          idxDir, below),
-        () => graft.operators.Multimodal.vacuumDHashIndex(bs, idxDir))
+      val fam = graft.operators.Multimodal.index
+      policy.housekeep(bs, idxDir, id, queryName, fam.writer)(
+        fam.compact(bs, idxDir, _), () => fam.vacuum(bs, idxDir))
     })
 
     val pairs = graft.CacheScope.scoped(spark.read.parquet(outDir))
@@ -676,10 +672,9 @@ object IndexIngest {
     drainBatches(ss, srcDir, docSchema, (batch, id) => {
       val bs = batch.sparkSession
       graft.operators.Bm25.appendBm25Index(idxDir, batch)
-      policy.housekeep(bs, idxDir, id, queryName, "writeBm25Index")(
-        below => graft.operators.Bm25.compactBm25Index(bs, idxDir,
-          below),
-        () => graft.operators.Bm25.vacuumBm25Index(bs, idxDir))
+      val fam = graft.operators.Bm25.index
+      policy.housekeep(bs, idxDir, id, queryName, fam.writer)(
+        fam.compact(bs, idxDir, _), () => fam.vacuum(bs, idxDir))
     })
 
     graft.operators.Bm25.topKIndexed(spark, idxDir,

@@ -79,8 +79,8 @@ class DeconIndexSpec extends AnyFunSuite {
     // compact + vacuum: tombstones fold away physically, one epoch
     // remains, and the probe is unchanged by the rewrite
     CacheScope.withScope {
-      assert(TextDedup.compactDeconIndex(spark, dir))
-      TextDedup.vacuumDeconIndex(spark, dir)
+      assert(TextDedup.index.compact(spark, dir))
+      TextDedup.index.vacuum(spark, dir)
     }
     assert(epochDirs(dir, "deletes").isEmpty &&
       epochDirs(dir, "docs").size == 1 &&

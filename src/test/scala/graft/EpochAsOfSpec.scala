@@ -127,7 +127,7 @@ class EpochAsOfSpec extends AnyFunSuite {
     // pre-compaction, epoch 0 serves as-of
     assert(fpProbeSet(dir, incoming, Some(0)).nonEmpty)
     CacheScope.withScope {
-      assert(Dedup.compactFingerprintIndex(spark, dir))
+      assert(Dedup.index.compact(spark, dir))
     }
     // post-compaction (epoch 2, floor 2): history below the floor
     // refuses — BEFORE any vacuum, because the per-epoch states were
@@ -183,7 +183,7 @@ class EpochAsOfSpec extends AnyFunSuite {
     // PARTIAL compaction at horizon 1: epochs 0-1 fold into a
     // checkpoint, horizons 1/2/3 stay servable, serving unchanged
     assert(CacheScope.withScope {
-      Dedup.compactFingerprintIndex(spark, dir, below = Some(1)) })
+      Dedup.index.compact(spark, dir, below = Some(1)) })
     assert(fpProbeSet(dir, incoming, None) == preServing,
       "compactBelow must not change the serving row set")
     assert(fpProbeSet(dir, incoming, Some(1)) == pre1,
@@ -198,7 +198,7 @@ class EpochAsOfSpec extends AnyFunSuite {
       "a horizon below the retention point must refuse")
     // vacuum reclaims the folded epochs: probes can then only have
     // served the CHECKPOINT (the q163 argument at partial granularity)
-    Dedup.vacuumFingerprintIndex(spark, dir)
+    Dedup.index.vacuum(spark, dir)
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     def exists(p: String) =
@@ -220,29 +220,29 @@ class EpochAsOfSpec extends AnyFunSuite {
         "they still match")
     // idempotence edges
     assert(!CacheScope.withScope {
-      Dedup.compactFingerprintIndex(spark, dir, below = Some(1)) },
+      Dedup.index.compact(spark, dir, below = Some(1)) },
       "compactBelow at the floor is a no-op (already based there)")
     assert(intercept[IllegalArgumentException] {
-      Dedup.compactFingerprintIndex(spark, dir, below = Some(0))
+      Dedup.index.compact(spark, dir, below = Some(0))
     }.getMessage.contains("predates the floor"))
     // a SECOND compactBelow advances the retention point (checkpoint
     // supersedes checkpoint); then a FULL compact expires everything
     assert(CacheScope.withScope {
-      Dedup.compactFingerprintIndex(spark, dir, below = Some(3)) })
+      Dedup.index.compact(spark, dir, below = Some(3)) })
     assert(fpProbeSet(dir, incoming, Some(3)) == pre3 &&
       fpProbeSet(dir, incoming, None) == preServing,
       "the advanced retention point keeps horizon 3 + serving exact")
     assert(intercept[IllegalArgumentException] {
       fpProbeSet(dir, incoming, Some(2))
     }.getMessage.contains("predates the floor"))
-    Dedup.vacuumFingerprintIndex(spark, dir)
+    Dedup.index.vacuum(spark, dir)
     assert(!exists(s"$dir/fps/checkpoint=1") &&
       exists(s"$dir/fps/checkpoint=3"),
       "a superseded checkpoint is vacuum bait; the live one stays")
     assert(CacheScope.withScope {
-      Dedup.compactFingerprintIndex(spark, dir) },
+      Dedup.index.compact(spark, dir) },
       "a full compact composes after partial ones")
-    Dedup.vacuumFingerprintIndex(spark, dir)
+    Dedup.index.vacuum(spark, dir)
     assert(!exists(s"$dir/fps/checkpoint=3"),
       "after a full compact every checkpoint is stale and reclaims")
     assert(fpProbeSet(dir, incoming, None) == preServing,
@@ -270,8 +270,8 @@ class EpochAsOfSpec extends AnyFunSuite {
     val pre2 = rows(Some(2))
     val preServing = rows(None)
     assert(CacheScope.withScope {
-      Bm25.compactBm25Index(spark, dir, below = Some(1)) })
-    Bm25.vacuumBm25Index(spark, dir)
+      Bm25.index.compact(spark, dir, below = Some(1)) })
+    Bm25.index.vacuum(spark, dir)
     assert(rows(Some(1)) == pre1,
       "bm25 as-of the checkpoint horizon must score bit-identically " +
         "(df re-summed in the fold, N/Σdl from meta_1)")
@@ -455,7 +455,7 @@ class EpochAsOfSpec extends AnyFunSuite {
       fold(dir, b, Some(2000L))
       fold(dir, c, Some(3000L))
     }
-    def at(ts: Long): Int = Dedup.fingerprintEpochAtTime(spark, dir, ts)
+    def at(ts: Long): Int = Dedup.index.epochAtTime(spark, dir, ts)
     // exact-commit instants resolve to their own epoch; between
     // commits, to the newest at-or-before; past the end, to serving
     assert(at(1000L) == 0 && at(1500L) == 0 && at(2000L) == 1 &&
@@ -471,7 +471,7 @@ class EpochAsOfSpec extends AnyFunSuite {
     // after a full compact (ts 4000), horizons below the fold are gone
     // and asking inside the folded history refuses the same way
     CacheScope.withScope {
-      Dedup.compactFingerprintIndex(spark, dir,
+      Dedup.index.compact(spark, dir,
         commitTs = Some(4000L))
     }
     assert(at(4000L) == 3 && at(99999L) == 3)
@@ -485,7 +485,7 @@ class EpochAsOfSpec extends AnyFunSuite {
       fold(d2, b, None)
     }
     val uns = intercept[IllegalArgumentException] {
-      Dedup.fingerprintEpochAtTime(spark, d2, 5000L) }
+      Dedup.index.epochAtTime(spark, d2, 5000L) }
     assert(uns.getMessage.contains("no commit_ts") &&
       uns.getMessage.contains("1"))
     // a BACKWARDS clock refuses naming both epochs
@@ -495,7 +495,7 @@ class EpochAsOfSpec extends AnyFunSuite {
       fold(d3, b, Some(1000L))
     }
     val bwd = intercept[IllegalArgumentException] {
-      Dedup.fingerprintEpochAtTime(spark, d3, 5000L) }
+      Dedup.index.epochAtTime(spark, d3, 5000L) }
     assert(bwd.getMessage.contains("run backwards"))
   }
 
@@ -517,13 +517,13 @@ class EpochAsOfSpec extends AnyFunSuite {
       TextIndex.writeJaccardIndex(a, dir, threshold = 0.6,
         commitTs = Some(1000L))
       TextIndex.appendJaccardIndex(dir, b, commitTs = Some(2000L))
-      pin(TextIndex.jaccardEpochAtTime(spark, dir, _))
+      pin(TextIndex.index.epochAtTime(spark, dir, _))
     }
     CacheScope.withScope {
       val dir = "/tmp/graft_test_tsw_bm25"
       Bm25.writeBm25Index(a, dir, commitTs = Some(1000L))
       Bm25.appendBm25Index(dir, b, commitTs = Some(2000L))
-      pin(Bm25.bm25EpochAtTime(spark, dir, _))
+      pin(Bm25.index.epochAtTime(spark, dir, _))
     }
     CacheScope.withScope {
       val e = Tables.embeddings(spark, TestSpark.sf)
@@ -536,19 +536,19 @@ class EpochAsOfSpec extends AnyFunSuite {
         commitTs = Some(1000L))
       Ann.appendCpIndex(dir, e.filter(col("vec_id") % 2 === 1),
         commitTs = Some(2000L))
-      pin(Ann.cpEpochAtTime(spark, dir, _))
+      pin(Ann.index.epochAtTime(spark, dir, _))
     }
     CacheScope.withScope {
       val dir = "/tmp/graft_test_tsw_dh"
       Multimodal.writeDHashIndex(a, dir, commitTs = Some(1000L))
       Multimodal.appendDHashIndex(dir, b, commitTs = Some(2000L))
-      pin(Multimodal.dHashEpochAtTime(spark, dir, _))
+      pin(Multimodal.index.epochAtTime(spark, dir, _))
     }
     CacheScope.withScope {
       val dir = "/tmp/graft_test_tsw_dcn"
       TextDedup.writeDeconIndex(a, dir, w = 20, commitTs = Some(1000L))
       TextDedup.appendDeconIndex(dir, b, commitTs = Some(2000L))
-      pin(TextDedup.deconEpochAtTime(spark, dir, _))
+      pin(TextDedup.index.epochAtTime(spark, dir, _))
     }
   }
 }

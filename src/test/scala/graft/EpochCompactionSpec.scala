@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{Ann, Bm25, Dedup, Multimodal, TextIndex}
+import graft.operators.{Ann, Bm25, Dedup, Multimodal, TextDedup, TextIndex}
 
 /** The COMPACTION quarter of the stored-index lifecycle (r12):
   * compacted ≡ sprawled at every family's probe output, torn
@@ -55,7 +55,7 @@ class EpochCompactionSpec extends AnyFunSuite {
     CacheScope.withScope {
       Ann.writeCpIndex(base, cmp, 0.4, hashesPerBand = k, bands = b)
       Ann.appendCpIndex(cmp, g1)
-      assert(Ann.compactCpIndex(spark, cmp),
+      assert(Ann.index.compact(spark, cmp),
         "a two-epoch artifact must compact")
       Ann.appendCpIndex(cmp, g2)
     }
@@ -85,7 +85,7 @@ class EpochCompactionSpec extends AnyFunSuite {
       "a torn compaction (data without meta_N) must be invisible")
     // the RETRY path: a real compact targets the same epoch number the
     // torn attempt used (serving + 1 = 4) and overwrites it
-    assert(CacheScope.withScope { Ann.compactCpIndex(spark, cmp) })
+    assert(CacheScope.withScope { Ann.index.compact(spark, cmp) })
     val afterRetry = CacheScope.withScope {
       Ann.cosinePairsCpIndexed(cmp, incoming, 0.4)
         .as[(Long, Long)].collect().toSet
@@ -94,7 +94,7 @@ class EpochCompactionSpec extends AnyFunSuite {
       "compaction retried over a torn attempt must serve unchanged")
     // vacuum: exactly the sub-floor epochs and their metas disappear;
     // the probe is unchanged afterwards
-    Ann.vacuumCpIndex(spark, cmp)
+    Ann.index.vacuum(spark, cmp)
     assert(epochDirs(cmp, "vectors") == Set(4) &&
       epochDirs(cmp, "bands") == Set(4) && metas(cmp) == Set(4),
       s"vacuum left ${epochDirs(cmp, "vectors")} / ${metas(cmp)}")
@@ -105,7 +105,7 @@ class EpochCompactionSpec extends AnyFunSuite {
     assert(afterVacuum == viaMono,
       "a vacuumed artifact must serve the identical row set")
     // an artifact that is already one live epoch declines to compact
-    assert(!Ann.compactCpIndex(spark, cmp),
+    assert(!Ann.index.compact(spark, cmp),
       "compacting a single-live-epoch artifact must be a no-op")
   }
 
@@ -146,7 +146,7 @@ class EpochCompactionSpec extends AnyFunSuite {
     }
     try {
       val se = intercept[IllegalArgumentException] {
-        CacheScope.withScope { Dedup.compactFingerprintIndex(spark, dir) }
+        CacheScope.withScope { Dedup.index.compact(spark, dir) }
       }
       assert(se.getMessage.contains("advanced during compaction"))
     } finally {
@@ -162,7 +162,7 @@ class EpochCompactionSpec extends AnyFunSuite {
         .as[(Long, String, Long, Boolean)].collect().toSet
     }
     assert(CacheScope.withScope {
-      Dedup.compactFingerprintIndex(spark, dir)
+      Dedup.index.compact(spark, dir)
     })
     val afterRetry = CacheScope.withScope {
       Dedup.dedupAgainstIndex(dir, incoming)
@@ -221,7 +221,7 @@ class EpochCompactionSpec extends AnyFunSuite {
     try {
       val se = intercept[IllegalArgumentException] {
         CacheScope.withScope {
-          Dedup.compactFingerprintIndex(spark, dir, below = Some(1)) }
+          Dedup.index.compact(spark, dir, below = Some(1)) }
       }
       assert(se.getMessage.contains("advanced during compaction"))
     } finally {
@@ -231,7 +231,7 @@ class EpochCompactionSpec extends AnyFunSuite {
     // the retried partial compaction (writers serialized again)
     // overwrites the torn checkpoint and serves identically
     assert(CacheScope.withScope {
-      Dedup.compactFingerprintIndex(spark, dir, below = Some(1)) })
+      Dedup.index.compact(spark, dir, below = Some(1)) })
     assert(probe() == afterSkew && afterSkew.nonEmpty,
       "the retried compactBelow must serve the post-append state " +
         "unchanged through the rewritten checkpoint")
@@ -276,7 +276,7 @@ class EpochCompactionSpec extends AnyFunSuite {
     }
     try {
       assert(CacheScope.withScope {
-        Dedup.compactFingerprintIndex(spark, dir) },
+        Dedup.index.compact(spark, dir) },
         "the fenced compaction must complete — the intruder refused")
     } finally {
       graft.sources.EpochStore.beforeCompactCommit = () => ()
@@ -328,7 +328,7 @@ class EpochCompactionSpec extends AnyFunSuite {
     }
     try {
       val fenced = intercept[IllegalArgumentException] {
-        CacheScope.withScope { Dedup.compactFingerprintIndex(spark, dir) }
+        CacheScope.withScope { Dedup.index.compact(spark, dir) }
       }
       assert(fenced.getMessage.contains("changed hands"),
         s"expected the fencing refusal, got: ${fenced.getMessage}")
@@ -341,7 +341,7 @@ class EpochCompactionSpec extends AnyFunSuite {
     // identically
     fs.delete(lock, false)
     assert(CacheScope.withScope {
-      Dedup.compactFingerprintIndex(spark, dir) })
+      Dedup.index.compact(spark, dir) })
     assert(probe() == before,
       "the retried compaction serves the same verdict map")
   }
@@ -365,9 +365,9 @@ class EpochCompactionSpec extends AnyFunSuite {
     CacheScope.withScope {
       TextIndex.writeJaccardIndex(base, cmp, 0.6)
       TextIndex.appendJaccardIndex(cmp, g1)
-      assert(TextIndex.compactJaccardIndex(spark, cmp))
+      assert(TextIndex.index.compact(spark, cmp))
       TextIndex.appendJaccardIndex(cmp, g2)
-      TextIndex.vacuumJaccardIndex(spark, cmp)
+      TextIndex.index.vacuum(spark, cmp)
     }
     assert(epochDirs(cmp, "docs") == Set(2, 3) && metas(cmp) == Set(2, 3))
     val viaCmp = CacheScope.withScope {
@@ -411,8 +411,8 @@ class EpochCompactionSpec extends AnyFunSuite {
     buildProbed(sprawl)
     buildProbed(cmp)
     CacheScope.withScope {
-      assert(Dedup.compactFingerprintIndex(spark, cmp))
-      Dedup.vacuumFingerprintIndex(spark, cmp)
+      assert(Dedup.index.compact(spark, cmp))
+      Dedup.index.vacuum(spark, cmp)
     }
     assert(epochDirs(cmp, "fps") == Set(2) && metas(cmp) == Set(2))
     val viaCmp = CacheScope.withScope {
@@ -473,14 +473,14 @@ class EpochCompactionSpec extends AnyFunSuite {
       "test", "writeFingerprintIndex")
     assert(pre.floor == 0 && pre.epoch == 1)
     CacheScope.withScope {
-      assert(Dedup.compactFingerprintIndex(spark, dir))
+      assert(Dedup.index.compact(spark, dir))
     }
     // a refused/crashed compaction's leaked staging: plant one
     val stage = new java.io.File(s"$dir/fps/.compact_staging")
     assert(stage.mkdirs())
     // vacuum inside a 1-hour grace window: staging reclaimed, but
     // every sub-floor epoch survives…
-    Dedup.vacuumFingerprintIndex(spark, dir, graceMs = 3600L * 1000)
+    Dedup.index.vacuum(spark, dir, graceMs = 3600L * 1000)
     assert(!stage.exists(),
       "leaked .compact_staging must be reclaimed even inside the grace")
     assert(epochDirs(dir, "fps") == Set(0, 1, 2) &&
@@ -493,7 +493,7 @@ class EpochCompactionSpec extends AnyFunSuite {
       "a reader mid-probe on the pre-compaction serving state must " +
         "still read inside the grace window")
     // grace 0 (the foreachBatch-loop default) reclaims immediately
-    Dedup.vacuumFingerprintIndex(spark, dir)
+    Dedup.index.vacuum(spark, dir)
     assert(epochDirs(dir, "fps") == Set(2) && metas(dir) == Set(2))
   }
 
@@ -566,8 +566,8 @@ class EpochCompactionSpec extends AnyFunSuite {
     CacheScope.withScope {
       Bm25.writeBm25Index(docs.filter(col("doc_id") % 5 =!= 2), app)
       Bm25.appendBm25Index(app, docs.filter(col("doc_id") % 5 === 2))
-      assert(Bm25.compactBm25Index(spark, app))
-      Bm25.vacuumBm25Index(spark, app)
+      assert(Bm25.index.compact(spark, app))
+      Bm25.index.vacuum(spark, app)
     }
     val viaApp = CacheScope.withScope {
       Bm25.topKIndexed(spark, app, terms, 50).as[(Long, Long, Long)].collect().toSeq
@@ -662,8 +662,8 @@ class EpochCompactionSpec extends AnyFunSuite {
         corpus.filter(col("doc_id") % 5 =!= 2), app)
       Multimodal.appendDHashIndex(app,
         corpus.filter(col("doc_id") % 5 === 2))
-      assert(Multimodal.compactDHashIndex(spark, app))
-      Multimodal.vacuumDHashIndex(spark, app)
+      assert(Multimodal.index.compact(spark, app))
+      Multimodal.index.vacuum(spark, app)
     }
     val viaApp = CacheScope.withScope {
       Multimodal.imageDHashNearIndexed(app, incoming)
@@ -695,6 +695,39 @@ class EpochCompactionSpec extends AnyFunSuite {
       Multimodal.imageDHashNearIndexed(foreign, incoming)
     }
     assert(fe.getMessage.contains("family"))
+  }
+
+  test("every IndexFamily's lifecycle ops serve their own artifact and " +
+      "refuse, by family, any other family's — leaving it untouched") {
+    val dir = "/tmp/graft_test_family_table"
+    CacheScope.withScope {
+      Dedup.writeFingerprintIndex(Tables.documents(spark, TestSpark.sf)
+        .select("doc_id", "text").limit(20), dir, commitTs = Some(1000L))
+    }
+    def state = {
+      val st = graft.sources.EpochStore.servingState(spark, dir,
+        "IndexFamilyTable", "writeFingerprintIndex")
+      (st.epoch, st.floor)
+    }
+    val before = state
+    val families = Seq(Dedup.index, TextIndex.index, Bm25.index, Ann.index,
+      Multimodal.index, TextDedup.index)
+    assert(families.map(_.id).distinct.size == 6)
+    // (op, call, what the artifact's own family returns)
+    val ops = Seq[(String, graft.sources.IndexFamily => Any, Any)](
+      ("compact", _.compact(spark, dir), false), // single epoch: no-op
+      ("vacuum", _.vacuum(spark, dir), ()),
+      ("epochAtTime", _.epochAtTime(spark, dir, 1000L), 0), // stamped base
+      ("changes", _.changes(spark, dir, 0, 0).count(), 0L)) // empty window
+    for (fam <- families; (op, run, own) <- ops) {
+      if (fam == Dedup.index) assert(run(fam) == own, s"${fam.id} $op")
+      else {
+        val e = intercept[IllegalArgumentException] { run(fam) }
+        assert(e.getMessage.contains("family"),
+          s"${fam.id} $op: ${e.getMessage}")
+      }
+      assert(state == before, s"${fam.id} $op moved the artifact")
+    }
   }
 
   test("writeEpoch sizes append output by bytes: a many-partition tiny " +

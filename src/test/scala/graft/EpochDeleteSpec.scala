@@ -86,8 +86,8 @@ class EpochDeleteSpec extends AnyFunSuite {
       Dedup.storedOwners(spark, dir).as[(String, Long)].collect().toSet
     }
     CacheScope.withScope {
-      assert(Dedup.compactFingerprintIndex(spark, dir))
-      Dedup.vacuumFingerprintIndex(spark, dir)
+      assert(Dedup.index.compact(spark, dir))
+      Dedup.index.vacuum(spark, dir)
     }
     assert(epochDirs(dir, "deletes").isEmpty,
       "compact+vacuum must fold tombstone epochs away physically")
@@ -182,8 +182,8 @@ class EpochDeleteSpec extends AnyFunSuite {
       "delete + re-append must score the composed corpus exactly")
     // compact: the dfs rewrite re-sums, so no negative row survives
     CacheScope.withScope {
-      assert(Bm25.compactBm25Index(spark, dir))
-      Bm25.vacuumBm25Index(spark, dir)
+      assert(Bm25.index.compact(spark, dir))
+      Bm25.index.vacuum(spark, dir)
     }
     assert(epochDirs(dir, "deletes").isEmpty &&
       epochDirs(dir, "dfs").size == 1)
@@ -293,8 +293,8 @@ class EpochDeleteSpec extends AnyFunSuite {
       "cp probe-after-delete must equal rebuild-without-deleted")
     // compact folds the tombstones away; the probe is unchanged
     CacheScope.withScope {
-      assert(graft.operators.Ann.compactCpIndex(spark, dir))
-      graft.operators.Ann.vacuumCpIndex(spark, dir)
+      assert(graft.operators.Ann.index.compact(spark, dir))
+      graft.operators.Ann.index.vacuum(spark, dir)
     }
     assert(epochDirs(dir, "deletes").isEmpty)
     val afterCompact = CacheScope.withScope {
@@ -334,8 +334,8 @@ class EpochDeleteSpec extends AnyFunSuite {
     assert(afterDelete == viaRebuild && afterDelete.nonEmpty,
       "dhash probe-after-delete must equal rebuild-without-deleted")
     CacheScope.withScope {
-      assert(graft.operators.Multimodal.compactDHashIndex(spark, dir))
-      graft.operators.Multimodal.vacuumDHashIndex(spark, dir)
+      assert(graft.operators.Multimodal.index.compact(spark, dir))
+      graft.operators.Multimodal.index.vacuum(spark, dir)
     }
     assert(epochDirs(dir, "deletes").isEmpty)
     // the raw hashes table (no tombstone logic) holds no retracted id
@@ -487,8 +487,8 @@ class EpochDeleteSpec extends AnyFunSuite {
     Seq(victim2).toDF("id").write.mode("overwrite")
       .parquet(s"$dir/deletes/epoch=3")
     CacheScope.withScope {
-      assert(Dedup.compactFingerprintIndex(spark, dir))
-      Dedup.vacuumFingerprintIndex(spark, dir)
+      assert(Dedup.index.compact(spark, dir))
+      Dedup.index.vacuum(spark, dir)
     }
     val after = CacheScope.withScope {
       Dedup.storedOwners(spark, dir).as[(String, Long)].collect().toSet
@@ -594,7 +594,7 @@ class EpochDeleteSpec extends AnyFunSuite {
     assert(intercept[IllegalArgumentException] { changes(1, 9) }
       .getMessage.contains("does not exist"))
     CacheScope.withScope {
-      assert(Dedup.compactFingerprintIndex(spark, dir, below = Some(2)))
+      assert(Dedup.index.compact(spark, dir, below = Some(2)))
     }
     assert(intercept[IllegalArgumentException] { changes(1, 3) }
       .getMessage.contains("predates the floor"),
@@ -635,7 +635,7 @@ class EpochDeleteSpec extends AnyFunSuite {
         operators.Ann.deleteFromCpIndex(dir,
           e.filter(col("vec_id") % 5 === 0).select("vec_id"))
       }
-      val (a, r) = sets(operators.Ann.vecChanges(spark, dir, 0, 2))
+      val (a, r) = sets(operators.Ann.index.changes(spark, dir, 0, 2))
       assert(a == ids(slice.filter(col("vec_id") % 5 =!= 0), "vec_id") &&
         r == ids(base.filter(col("vec_id") % 5 === 0), "vec_id") &&
         a.nonEmpty && r.nonEmpty,
@@ -654,7 +654,7 @@ class EpochDeleteSpec extends AnyFunSuite {
         operators.Bm25.deleteFromBm25Index(dir,
           d.filter(col("doc_id") % 5 === 0).select("doc_id"))
       }
-      val (a, r) = sets(operators.Bm25.docChanges(spark, dir, 0, 2))
+      val (a, r) = sets(operators.Bm25.index.changes(spark, dir, 0, 2))
       assert(a == ids(slice.filter(col("doc_id") % 5 =!= 0), "doc_id") &&
         r == ids(base.filter(col("doc_id") % 5 === 0), "doc_id") &&
         a.nonEmpty && r.nonEmpty,
@@ -675,7 +675,7 @@ class EpochDeleteSpec extends AnyFunSuite {
             .select(col("doc_id").as("media_id")))
       }
       val (a, r) = sets(
-        operators.Multimodal.mediaChanges(spark, dir, 0, 2))
+        operators.Multimodal.index.changes(spark, dir, 0, 2))
       assert(a == ids(slice.filter(col("doc_id") % 5 =!= 0), "doc_id") &&
         r == ids(base.filter(col("doc_id") % 5 === 0), "doc_id") &&
         a.nonEmpty && r.nonEmpty,
@@ -696,7 +696,7 @@ class EpochDeleteSpec extends AnyFunSuite {
           d.filter(col("doc_id") % 5 === 0).select("doc_id"))
       }
       val (a, r) = sets(
-        operators.TextDedup.benchmarkChanges(spark, dir, 0, 2))
+        operators.TextDedup.index.changes(spark, dir, 0, 2))
       assert(a == ids(slice.filter(col("doc_id") % 5 =!= 0), "doc_id") &&
         r == ids(base.filter(col("doc_id") % 5 === 0), "doc_id") &&
         a.nonEmpty && r.nonEmpty,

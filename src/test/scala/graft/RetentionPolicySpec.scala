@@ -113,8 +113,8 @@ class RetentionPolicySpec extends AnyFunSuite {
           wave.join(kept, Seq("doc_id"), "left_semi"))
         p.housekeep(spark, idx, i.toLong, "RetentionPolicySpec",
           "writeFingerprintIndex")(
-          below => Dedup.compactFingerprintIndex(spark, idx, below),
-          () => Dedup.vacuumFingerprintIndex(spark, idx))
+          below => Dedup.index.compact(spark, idx, below),
+          () => Dedup.index.vacuum(spark, idx))
       }
     }
     val st = EpochStore.servingState(spark, idx, "RetentionPolicySpec",
