@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Diagnostics main (r16, guide §1): split the six streaming ingest
   * loops' cost into SETUP (the epoch-0 index build over the corpus
-  * slice) vs the drain itself, at bench shape (local[32], sf0.1).
+  * slice) vs the drain itself, at bench shape (local[cores], sf0.1).
   * Not part of the driver contract.
   *
   * Usage: sbt 'runMain graft.ProfileIngest [sfDir]'
@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
 object ProfileIngest {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -65,18 +66,7 @@ object ProfileIngest {
           "/tmp/pi_dh")
       }
       time("cp: count+writeCpIndex") {
-        val cnt = e.agg(
-          count(when(col("vec_id") % 7 =!= 3, 1)).as("corpus"),
-          count(when(col("vec_id") % 7 === 3, 1)).as("a"),
-          count(when(col("vec_id") % 7 =!= 3 &&
-            col("vec_id") % 10 === 0, 1)).as("b"),
-          count(when(col("vec_id") % 7 === 3 &&
-            col("vec_id") % 9 === 4, 1)).as("c")).head()
-        val n = cnt.getLong(0) + cnt.getLong(1) + cnt.getLong(2) +
-          cnt.getLong(3)
-        val k = graft.plans.CrossPolytope.chooseHashesPerBand(n, 0.4,
-          64, 1e-4)
-        val b = graft.plans.CrossPolytope.bandsFor(0.4, k, 64, 1e-4)
+        val (k, b) = graft.streaming.IndexIngest.cpSizing(e)
         graft.operators.Ann.writeCpIndex(vecCorpus, "/tmp/pi_cp",
           threshold = 0.4, hashesPerBand = k, bands = b)
       }

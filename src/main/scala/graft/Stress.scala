@@ -69,7 +69,8 @@ object Stress {
   private val offset = 100000000L // clears every sf0.1 id space
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt.max(1)
     // optional section selectors (heavy / emb / skew / link); no args =
     // run everything — lets a single section re-run without repaying

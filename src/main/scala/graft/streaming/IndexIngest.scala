@@ -1,12 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-import graft.operators.Ann
+import graft.operators.{Ann, Bm25, Dedup, Multimodal, TextIndex}
 import graft.plans.CrossPolytope
+import graft.sources.{IndexFamily, RetentionPolicy}
 
 /** The index lifecycle's PRODUCTION CADENCE as one streaming gate
   * (q156): arriving shards flow in as micro-batches; each batch PROBES
@@ -51,33 +51,14 @@ import graft.plans.CrossPolytope
   *
   * Parameters are PINNED from the FINAL corpus count (base + all
   * waves), the q152 planned-growth sizing, so the mid-drain appends
-  * can never straddle a k-derivation step. The artifact and the pair
-  * sink are wiped and rebuilt EVERY run — they MUTATE during the
-  * drain (the operator under test IS the mutation loop), so unlike
-  * the staged inputs they can never be reused across bench passes
-  * (the q116 deliberate-restage precedent).
+  * can never straddle a k-derivation step ([[cpSizing]]). All six
+  * gates run the one loop, [[ingest]].
   */
 object IndexIngest {
 
   private val embSchema = StructType(Seq(
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(DoubleType))))
-
-  /** Stage three mtime-ordered waves into `srcDir` behind the
-    * [[EventStreams.stagedOnce]] reuse discipline — the one staging
-    * path all three ingestion gates share (r12 review: the scaffolding
-    * was triplicated and could drift).
-    */
-  private def stageWaves(sfDir: String, srcDir: String,
-      queryName: String, waves: Seq[DataFrame]): Unit =
-    EventStreams.stagedOnce(sfDir, srcDir) {
-      waves.zipWithIndex.foldLeft(Set.empty[java.nio.file.Path]) {
-        case (stamped, (df, i)) =>
-          EventStreams.writeStampedBatch(srcDir, df, i, stamped,
-            s"$queryName wave ${('A' + i).toChar}")
-      }
-      ()
-    }
 
   /** Stage a loop's INITIAL (epoch-0) index artifact once per
     * (JVM, key) and serve each bench pass a FRESH filesystem copy to
@@ -125,39 +106,102 @@ object IndexIngest {
     } finally walk.close()
   }
 
-  /** Drain `srcDir` one file per micro-batch under AvailableNow,
-    * running `perBatch` inside a cache scope, with the checkpoint in a
-    * tempdir removed afterwards — the one drive loop all three
-    * ingestion gates share.
+  private def idxDir(queryName: String) = s"/tmp/graft_stream_idx_$queryName"
+
+  /** What one ingest gate declares; [[ingest]] owns everything else.
+    *   - `schema` / `waves`: the staged shards, one micro-batch each,
+    *     in order;
+    *   - `artifactKey` / `build`: the epoch-0 artifact, built into the
+    *     dir it is given (see [[stagedArtifactOnce]]);
+    *   - `probe`: the batch's report against the stored artifact, which
+    *     the loop appends to the sink with its batch id (None: no sink);
+    *   - `fold`: fold the batch, given its report, into the artifact;
+    *   - `family` / `policy`: the housekeeping run after each fold
+    *     (None: no housekeeping).
     */
-  private def drainBatches(ss: SparkSession, srcDir: String,
-      schema: StructType, perBatch: (DataFrame, Long) => Unit): Unit = {
-    val src = ss.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt")
-    try {
-      val q = src.writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          graft.CacheScope.withScope { perBatch(batch, id) }
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    } finally {
-      val walk = java.nio.file.Files.walk(ckpt)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-      finally walk.close()
+  private[graft] final case class Gate(schema: StructType,
+      waves: Seq[DataFrame], artifactKey: String, build: String => Unit,
+      probe: Option[(String, DataFrame) => DataFrame],
+      fold: (String, DataFrame, Option[DataFrame]) => Unit,
+      family: Option[IndexFamily] = None,
+      policy: RetentionPolicy = RetentionPolicy())
+
+  /** The one ingest loop every gate runs — the reference's per-chunk
+    * read → transform → upsert-by-key loop (SURVEY §0) as a streaming
+    * drain. `declare` builds the gate on the streaming session; the
+    * loop stages its waves as mtime-ordered files behind the
+    * [[EventStreams.stagedOnce]] reuse discipline, builds the epoch-0
+    * artifact, then drains one file per micro-batch, each inside a
+    * cache scope: probe → sink append with the foreachBatch id → fold
+    * → housekeep, all before the next batch fires. The artifact and
+    * the sink are wiped and rebuilt EVERY run — they MUTATE during the
+    * drain (the operator under test IS the mutation loop), so unlike
+    * the staged inputs they can never be reused across bench passes
+    * (the q116 deliberate-restage precedent). Returns the scoped sink
+    * read-back, None for a gate without a probe.
+    */
+  private[graft] def ingest(spark: SparkSession, sfDir: String,
+      queryName: String)(declare: SparkSession => Gate)
+      : Option[DataFrame] = {
+    val srcDir = s"/tmp/graft_stream_src_$queryName"
+    val dir = idxDir(queryName)
+    val sinkDir = s"/tmp/graft_stream_report_$queryName"
+    val ss = EventStreams.streamingSession(spark)
+    val gate = declare(ss)
+    EventStreams.stagedOnce(sfDir, srcDir) {
+      gate.waves.zipWithIndex.foldLeft(Set.empty[java.nio.file.Path]) {
+        case (stamped, (df, i)) =>
+          EventStreams.writeStampedBatch(srcDir, df, i, stamped,
+            s"$queryName wave ${('A' + i).toChar}")
+      }
+      ()
     }
+    EventStreams.deleteStagingForTest(java.nio.file.Paths.get(sinkDir))
+    stagedArtifactOnce(ss, dir, gate.artifactKey) { d =>
+      graft.CacheScope.withScope(gate.build(d))
+    }
+    val src = ss.readStream.schema(gate.schema)
+      .option("maxFilesPerTrigger", 1).parquet(srcDir)
+    EventStreams.drainBatches(src) { (batch, id) =>
+      graft.CacheScope.withScope {
+        val bs = batch.sparkSession
+        val report = gate.probe.map(_(dir, batch))
+        report.foreach(_.withColumn("batch_id", lit(id))
+          .write.mode("append").parquet(sinkDir))
+        gate.fold(dir, batch, report)
+        gate.family.foreach(fam =>
+          gate.policy.housekeep(bs, dir, id, queryName, fam.writer)(
+            fam.compact(bs, dir, _), () => fam.vacuum(bs, dir)))
+      }
+    }
+    gate.probe.map(_ => graft.CacheScope.scoped(spark.read.parquet(sinkDir)))
   }
 
-  /** The exactly-once invariant all three gates share: a key surfacing
-    * in two micro-batches means a batch re-fired without its append or
-    * the sink double-wrote.
+  /** The copy-wave recipe: A = the arriving slice; B = every 10th
+    * corpus row with `key` shifted by `bShift` (planted hits against
+    * the STORED base); C = A's `key % 9 == cResidue` slice shifted by
+    * `cShift` (planted hits whose sides live in DIFFERENT batches, so
+    * they surface only if A's fold is load-bearing). `copy` reshapes a
+    * shifted copy (cp scales its embeddings).
+    */
+  private def copyWaves(key: String, corpus: DataFrame, waveA: DataFrame,
+      bShift: Long, cResidue: Int, cShift: Long,
+      copy: DataFrame => DataFrame = identity): Seq[DataFrame] = {
+    def shifted(df: DataFrame, off: Long) =
+      copy(df.withColumn(key, col(key) + lit(off)))
+    Seq(waveA, shifted(corpus.filter(col(key) % 10 === 0), bShift),
+      shifted(waveA.filter(col(key) % 9 === cResidue), cShift))
+  }
+
+  /** The cross-batch LOUD premise: some `planted` report row exists. */
+  private def requireCrossBatch(df: DataFrame, planted: Column,
+      queryName: String, why: String): Unit =
+    require(df.filter(planted).limit(1).count() == 1L,
+      s"$queryName premise violated: $why")
+
+  /** The exactly-once invariant every reporting gate shares: a key
+    * surfacing in two micro-batches means a batch re-fired without its
+    * append or the sink double-wrote.
     */
   private def requireExactlyOnce(df: DataFrame, keys: Seq[String],
       queryName: String, what: String): Unit = {
@@ -168,37 +212,14 @@ object IndexIngest {
         "one micro-batch")
   }
 
-  def ingestOnce(spark: SparkSession, sfDir: String,
-      queryName: String): DataFrame = {
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
-    val idxDir = s"/tmp/graft_stream_idx_$queryName"
-    val outDir = s"/tmp/graft_stream_pairs_$queryName"
-    val ss = EventStreams.streamingSession(spark)
-
-    val e = graft.Tables.embeddings(ss, sfDir)
-    val corpus = e.filter(col("vec_id") % 7 =!= 3)
-      .select(col("vec_id"),
-        col("embedding").cast("array<double>").as("embedding"))
-    def scaled(df: DataFrame, shift: Long): DataFrame =
-      df.select((col("vec_id") + lit(shift)).as("vec_id"),
-        transform(col("embedding").cast("array<double>"),
-          x => x * lit(1.001d)).as("embedding"))
-    val waveA = e.filter(col("vec_id") % 7 === 3)
-      .select(col("vec_id"),
-        col("embedding").cast("array<double>").as("embedding"))
-    val waveB = scaled(corpus.filter(col("vec_id") % 10 === 0), 5000000L)
-    val waveC = scaled(waveA.filter(col("vec_id") % 9 === 4), 9000000L)
-
-    stageWaves(sfDir, srcDir, queryName, Seq(waveA, waveB, waveC))
-
-    // the artifact and pair sink MUTATE during the drain — rebuilt
-    // every run, never staged-reused
-    EventStreams.deleteStagingForTest(java.nio.file.Paths.get(outDir))
-    // final corpus count (base + all three waves) in ONE scan — the
-    // wave predicates are residue classes of the same table, so a
-    // single conditional aggregate replaces four filtered counts
-    // (r11 review: this query deliberately re-pays its loop every
-    // bench pass; the derivation must not add scans of its own)
+  /** q156's cp parameters, PINNED from the FINAL corpus count (base +
+    * all three waves of the `embeddings` table `e`) in ONE scan — the
+    * wave predicates are residue classes of the same table, so a single
+    * conditional aggregate replaces four filtered counts (r11 review:
+    * this query deliberately re-pays its loop every bench pass; the
+    * derivation must not add scans of its own). Returns (k, bands).
+    */
+  private[graft] def cpSizing(e: DataFrame): (Int, Int) = {
     val cnt = e.agg(
       count(when(col("vec_id") % 7 =!= 3, 1)).as("corpus"),
       count(when(col("vec_id") % 7 === 3, 1)).as("a"),
@@ -209,36 +230,38 @@ object IndexIngest {
     val finalCount = cnt.getLong(0) + cnt.getLong(1) + cnt.getLong(2) +
       cnt.getLong(3)
     val k = CrossPolytope.chooseHashesPerBand(finalCount, 0.4, 64, 1e-4)
-    val b = CrossPolytope.bandsFor(0.4, k, 64, 1e-4)
-    stagedArtifactOnce(ss, idxDir,
-      s"$queryName|$sfDir|t0.4|k$k|b$b") { d =>
-      graft.CacheScope.withScope {
-        Ann.writeCpIndex(corpus, d, threshold = 0.4,
-          hashesPerBand = k, bands = b)
-      }
-    }
+    (k, CrossPolytope.bandsFor(0.4, k, 64, 1e-4))
+  }
 
-    drainBatches(ss, srcDir, embSchema, (batch, id) => {
-      // probe FIRST (the arriving shard against everything already
-      // corpus), report, then fold the shard in for the batches
-      // behind it
-      Ann.cosinePairsCpIndexed(idxDir, batch, threshold = 0.4)
-        .withColumn("batch_id", lit(id))
-        .write.mode("append").parquet(outDir)
-      Ann.appendCpIndex(idxDir, batch)
-    })
-
-    val pairs = graft.CacheScope.scoped(spark.read.parquet(outDir))
+  def ingestOnce(spark: SparkSession, sfDir: String,
+      queryName: String): DataFrame = {
+    val pairs = ingest(spark, sfDir, queryName) { ss =>
+      val e = graft.Tables.embeddings(ss, sfDir)
+      def slice(keep: Column) = e.filter(keep).select(col("vec_id"),
+        col("embedding").cast("array<double>").as("embedding"))
+      val corpus = slice(col("vec_id") % 7 =!= 3)
+      val (k, b) = cpSizing(e)
+      Gate(embSchema,
+        copyWaves("vec_id", corpus, slice(col("vec_id") % 7 === 3),
+          5000000L, 4, 9000000L, _.withColumn("embedding",
+            transform(col("embedding"), x => x * lit(1.001d)))),
+        s"$queryName|$sfDir|t0.4|k$k|b$b",
+        Ann.writeCpIndex(corpus, _, threshold = 0.4, hashesPerBand = k,
+          bands = b),
+        // probe FIRST (the arriving shard against everything already
+        // corpus), report, then fold the shard in for the batches
+        // behind it
+        probe = Some(Ann.cosinePairsCpIndexed(_, _, threshold = 0.4)),
+        fold = (dir, batch, _) => Ann.appendCpIndex(dir, batch))
+    }.get
     // LOUD premise: the planted wave-C copies pair with their wave-A
     // originals across batch boundaries — provable only if wave A was
     // APPENDED before wave C probed, i.e. the fold is load-bearing,
     // not just the base-index probe
-    require(pairs.filter(col("vec_b") >= 9000000L &&
-        col("vec_a") < 5000000L && col("vec_a") % 7 === 3).limit(1)
-        .count() == 1L,
-      s"$queryName premise violated: no cross-batch pair between wave " +
-        "C and wave A surfaced — the per-batch append fold is not " +
-        "feeding later probes")
+    requireCrossBatch(pairs, col("vec_b") >= 9000000L &&
+        col("vec_a") < 5000000L && col("vec_a") % 7 === 3, queryName,
+      "no cross-batch pair between wave C and wave A surfaced — the " +
+        "per-batch append fold is not feeding later probes")
     // each pair surfaces exactly once (the order-independence argument
     // above)
     requireExactlyOnce(pairs, Seq("vec_a", "vec_b"), queryName, "pair")
@@ -249,6 +272,37 @@ object IndexIngest {
   private val docSchema = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("text", StringType)))
+
+  /** The fp-family gate [[fpIngestOnce]] and [[fpIngestRetainedOnce]]
+    * share (r14 second review — the two differ only in wave recipe and
+    * housekeeping policy, and a duplicated gate is exactly how the
+    * verdict-first / one-materialization rule would drift): waves from
+    * `mkWaves(corpus, arriving)`, verdict FIRST (pinned: ONE scoped
+    * materialization serves both the sink report and the survivor
+    * selection — re-reading the cumulative sink per batch would pay
+    * O(batches²) listing over a long cadence; r12 ADVICE), fold the
+    * batch's kept docs, then `policy`. Returns the drained verdicts with
+    * exactly-once already required; cross-batch ownership premises and
+    * output shapes stay with each operator.
+    */
+  private def fpVerdicts(spark: SparkSession, sfDir: String,
+      queryName: String, policy: RetentionPolicy)(
+      mkWaves: (DataFrame, DataFrame) => Seq[DataFrame]): DataFrame = {
+    val verdicts = ingest(spark, sfDir, queryName) { ss =>
+      val d = graft.Tables.documents(ss, sfDir).select("doc_id", "text")
+      val corpus = d.filter(col("doc_id") % 7 =!= 3)
+      Gate(docSchema, mkWaves(corpus, d.filter(col("doc_id") % 7 === 3)),
+        s"$queryName|$sfDir|fp", Dedup.writeFingerprintIndex(corpus, _),
+        probe = Some((dir, batch) =>
+          graft.CacheScope.scoped(Dedup.dedupAgainstIndex(dir, batch))),
+        fold = (dir, batch, verdict) => Dedup.appendFingerprintIndex(dir,
+          batch.join(verdict.get.filter(col("kept")).select("doc_id"),
+            Seq("doc_id"), "left_semi")),
+        family = Some(Dedup.index), policy = policy)
+    }.get
+    requireExactlyOnce(verdicts, Seq("doc_id"), queryName, "doc verdict")
+    verdicts
+  }
 
   /** The SAME production cadence at the EXACT-dedup granularity (q164,
     * r11 VERDICT #3 — "the loop a real exact-dedup pipeline runs most"):
@@ -284,89 +338,21 @@ object IndexIngest {
     * replay refuses on the id clash; a doc verdicting twice refuses on
     * the exactly-once invariant below.
     */
-  /** The fp-family drain loop [[fpIngestOnce]] and
-    * [[fpIngestRetainedOnce]] share (r14 second review — the two
-    * differed only in wave recipe and housekeeping policy, and a
-    * duplicated loop body is exactly how the verdict-first /
-    * one-materialization rule would drift): stage `mkWaves(corpus,
-    * arriving)`, rebuild the artifact + verdict sink (they MUTATE
-    * during the drain — the q116/q156 precedent), drain one file per
-    * micro-batch with verdict FIRST (pinned: ONE materialization
-    * serves both the sink report and the survivor selection —
-    * re-reading the cumulative sink per batch would pay O(batches²)
-    * listing over a long cadence; r12 ADVICE), fold the batch's kept
-    * docs, run the [[graft.sources.RetentionPolicy]] before the next
-    * batch fires (r15 — r14 VERDICT #5: the policy was five
-    * hand-rolled lambdas), and return (idxDir, the scoped drained
-    * verdicts) with exactly-once already required. Cross-batch
-    * ownership premises and output shapes stay with each operator.
-    */
-  private def fpDrain(spark: SparkSession, sfDir: String,
-      queryName: String,
-      mkWaves: (DataFrame, DataFrame) => Seq[DataFrame],
-      policy: graft.sources.RetentionPolicy)
-      : (String, DataFrame) = {
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
-    val idxDir = s"/tmp/graft_stream_idx_$queryName"
-    val outDir = s"/tmp/graft_stream_verdicts_$queryName"
-    val ss = EventStreams.streamingSession(spark)
-
-    val d = graft.Tables.documents(ss, sfDir)
-    val corpus = d.filter(col("doc_id") % 7 =!= 3)
-      .select("doc_id", "text")
-    val arriving = d.filter(col("doc_id") % 7 === 3)
-      .select("doc_id", "text")
-    stageWaves(sfDir, srcDir, queryName, mkWaves(corpus, arriving))
-
-    EventStreams.deleteStagingForTest(java.nio.file.Paths.get(outDir))
-    stagedArtifactOnce(ss, idxDir, s"$queryName|$sfDir|fp") { d =>
-      graft.CacheScope.withScope {
-        graft.operators.Dedup.writeFingerprintIndex(corpus, d)
-      }
-    }
-
-    drainBatches(ss, srcDir, docSchema, (batch, id) => {
-      val bs = batch.sparkSession
-      val verdict = graft.CacheScope.scoped(
-        graft.operators.Dedup.dedupAgainstIndex(idxDir, batch))
-      verdict.withColumn("batch_id", lit(id))
-        .write.mode("append").parquet(outDir)
-      val kept = verdict.filter(col("kept")).select("doc_id")
-      graft.operators.Dedup.appendFingerprintIndex(idxDir,
-        batch.join(kept, Seq("doc_id"), "left_semi"))
-      val fam = graft.operators.Dedup.index
-      policy.housekeep(bs, idxDir, id, queryName, fam.writer)(
-        fam.compact(bs, idxDir, _), () => fam.vacuum(bs, idxDir))
-    })
-
-    val verdicts = graft.CacheScope.scoped(spark.read.parquet(outDir))
-    requireExactlyOnce(verdicts, Seq("doc_id"), queryName, "doc verdict")
-    (idxDir, verdicts)
-  }
-
   def fpIngestOnce(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
-    val (_, verdicts) = fpDrain(spark, sfDir, queryName,
-      mkWaves = (corpus, arriving) => Seq(
-        arriving,
-        corpus.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + lit(5000000L)).as("doc_id"),
-            col("text")),
-        arriving.filter(col("doc_id") % 9 === 4)
-          .select((col("doc_id") + lit(9000000L)).as("doc_id"),
-            col("text"))),
-      // full compaction every batch — the pre-policy hardcoded cadence
-      policy = graft.sources.RetentionPolicy())
+    // full compaction every batch — the pre-policy hardcoded cadence
+    val verdicts = fpVerdicts(spark, sfDir, queryName, RetentionPolicy())(
+      copyWaves("doc_id", _, _, 5000000L, 4, 9000000L))
     // LOUD premise: wave-C copies of wave-A docs must be owned by their
     // wave-A originals across the batch boundary — provable only if
     // wave A's survivors were FOLDED IN (and survived the compaction +
     // vacuum) before wave C probed
-    require(verdicts.filter(col("doc_id") >= 9000000L && !col("kept") &&
-        col("owner") < 5000000L && col("owner") % 7 === 3).limit(1)
-        .count() == 1L,
-      s"$queryName premise violated: no wave-C doc is owned by its " +
-        "wave-A original — the per-batch survivor fold (or the " +
-        "compacted artifact) is not feeding later probes")
+    requireCrossBatch(verdicts, col("doc_id") >= 9000000L &&
+        !col("kept") && col("owner") < 5000000L &&
+        col("owner") % 7 === 3, queryName,
+      "no wave-C doc is owned by its wave-A original — the per-batch " +
+        "survivor fold (or the compacted artifact) is not feeding " +
+        "later probes")
     verdicts.select(col("doc_id"), col("fp"), col("owner"),
         col("kept").cast("long").as("kept"))
       .orderBy(col("doc_id"))
@@ -399,34 +385,33 @@ object IndexIngest {
     */
   def fpIngestRetainedOnce(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
-    val (idxDir, verdicts) = fpDrain(spark, sfDir, queryName,
-      mkWaves = (_, arriving) => {
-        val waveA = arriving.filter(col("doc_id") % 3 === 0)
-        Seq(
-          waveA,
-          arriving.filter(col("doc_id") % 3 === 1)
-            .unionByName(waveA.filter(col("doc_id") % 9 === 0)
-              .select((col("doc_id") + lit(9000000L)).as("doc_id"),
-                col("text"))),
-          arriving.filter(col("doc_id") % 3 === 2))
-      },
-      // retain ONE horizon: fold everything below the pre-fold horizon
-      // into the checkpoint, keep that horizon servable mid-stream
-      policy = graft.sources.RetentionPolicy(retainHorizons = Some(1)))
+    // retain ONE horizon: fold everything below the pre-fold horizon
+    // into the checkpoint, keep that horizon servable mid-stream
+    val verdicts = fpVerdicts(spark, sfDir, queryName,
+        RetentionPolicy(retainHorizons = Some(1))) { (_, arriving) =>
+      val waveA = arriving.filter(col("doc_id") % 3 === 0)
+      Seq(
+        waveA,
+        arriving.filter(col("doc_id") % 3 === 1)
+          .unionByName(waveA.filter(col("doc_id") % 9 === 0)
+            .select((col("doc_id") + lit(9000000L)).as("doc_id"),
+              col("text"))),
+        arriving.filter(col("doc_id") % 3 === 2))
+    }
+    val dir = idxDir(queryName)
 
     // cross-batch ownership: a wave-B copy owned by its wave-A
     // original proves batch A's fold survived batch A's compactBelow
-    require(verdicts.filter(col("doc_id") >= 9000000L && !col("kept") &&
-        col("owner") < 9000000L && col("owner") % 7 === 3).limit(1)
-        .count() == 1L,
-      s"$queryName premise violated: no wave-B copy is owned by its " +
-        "wave-A original — the fold did not survive the in-loop " +
-        "partial compaction")
+    requireCrossBatch(verdicts, col("doc_id") >= 9000000L &&
+        !col("kept") && col("owner") < 9000000L &&
+        col("owner") % 7 === 3, queryName,
+      "no wave-B copy is owned by its wave-A original — the fold did " +
+        "not survive the in-loop partial compaction")
     // the retention policy's exact end state: base 0, A-fold 1,
     // cb(0) no-op, B-fold 2, cb(1)→epoch 3 floor 1, C-fold 4,
     // cb(3)→epoch 5 floor 3 — deterministic because one wave = one
     // batch (maxFilesPerTrigger = 1 over three stamped files)
-    val st = graft.sources.EpochStore.servingState(spark, idxDir,
+    val st = graft.sources.EpochStore.servingState(spark, dir,
       queryName, "writeFingerprintIndex")
     require(st.epoch == 5 && st.floor == 3,
       s"$queryName premise violated: expected (serving, floor) = " +
@@ -434,9 +419,9 @@ object IndexIngest {
         s"(${st.epoch}, ${st.floor})")
     // through the layout's own existence probes, never by rebuilding
     // its path convention by hand (r14 second review)
-    require(!graft.sources.EpochStore.epochDirExists(spark, idxDir,
+    require(!graft.sources.EpochStore.epochDirExists(spark, dir,
         "fps", 0) &&
-      graft.sources.EpochStore.checkpointDirExists(spark, idxDir,
+      graft.sources.EpochStore.checkpointDirExists(spark, dir,
         "fps", 3),
       s"$queryName premise violated: the folded epochs must be " +
         "physically reclaimed and the retention checkpoint present — " +
@@ -444,10 +429,9 @@ object IndexIngest {
     val incoming = graft.Tables.documents(spark, sfDir)
       .filter(col("doc_id") % 7 === 3 && col("doc_id") % 3 === 2)
       .select((col("doc_id") + lit(7000000L)).as("doc_id"), col("text"))
-    val at3 = graft.operators.Dedup.dedupAgainstIndex(idxDir, incoming,
-        asOf = Some(3))
+    val at3 = Dedup.dedupAgainstIndex(dir, incoming, asOf = Some(3))
       .withColumn("as_of", lit(3L))
-    val at5 = graft.operators.Dedup.dedupAgainstIndex(idxDir, incoming)
+    val at5 = Dedup.dedupAgainstIndex(dir, incoming)
       .withColumn("as_of", lit(5L))
     at3.unionByName(at5)
       .select(col("as_of"), col("doc_id"), col("fp"), col("owner"),
@@ -482,54 +466,26 @@ object IndexIngest {
       queryName: String,
       policy: graft.sources.RetentionPolicy =
         graft.sources.RetentionPolicy()): DataFrame = {
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
-    val idxDir = s"/tmp/graft_stream_idx_$queryName"
-    val outDir = s"/tmp/graft_stream_pairs_$queryName"
-    val ss = EventStreams.streamingSession(spark)
-
-    val d = graft.Tables.documents(ss, sfDir)
-    val corpus = d.filter(col("doc_id") % 7 =!= 3)
-      .select("doc_id", "text")
-    val waveA = d.filter(col("doc_id") % 7 === 3)
-      .select("doc_id", "text")
-    val waveB = corpus.filter(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + lit(5000000L)).as("doc_id"), col("text"))
-    val waveC = waveA.filter(col("doc_id") % 9 === 4)
-      .select((col("doc_id") + lit(9000000L)).as("doc_id"), col("text"))
-
-    stageWaves(sfDir, srcDir, queryName, Seq(waveA, waveB, waveC))
-
-    // artifact + pair sink MUTATE during the drain — rebuilt every run
-    EventStreams.deleteStagingForTest(java.nio.file.Paths.get(outDir))
-    stagedArtifactOnce(ss, idxDir, s"$queryName|$sfDir|jac0.6") { d =>
-      graft.CacheScope.withScope {
-        graft.operators.TextIndex.writeJaccardIndex(corpus, d,
-          threshold = 0.6)
-      }
-    }
-
-    drainBatches(ss, srcDir, docSchema, (batch, id) => {
-      val bs = batch.sparkSession
-      graft.operators.TextIndex.jaccardPairsIndexed(idxDir, batch,
-          threshold = 0.6)
-        .withColumn("batch_id", lit(id))
-        .write.mode("append").parquet(outDir)
-      graft.operators.TextIndex.appendJaccardIndex(idxDir, batch)
-      val fam = graft.operators.TextIndex.index
-      policy.housekeep(bs, idxDir, id, queryName, fam.writer)(
-        fam.compact(bs, idxDir, _), () => fam.vacuum(bs, idxDir))
-    })
-
-    val pairs = graft.CacheScope.scoped(spark.read.parquet(outDir))
+    val pairs = ingest(spark, sfDir, queryName) { ss =>
+      val d = graft.Tables.documents(ss, sfDir).select("doc_id", "text")
+      val corpus = d.filter(col("doc_id") % 7 =!= 3)
+      Gate(docSchema,
+        copyWaves("doc_id", corpus, d.filter(col("doc_id") % 7 === 3),
+          5000000L, 4, 9000000L),
+        s"$queryName|$sfDir|jac0.6",
+        TextIndex.writeJaccardIndex(corpus, _, threshold = 0.6),
+        probe = Some(TextIndex.jaccardPairsIndexed(_, _, threshold = 0.6)),
+        fold = (dir, batch, _) => TextIndex.appendJaccardIndex(dir, batch),
+        family = Some(TextIndex.index), policy = policy)
+    }.get
     // LOUD premise: wave C's exact copies of wave-A docs pair at J=1
     // across the batch boundary — provable only if wave A's fold
     // survived the mid-drain compaction + vacuum before wave C probed
-    require(pairs.filter(col("doc_b") >= 9000000L &&
-        col("doc_a") < 5000000L && col("doc_a") % 7 === 3).limit(1)
-        .count() == 1L,
-      s"$queryName premise violated: no cross-batch pair between wave " +
-        "C and wave A surfaced — the per-batch append fold (or the " +
-        "compacted artifact) is not feeding later probes")
+    requireCrossBatch(pairs, col("doc_b") >= 9000000L &&
+        col("doc_a") < 5000000L && col("doc_a") % 7 === 3, queryName,
+      "no cross-batch pair between wave C and wave A surfaced — the " +
+        "per-batch append fold (or the compacted artifact) is not " +
+        "feeding later probes")
     requireExactlyOnce(pairs, Seq("doc_a", "doc_b"), queryName, "pair")
     pairs.select(col("doc_a"), col("doc_b"), col("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
@@ -571,54 +527,28 @@ object IndexIngest {
       queryName: String,
       policy: graft.sources.RetentionPolicy =
         graft.sources.RetentionPolicy()): DataFrame = {
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
-    val idxDir = s"/tmp/graft_stream_idx_$queryName"
-    val outDir = s"/tmp/graft_stream_pairs_$queryName"
-    val ss = EventStreams.streamingSession(spark)
-
-    val d = graft.Tables.documents(ss, sfDir)
-      .select("doc_id", "text", "n_chars")
-    val corpus = d.filter(col("doc_id") % 7 =!= 3)
-    val waveA = d.filter(col("doc_id") % 7 === 3)
-    def shifted(df: DataFrame, off: Long): DataFrame =
-      df.select((col("doc_id") + lit(off)).as("doc_id"), col("text"),
-        col("n_chars"))
-    val waveB = shifted(corpus.filter(col("doc_id") % 10 === 0), 5000448L)
-    val waveC = shifted(waveA.filter(col("doc_id") % 9 === 6), 9000192L)
-
-    stageWaves(sfDir, srcDir, queryName, Seq(waveA, waveB, waveC))
-
-    // the artifact and pair sink MUTATE during the drain — rebuilt
-    // every run (the q116/q156 deliberate-restage class)
-    EventStreams.deleteStagingForTest(java.nio.file.Paths.get(outDir))
-    stagedArtifactOnce(ss, idxDir, s"$queryName|$sfDir|dhash") { d =>
-      graft.CacheScope.withScope {
-        graft.operators.Multimodal.writeDHashIndex(corpus, d)
-      }
-    }
-
-    drainBatches(ss, srcDir, mediaSchema, (batch, id) => {
-      val bs = batch.sparkSession
-      graft.operators.Multimodal.imageDHashNearIndexed(idxDir, batch)
-        .withColumn("batch_id", lit(id))
-        .write.mode("append").parquet(outDir)
-      graft.operators.Multimodal.appendDHashIndex(idxDir, batch)
-      val fam = graft.operators.Multimodal.index
-      policy.housekeep(bs, idxDir, id, queryName, fam.writer)(
-        fam.compact(bs, idxDir, _), () => fam.vacuum(bs, idxDir))
-    })
-
-    val pairs = graft.CacheScope.scoped(spark.read.parquet(outDir))
+    val pairs = ingest(spark, sfDir, queryName) { ss =>
+      val d = graft.Tables.documents(ss, sfDir)
+        .select("doc_id", "text", "n_chars")
+      val corpus = d.filter(col("doc_id") % 7 =!= 3)
+      Gate(mediaSchema,
+        copyWaves("doc_id", corpus, d.filter(col("doc_id") % 7 === 3),
+          5000448L, 6, 9000192L),
+        s"$queryName|$sfDir|dhash",
+        Multimodal.writeDHashIndex(corpus, _),
+        probe = Some(Multimodal.imageDHashNearIndexed(_, _)),
+        fold = (dir, batch, _) => Multimodal.appendDHashIndex(dir, batch),
+        family = Some(Multimodal.index), policy = policy)
+    }.get
     // LOUD premise: wave C's exact raster copies of wave-A images pair
     // at Hamming 0 across the batch boundary — provable only if wave
     // A's fold survived the mid-drain compaction + vacuum before wave
     // C probed
-    require(pairs.filter(col("media_b") >= 9000192L &&
-        col("media_a") < 5000448L && col("media_a") % 7 === 3).limit(1)
-        .count() == 1L,
-      s"$queryName premise violated: no cross-batch pair between wave " +
-        "C and wave A surfaced — the per-batch append fold (or the " +
-        "compacted artifact) is not feeding later probes")
+    requireCrossBatch(pairs, col("media_b") >= 9000192L &&
+        col("media_a") < 5000448L && col("media_a") % 7 === 3, queryName,
+      "no cross-batch pair between wave C and wave A surfaced — the " +
+        "per-batch append fold (or the compacted artifact) is not " +
+        "feeding later probes")
     requireExactlyOnce(pairs, Seq("media_a", "media_b"), queryName,
       "pair")
     pairs.select(col("media_a"), col("media_b"), col("hamming"))
@@ -649,35 +579,18 @@ object IndexIngest {
       queryName: String,
       policy: graft.sources.RetentionPolicy =
         graft.sources.RetentionPolicy()): DataFrame = {
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
-    val idxDir = s"/tmp/graft_stream_idx_$queryName"
-    val ss = EventStreams.streamingSession(spark)
-
-    val d = graft.Tables.documents(ss, sfDir)
-    val base = d.filter(col("doc_id") % 7 =!= 3).select("doc_id", "text")
-    val arriving = d.filter(col("doc_id") % 7 === 3)
-      .select("doc_id", "text")
-    val waves = (0 to 2).map(r =>
-      arriving.filter(col("doc_id") % 3 === r))
-
-    stageWaves(sfDir, srcDir, queryName, waves)
-
-    // the artifact MUTATES during the drain — rebuilt every run
-    stagedArtifactOnce(ss, idxDir, s"$queryName|$sfDir|bm25") { d =>
-      graft.CacheScope.withScope {
-        graft.operators.Bm25.writeBm25Index(base, d)
-      }
+    ingest(spark, sfDir, queryName) { ss =>
+      val d = graft.Tables.documents(ss, sfDir).select("doc_id", "text")
+      val arriving = d.filter(col("doc_id") % 7 === 3)
+      Gate(docSchema,
+        (0 to 2).map(r => arriving.filter(col("doc_id") % 3 === r)),
+        s"$queryName|$sfDir|bm25",
+        Bm25.writeBm25Index(d.filter(col("doc_id") % 7 =!= 3), _),
+        probe = None,
+        fold = (dir, batch, _) => Bm25.appendBm25Index(dir, batch),
+        family = Some(Bm25.index), policy = policy)
     }
-
-    drainBatches(ss, srcDir, docSchema, (batch, id) => {
-      val bs = batch.sparkSession
-      graft.operators.Bm25.appendBm25Index(idxDir, batch)
-      val fam = graft.operators.Bm25.index
-      policy.housekeep(bs, idxDir, id, queryName, fam.writer)(
-        fam.compact(bs, idxDir, _), () => fam.vacuum(bs, idxDir))
-    })
-
-    graft.operators.Bm25.topKIndexed(spark, idxDir,
+    Bm25.topKIndexed(spark, idxDir(queryName),
       Seq("spark", "hash", "window"), k = 50)
   }
 }
