@@ -1,9 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Streaming staging reuse (r7/r8 VERDICT: the ~20 streaming gates
     // each pay a fixed staging floor PER PASS; with min-of-2 timing the
     // second pass's restage is pure overhead). Scoped to this JVM by a
@@ -11,14 +9,7 @@ object Bench {
     // staged bytes and stamped mtimes verbatim, so drained results are
     // identical by construction; a fresh process never reuses.
     System.setProperty("graft.stage.reuse", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     // JVM/codegen warmup outside the timed region (standard bench
     // hygiene): one tiny end-to-end plan through scan+agg+window, plus
     // the flagship pipeline at sf0.001 — scan, dirty-view string ops,
@@ -93,13 +84,9 @@ object Bench {
     // wasn't measuring the declared work. The noop sink evaluates every
     // output column and discards rows sink-side.
     //
-    // Diagnostics knobs (NOT used by the driver's per-round run):
-    //  - SPARK_GRAFT_ACTION=count re-times under the r1 count() action,
-    //    for the one same-action cross-round comparison the r2 judge
-    //    asked for (pruned-action artifacts vs real regressions);
-    //  - SPARK_GRAFT_ONLY=q35,q50 restricts to named queries for cheap
-    //    paired runs of a suspect without the 60-query tail.
-    val action = sys.env.getOrElse("SPARK_GRAFT_ACTION", "noop")
+    // Diagnostics knob (NOT used by the driver's per-round run):
+    // SPARK_GRAFT_ONLY=q35,q50 restricts to named queries for cheap
+    // paired runs of a suspect without the 60-query tail.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -178,9 +165,7 @@ object Bench {
         val ok =
           // withScope: per-query operator caches drop with the scope
           try CacheScope.withScope {
-            val df = fn(spark, sfDir)
-            if (action == "count") df.count()
-            else df.write.format("noop").mode("overwrite").save()
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
             true
           } catch {
             case t: Throwable =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.{Dedup, Stats, TxnTransform}
 import graft.sources.CsvSource
 
@@ -22,7 +21,10 @@ import graft.sources.CsvSource
   *  - faulty chunk log  → per-ROW corrupt capture written to --corrupt-dir
   *
   * Exit code 0 on success with the reference's stats/validation report
-  * printed (A1-A5), 1 on failure.
+  * printed (A1-A5), 1 on failure. An OutOfMemoryError in a task exits
+  * 52 instead: Spark's executor uncaught-exception handler ends the JVM
+  * before the catch below can map it to 1 (measured at -Xmx1g on a
+  * 1.3 GB input; the fix is ROADMAP item 2).
   */
 object EtlMain {
   def main(args: Array[String]): Unit = {
@@ -46,15 +48,7 @@ object EtlMain {
       sys.exit(1)
     }
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(cores = cores.toInt)
 
     try {
       // scan with per-row malformed capture (S1/S2)

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dump formatted physical plans for a representative query per operator
@@ -225,21 +224,14 @@ object PlanDump {
     // a renamed/removed query or a typoed notes key must refuse, not
     // silently drop its prose from the regenerated artifact (the exact
     // failure mode the notes map exists to prevent; same precedent as
-    // PlanAuditSpec's nestedLoopAllowed staleness check)
+    // RegistrySpec's nestedLoopAllowed staleness check)
     val orphaned = notes.keySet -- representative.toSet
     require(orphaned.isEmpty,
       s"PlanDump.notes keys not in representative: ${orphaned.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // AQE off HERE ONLY: formatted plans under AQE hide the
-      // WholeStageCodegen spans this artifact exists to show (the
-      // harness sessions keep AQE on)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // AQE off HERE (and in PlanFile) ONLY: formatted plans under AQE
+    // hide the WholeStageCodegen spans this artifact exists to show (the
+    // harness sessions keep AQE on)
+    val spark = LocalSpark.session(cores = 8, aqe = false, logLevel = "ERROR")
     val dir = "/root/testdata/sf0.001"
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans (generated by graft.PlanDump at sf0.001)\n\n")

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dump the formatted physical plan of NAMED queries, one file each —
@@ -22,14 +21,7 @@ object PlanFile {
     val unknown = names.filterNot(Queries.all.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session(cores = 8, aqe = false, logLevel = "ERROR")
     val dir = "/root/testdata/sf0.001"
     names.foreach { name =>
       val plan = CacheScope.withScope {

@@ -69,8 +69,6 @@ object Stress {
   private val offset = 100000000L // clears every sf0.1 id space
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt.max(1)
     // optional section selectors (heavy / emb / skew / link); no args =
     // run everything — lets a single section re-run without repaying
@@ -91,14 +89,7 @@ object Stress {
         s"valid: ${known.mkString(", ")} (a typo must refuse loudly, not " +
         "exit 0 having measured nothing)")
     def section(name: String): Boolean = sections.contains(name)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session(logLevel = "ERROR")
     val base = "/root/testdata/sf0.1"
     val dir10 = "/tmp/graft_stress_10x"
 

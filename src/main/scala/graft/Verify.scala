@@ -2,7 +2,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Run: `sbt 'runMain graft.Verify <sfDir> <outDir> [query...]'`; named
+  * queries restrict the run to that subset, which
+  * `tools/check.py <outDir> <sfDir> <query...>` then gates.
+  */
 object Verify {
 
   /** A thrown query must stay VISIBLE in the record: write a marker
@@ -30,7 +35,6 @@ object Verify {
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
     * — a tab or CR in builder-authored SQL would otherwise make the
     * driver's json.load fail and silently zero the round's correctness.
-    * Shared with [[Dev]]'s subset dump so the two writers cannot drift.
     */
   private[graft] def jsonEscape(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
@@ -42,19 +46,20 @@ object Verify {
     case c => c.toString
   } + "\""
 
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** Writes the `names` queries' results under `outDir` (every
+    * registered query when `names` is empty), then the FULL
+    * oracle_sql.json. An unknown name is refused before anything is
+    * written: a typo must not pass as a clean subset run.
+    */
+  private[graft] def run(spark: SparkSession, sfDir: String, outDir: String,
+      names: Seq[String]): Unit = {
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val selected =
+      if (names.isEmpty) SparkEntry.queries.toSeq
+      else names.map(n => n -> SparkEntry.queries(n))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       // withScope: operator-internal caches drop when this query's
       // action completes — release is owner-scoped, see CacheScope
       try CacheScope.withScope {
@@ -70,6 +75,12 @@ object Verify {
       .map { case (k, v) => s"${jsonEscape(k)}: ${jsonEscape(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+  }
+
+  def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query...]")
+    val spark = LocalSpark.session()
+    run(spark, args(0), args(1), args.drop(2).toSeq)
     spark.stop()
   }
 }

@@ -2,146 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Physical-plan audit across the whole registry: the scale anti-patterns
-  * the r1/r2 judges grepped for by hand, pinned as a regression test. A
-  * nested-loop join or cartesian product that creeps into a rewrite dies
-  * here, not at 100 TB.
-  *
-  * Streaming gate queries (q57/q60/q63/q64) are excluded: building their
-  * frame RUNS the staged AvailableNow job, and the frame this audit would
-  * see is only the post-hoc memory-table aggregate.
+/** Physical-plan checks the whole-registry audit cannot make: AQE's
+  * runtime skew split against the salted-join remedy, and the flagship
+  * pipeline's filter pushdown and column pruning. The registry-wide
+  * nested-loop / cartesian audit rides RegistrySpec's one walk, with its
+  * `nestedLoopAllowed` allowlist and `streaming` exclusions.
   */
 class PlanAuditSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   private val sf = TestSpark.sf
-
-  /** Queries whose plans legitimately contain a data-independent or
-    * deliberately-quadratic nested-loop piece, with the justification.
-    */
-  private val nestedLoopAllowed = Map(
-    "q08_malformed_csv" -> "crossJoin of three 1-row aggregate frames",
-    "q24_ann_topk" -> ("brute-force exact baseline IS a broadcast NL join " +
-      "(queries broadcast over corpus) — kept as the verifiable anchor"),
-    "q28_cosine_pairs" -> ("chunks x chunks grid build (256 rows) is " +
-      "cross-joined; data rows join the grid by equi-key"),
-    "q35_ann_ivf" -> ("1-row centroid-array frame broadcast onto corpus " +
-      "and queries (cells are chosen per-row from the array)"),
-    "q42_props_map" -> "single-row aggregate comparison frame",
-    "q02_funnel" -> "single-row aggregate frames",
-    "q07_csv_roundtrip" -> "single-row aggregate parity frames",
-    "q41_json_roundtrip" -> "single-row aggregate parity frames",
-    "q54_orc_roundtrip" -> "single-row aggregate parity frames",
-    "q64_streaming_late_drop" -> ("bounds row (min/max ts) broadcast onto " +
-      "the staged stream"),
-    "q75_bloom_join" -> ("the ONE-ROW bloom-bits frame is cross-joined " +
-      "(broadcast) onto the fact — the delivery mechanism of the filter, " +
-      "constant-size by construction"),
-    "q86_bm25" -> ("the ONE-ROW corpus-stats frame (N, avg doc length) is " +
-      "broadcast onto the per-term hits — constant-size by construction"),
-    "q97_ngram_decontaminate_bloom" -> ("the ONE-ROW bloom-bits frame is " +
-      "cross-joined (broadcast) onto the corpus gram stream — same " +
-      "sanctioned delivery mechanism as q75"),
-    "q100_boilerplate" -> ("the ONE-ROW boilerplate-set frame (bounded by " +
-      "total_segments/minDocs) is cross-joined (broadcast) onto the " +
-      "per-doc segment arrays — same sanctioned delivery mechanism as " +
-      "q75/q97"),
-    "q104_heavy_hitters" -> ("the ONE-ROW dense CMS array is the semi-" +
-      "join build side (the probe is the join condition, so the 128 KB " +
-      "array never lands in output rows) — same sanctioned delivery " +
-      "mechanism as q75/q97"),
-    "q50_name_neardup" -> ("the ONE-ROW max-block-size premise frame is " +
-      "cross-joined (broadcast) onto the probe side — the r5-VERDICT " +
-      "loud blocking guard, same bounds-frame mechanism as q64"),
-    // the 8 ts-VALUE-dependent batch gates: Events.requireSpanHours
-    // broadcasts the ONE-ROW (min, max) ts_us bounds frame onto the
-    // events scan — the r6-VERDICT collapsed-time refusal, same
-    // bounds-frame mechanism as q64/q50
-    "q16_events_hourly" -> "requireSpanHours 1-row bounds broadcast",
-    "q18_sessionize" -> "requireSpanHours 1-row bounds broadcast",
-    "q30_events_sliding" -> "requireSpanHours 1-row bounds broadcast",
-    "q31_asof_join" -> "requireSpanHours 1-row bounds broadcast",
-    "q65_grouped_transform" -> "requireSpanHours 1-row bounds broadcast",
-    "q102_band_join" -> "requireSpanHours 1-row bounds broadcast",
-    "q106_overlap_join" -> "requireSpanHours 1-row bounds broadcast",
-    "q113_session_window" -> "requireSpanHours 1-row bounds broadcast",
-    "q119_event_funnel" -> "requireSpanHours 1-row bounds broadcast",
-    "q120_cohort_retention" -> "requireSpanHours 1-row bounds broadcast",
-    "q123_event_pattern" -> "requireSpanHours 1-row bounds broadcast",
-    "q131_asof_tolerance" -> "requireSpanHours 1-row bounds broadcast",
-    "q139_vocab_oov" -> ("the ONE-ROW sorted vocabulary array (top-V, " +
-      "broadcast-small by construction) is cross-joined onto the corpus " +
-      "— the sanctioned q75/q100 broadcast-set delivery mechanism"),
-    "q136_entity_resolution" -> ("segmentedEditPairs' TWO 1-row premise " +
-      "frames (hottest-segment-key volume; short-suffix block size) " +
-      "cross-joined onto the candidate stream — the sanctioned " +
-      "loud-blocking-guard mechanism, same as q142"),
-    "q137_resample_fill" -> ("requireSpanHours bounds PLUS the spine's " +
-      "own 1-row (min,max) bucket frame cross-joined onto the key list " +
-      "— both sanctioned constant-size bounds mechanisms"),
-    "q121_mixture_sample" -> ("the ONE-ROW min-group-mass frame is " +
-      "cross-joined (broadcast) onto the |groups|-row totals — same " +
-      "bounds-frame mechanism as q50/q64; the corpus itself joins the " +
-      "tiny weights frame by equi-key"),
-    "q157_temperature_mixture" -> ("q121's identical ONE-ROW " +
-      "min-group-mass bounds broadcast onto the |groups|-row totals " +
-      "(temperatureSample shares mixtureSample's stats shape); the " +
-      "corpus joins the tiny weights frame by equi-key"),
-    "q124_hard_negatives" -> ("the label-mismatch top-k IS a broadcast " +
-      "NL join (queries broadcast over corpus) by design — q24's exact " +
-      "baseline shape with the mismatch predicate as the join condition"),
-    "q128_quantized_ann" -> ("the int8 top-k IS a broadcast NL join " +
-      "(quantized queries broadcast over the quantized corpus) — q24's " +
-      "exact baseline shape with the integer kernel"),
-    "q129_two_stage_retrieval" -> ("the ONE-ROW corpus-stats frame (N, " +
-      "avg doc length) is broadcast onto the per-term hits — q86's " +
-      "sanctioned constant-size mechanism; all candidate joins are " +
-      "equi-key"),
-    "q142_linkage_segmented" -> ("segmentedEditPairs' TWO 1-row premise " +
-      "frames (hottest-segment-key volume; short-suffix block size) " +
-      "cross-joined onto the candidate stream — the sanctioned " +
-      "loud-blocking-guard mechanism (q50/q136 family); the candidate " +
-      "join itself is a 5-key equi-join"),
-    "q143_bpe_merges" -> ("each BPE round cross-joins its ONE-ROW argmax " +
-      "merge pair (broadcast) onto the vocab-sized word table for the " +
-      "fuse — the q35-centroid/q121-bounds constant-size delivery " +
-      "mechanism, k rows total across the run"))
-
-  private val streaming =
-    Set("q57_streaming_rollup", "q60_streaming_sessionize",
-      "q63_streaming_dedup", "q64_streaming_late_drop",
-      "q72_streaming_interval_join", "q82_streaming_cdc_apply",
-      "q91_streaming_outer_join", "q92_streaming_session_timeout",
-      "q94_streaming_enrich", "q98_streaming_ttl_visits",
-      "q103_streaming_tws_sessionize", "q109_streaming_tws_timer",
-      "q110_streaming_lastk", "q111_streaming_bootstrap",
-      "q112_streaming_type_counts", "q114_streaming_dedup_rollup",
-      "q115_streaming_ttl_state", "q116_streaming_restart",
-      "q125_streaming_full_outer_join", "q132_streaming_update_rollup",
-      "q156_streaming_index_ingest", "q164_streaming_fp_ingest",
-      "q167_streaming_text_ingest", "q170_streaming_bm25_maintain",
-      "q175_streaming_dhash_ingest", "q188_streaming_fp_retained")
-
-  test("no unsanctioned nested-loop or cartesian join in any batch plan") {
-    val offenders = Queries.all.toSeq.sortBy(_._1)
-      .filterNot { case (name, _) => streaming(name) }
-      .flatMap { case (name, fn) =>
-        val plan = CacheScope.withScope {
-          fn(spark, sf).queryExecution.executedPlan.toString
-        }
-        val hits = Seq("CartesianProduct", "BroadcastNestedLoopJoin")
-          .filter(plan.contains)
-        if (hits.nonEmpty && !nestedLoopAllowed.contains(name))
-          Some(s"$name: ${hits.mkString(", ")}")
-        else None
-      }
-    assert(offenders.isEmpty,
-      s"unsanctioned quadratic join shapes:\n${offenders.mkString("\n")}")
-  }
-
-  test("allowlisted nested-loop queries still exist in the registry") {
-    val gone = nestedLoopAllowed.keySet -- Queries.all.keySet
-    assert(gone.isEmpty, s"allowlist entries for dead queries: $gone")
-  }
 
   test("AQE splits a skewed join partition at runtime, and the result " +
       "matches Skew.saltedJoin's manual remedy") {

@@ -6,16 +6,6 @@ import org.apache.spark.sql.SparkSession
   * suites run sequentially).
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = LocalSpark.session(cores = 4, logLevel = "ERROR")
   val sf: String = "/root/testdata/sf0.001"
 }

@@ -1,5 +1,11 @@
 package graft
 
+import java.io.File
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the Verify error-marker contract (r6 VERDICT #5): a query that
@@ -30,5 +36,32 @@ class VerifyMarkerSpec extends AnyFunSuite {
       new RuntimeException(null: String))
     val rows = spark.read.parquet(s"$out/q_boom2").collect()
     assert(rows.length == 1 && rows.head.getString(0).nonEmpty)
+  }
+
+  test("a named subset writes only its results, every oracle, and refuses " +
+      "an unknown name before writing") {
+    val out = Files.createTempDirectory("graft_verify_subset").toString
+    val names = Seq("q05_status_counts", "q11_region_revenue")
+    Verify.run(spark, TestSpark.sf, out, names)
+    assert(new File(out).list().toSet == names.toSet + "oracle_sql.json",
+      "a subset run must write exactly its own result dirs")
+    names.foreach { n =>
+      val back = spark.read.parquet(s"$out/$n")
+      assert(!back.columns.contains("_graft_error"), s"$n threw")
+      assert(back.count() > 0, s"$n wrote no rows")
+    }
+    val oracles = new ObjectMapper()
+      .readTree(Files.readString(Paths.get(s"$out/oracle_sql.json")))
+    assert(oracles.fieldNames().asScala.toSet == Oracles.all.keySet,
+      "oracle_sql.json must hold every oracle, not just the subset's")
+
+    val refused = s"${Files.createTempDirectory("graft_verify_unknown")}/out"
+    val e = intercept[IllegalArgumentException] {
+      Verify.run(spark, TestSpark.sf, refused,
+        Seq("q05_status_counts", "q_no_such_query"))
+    }
+    assert(e.getMessage.contains("q_no_such_query"))
+    assert(!new File(refused).exists(),
+      "an unknown name must be refused before any dir is written")
   }
 }
