@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
   * queries that recompute it (r9 VERDICT #4: q136 re-pays q142's whole
   * segmented pair join; Bench's min-of-2 passes then pay it four times).
   *
-  * Same opt-in and same safety shape as `EventStreams.stagedOnce`:
+  * Same opt-in and same safety shape as `EventStreams.stage`:
   *   - gated on the `graft.stage.reuse` system property, which ONLY
   *     Bench sets — Verify, Dev, and tests always take the identity
   *     path, so the correctness gate never sees a materialized copy;

@@ -2,9 +2,10 @@ package graft.streaming
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, StructType}
 
 /** Structured Streaming forms of the event operators (SURVEY.md §2.5
   * "event-stream ops — Structured Streaming variant").
@@ -28,9 +29,9 @@ object EventStreams {
     * construction — a µs- or ns-annotated source table stages
     * identically.
     */
-  private[graft] val stagedSchema =
+  private[graft] val stagedSchema = StructType.fromDDL(
     "event_id LONG, ts_us LONG, user_id LONG, event_type STRING, " +
-      "value DOUBLE, props STRING"
+      "value DOUBLE, props STRING")
 
   /** Streaming source over a STAGED events directory (µs-normalized
     * files — see [[stagedSchema]]).
@@ -49,63 +50,64 @@ object EventStreams {
     * throughput, fixed per checkpoint lineage); here the checkpoint is
     * fresh per run, so resizing is safe. Same SparkContext, own conf +
     * catalog — the outer session's batch parallelism is untouched.
+    * `rocksDb` switches the clone to the RocksDB state-store provider,
+    * which `transformWithState` refuses to run without; scoped to this
+    * clone, the outer harness sessions keep the default store.
     */
   private[graft] def streamingSession(spark: SparkSession,
-      parts: Int = 8): SparkSession = {
+      rocksDb: Boolean = false): SparkSession = {
     val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    ss.conf.set("spark.sql.shuffle.partitions", "8")
+    if (rocksDb)
+      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state." +
+          "RocksDBStateStoreProvider")
     ss
   }
 
+  /** The exact value sum every oracle-facing aggregate runs: DECIMAL
+    * (18,6), cast back to DOUBLE only at the end.
+    */
+  private def sumValue: Column =
+    sum(col("value").cast(DecimalType(18, 6))).cast(DoubleType)
+      .as("sum_value")
+
   /** Tumbling event-time window counts per event_type with a watermark —
-    * the streaming form of [[graft.operators.Events.rollup]].
+    * the streaming form of [[graft.operators.Events.rollup]], and the one
+    * window rollup every gate runs. `watermark` None: `events` already
+    * carries a watermarked `event_time` (the [[dedupedStream]] chain,
+    * q114/q116), which a second watermark node must not shadow.
     */
   def windowedCounts(events: DataFrame, window_ : String = "1 hour",
-      watermark: String = "2 hours"): DataFrame =
-    events
+      watermark: Option[String] = Some("2 hours")): DataFrame =
+    watermark.fold(events)(w => events
       .withColumn("event_time", timestamp_micros(col("ts_us")))
-      .withWatermark("event_time", watermark)
+      .withWatermark("event_time", w))
       .groupBy(window(col("event_time"), window_), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
+      .agg(count(lit(1)).as("n"), sumValue)
 
-  /** Stage the events table (read via [[graft.Tables.events]] — the ONE
-    * sanctioned ns-schema read) into a watched directory, reshaped by
-    * `shape` (the resulting FILE layout is the micro-batch plan:
-    * FileStreamSource ingests directories in production, and with
-    * `maxFilesPerTrigger=1` each staged file becomes one micro-batch).
-    * The rewrite lands the normalized `ts_us` LONG, so the streaming
-    * reads are unit-free by construction ([[stagedSchema]]).
-    */
-  private def stagedEventsSource(spark: SparkSession, sfDir: String,
-      srcDir: String, label: String)(shape: DataFrame => DataFrame): DataFrame = {
-    stagedOnce(sfDir, srcDir) {
-      shape(requireSpanHours(graft.Tables.events(spark, sfDir), label))
-        .write.mode("overwrite").parquet(srcDir)
-    }
-    spark.readStream
-      .schema(stagedSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-  }
+  /** A [[windowedCounts]] rollup in the oracles' row shape. */
+  private def bucketed(rollup: DataFrame): DataFrame =
+    rollup.select(col("window.start").as("bucket"), col("event_type"),
+      col("n"), col("sum_value"))
 
-  /** Drain a streaming frame into a memory-sink table via AvailableNow
+  /** Drive a streaming frame into a memory-sink table via AvailableNow
     * with a fresh checkpoint (a stale one would mark the static input
     * already-consumed; it is deleted again after termination so repeated
     * harness runs don't accumulate state-store garbage in /tmp), and
     * return the materialized table.
     */
-  private def drainToTable(df: DataFrame, queryName: String,
-      mode: OutputMode): DataFrame = {
+  def runToMemory(df: DataFrame, name: String, mode: OutputMode): DataFrame = {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt")
     try {
-      val q = df.writeStream.format("memory").queryName(queryName)
+      val q = df.writeStream.format("memory").queryName(name)
         .outputMode(mode)
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ckpt.toString)
         .start()
       q.awaitTermination()
     } finally deleteRecursively(ckpt)
-    df.sparkSession.table(queryName)
+    df.sparkSession.table(name)
   }
 
   /** Drain a streaming frame through `perBatch` (foreachBatch) via
@@ -130,7 +132,7 @@ object EventStreams {
     } finally deleteRecursively(ckpt)
   }
 
-  /** [[drainToTable]] for PROCESSING-TIME-timeout queries, where NO
+  /** [[runToMemory]] for PROCESSING-TIME-timeout queries, where NO
     * built-in run-to-completion mechanism exists: a stateful operator
     * with `ProcessingTimeTimeout` reports "should run another batch"
     * unconditionally (the engine must keep scheduling batches to service
@@ -139,11 +141,11 @@ object EventStreams {
     * signal it waits on is only raised when the engine decides no further
     * batch is needed) — both verified as hard hangs on this exact query.
     * The terminating form: default trigger, ACCUMULATE the query's
-    * `numInputRows` in a [[StreamingQueryListener]] until every staged
-    * source row is committed — data batches always emit a progress event
-    * on commit, and the commit of the final (sentinel) data batch
-    * includes the timer emissions it fired — then `stop()`. Empty
-    * timer-service batches between poll and stop can only fire the
+    * `numInputRows` in a [[StreamingQueryListener]] until every row
+    * staged for `queryName` is committed — data batches always emit a
+    * progress event on commit, and the commit of the final (sentinel)
+    * data batch includes the timer emissions it fired — then `stop()`.
+    * Empty timer-service batches between poll and stop can only fire the
     * sentinel key's own timer, which the caller filters; the drained
     * output is deterministic. A listener (not `recentProgress`): the
     * ring buffer keeps only 100 entries, so its sum is correct only
@@ -152,10 +154,14 @@ object EventStreams {
     * ADVICE).
     */
   private def drainToTableManual(df: DataFrame, queryName: String,
-      mode: OutputMode, expectedInputRows: Long): DataFrame = {
+      mode: OutputMode): DataFrame = {
     import org.apache.spark.sql.streaming.StreamingQueryListener
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt")
     val spark = df.sparkSession
+    // harness bookkeeping over the tiny staged directory, not operator
+    // work
+    val expectedInputRows = spark.read.schema(stagedSchema)
+      .parquet(srcDir(queryName)).count()
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt")
     val seen = new java.util.concurrent.atomic.AtomicLong(0L)
     // match on query NAME (known before start()) — the listener bus is
     // async, so matching on an id captured after start() would race the
@@ -195,38 +201,12 @@ object EventStreams {
       spark.streams.removeListener(listener)
       deleteRecursively(ckpt)
     }
-    df.sparkSession.table(queryName)
+    spark.table(queryName)
   }
 
   /** Test hook: recursive staging-dir cleanup (no-op if absent). */
   private[graft] def deleteStagingForTest(root: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(root)) deleteRecursively(root)
-
-  /** Amortize a gate query's staging across repeated harness runs in
-    * ONE JVM (r7/r8 VERDICT: the ~20 streaming gates each pay a fixed
-    * staging floor per bench pass; with min-of-2 passes the floor is
-    * pure overhead on the second). `build` wipes-and-writes `dirs` as
-    * before; when the harness opts in (`graft.stage.reuse` system
-    * property — ONLY Bench sets it: its min-of-2 passes are the one
-    * place repeat staging exists; Verify/Dev/tests run each gate once
-    * and stay on the always-fresh path) and a token written by THIS
-    * JVM for the same `sfDir` is present, the staged files are reused
-    * verbatim: same bytes, same stamped mtimes, so the drained result
-    * is identical by construction. The token protocol is
-    * [[graft.SharedStage.buildOnce]]'s: a per-JVM nonce, so reuse can
-    * only ever serve files staged by THIS run's own code (a code edit
-    * between runs can never be served stale staging), and the token is
-    * written LAST, so a build that dies mid-staging restages from
-    * scratch. Disabled (the default), behavior is byte-for-byte the
-    * old wipe-and-restage.
-    */
-  private[graft] def stagedOnce(sfDir: String, dirs: String*)(build: => Unit): Unit = {
-    graft.SharedStage.buildOnce(dirs.head, sfDir) {
-      dirs.foreach(d => deleteStagingForTest(java.nio.file.Paths.get(d)))
-      build
-    }
-    ()
-  }
 
   private def deleteRecursively(root: java.nio.file.Path): Unit = {
     val walk = java.nio.file.Files.walk(root)
@@ -256,66 +236,157 @@ object EventStreams {
       minHours: Long = 24L): DataFrame =
     graft.operators.Events.requireSpanHours(ev, label, minHours)
 
-  /** Pin micro-batch ARRIVAL ORDER without data-dependent driver logic:
-    * staged part files are stamped with ascending modification times in
-    * part-number order (range partition ids are ascending in the range
-    * key), and FileStreamSource ingests oldest-first.
-    *
-    * `expectParts` enforces the cross-batch premise (r2 ADVICE): every
-    * *Once gate query's claim rests on the staged batches landing in
-    * SEPARATE files — if range sampling ever collapsed them, the test
-    * would silently degrade to within-batch semantics. Now it fails loud.
+  /** The staging dir of one gate query: one file per micro-batch. */
+  private def srcDir(queryName: String) = s"/tmp/graft_stream_src_$queryName"
+
+  /** The one opener of a staged directory: one file per trigger, so
+    * each staged file becomes one micro-batch, and FileStreamSource
+    * ingests them oldest-mtime first ([[writeStampedBatch]] pins the
+    * order).
     */
-  /** Current part files of a staging dir — the starting `stamped` set for
-    * [[writeStampedBatch]] when earlier staging wrote files another way.
-    */
+  private def open(ss: SparkSession, dir: String,
+      schema: StructType): DataFrame =
+    ss.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+      .parquet(dir)
+
+  /** Current part files of a staging dir (empty if the dir is absent). */
   private def listPartFiles(srcDir: String): Set[java.nio.file.Path] = {
-    val listing = java.nio.file.Files.list(java.nio.file.Paths.get(srcDir))
+    val dir = java.nio.file.Paths.get(srcDir)
+    if (!java.nio.file.Files.exists(dir)) return Set.empty
+    val listing = java.nio.file.Files.list(dir)
     try listing.iterator().asScala
       .filter(_.getFileName.toString.startsWith("part-")).toSet
     finally listing.close()
   }
 
-  /** Write `df` into `srcDir` as EXACTLY ONE new part file (coalesce(1)
+  /** Append `df` to `srcDir` as EXACTLY ONE new part file (coalesce(1)
     * IS the staging contract — one file = one micro-batch — not a
-    * performance choice) and pin its mtime to slot `idx` of the same
-    * 1000000000000L + idx·60000 scheme [[stampAscendingMtimes]] uses, so
-    * FileStreamSource ingests the staged batches in slot order. Fails
-    * loud if the write lands more or fewer than one new file (the
-    * cross-batch premise of every *Once gate query). Returns the updated
-    * stamped-file set; the first call (empty set, idx 0) wipes the
-    * directory.
+    * performance choice) and pin its mtime to slot `idx` (1000000000000
+    * + idx·60000 ms), so FileStreamSource ingests the staged batches in
+    * slot order. Fails loud if the write lands more or fewer than one
+    * new file: every *Once gate query's claim rests on its batches
+    * landing in SEPARATE files (the cross-batch premise, r2 ADVICE) —
+    * collapsed files would silently degrade it to within-batch
+    * semantics.
     */
-  private[graft] def writeStampedBatch(srcDir: String, df: DataFrame, idx: Int,
-      stamped: Set[java.nio.file.Path], label: String)
-      : Set[java.nio.file.Path] = {
-    df.coalesce(1)
-      .write.mode(if (stamped.isEmpty && idx == 0) "overwrite" else "append")
-      .parquet(srcDir)
-    val fresh = (listPartFiles(srcDir) -- stamped).toSeq
+  private def writeStampedBatch(srcDir: String, df: DataFrame, idx: Int,
+      label: String): Unit = {
+    val before = listPartFiles(srcDir)
+    df.coalesce(1).write.mode("append").parquet(srcDir)
+    val fresh = (listPartFiles(srcDir) -- before).toSeq
     require(fresh.size == 1,
       s"$label staging batch $idx wrote ${fresh.size} files, expected 1")
     java.nio.file.Files.setLastModifiedTime(fresh.head,
       java.nio.file.attribute.FileTime.fromMillis(1000000000000L + idx * 60000L))
-    stamped ++ fresh
+    ()
   }
 
-  private def stampAscendingMtimes(srcDir: String, expectParts: Int): Unit = {
-    val dir = java.nio.file.Paths.get(srcDir)
-    val listing = java.nio.file.Files.list(dir)
-    val parts =
-      try listing.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-")).toSeq
-        .sortBy(_.getFileName.toString)
-      finally listing.close()
-    require(parts.size == expectParts,
-      s"staging wrote ${parts.size} part files, expected $expectParts — " +
-        "the cross-batch premise of this gate query is broken")
-    parts.zipWithIndex.foreach { case (p, i) =>
-      java.nio.file.Files.setLastModifiedTime(p,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
+  /** THE staging path of every streaming gate (the reference's chunk
+    * loop, SURVEY §0, with each chunk a staged micro-batch): wipe the
+    * query's staging dir, write `frames` one stamped file each in list
+    * order, and return the one-file-per-trigger stream over them
+    * ([[open]]) — frame i is micro-batch i.
+    *
+    * One explicit write per frame, never a range repartition on a batch
+    * flag: RangePartitioner SAMPLES its bounds, and on a small discrete
+    * key (a ~50/50 flag, a 3-value batch id) it can pick the upper value
+    * as the boundary and land two batches in one partition — silently
+    * merging micro-batches. q115 broke this way in Verify while passing
+    * in Dev, q72's range-sampled staging failed in-suite at sf0.1 while
+    * passing standalone, and r3 saw a 3-value key collapse to two
+    * files.
+    *
+    * Staging is amortized across repeated harness runs in ONE JVM (r7/r8
+    * VERDICT: the ~20 streaming gates each pay a fixed staging floor per
+    * bench pass; with min-of-2 passes the floor is pure overhead on the
+    * second). When the harness opts in (`graft.stage.reuse` system
+    * property — ONLY Bench sets it: its min-of-2 passes are the one
+    * place repeat staging exists; Verify and tests run each gate once
+    * and stay on the always-fresh path) and a token written by THIS JVM
+    * for the same `sfDir` is present, the staged files are reused
+    * verbatim: same bytes, same stamped mtimes, so the drained result is
+    * identical by construction, and `frames` is never evaluated. The
+    * token protocol is [[graft.SharedStage.buildOnce]]'s: a per-JVM
+    * nonce, so reuse can only ever serve files staged by THIS run's own
+    * code (a code edit between runs can never be served stale staging),
+    * and the token is written LAST, so a build that dies mid-staging
+    * restages from scratch. Disabled (the default), every run wipes and
+    * restages.
+    */
+  private[graft] def stage(ss: SparkSession, sfDir: String,
+      queryName: String, schema: StructType = stagedSchema)(
+      frames: => Seq[DataFrame]): DataFrame = {
+    val dir = srcDir(queryName)
+    graft.SharedStage.buildOnce(dir, sfDir) {
+      deleteStagingForTest(java.nio.file.Paths.get(dir))
+      frames.zipWithIndex.foreach { case (df, i) =>
+        writeStampedBatch(dir, df, i, queryName)
+      }
     }
+    open(ss, dir, schema)
   }
+
+  /** [[stage]] over the events table: `batches` gets the events read
+    * through [[graft.Tables.events]] (the ONE sanctioned read, unit
+    * erased to `ts_us`) behind the [[requireSpanHours]] guard, and
+    * returns the micro-batches in arrival order.
+    */
+  private def stageEvents(ss: SparkSession, sfDir: String,
+      queryName: String)(batches: DataFrame => Seq[DataFrame]): DataFrame =
+    stage(ss, sfDir, queryName)(
+      batches(requireSpanHours(graft.Tables.events(ss, sfDir), queryName)))
+
+  /** The [min, max] `ts_us` of `ev`, in one driver-side aggregate. */
+  private def span(ev: DataFrame): (Long, Long) = {
+    val r = ev.agg(min(col("ts_us")), max(col("ts_us"))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** `ev` cut at the ascending µs `cuts`: slice i holds
+    * cuts(i−1) ≤ ts_us < cuts(i), the first and last open-ended.
+    */
+  private def sliceAt(ev: DataFrame, cuts: Seq[Long]): Seq[DataFrame] =
+    (0 to cuts.size).map { i =>
+      val lo = if (i == 0) lit(true) else col("ts_us") >= cuts(i - 1)
+      val hi = if (i == cuts.size) lit(true) else col("ts_us") < cuts(i)
+      ev.filter(lo && hi)
+    }
+
+  /** `ev` in `n` event-time slices, earliest first, cut at
+    * a + ((z − a) div n)·i over its [a, z] span — the integral µs
+    * arithmetic the oracles reproduce, so both sides see the same
+    * slices. Time-ordered slices give every user time-ordered arrival
+    * across micro-batches, which the stateful gates' cross-batch
+    * arguments rest on.
+    */
+  private def timeSlices(ev: DataFrame, n: Int): Seq[DataFrame] = {
+    val (a, z) = span(ev)
+    sliceAt(ev, (1 until n).map(i => a + (z - a) / n * i))
+  }
+
+  /** Lead of a far-future sentinel over the events' max time: past every
+    * real watermark horizon and timer of the gate corpora.
+    */
+  private val sentinelLeadUs = 10L * 86400 * 1000000L
+
+  /** A sentinel batch: one row per `types` entry at the events' max
+    * `ts_us` + `offsetUs`, with event and user id −1 (the gates filter
+    * it from their output). It exists only to push the watermark or to
+    * trigger one more micro-batch. Built declaratively from the 1-row
+    * max aggregate — no driver collect.
+    */
+  private def sentinel(ev: DataFrame, offsetUs: Long,
+      types: Seq[String] = Seq("sentinel")): DataFrame =
+    ev.agg(max(col("ts_us")).as("mx"))
+      .select(lit(-1L).as("event_id"), (col("mx") + lit(offsetUs)).as("ts_us"),
+        lit(-1L).as("user_id"), explode(typedLit(types)).as("event_type"),
+        lit(0.0).as("value"), lit(null).cast("string").as("props"))
+
+  /** The planted byte-identical duplicates of the dedup gates: a copy of
+    * every 10th event.
+    */
+  private def plantedCopies(ev: DataFrame): DataFrame =
+    ev.filter(col("event_id") % 10 === 0)
 
   /** Streaming dedup as a RUN-TO-COMPLETION gate query: the first staged
     * file carries every original event, the second carries byte-identical
@@ -328,59 +399,34 @@ object EventStreams {
     */
   def dedupOnce(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
-    val ss = streamingSession(spark)
-    stagedOnce(sfDir, srcDir) {
-      // batch 0 = originals, batch 1 = the planted copies — explicit
-      // per-half writeStampedBatch, not repartitionByRange on the flag
-      // (the q115 range-sampler gotcha; see dedupRollupOnce)
-      val ev = requireSpanHours(graft.Tables.events(ss, sfDir), queryName)
-      Seq(ev, ev.filter(col("event_id") % 10 === 0)).zipWithIndex
-        .foldLeft(Set.empty[java.nio.file.Path]) { case (st, (half, b)) =>
-          writeStampedBatch(srcDir, half, b, st, "dedup")
-        }
-      ()
-    }
-    val src = ss.readStream
-      .schema(stagedSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val table = drainToTable(
-      dedupedStream(src).select("event_id", "event_type", "value"),
+    val src = stageEvents(streamingSession(spark), sfDir, queryName)(ev =>
+      Seq(ev, plantedCopies(ev)))
+    runToMemory(dedupedStream(src).select("event_id", "event_type", "value"),
       queryName, OutputMode.Append)
-    table.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 6))).cast(DoubleType)
-          .as("sum_value"))
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"), sumValue)
       .orderBy(col("event_type"))
   }
 
   /** The hourly rollup as a RUN-TO-COMPLETION streaming job: the input is
-    * staged as TWO files consumed one per trigger, so AvailableNow runs
-    * two real micro-batches and the window state must merge incrementally
-    * across them — the result is batching-invariant, which is exactly
-    * what the driver-gate equality against batch q16's DuckDB oracle
-    * proves. Two batches (not more) because each pays a fixed state-store
-    * commit across every shuffle partition. The 1-hour tumbling
-    * `window().start` is definitionally `date_trunc('hour', ts)`, and the
-    * sum runs in exact DECIMAL like every oracle-facing aggregate.
+    * staged as TWO files (the event_id parity halves, each spanning the
+    * whole time range, so window state merges across both) consumed one
+    * per trigger, so AvailableNow runs two real micro-batches and the
+    * window state must merge incrementally across them — the result is
+    * batching-invariant, which is exactly what the driver-gate equality
+    * against batch q16's DuckDB oracle proves. Complete mode keeps every
+    * window, so the watermark drops nothing even though batch 1 spans the
+    * whole range. Two batches (not more) because each pays a fixed
+    * state-store commit across every shuffle partition. The 1-hour
+    * tumbling `window().start` is definitionally
+    * `date_trunc('hour', ts)`, and the sum runs in exact DECIMAL like
+    * every oracle-facing aggregate.
     */
   def hourlyRollupOnce(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val src = stagedEventsSource(streamingSession(spark), sfDir,
-      s"/tmp/graft_stream_src_$queryName", queryName)(_.repartition(2))
-    val agg = src
-      .withColumn("event_time", timestamp_micros(col("ts_us")))
-      .withWatermark("event_time", "2 hours")
-      .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 6))).cast(DoubleType)
-          .as("sum_value"))
-    drainToTable(agg, queryName, OutputMode.Complete)
-      .select(col("window.start").as("bucket"), col("event_type"),
-        col("n"), col("sum_value"))
+    val src = stageEvents(streamingSession(spark), sfDir, queryName)(ev =>
+      Seq(0, 1).map(b => ev.filter(pmod(col("event_id"), lit(2L)) === b)))
+    bucketed(runToMemory(windowedCounts(src), queryName, OutputMode.Complete))
       .orderBy(col("bucket"), col("event_type"))
   }
 
@@ -411,52 +457,24 @@ object EventStreams {
     */
   def updateRollupOnce(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
     val outDir = s"/tmp/graft_stream_upd_$queryName"
-    val ss = streamingSession(spark)
     deleteStagingForTest(java.nio.file.Paths.get(outDir))
-    stagedOnce(sfDir, srcDir) {
-      val ev = requireSpanHours(graft.Tables.events(ss, sfDir), queryName)
-      val bounds = ev.agg(min(col("ts_us")).as("a"), max(col("ts_us")).as("z"))
+    val src = stageEvents(streamingSession(spark), sfDir, queryName) { ev =>
       // split at NOON of the midpoint day, not the raw µs midpoint: the
       // corpus spans a near-integral number of days, so the raw midpoint
       // sits within seconds of a day boundary and the "straddling" day
       // gets no batch-1 rows (measured: the merge premise trips) —
       // pinning the cut to 12:00 UTC guarantees the straddling day
       // splits mid-day
-      val tagged = graft.CacheScope.scoped(ev.crossJoin(broadcast(bounds))
-        .withColumn("_early", expr("""ts_us <
-          ((a + ((z - a) div 2)) div 86400000000) * 86400000000
-            + 43200000000""")))
-      val cols6 = Seq(col("event_id"), col("ts_us"), col("user_id"),
-        col("event_type"), col("value"), col("props"))
-      var stamped = Set.empty[java.nio.file.Path]
-      stamped = writeStampedBatch(srcDir,
-        tagged.filter(col("_early")).select(cols6: _*),
-        idx = 0, stamped = stamped, label = "update-rollup early half")
-      writeStampedBatch(srcDir,
-        tagged.filter(!col("_early")).select(cols6: _*),
-        idx = 1, stamped = stamped, label = "update-rollup late half")
-      ()
+      val (a, z) = span(ev)
+      val dayUs = 86400000000L
+      sliceAt(ev, Seq((a + (z - a) / 2) / dayUs * dayUs + dayUs / 2))
     }
-    val src = ss.readStream
-      .schema(stagedSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
     // DAILY windows, not q57's hourly: the cross-batch-merge premise
     // needs the midpoint-straddling bucket to hold the same event_type
     // on BOTH sides of the split, and at gate density a single hour is
     // too sparse for that (measured: the premise trips) — a day is not
-    val agg = src
-      .withColumn("event_time", timestamp_micros(col("ts_us")))
-      .withWatermark("event_time", "2 hours")
-      .groupBy(window(col("event_time"), "1 day"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 6))).cast(DoubleType)
-          .as("sum_value"))
-      .select(col("window.start").as("bucket"), col("event_type"),
-        col("n"), col("sum_value"))
+    val agg = bucketed(windowedCounts(src, "1 day"))
     drainBatches(agg, OutputMode.Update()) { (b, id) =>
       b.withColumn("batch_id", lit(id))
         .write.mode("append").parquet(outDir)
@@ -510,61 +528,21 @@ object EventStreams {
     */
   def lateDropOnce(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
-    val ss = streamingSession(spark)
-    stagedOnce(sfDir, srcDir) {
-    val ev = requireSpanHours(graft.Tables.events(ss, sfDir), queryName)
-    // Late-drop parity PREMISE (r3 advisor): every earliest-third row must
-    // lie below the final watermark z − 2 h, which holds iff the event-time
-    // span z − a ≥ 3 h. On a narrower dataset Spark would admit rows in
-    // [z − 2 h, a + (z − a)/3) that the oracle's WHERE excludes, surfacing
-    // as a confusing gate diff — so the premise fails LOUD instead. The
-    // assert_true is folded into the consumed `a` column (it returns NULL
-    // on success, so coalesce leaves `a` unchanged); a standalone dropped
-    // check column could legally be pruned before it ever evaluated.
-    val minSpanUs = 3L * 3600L * 1000000L
-    val bounds = ev.agg(min(col("ts_us")).as("a0"), max(col("ts_us")).as("z"))
-      .select(
-        (col("a0") + coalesce(
-          assert_true(col("z") - col("a0") >= lit(minSpanUs),
-            lit("q64 premise violated: event-time span < 3h — late-drop " +
-              "parity needs the earliest third fully below watermark z-2h"))
-            .cast("long"),
-          lit(0L))).as("a"),
-        col("z"))
-    val tagged = ev.crossJoin(broadcast(bounds))
-      .withColumn("_b",
-        when(col("ts_us") < expr("a + (z - a) div 3"), lit(2))          // late
-          .when(col("ts_us") >= expr("a + ((z - a) div 3) * 2"), lit(1)) // newest
-          .otherwise(lit(0)))                                            // middle
-      .drop("a", "z")
-    // One explicit append write PER BATCH, mtime-stamped in write order —
-    // NOT repartitionByRange(3, _b): RangePartitioner samples its bounds
-    // and on a 3-value key can legally collapse two values into one
-    // partition (observed: bounds [≤1, ≤2] → two files), silently merging
-    // micro-batches. coalesce(1) is sanctioned here because one-file-per-
-    // batch IS the staging contract, not a performance choice.
-    Seq(0, 1, 2).foldLeft(Set.empty[java.nio.file.Path]) { (st, b) =>
-      writeStampedBatch(srcDir, tagged.filter(col("_b") === b).drop("_b"),
-        b, st, "late-drop")
+    val src = stageEvents(streamingSession(spark), sfDir, queryName) { ev =>
+      // Late-drop parity PREMISE (r3 advisor): every earliest-third row
+      // must lie below the final watermark z − 2 h, which holds iff the
+      // event-time span z − a ≥ 3 h. On a narrower dataset Spark would
+      // admit rows in [z − 2 h, a + (z − a)/3) that the oracle's WHERE
+      // excludes, surfacing as a confusing gate diff — so the premise
+      // fails LOUD instead.
+      val (a, z) = span(ev)
+      require(z - a >= 3L * 3600L * 1000000L,
+        "q64 premise violated: event-time span < 3h — late-drop " +
+          "parity needs the earliest third fully below watermark z-2h")
+      val Seq(earliest, middle, newest) = timeSlices(ev, 3)
+      Seq(middle, newest, earliest)
     }
-    ()
-    }
-    val src = ss.readStream
-      .schema(stagedSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val agg = src
-      .withColumn("event_time", timestamp_micros(col("ts_us")))
-      .withWatermark("event_time", "2 hours")
-      .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 6))).cast(DoubleType)
-          .as("sum_value"))
-    drainToTable(agg, queryName, OutputMode.Append)
-      .select(col("window.start").as("bucket"), col("event_type"),
-        col("n"), col("sum_value"))
+    bucketed(runToMemory(windowedCounts(src), queryName, OutputMode.Append))
       .orderBy(col("bucket"), col("event_type"))
   }
 
@@ -619,19 +597,14 @@ object EventStreams {
     */
   def enrichOnce(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
     val ss = streamingSession(spark)
-    val src = stagedEventsSource(ss, sfDir, srcDir, queryName)(
-      _.repartitionByRange(2, col("ts_us")))
-    stampAscendingMtimes(srcDir, 2)
+    val src = stageEvents(ss, sfDir, queryName)(timeSlices(_, 2))
     val dim = graft.Tables.customer(ss, sfDir)
       .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
     val agg = src.join(broadcast(dim), Seq("user_id"))
       .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,6)"))
-          .cast("double").as("sum_value"))
-    drainToTable(agg, queryName, OutputMode.Complete)
+      .agg(count(lit(1)).as("n"), sumValue)
+    runToMemory(agg, queryName, OutputMode.Complete)
       .orderBy(col("c_mktsegment"))
   }
 
@@ -819,41 +792,13 @@ object EventStreams {
       .toDF()
   }
 
-  /** [[sessionEmitOnce]]'s staging (range-split batches + far-future
-    * sentinel) over [[sessionEmitTws]], with the RocksDB provider the v2
-    * operator mandates.
+  /** [[sessionEmitOnce]] over [[sessionEmitTws]], with the RocksDB
+    * provider the v2 operator mandates.
     */
   def sessionEmitTwsOnce(spark: SparkSession, sfDir: String,
-      gapMinutes: Int, queryName: String): DataFrame = {
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
-    val ss = streamingSession(spark)
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    stagedOnce(sfDir, srcDir) {
-      val ev = requireSpanHours(graft.Tables.events(ss, sfDir), queryName)
-      ev.repartitionByRange(2, col("ts_us"))
-        .write.mode("overwrite").parquet(srcDir)
-      stampAscendingMtimes(srcDir, 2)
-      writeStampedBatch(srcDir,
-        ev.agg(max(col("ts_us")).as("mx"))
-          .select(lit(-1L).as("event_id"),
-            (col("mx") + lit(10L * 86400 * 1000000L)).as("ts_us"),
-            lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-            lit(0.0).as("value"), lit(null).cast("string").as("props")),
-        idx = 10, stamped = listPartFiles(srcDir),
-        label = "tws session-timeout sentinel")
-      ()
-    }
-    val src = ss.readStream
-      .schema(stagedSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    drainToTable(sessionEmitTws(src, gapMinutes), queryName,
-      OutputMode.Append)
-      .filter(col("user_id") >= 0) // the sentinel's own session is noise
-      .orderBy(col("user_id"), col("session_idx"))
-  }
+      gapMinutes: Int, queryName: String): DataFrame =
+    timerSessions(streamingSession(spark, rocksDb = true), sfDir,
+      queryName)(sessionEmitTws(_, gapMinutes))
 
   /** The batch→streaming STATE HANDOFF: a sessionizer that starts from
     * batch-computed per-user state (`StatefulProcessorWithInitialState`)
@@ -900,7 +845,7 @@ object EventStreams {
   /** [[sessionize]] with a batch-computed initial state: events strictly
     * before the midpoint feed a BATCH derivation of each user's
     * SessionState (min/max µs, count, 1 + gap breaks); only the late
-    * half streams, in two range-split micro-batches. The final answer
+    * half streams, in two time-sliced micro-batches. The final answer
     * unions the bootstrap rows (users the stream never touched keep
     * their batch state) with the drained updates and takes each user's
     * last state by the strictly-growing n_events.
@@ -908,19 +853,11 @@ object EventStreams {
   def sessionizeBootstrapOnce(spark: SparkSession, sfDir: String,
       gapMinutes: Int, queryName: String): DataFrame = {
     val gapUs = gapMinutes.toLong * 60L * 1000000L
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
-    val ss = streamingSession(spark)
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
+    val ss = streamingSession(spark, rocksDb = true)
     import ss.implicits._
     val ev = requireSpanHours(graft.Tables.events(ss, sfDir), queryName)
-    // deterministic halves off the 1-row bounds aggregate (q64 pattern —
-    // no driver collect)
-    val bounds = ev.agg(min(col("ts_us")).as("a"), max(col("ts_us")).as("z"))
-    val tagged = graft.CacheScope.scoped(ev.crossJoin(broadcast(bounds))
-      .withColumn("early", col("ts_us") < expr("a + (z - a) div 2")))
-    val initState = graft.CacheScope.scoped(tagged.filter(col("early"))
+    val Seq(early, late) = timeSlices(ev, 2)
+    val initState = graft.CacheScope.scoped(early
       .select(col("user_id"), col("ts_us").as("us"))
       .withColumn("brk", when(col("us") -
         lag(col("us"), 1).over(org.apache.spark.sql.expressions.Window
@@ -934,18 +871,7 @@ object EventStreams {
       .as[(Long, Long, Long, Long, Long)]
       .map(r => (r._1, SessionState(r._2, r._3, r._4, r._5)))
       .groupByKey(_._1).mapValues(_._2)
-    stagedOnce(sfDir, srcDir) {
-      tagged.filter(!col("early"))
-        .select(col("event_id"), col("ts_us"), col("user_id"),
-          col("event_type"), col("value"), col("props"))
-        .repartitionByRange(2, col("ts_us"))
-        .write.mode("overwrite").parquet(srcDir)
-      stampAscendingMtimes(srcDir, 2)
-    }
-    val src = ss.readStream
-      .schema(stagedSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
+    val src = stage(ss, sfDir, queryName)(timeSlices(late, 2))
     val streamed = src
       .select(col("user_id"), col("ts_us"))
       .as[(Long, Long)]
@@ -953,20 +879,12 @@ object EventStreams {
       .transformWithState(new BootstrapSessionizeProcessor(gapUs),
         TimeMode.None(), OutputMode.Update(), initKv)
       .toDF()
-    val updates = drainToTable(streamed, queryName, OutputMode.Update)
+    val updates = runToMemory(streamed, queryName, OutputMode.Update)
     val bootRows = initState.select(col("user_id"),
       col("nEvents").as("n_events"), col("nSessions").as("n_sessions"),
       // integer div — `/` on longs is DOUBLE division in Spark SQL
       expr("(lastUs - firstUs) div 1000000").as("span_seconds"))
-    updates.unionByName(bootRows)
-      .groupBy(col("user_id"))
-      .agg(max_by(
-        struct(col("n_events"), col("n_sessions"), col("span_seconds")),
-        col("n_events")).as("m"))
-      .select(col("user_id"), col("m.n_events").as("n_events"),
-        col("m.n_sessions").as("n_sessions"),
-        col("m.span_seconds").as("span_seconds"))
-      .orderBy(col("user_id"))
+    lastSessions(updates.unionByName(bootRows))
   }
 
   private[streaming] case class VisitTick(user_id: Long, seq: Long,
@@ -1008,44 +926,16 @@ object EventStreams {
 
   /** Per-batch visit counts under v2 TTL state expiry, as a two-batch
     * gate job: the staged halves split at the µs midpoint (the SAME
-    * arithmetic the oracle runs), and each batch's emission must count
-    * ONLY its own rows — the TTL'd counter from the prior batch must be
-    * gone. seq (no TTL) numbers each user's emissions 1, 2, ...
+    * arithmetic the oracle runs — `ts_us` IS epoch_us, so both sides see
+    * the same halves), and each batch's emission must count ONLY its own
+    * rows — the TTL'd counter from the prior batch must be gone. seq (no
+    * TTL) numbers each user's emissions 1, 2, ...
     */
   def ttlVisitCountsOnce(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
-    val ss = streamingSession(spark)
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
+    val ss = streamingSession(spark, rocksDb = true)
     import ss.implicits._
-    // µs midpoint split, identical to the oracle's (`ts_us` IS epoch_us,
-    // so both sides see the same halves). Each
-    // half is written as its OWN stamped batch — a 2-partition
-    // repartitionByRange on the ~50/50 flag can land both halves in one
-    // range partition (sampling picks the upper value as the boundary)
-    // and break the cross-batch premise.
-    stagedOnce(sfDir, srcDir) {
-      val ev = requireSpanHours(graft.Tables.events(ss, sfDir), queryName)
-      val bounds = ev.agg(min(col("ts_us")).as("a"), max(col("ts_us")).as("z"))
-      val tagged = graft.CacheScope.scoped(ev.crossJoin(broadcast(bounds))
-        .withColumn("_early", expr("ts_us < a + ((z - a) div 2)")))
-      val cols6 = Seq(col("event_id"), col("ts_us"), col("user_id"),
-        col("event_type"), col("value"), col("props"))
-      var stamped = Set.empty[java.nio.file.Path]
-      stamped = writeStampedBatch(srcDir,
-        tagged.filter(col("_early")).select(cols6: _*),
-        idx = 0, stamped = stamped, label = "ttl-state early half")
-      writeStampedBatch(srcDir,
-        tagged.filter(!col("_early")).select(cols6: _*),
-        idx = 1, stamped = stamped, label = "ttl-state late half")
-      ()
-    }
-    val src = ss.readStream
-      .schema(stagedSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
+    val src = stageEvents(ss, sfDir, queryName)(timeSlices(_, 2))
     val ticks = src
       .select(col("user_id"), col("event_id"))
       .as[(Long, Long)]
@@ -1058,10 +948,7 @@ object EventStreams {
       .transformWithState(new TtlVisitProcessor(1L),
         TimeMode.ProcessingTime(), OutputMode.Update())
       .toDF()
-    val stagedRows = ss.read.schema(stagedSchema)
-      .parquet(srcDir).count()
-    drainToTableManual(ticks, queryName, OutputMode.Update,
-        expectedInputRows = stagedRows)
+    drainToTableManual(ticks, queryName, OutputMode.Update)
       .orderBy(col("user_id"), col("seq"))
   }
 
@@ -1126,7 +1013,7 @@ object EventStreams {
       .toDF()
   }
 
-  /** [[lastKEvents]] as a two-micro-batch gate job: range-split staging
+  /** [[lastKEvents]] as a two-micro-batch gate job: time-sliced staging
     * proves the ListState buffer carries ranks across the batch
     * boundary; the final ranking per user is the one from the LAST batch
     * that touched them (every user's newest event decides, so max_by on
@@ -1134,16 +1021,10 @@ object EventStreams {
     */
   def lastKEventsOnce(spark: SparkSession, sfDir: String, k: Int,
       queryName: String): DataFrame = {
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
-    val ss = streamingSession(spark)
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    val src = stagedEventsSource(ss, sfDir, srcDir, queryName)(
-      _.repartitionByRange(2, col("ts_us")))
-    stampAscendingMtimes(srcDir, 2)
+    val src = stageEvents(streamingSession(spark, rocksDb = true), sfDir,
+      queryName)(timeSlices(_, 2))
     val updates = graft.CacheScope.scoped(
-      drainToTable(lastKEvents(src, k), queryName, OutputMode.Update))
+      runToMemory(lastKEvents(src, k), queryName, OutputMode.Update))
     // final emission per user = max emit_seq (strictly monotone per key
     // by construction — no data assumptions)
     val fin = updates.groupBy(col("user_id").as("u2"))
@@ -1209,15 +1090,9 @@ object EventStreams {
     */
   def typeCountsOnce(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
-    val ss = streamingSession(spark)
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    val src = stagedEventsSource(ss, sfDir, srcDir, queryName)(
-      _.repartitionByRange(2, col("ts_us")))
-    stampAscendingMtimes(srcDir, 2)
-    drainToTable(typeCounts(src), queryName, OutputMode.Update)
+    val src = stageEvents(streamingSession(spark, rocksDb = true), sfDir,
+      queryName)(timeSlices(_, 2))
+    runToMemory(typeCounts(src), queryName, OutputMode.Update)
       .groupBy(col("user_id"), col("event_type"))
       .agg(max(col("n")).as("n"))
       .orderBy(col("user_id"), col("event_type"))
@@ -1296,39 +1171,17 @@ object EventStreams {
     */
   def visitEmitOnce(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
-    val ss = streamingSession(spark)
-    stagedOnce(sfDir, srcDir) {
-      val ev = requireSpanHours(graft.Tables.events(ss, sfDir), queryName)
+    val src = stageEvents(streamingSession(spark), sfDir, queryName) { ev =>
       // batch id: cohort 0 → events alternate batches 0/2 (gap at 1);
       // cohort 1 → batch 1 only; cohort 2 → spread over all three
       val batchOf = expr(
         """CASE pmod(user_id, 3) WHEN 0 THEN pmod(event_id, 2) * 2
                                  WHEN 1 THEN 1
                                  ELSE pmod(event_id, 3) END""")
-      var stamped = Set.empty[java.nio.file.Path]
-      for (b <- 0 to 2)
-        stamped = writeStampedBatch(srcDir, ev.filter(batchOf === b),
-          idx = b, stamped = stamped, label = "visit-ttl")
-      writeStampedBatch(srcDir,
-        ev.agg(max(col("ts_us")).as("mx"))
-          .select(lit(-1L).as("event_id"), col("mx").as("ts_us"),
-            lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-            lit(0.0).as("value"), lit(null).cast("string").as("props")),
-        idx = 3, stamped = stamped, label = "visit-ttl sentinel")
-      ()
+      (0 to 2).map(b => ev.filter(batchOf === b)) :+ sentinel(ev, 0L)
     }
-    val src = ss.readStream
-      .schema(stagedSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    // staged rows = the whole events table (cohort filters partition it)
-    // + the 1-row sentinel; the count is harness bookkeeping over the
-    // tiny staged directory, not operator work
-    val stagedRows = ss.read.schema(stagedSchema)
-      .parquet(srcDir).count()
     drainToTableManual(visitEmit(src, ttlMs = 1L), queryName,
-        OutputMode.Append, expectedInputRows = stagedRows)
+        OutputMode.Append)
       .filter(col("user_id") >= 0) // only the sentinel's timer can leak
       .orderBy(col("user_id"), col("first_event_id"))
   }
@@ -1337,58 +1190,50 @@ object EventStreams {
     * split micro-batches (state carries across), then a far-future
     * sentinel batch whose only job is to push the watermark past every
     * real `last + gap` so the final no-data batch fires every remaining
-    * timer. Oracle = the batch per-session aggregation; final sessions
-    * exist in the output ONLY via the EventTimeTimeout path.
+    * timer (one watermark node here, so a single sentinel row
+    * suffices). Oracle = the batch per-session aggregation; final
+    * sessions exist in the output ONLY via the EventTimeTimeout path.
     */
   def sessionEmitOnce(spark: SparkSession, sfDir: String, gapMinutes: Int,
-      queryName: String): DataFrame = {
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
-    val ss = streamingSession(spark)
-    stagedOnce(sfDir, srcDir) {
-      val ev = requireSpanHours(graft.Tables.events(ss, sfDir), queryName)
-      ev.repartitionByRange(2, col("ts_us"))
-        .write.mode("overwrite").parquet(srcDir)
-      stampAscendingMtimes(srcDir, 2)
-      // sentinel batch: one far-future event of a sentinel user (one
-      // watermark node here, so a single row suffices) — built
-      // declaratively from the 1-row max aggregate, no driver collect;
-      // slot 10 lands its mtime after the two range-split batches
-      writeStampedBatch(srcDir,
-        ev.agg(max(col("ts_us")).as("mx"))
-          .select(lit(-1L).as("event_id"),
-            (col("mx") + lit(10L * 86400 * 1000000L)).as("ts_us"),
-            lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-            lit(0.0).as("value"), lit(null).cast("string").as("props")),
-        idx = 10, stamped = listPartFiles(srcDir),
-        label = "session-timeout sentinel")
-      ()
-    }
-    val src = ss.readStream
-      .schema(stagedSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    drainToTable(sessionEmit(src, gapMinutes), queryName, OutputMode.Append)
+      queryName: String): DataFrame =
+    timerSessions(streamingSession(spark), sfDir, queryName)(
+      sessionEmit(_, gapMinutes))
+
+  /** The staging and drain [[sessionEmitOnce]] and [[sessionEmitTwsOnce]]
+    * share: two time slices + the far-future sentinel, drained through
+    * `emit` in Append mode, the sentinel's own session dropped.
+    */
+  private def timerSessions(ss: SparkSession, sfDir: String,
+      queryName: String)(emit: DataFrame => DataFrame): DataFrame = {
+    val src = stageEvents(ss, sfDir, queryName)(ev =>
+      timeSlices(ev, 2) :+ sentinel(ev, sentinelLeadUs))
+    runToMemory(emit(src), queryName, OutputMode.Append)
       .filter(col("user_id") >= 0) // the sentinel's own session is noise
       .orderBy(col("user_id"), col("session_idx"))
   }
 
   /** The stateful sessionizer as a RUN-TO-COMPLETION streaming job, gate-
-    * comparable to batch q18: the input is staged as two TIME-RANGE-split
+    * comparable to batch q18: the input is staged as two TIME-sliced
     * files with forced modification-time order (FileStreamSource ingests
     * oldest-first), consumed one per trigger — so every user's session
     * state genuinely carries across two micro-batches, with the second
     * batch's events all later than the first's. Update mode emits a
     * running row per (user, batch); the final answer is each user's LAST
-    * update, selected by the strictly-increasing n_events via max_by.
+    * update ([[lastSessions]]).
     */
   def sessionizeOnce(spark: SparkSession, sfDir: String, gapMinutes: Int,
       queryName: String): DataFrame = {
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
-    val src = stagedEventsSource(streamingSession(spark), sfDir, srcDir, queryName)(
-      _.repartitionByRange(2, col("ts_us"))) // part-00000 = earlier half
-    stampAscendingMtimes(srcDir, 2) // oldest-first ingestion == time order
-    drainToTable(sessionize(src, gapMinutes), queryName, OutputMode.Update)
-      .groupBy(col("user_id"))
+    val src = stageEvents(streamingSession(spark), sfDir, queryName)(
+      timeSlices(_, 2))
+    lastSessions(runToMemory(sessionize(src, gapMinutes), queryName,
+      OutputMode.Update))
+  }
+
+  /** Each user's FINAL row out of running session updates, selected by
+    * the strictly-increasing n_events via max_by.
+    */
+  private def lastSessions(updates: DataFrame): DataFrame =
+    updates.groupBy(col("user_id"))
       .agg(max_by(
         struct(col("n_events"), col("n_sessions"), col("span_seconds")),
         col("n_events")).as("m"))
@@ -1396,7 +1241,6 @@ object EventStreams {
         col("m.n_sessions").as("n_sessions"),
         col("m.span_seconds").as("span_seconds"))
       .orderBy(col("user_id"))
-  }
 
   /** The sessionizer's per-user fold on the `transformWithState` API —
     * Spark 4's replacement for `*GroupsWithState` (SPARK-46815, "arbitrary
@@ -1450,32 +1294,16 @@ object EventStreams {
       .toDF()
   }
 
-  /** [[sessionizeOnce]] on the v2 state API: same two time-range-split
+  /** [[sessionizeOnce]] on the v2 state API: same two time-sliced
     * micro-batches, same last-update extraction — only the stateful
     * operator (and its mandatory RocksDB store) differs.
     */
   def sessionizeTwsOnce(spark: SparkSession, sfDir: String,
       gapMinutes: Int, queryName: String): DataFrame = {
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
-    val ss = streamingSession(spark)
-    // transformWithState refuses any other provider; scoped to this
-    // session clone, the outer harness sessions are untouched
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    val src = stagedEventsSource(ss, sfDir, srcDir, queryName)(
-      _.repartitionByRange(2, col("ts_us")))
-    stampAscendingMtimes(srcDir, 2)
-    drainToTable(sessionizeTws(src, gapMinutes), queryName,
-      OutputMode.Update)
-      .groupBy(col("user_id"))
-      .agg(max_by(
-        struct(col("n_events"), col("n_sessions"), col("span_seconds")),
-        col("n_events")).as("m"))
-      .select(col("user_id"), col("m.n_events").as("n_events"),
-        col("m.n_sessions").as("n_sessions"),
-        col("m.span_seconds").as("span_seconds"))
-      .orderBy(col("user_id"))
+    val src = stageEvents(streamingSession(spark, rocksDb = true), sfDir,
+      queryName)(timeSlices(_, 2))
+    lastSessions(runToMemory(sessionizeTws(src, gapMinutes), queryName,
+      OutputMode.Update))
   }
 
   /** Streaming exactly-once-per-key dedup — the streaming analogue of the
@@ -1511,44 +1339,13 @@ object EventStreams {
     */
   def dedupRollupOnce(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
-    val ss = streamingSession(spark)
-    stagedOnce(sfDir, srcDir) {
-      val ev = requireSpanHours(graft.Tables.events(ss, sfDir), queryName)
-      // batch 1 = originals, batch 2 = the planted duplicate copies — one
-      // explicit writeStampedBatch per half, NOT repartitionByRange on the
-      // flag: the range sampler can pick the upper flag value as the
-      // boundary and land both halves in one file (the q115 gotcha —
-      // CLAUDE.md; r5 ADVICE flagged this site as the last holdout)
-      val dups = ev.filter(col("event_id") % 10 === 0)
-      val stamped = Seq(ev, dups).zipWithIndex
-        .foldLeft(Set.empty[java.nio.file.Path]) { case (st, (half, b)) =>
-          writeStampedBatch(srcDir, half, b, st, "dedup-rollup")
-        }
-      writeStampedBatch(srcDir,
-        ev.agg(max(col("ts_us")).as("mx"))
-          .select(lit(-1L).as("event_id"),
-            (col("mx") + lit(10L * 86400 * 1000000L)).as("ts_us"),
-            lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-            lit(0.0).as("value"), lit(null).cast("string").as("props")),
-        idx = 10, stamped = stamped,
-        label = "dedup-rollup watermark sentinel")
-      ()
-    }
-    val src = ss.readStream
-      .schema(stagedSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val chained = dedupedStream(src)
-      .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 6))).cast(DoubleType)
-          .as("sum_value"))
-    drainToTable(chained, queryName, OutputMode.Append)
+    // batch 1 = originals, batch 2 = the planted duplicate copies,
+    // batch 3 = the watermark sentinel
+    val src = stageEvents(streamingSession(spark), sfDir, queryName)(ev =>
+      Seq(ev, plantedCopies(ev), sentinel(ev, sentinelLeadUs)))
+    val chained = windowedCounts(dedupedStream(src), watermark = None)
+    bucketed(runToMemory(chained, queryName, OutputMode.Append))
       .filter(col("event_type") =!= "sentinel")
-      .select(col("window.start").as("bucket"), col("event_type"),
-        col("n"), col("sum_value"))
       .orderBy(col("bucket"), col("event_type"))
   }
 
@@ -1586,12 +1383,11 @@ object EventStreams {
     */
   def dedupRollupRestartOnce(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
+    val dir = srcDir(queryName)
     val outDir = s"/tmp/graft_stream_out_$queryName"
     val ckptDir = s"/tmp/graft_stream_restart_ckpt_$queryName"
     val ss = streamingSession(spark)
-    Seq(srcDir, outDir, ckptDir).foreach(d =>
+    Seq(dir, outDir, ckptDir).foreach(d =>
       deleteStagingForTest(java.nio.file.Paths.get(d)))
     val ev = requireSpanHours(graft.Tables.events(ss, sfDir), queryName)
 
@@ -1599,17 +1395,8 @@ object EventStreams {
     // checkpoint + file sink; each call is an independent query instance
     // (the restart = calling it twice with more files staged in between).
     def runInstance(): Unit = {
-      val src = ss.readStream
-        .schema(stagedSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val chained = dedupedStream(src)
-        .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(18, 6))).cast(DoubleType)
-            .as("sum_value"))
-        .select(col("window.start").as("bucket"), col("event_type"),
-          col("n"), col("sum_value"))
+      val chained = bucketed(windowedCounts(
+        dedupedStream(open(ss, dir, stagedSchema)), watermark = None))
       val q = chained.writeStream
         .format("parquet")
         .option("path", outDir)
@@ -1620,24 +1407,18 @@ object EventStreams {
       q.awaitTermination()
     }
 
+    // staged by hand, outside [[stage]]: the files must land INTERLEAVED
+    // with the two runs, and the whole gate restages every pass anyway
     // run 1: originals only
-    val stamped =
-      writeStampedBatch(srcDir, ev, 0, Set.empty, s"$queryName originals")
+    writeStampedBatch(dir, ev, 0, s"$queryName originals")
     runInstance()
     // staged strictly after run 1 terminated: the planted copies (their
     // originals live only in run-1's checkpointed dedup state) + the
     // far-future sentinel that flushes every real window
-    val stamped2 = writeStampedBatch(srcDir,
-      ev.filter(col("event_id") % 10 === 0), 1, stamped,
+    writeStampedBatch(dir, plantedCopies(ev), 1,
       s"$queryName planted copies")
-    writeStampedBatch(srcDir,
-      ev.agg(max(col("ts_us")).as("mx"))
-        .select(lit(-1L).as("event_id"),
-          (col("mx") + lit(10L * 86400 * 1000000L)).as("ts_us"),
-          lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-          lit(0.0).as("value"), lit(null).cast("string").as("props")),
-      idx = 10, stamped = stamped2,
-      label = s"$queryName watermark sentinel")
+    writeStampedBatch(dir, sentinel(ev, sentinelLeadUs), 2,
+      s"$queryName watermark sentinel")
     // run 2: fresh query instance, SAME checkpoint
     runInstance()
 
@@ -1656,8 +1437,8 @@ object EventStreams {
     *
     * Semantics: every `view` within 30 minutes BEFORE a `click` by the
     * same user (the attribution-join shape). Staging forces the state
-    * question: file 1 carries ONLY clicks, file 2 ONLY views — with
-    * `maxFilesPerTrigger=1` every single output pair must match a click
+    * question: file 1 carries ONLY clicks, file 2 ONLY views — with one
+    * file per trigger every single output pair must match a click
     * buffered in join state from micro-batch 1 against a view arriving
     * in micro-batch 2. The DuckDB oracle is the plain batch interval
     * join, so gate equality proves no state was dropped or duplicated.
@@ -1675,48 +1456,9 @@ object EventStreams {
     * per the float/precision policy.
     */
   def intervalJoinOnce(spark: SparkSession, sfDir: String,
-      queryName: String): DataFrame = {
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
-    val ss = streamingSession(spark)
-    stagedOnce(sfDir, srcDir) {
-      // One explicit write per batch (clicks first, then views), NOT
-      // repartitionByRange(2, _b): a range-sampled staging failed in-suite
-      // at sf0.1 while passing standalone — the sampler is the one
-      // context-dependent piece of the staging (r3 already observed it
-      // collapsing small discrete keys), so it is replaced with the
-      // deterministic per-batch write lateDropOnce uses. coalesce(1) is
-      // the staging contract: one file = one micro-batch.
-      val ev = requireSpanHours(graft.Tables.events(ss, sfDir), queryName)
-      Seq("click", "view").zipWithIndex
-        .foldLeft(Set.empty[java.nio.file.Path]) { case (st, (et, b)) =>
-          writeStampedBatch(srcDir, ev.filter(col("event_type") === et),
-            b, st, "interval-join")
-        }
-      ()
-    }
-    val src = ss.readStream
-      .schema(stagedSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val clicks = src.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts_us").as("c_us"),
-        timestamp_micros(col("ts_us")).as("c_time"))
-      .withWatermark("c_time", "2 hours")
-    val views = src.filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-        col("ts_us").as("v_us"),
-        timestamp_micros(col("ts_us")).as("v_time"))
-      .withWatermark("v_time", "2 hours")
-    val joined = clicks.join(views,
-      col("c_user") === col("v_user") &&
-        col("v_time") >= col("c_time") - expr("INTERVAL 30 MINUTES") &&
-        col("v_time") <= col("c_time"))
-      .select(col("c_user").as("user_id"), col("click_id"), col("view_id"),
-        (col("c_us") - col("v_us")).as("gap_us"))
-    drainToTable(joined, queryName, OutputMode.Append)
-      .orderBy(col("click_id"), col("view_id"))
-  }
+      queryName: String): DataFrame =
+    intervalJoin(spark, sfDir, queryName, "inner", col("c_user"),
+      col("click_id"), col("view_id"))
 
   /** LEFT-OUTER stream-stream interval join as a gate query — the state-
     * EVICTION semantics q72's inner join cannot show: a click with no
@@ -1738,54 +1480,9 @@ object EventStreams {
     * default ≠ DuckDB's).
     */
   def outerIntervalJoinOnce(spark: SparkSession, sfDir: String,
-      queryName: String): DataFrame = {
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
-    val ss = streamingSession(spark)
-    stagedOnce(sfDir, srcDir) {
-      val ev = requireSpanHours(graft.Tables.events(ss, sfDir), queryName)
-      // sentinel batch built declaratively from the 1-row max aggregate (no
-      // driver-side collect): one far-future event per SIDE — the global
-      // watermark is the min over both watermark nodes
-      val sentinels = ev.agg(max(col("ts_us")).as("mx"))
-        .select(explode(array(lit("click"), lit("view"))).as("event_type"),
-          (col("mx") + lit(10L * 86400 * 1000000L)).as("ts_us"))
-        .select(lit(-1L).as("event_id"), col("ts_us"), lit(-1L).as("user_id"),
-          col("event_type"), lit(0.0).as("value"),
-          lit(null).cast("string").as("props"))
-      val batches = Seq[org.apache.spark.sql.DataFrame](
-        ev.filter(col("event_type") === "click"),
-        ev.filter(col("event_type") === "view"),
-        sentinels)
-      batches.zipWithIndex.foldLeft(Set.empty[java.nio.file.Path]) {
-        case (st, (df, b)) => writeStampedBatch(srcDir, df, b, st, "outer-join")
-      }
-      ()
-    }
-    val src = ss.readStream
-      .schema(stagedSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val clicks = src.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts_us").as("c_us"),
-        timestamp_micros(col("ts_us")).as("c_time"))
-      .withWatermark("c_time", "2 hours")
-    val views = src.filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-        col("ts_us").as("v_us"),
-        timestamp_micros(col("ts_us")).as("v_time"))
-      .withWatermark("v_time", "2 hours")
-    val joined = clicks.join(views,
-      col("c_user") === col("v_user") &&
-        col("v_time") >= col("c_time") - expr("INTERVAL 30 MINUTES") &&
-        col("v_time") <= col("c_time"),
-      "left_outer")
-      .select(col("c_user").as("user_id"), col("click_id"), col("view_id"),
-        (col("c_us") - col("v_us")).as("gap_us"))
-    drainToTable(joined, queryName, OutputMode.Append)
-      .filter(col("user_id") >= 0) // drop the watermark sentinels
-      .orderBy(col("click_id"), asc_nulls_first("view_id"))
-  }
+      queryName: String): DataFrame =
+    intervalJoin(spark, sfDir, queryName, "left_outer", col("c_user"),
+      col("click_id"), asc_nulls_first("view_id"))
 
   /** FULL-OUTER stream-stream interval join as a gate query — the last
     * cell of the join-type matrix (q72 inner, q91 left-outer): BOTH
@@ -1801,51 +1498,43 @@ object EventStreams {
     * pinned on both key columns.
     */
   def fullOuterIntervalJoinOnce(spark: SparkSession, sfDir: String,
-      queryName: String): DataFrame = {
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
-    val ss = streamingSession(spark)
-    stagedOnce(sfDir, srcDir) {
-      val ev = requireSpanHours(graft.Tables.events(ss, sfDir), queryName)
-      val sentinels = ev.agg(max(col("ts_us")).as("mx"))
-        .select(explode(array(lit("click"), lit("view"))).as("event_type"),
-          (col("mx") + lit(10L * 86400 * 1000000L)).as("ts_us"))
-        .select(lit(-1L).as("event_id"), col("ts_us"), lit(-1L).as("user_id"),
-          col("event_type"), lit(0.0).as("value"),
-          lit(null).cast("string").as("props"))
-      val batches = Seq[org.apache.spark.sql.DataFrame](
-        ev.filter(col("event_type") === "click"),
-        ev.filter(col("event_type") === "view"),
-        sentinels)
-      batches.zipWithIndex.foldLeft(Set.empty[java.nio.file.Path]) {
-        case (st, (df, b)) => writeStampedBatch(srcDir, df, b, st, "fo-join")
-      }
-      ()
+      queryName: String): DataFrame =
+    intervalJoin(spark, sfDir, queryName, "full_outer",
+      coalesce(col("c_user"), col("v_user")),
+      asc_nulls_first("click_id"), asc_nulls_first("view_id"))
+
+  /** The one body of the three interval-join gates: clicks staged as
+    * micro-batch 1, views as micro-batch 2, and — for an outer join,
+    * whose unmatched rows emit only on watermark eviction — a third batch
+    * with one far-future sentinel per SIDE (the global watermark is the
+    * min over both watermark nodes). `userId` projects the output
+    * user; `order` sorts the drained rows.
+    */
+  private def intervalJoin(spark: SparkSession, sfDir: String,
+      queryName: String, joinType: String, userId: Column,
+      order: Column*): DataFrame = {
+    val src = stageEvents(streamingSession(spark), sfDir, queryName) { ev =>
+      Seq(ev.filter(col("event_type") === "click"),
+        ev.filter(col("event_type") === "view")) ++
+        (if (joinType == "inner") Nil
+         else Seq(sentinel(ev, sentinelLeadUs, Seq("click", "view"))))
     }
-    val src = ss.readStream
-      .schema(stagedSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val clicks = src.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts_us").as("c_us"),
-        timestamp_micros(col("ts_us")).as("c_time"))
-      .withWatermark("c_time", "2 hours")
-    val views = src.filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-        col("ts_us").as("v_us"),
-        timestamp_micros(col("ts_us")).as("v_time"))
-      .withWatermark("v_time", "2 hours")
-    val joined = clicks.join(views,
+    def side(eventType: String, p: String): DataFrame =
+      src.filter(col("event_type") === eventType)
+        .select(col("user_id").as(s"${p}_user"),
+          col("event_id").as(s"${eventType}_id"), col("ts_us").as(s"${p}_us"),
+          timestamp_micros(col("ts_us")).as(s"${p}_time"))
+        .withWatermark(s"${p}_time", "2 hours")
+    val joined = side("click", "c").join(side("view", "v"),
       col("c_user") === col("v_user") &&
         col("v_time") >= col("c_time") - expr("INTERVAL 30 MINUTES") &&
         col("v_time") <= col("c_time"),
-      "full_outer")
-      .select(coalesce(col("c_user"), col("v_user")).as("user_id"),
-        col("click_id"), col("view_id"),
+      joinType)
+      .select(userId.as("user_id"), col("click_id"), col("view_id"),
         (col("c_us") - col("v_us")).as("gap_us"))
-    drainToTable(joined, queryName, OutputMode.Append)
-      .filter(col("user_id") >= 0) // drop both sides' watermark sentinels
-      .orderBy(asc_nulls_first("click_id"), asc_nulls_first("view_id"))
+    runToMemory(joined, queryName, OutputMode.Append)
+      .filter(col("user_id") >= 0) // the outer joins' watermark sentinels
+      .orderBy(order: _*)
   }
 
   /** Streaming CDC-APPLY as a RUN-TO-COMPLETION gate query: maintain a
@@ -1874,27 +1563,14 @@ object EventStreams {
   def cdcApplyOnce(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
     import org.apache.spark.sql.Row
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
     val stateDir = s"/tmp/graft_cdc_state_$queryName"
     val nextDir = stateDir + "_next"
-    val ss = streamingSession(spark)
     // the state/next dirs accumulate across the drain and are wiped
     // EVERY run; only the source staging is reusable
     Seq(stateDir, nextDir).foreach(d =>
       deleteStagingForTest(java.nio.file.Paths.get(d)))
-    stagedOnce(sfDir, srcDir) {
-      val ev = requireSpanHours(graft.Tables.events(ss, sfDir), queryName)
-      val bounds = ev.agg(min(col("ts_us")).as("a"), max(col("ts_us")).as("z"))
-      val tagged = ev.crossJoin(broadcast(bounds))
-        .withColumn("_b",
-          when(col("ts_us") < expr("a + (z - a) div 2"), lit(0)).otherwise(lit(1)))
-        .drop("a", "z")
-      Seq(0, 1).foldLeft(Set.empty[java.nio.file.Path]) { (st, b) =>
-        writeStampedBatch(srcDir, tagged.filter(col("_b") === b).drop("_b"),
-          b, st, "cdc")
-      }
-      ()
-    }
+    val src = stageEvents(streamingSession(spark), sfDir, queryName)(
+      timeSlices(_, 2))
 
     val stateSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("user_id",
@@ -1909,10 +1585,6 @@ object EventStreams {
         org.apache.spark.sql.types.DoubleType)))
     val payload = Seq("ts_us", "event_id", "event_type", "value")
 
-    val src = ss.readStream
-      .schema(stagedSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
     drainBatches(src) { (batch, _) =>
       val s2 = batch.sparkSession
       // µs precision on BOTH the order key and the stored timestamp
@@ -1945,20 +1617,5 @@ object EventStreams {
     }
     spark.read.schema(stateSchema).parquet(stateDir)
       .orderBy(col("user_id"))
-  }
-
-  /** Drive a streaming DataFrame synchronously into a memory sink and
-    * return the materialized result (local smoke/test harness).
-    */
-  def runToMemory(df: DataFrame, name: String, mode: OutputMode): DataFrame = {
-    val q: StreamingQuery = df.writeStream
-      .outputMode(mode)
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    df.sparkSession.table(name)
   }
 }

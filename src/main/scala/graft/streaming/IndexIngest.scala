@@ -38,8 +38,8 @@ import graft.sources.{IndexFamily, RetentionPolicy}
   * whole shard — order-independent as a SET — and q147's exact O(n·m)
   * oracle (extended for the third wave) gates the entire loop.
   *
-  * Staged arrival (three waves, mtime-ordered files — the
-  * [[EventStreams]] staging discipline, whose helpers this shares):
+  * Staged arrival (three waves, mtime-ordered files — staged through
+  * [[EventStreams.stage]], the one staging path of every streaming gate):
   *   - wave A: the `vec_id % 7 == 3` slice,
   *   - wave B: double-scaled copies of every 10th corpus vector
   *     (+5 000 000 — the q147 planted inc×corpus hits),
@@ -68,7 +68,7 @@ object IndexIngest {
     * cadence is — and every batch of it stays fully paid per pass on
     * the fresh copy, the q116/q156 deliberate-restage contract,
     * because the copy MUTATES during the drain). Same opt-in and same
-    * safety shape as [[EventStreams.stagedOnce]] / `SharedStage`:
+    * safety shape as [[EventStreams.stage]] / `SharedStage`:
     * gated on `graft.stage.reuse` (ONLY Bench sets it — Verify, Dev,
     * and tests build straight into `idxDir`, the identity path), a
     * per-JVM nonce token written LAST so a fresh process or a torn
@@ -129,9 +129,9 @@ object IndexIngest {
   /** The one ingest loop every gate runs — the reference's per-chunk
     * read → transform → upsert-by-key loop (SURVEY §0) as a streaming
     * drain. `declare` builds the gate on the streaming session; the
-    * loop stages its waves as mtime-ordered files behind the
-    * [[EventStreams.stagedOnce]] reuse discipline, builds the epoch-0
-    * artifact, then drains one file per micro-batch, each inside a
+    * loop stages its waves through [[EventStreams.stage]] (one
+    * mtime-ordered file each, behind its reuse discipline), builds the
+    * epoch-0 artifact, then drains one file per micro-batch, each inside a
     * cache scope: probe → sink append with the foreachBatch id → fold
     * → housekeep, all before the next batch fires. The artifact and
     * the sink are wiped and rebuilt EVERY run — they MUTATE during the
@@ -143,25 +143,16 @@ object IndexIngest {
   private[graft] def ingest(spark: SparkSession, sfDir: String,
       queryName: String)(declare: SparkSession => Gate)
       : Option[DataFrame] = {
-    val srcDir = s"/tmp/graft_stream_src_$queryName"
     val dir = idxDir(queryName)
     val sinkDir = s"/tmp/graft_stream_report_$queryName"
     val ss = EventStreams.streamingSession(spark)
     val gate = declare(ss)
-    EventStreams.stagedOnce(sfDir, srcDir) {
-      gate.waves.zipWithIndex.foldLeft(Set.empty[java.nio.file.Path]) {
-        case (stamped, (df, i)) =>
-          EventStreams.writeStampedBatch(srcDir, df, i, stamped,
-            s"$queryName wave ${('A' + i).toChar}")
-      }
-      ()
-    }
+    val src = EventStreams.stage(ss, sfDir, queryName, gate.schema)(
+      gate.waves)
     EventStreams.deleteStagingForTest(java.nio.file.Paths.get(sinkDir))
     stagedArtifactOnce(ss, dir, gate.artifactKey) { d =>
       graft.CacheScope.withScope(gate.build(d))
     }
-    val src = ss.readStream.schema(gate.schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
     EventStreams.drainBatches(src) { (batch, id) =>
       graft.CacheScope.withScope {
         val bs = batch.sparkSession
@@ -410,7 +401,7 @@ object IndexIngest {
     // the retention policy's exact end state: base 0, A-fold 1,
     // cb(0) no-op, B-fold 2, cb(1)→epoch 3 floor 1, C-fold 4,
     // cb(3)→epoch 5 floor 3 — deterministic because one wave = one
-    // batch (maxFilesPerTrigger = 1 over three stamped files)
+    // batch (one file per trigger over three stamped files)
     val st = graft.sources.EpochStore.servingState(spark, dir,
       queryName, "writeFingerprintIndex")
     require(st.epoch == 5 && st.floor == 3,

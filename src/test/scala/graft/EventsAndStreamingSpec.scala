@@ -120,6 +120,36 @@ class EventsAndStreamingSpec extends AnyFunSuite {
     dir.toString
   }
 
+  test("stage writes one stamped file per frame in list order and the " +
+      "stream replays each file as one micro-batch") {
+    val name = "stage_spec"
+    val sizes = Seq(3L, 7L, 5L) // distinct and unsorted: order shows
+    def frame(i: Int, n: Long) = spark.range(n).select(
+      col("id").as("event_id"), lit(i * 3600000000L).as("ts_us"),
+      lit(1L).as("user_id"), lit("click").as("event_type"),
+      lit(1.0).as("value"), lit(null).cast("string").as("props"))
+    val src = EventStreams.stage(spark, TestSpark.sf, name)(
+      sizes.zipWithIndex.map { case (n, i) => frame(i, n) })
+    val listing = java.nio.file.Files.list(
+      java.nio.file.Paths.get(s"/tmp/graft_stream_src_$name"))
+    val parts =
+      try listing.iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-")).toSeq
+      finally listing.close()
+    assert(parts.size == 3, s"one file per frame: $parts")
+    val byMtime = parts.map(p =>
+      (java.nio.file.Files.getLastModifiedTime(p).toMillis,
+        spark.read.parquet(p.toString).count())).sortBy(_._1)
+    assert(byMtime.map(_._1).distinct.size == 3,
+      s"mtimes must be strictly ascending: $byMtime")
+    assert(byMtime.map(_._2) == sizes,
+      s"files in mtime order must hold the frames in list order: $byMtime")
+    val seen = scala.collection.mutable.Buffer.empty[(Long, Long)]
+    EventStreams.drainBatches(src) { (b, id) => seen += ((id, b.count())) }
+    assert(seen.toSeq == sizes.zipWithIndex.map { case (n, i) =>
+      (i.toLong, n) }, s"one micro-batch per frame, in order: $seen")
+  }
+
   test("streaming windowed counts match batch hourly rollup totals") {
     val batch = Events.rollup(Tables.events(spark, TestSpark.sf), "hour")
       .agg(sum("n")).as[Long].collect().head
