@@ -531,7 +531,7 @@ object Oracles {
       ORDER BY as_of, doc_id"""
 
   /** q185: q178's horizons PLUS the serving state (as_of 4, its epoch
-    * number), probed on an artifact that was compactBelow(1)'d and
+    * number), probed on an artifact partially compacted below 1 and
     * VACUUMED — the engine can only have served the checkpoint, and
     * the oracle still knows nothing but the declarative per-horizon
     * corpora: horizon 1 the full post-append map, horizon 2 minus all
@@ -2704,12 +2704,12 @@ object Oracles {
     "q186_fp_changes_between" -> fpChangesOracle,
     "q187_text_changes_between" -> textChangesOracle,
     "q188_streaming_fp_retained" -> fpRetainedOracle,
-    // q190: the q185 artifact's history is DETERMINISTIC by
-    // construction (base 0, append 1, delete 2, re-append 3,
-    // compactBelow(1) commit 4, vacuum reclaims meta_0) — the oracle
-    // is that end state as a constant table: epochs 1-4 survive,
-    // floors as each meta recorded them, kinds from the layout
-    // (checkpoint-backed floor / tombstone / data / retention commit)
+    // q190: the q185 artifact's history is DETERMINISTIC by construction
+    // (base 0, append 1, delete 2, re-append 3, partial compact below 1
+    // commit 4, vacuum reclaims meta_0) — the oracle is that end state
+    // as a constant table: epochs 1-4 survive, floors as each meta
+    // recorded them, kinds from the layout (checkpoint-backed floor /
+    // tombstone / data / retention commit)
     "q190_epoch_history" -> """
       SELECT * FROM (VALUES
         (CAST(1 AS BIGINT), CAST(0 AS BIGINT), 'checkpoint',

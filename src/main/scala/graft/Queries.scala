@@ -188,11 +188,11 @@ object Queries {
     * it (the build lands on the first consumer in sorted order).
     */
   /** The partially-compacted fp artifact shared by q185 (as-of across
-    * a compactBelow) and q186 (differential read over its
+    * a partial compact) and q186 (differential read over its
     * delete + re-append window): the q178 composition — base %11!=5,
     * append the %11==5 survivors, DELETE the ≡ 2 (mod 13) owners,
-    * re-append their even half (epochs 0..3) — then compactBelow(1)
-    * folds epochs 0-1 into a checkpoint and VACUUM physically
+    * re-append their even half (epochs 0..3) — then a partial compact
+    * below 1 folds epochs 0-1 into a checkpoint and VACUUM physically
     * reclaims them, so every later read can only have served the
     * checkpoint. Built per call for hermeticity outside Bench; within
     * a Bench JVM `SharedStage.buildOnce` reuses it (the build lands
@@ -215,7 +215,7 @@ object Queries {
         .select(col("owner").as("doc_id"))
         .write.mode("overwrite").parquet(doomedDir)
       val doomed = s.read.parquet(doomedDir)
-      Dedup.deleteFromFingerprintIndex(idx, doomed)
+      Dedup.index.delete(idx, doomed)
       Dedup.appendFingerprintIndex(idx,
         corpus.join(doomed.filter(col("doc_id") % 2 === 0),
           Seq("doc_id"), "left_semi"))
@@ -226,11 +226,11 @@ object Queries {
   }
 
   /** The TIMESTAMPED twin of [[fpCbIndexDir]] (r15 — r14 VERDICT #3),
-    * shared by q192 (timestamp-resolved as-of probes) and q193
-    * (DESCRIBE HISTORY with commit_ts + persisted kinds): the exact
-    * q185 composition with a caller-supplied monotone clock injected
-    * at every mutation (base 1000, append 2000, delete 3000, re-append
-    * 4000, compactBelow(1) 5000 — the P9 per-job-constant precedent,
+    * shared by q192 (timestamp-resolved as-of probes) and q193 (DESCRIBE
+    * HISTORY with commit_ts + persisted kinds): the exact q185
+    * composition with a caller-supplied monotone clock injected at every
+    * mutation (base 1000, append 2000, delete 3000, re-append 4000,
+    * partial compact below 1 5000 — the P9 per-job-constant precedent,
     * so the gates stay deterministic), then vacuum. End state: serving
     * epoch 4, floor 1 (checkpoint-backed), metas 1..4 stamped.
     */
@@ -253,7 +253,7 @@ object Queries {
         .select(col("owner").as("doc_id"))
         .write.mode("overwrite").parquet(doomedDir)
       val doomed = s.read.parquet(doomedDir)
-      Dedup.deleteFromFingerprintIndex(idx, doomed,
+      Dedup.index.delete(idx, doomed,
         commitTs = Some(3000L))
       Dedup.appendFingerprintIndex(idx,
         corpus.join(doomed.filter(col("doc_id") % 2 === 0),
@@ -308,7 +308,7 @@ object Queries {
       val doomedDir = idx + "_doomed"
       TextIndex.storedDocIds(s, idx).filter(col("doc_id") % 13 === 2)
         .write.mode("overwrite").parquet(doomedDir)
-      TextIndex.deleteFromJaccardIndex(idx, s.read.parquet(doomedDir))
+      TextIndex.index.delete(idx, s.read.parquet(doomedDir))
     }
     idx
   }
@@ -1134,7 +1134,7 @@ object Queries {
           .select(col("owner").as("doc_id"))
           .write.mode("overwrite").parquet(doomedDir)
         val doomed = s.read.parquet(doomedDir)
-        Dedup.deleteFromFingerprintIndex(idx, doomed)
+        Dedup.index.delete(idx, doomed)
         Dedup.appendFingerprintIndex(idx,
           corpus.join(doomed.filter(col("doc_id") % 2 === 0),
             Seq("doc_id"), "left_semi"))
@@ -1159,7 +1159,7 @@ object Queries {
         dir.replaceAll("[^A-Za-z0-9._-]", "_")
       SharedStage.buildOnce(idx, s"bm25indexdel|$dir") {
         Bm25.writeBm25Index(d, idx)
-        Bm25.deleteFromBm25Index(idx,
+        Bm25.index.delete(idx,
           d.filter(col("doc_id") % 13 === 2).select("doc_id"))
         Bm25.appendBm25Index(idx,
           d.filter(col("doc_id") % 13 === 2 && col("doc_id") % 2 === 0)
@@ -1185,7 +1185,7 @@ object Queries {
         TextIndex.storedDocIds(s, idx).filter(col("doc_id") % 13 === 2)
           .write.mode("overwrite").parquet(doomedDir)
         val doomed = s.read.parquet(doomedDir)
-        TextIndex.deleteFromJaccardIndex(idx, doomed)
+        TextIndex.index.delete(idx, doomed)
         TextIndex.appendJaccardIndex(idx,
           corpus.join(doomed.filter(col("doc_id") % 2 === 0),
             Seq("doc_id"), "left_semi"))
@@ -1198,7 +1198,7 @@ object Queries {
     // cp family: the same delete composition at the embedding
     // granularity — parameters pinned EXPLICITLY from the pre-delete
     // count (so neither the append nor the shrink can trip a currency
-    // step; deleteFromCpIndex documents why shrink never needs one),
+    // step; Ann.index documents why shrink never needs one),
     // probed by the q147 shard. With base-build-only construction,
     // every corpus vector is live, so the delete set is declarative.
     "q176_cp_dedup_deleted" -> ((s, dir) => {
@@ -1219,7 +1219,7 @@ object Queries {
         val b = graft.plans.CrossPolytope.bandsFor(0.4, k, 64, 1e-4)
         Ann.writeCpIndex(corpus, idx, threshold = 0.4,
           hashesPerBand = k, bands = b)
-        Ann.deleteFromCpIndex(idx,
+        Ann.index.delete(idx,
           corpus.filter(col("vec_id") % 13 === 2).select("vec_id"))
         Ann.appendCpIndex(idx,
           corpus.filter(col("vec_id") % 13 === 2 &&
@@ -1243,7 +1243,7 @@ object Queries {
         dir.replaceAll("[^A-Za-z0-9._-]", "_")
       SharedStage.buildOnce(idx, s"dhashidxdel|$dir") {
         Multimodal.writeDHashIndex(corpus, idx)
-        Multimodal.deleteFromDHashIndex(idx,
+        Multimodal.index.delete(idx,
           corpus.filter(col("doc_id") % 13 === 2 &&
               col("doc_id") % 3 === 0)
             .select(col("doc_id").as("media_id")))
@@ -1305,7 +1305,7 @@ object Queries {
           .select(col("owner").as("doc_id"))
           .write.mode("overwrite").parquet(doomedDir)
         val doomed = s.read.parquet(doomedDir)
-        Dedup.deleteFromFingerprintIndex(idx, doomed)
+        Dedup.index.delete(idx, doomed)
         Dedup.appendFingerprintIndex(idx,
           corpus.join(doomed.filter(col("doc_id") % 2 === 0),
             Seq("doc_id"), "left_semi"))
@@ -1333,7 +1333,7 @@ object Queries {
       SharedStage.buildOnce(idx, s"bm25indexasof|$dir") {
         Bm25.writeBm25Index(d.filter(col("doc_id") % 11 =!= 5), idx)
         Bm25.appendBm25Index(idx, d.filter(col("doc_id") % 11 === 5))
-        Bm25.deleteFromBm25Index(idx,
+        Bm25.index.delete(idx,
           d.filter(col("doc_id") % 13 === 2).select("doc_id"))
       }
       val terms = Seq("spark", "hash", "window")
@@ -1376,7 +1376,7 @@ object Queries {
           .filter(col("doc_id") % 13 === 2)
           .write.mode("overwrite").parquet(doomedDir)
         val doomed = s.read.parquet(doomedDir)
-        TextDedup.deleteFromDeconIndex(idx, doomed)
+        TextDedup.index.delete(idx, doomed)
         TextDedup.appendDeconIndex(idx,
           bench.join(doomed.filter(col("doc_id") % 3 === 0),
             Seq("doc_id"), "left_semi"))
@@ -1420,7 +1420,7 @@ object Queries {
         TextDedup.storedDeconDocIds(s, idx)
           .filter(col("doc_id") % 13 === 2)
           .write.mode("overwrite").parquet(doomedDir)
-        TextDedup.deleteFromDeconIndex(idx, s.read.parquet(doomedDir))
+        TextDedup.index.delete(idx, s.read.parquet(doomedDir))
       }
       val at1 = TextDedup
         .decontaminateAgainstIndex(corpus, idx, asOf = Some(1))
@@ -1482,7 +1482,7 @@ object Queries {
         Ann.writeCpIndex(corpus.filter(col("vec_id") % 11 =!= 5), idx,
           threshold = 0.4, hashesPerBand = k, bands = b)
         Ann.appendCpIndex(idx, corpus.filter(col("vec_id") % 11 === 5))
-        Ann.deleteFromCpIndex(idx,
+        Ann.index.delete(idx,
           corpus.filter(col("vec_id") % 13 === 2).select("vec_id"))
       }
       val at1 = Ann.cosinePairsCpIndexed(idx, incoming,
@@ -1510,7 +1510,7 @@ object Queries {
           corpus.filter(col("doc_id") % 11 =!= 5), idx)
         Multimodal.appendDHashIndex(idx,
           corpus.filter(col("doc_id") % 11 === 5))
-        Multimodal.deleteFromDHashIndex(idx,
+        Multimodal.index.delete(idx,
           corpus.filter(col("doc_id") % 13 === 2 &&
               col("doc_id") % 3 === 0)
             .select(col("doc_id").as("media_id")))
@@ -1527,20 +1527,20 @@ object Queries {
         .orderBy(col("as_of"), col("media_a"), col("media_b"))
     }),
 
-    // ---- PARTIAL compaction at the gate (r14, r13 VERDICT #1 —
-    // bounded history retention): the q178 composition (append×3 with
-    // a delete in the middle), then compactBelow(1) + VACUUM — epochs
+    // ---- PARTIAL compaction at the gate (r14, r13 VERDICT #1 — bounded
+    // history retention): the q178 composition (append×3 with a delete
+    // in the middle), then a partial compact below 1 + VACUUM — epochs
     // 0-1 fold into a checkpoint, the sprawl below it physically
     // reclaims, and the artifact STILL serves horizon 1 (now the
-    // checkpoint itself), horizon 2 (checkpoint + the tombstone
-    // epoch), and the serving state (checkpoint + both deltas) —
-    // bit-for-bit against the same declarative per-horizon oracles.
-    // The vacuum is the proof the probes served the checkpoint (the
-    // q163 argument at partial granularity): the original epoch-0/1
-    // files no longer exist. Housekeeping and audit reads compose
-    // instead of excluding each other — the production cadence
-    // (reclaim a year of micro-batch sprawl, keep last week's
-    // horizons). as_of 4 labels the serving probe by its epoch number.
+    // checkpoint itself), horizon 2 (checkpoint + the tombstone epoch),
+    // and the serving state (checkpoint + both deltas) — bit-for-bit
+    // against the same declarative per-horizon oracles. The vacuum is
+    // the proof the probes served the checkpoint (the q163 argument at
+    // partial granularity): the original epoch-0/1 files no longer
+    // exist. Housekeeping and audit reads compose instead of excluding
+    // each other — the production cadence (reclaim a year of micro-batch
+    // sprawl, keep last week's horizons). as_of 4 labels the serving
+    // probe by its epoch number.
     "q185_fp_compact_below" -> ((s, dir) => {
       val (_, incoming) = textArrival(s, dir)
       val idx = fpCbIndexDir(s, dir)
@@ -1559,7 +1559,7 @@ object Queries {
     // ---- DIFFERENTIAL reads (r14, r13 VERDICT #2 — CDC out of a
     // stored index): "what changed between horizon i and j" so an
     // incremental downstream consumer re-verdicts only the delta.
-    // q186 diffs the q185 artifact (floor 1 after its compactBelow —
+    // q186 diffs the q185 artifact (floor 1 after its partial compact —
     // the live-at-from side reads the CHECKPOINT) across the
     // delete + re-append window (1, 3]: added = the re-appended even
     // half's map entries, removed = every ≡ 2 (mod 13) owner live at
@@ -1586,18 +1586,17 @@ object Queries {
         .orderBy(col("change"), col("doc_id"))
     }),
 
-    // ---- BOUNDED retention IN the streaming loop (r14 — what
-    // compactBelow exists for at the production cadence): the q164
-    // loop housekeeps with FULL compaction, so every as-of horizon
-    // expires each micro-batch; this loop folds with
-    // compactBelow(serving − 1) + vacuum instead — the artifact never
-    // sprawls past checkpoint + one delta, yet the last pre-fold
-    // horizon stays auditable. After the drain, a FIXED novel shard
-    // probes at the RETAINED horizon (the post-B state, served from
-    // the mid-drain checkpoint — the sub-floor epochs are loudly
-    // verified gone) and at serving; the oracle recomputes both as
-    // declarative tier-coalesces. Housekeeping and audit reads
-    // compose inside one streaming loop.
+    // ---- BOUNDED retention IN the streaming loop (r14 — what partial
+    // compaction exists for at the production cadence): the q164 loop
+    // housekeeps with FULL compaction, so every as-of horizon expires
+    // each micro-batch; this loop folds with compact(below =
+    // Some(serving − 1)) + vacuum instead — the artifact never sprawls
+    // past checkpoint + one delta, yet the last pre-fold horizon stays
+    // auditable. After the drain, a FIXED novel shard probes at the
+    // RETAINED horizon (the post-B state, served from the mid-drain
+    // checkpoint — the sub-floor epochs are loudly verified gone) and at
+    // serving; the oracle recomputes both as declarative tier-coalesces.
+    // Housekeeping and audit reads compose inside one streaming loop.
     "q188_streaming_fp_retained" -> ((s, dir) =>
       graft.streaming.IndexIngest.fpIngestRetainedOnce(
         s, dir, "q188_streaming_fp_retained")),
@@ -1624,7 +1623,7 @@ object Queries {
     // ---- DESCRIBE HISTORY (r14): the layout's mutation log from its
     // surviving metas — every lakehouse format's introspection
     // table-stake, driver-side only (one-row meta files; no data
-    // read). Probed on the q185 artifact AFTER its compactBelow +
+    // read). Probed on the q185 artifact AFTER its partial compact +
     // vacuum, so the gate pins what the layout actually retains: the
     // checkpoint-backed floor epoch, the tombstone epoch, the
     // re-append, and the retention commit — with the floors each meta

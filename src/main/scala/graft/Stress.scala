@@ -645,7 +645,7 @@ object Stress {
       def timeDelete(idx: String, ids: DataFrame): Double = {
         val t0 = System.nanoTime()
         CacheScope.withScope {
-          operators.Dedup.deleteFromFingerprintIndex(idx, ids)
+          operators.Dedup.index.delete(idx, ids)
         }
         (System.nanoTime() - t0) / 1e9
       }
@@ -681,7 +681,7 @@ object Stress {
     // real micro-batch cadence) and prices (a) the as-of claim — a
     // historical probe costs no MORE than the serving probe (the meta
     // walk is one read at any depth; an early horizon scans FEWER
-    // epoch dirs) — and (b) what compactBelow buys: after folding the
+    // epoch dirs) — and (b) what a partial compact buys: after folding the
     // sprawl below epoch 95, the serving probe pays a checkpoint +
     // 5 deltas instead of 100 small epochs while horizons ≥ 95 keep
     // serving.

@@ -60,6 +60,8 @@ object Verify {
       else names.map(n => n -> SparkEntry.queries(n))
     new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>
+      // names the query the Spark log lines that follow belong to
+      System.err.println(s"[verify] $name")
       // withScope: operator-internal caches drop when this query's
       // action completes — release is owner-scoped, see CacheScope
       try CacheScope.withScope {

@@ -689,14 +689,18 @@ object Ann {
     * old artifact REFUSES against new probe code instead of silently
     * losing recall. Compaction keeps the frozen parameters (k, bands,
     * dim, counts ride the carried meta), so every probe and premise is
-    * unchanged by construction (q161 gate).
+    * unchanged by construction (q161 gate). A delete has no currency
+    * refusal, the mirror of [[appendCpIndex]]'s: a shrunken corpus
+    * leaves the stored k LARGER than the count-optimal one, which only
+    * lowers candidate volume — recall stays certified by the stored
+    * (k, bands) banding bound.
     */
   val index: graft.sources.IndexFamily = graft.sources.IndexFamily(
     "cplsh-fht-v1", "writeCpIndex",
     "probing across hash versions silently loses recall",
     Seq(graft.sources.EpochStore.CompactTable("vectors", Some("vec_id")),
       graft.sources.EpochStore.CompactTable("bands", Some("vec_id"))),
-    "vectors", "vec_id")
+    "vectors", "vec_id", deleteKey = "vec_id", countCol = "corpus_count")
 
   /** Write the corpus half of incremental dedup as a stored artifact:
     * band rows, vectors, and derived parameters persisted as parquet,
@@ -836,40 +840,6 @@ object Ann {
     graft.sources.EpochStore.tableThroughLive(spark, indexDir, "bands",
       "vec_id", floor, epoch)
       .select(col("vec_id"), col("band_id"), col("code"))
-
-  /** RETRACT stored vectors (r13 — the delete quarter): one tombstone
-    * epoch suppresses them from every probe ([[graft.sources
-    * .EpochStore.writeDeleteEpoch]] — meta-last, the shrunken
-    * corpus_count in the same commit). NO parameter-currency refusal,
-    * deliberately (the mirror of [[appendCpIndex]]'s): a shrunken
-    * corpus leaves the stored k LARGER than the count-optimal one,
-    * which can only LOWER candidate volume — recall stays certified
-    * by the stored (k, bands) banding bound, which never depended on
-    * the count; at worst the probe pays k-toolarge hash cost, and the
-    * rebuild decision is the caller's. Loud premises: one id space;
-    * every id CURRENTLY LIVE. A deleted id may be re-appended
-    * afterwards; physical reclaim = `index.compact` + `index.vacuum`
-    * ([[graft.sources.IndexFamily]]). Single writer.
-    */
-  def deleteFromCpIndex(indexDir: String, ids: DataFrame,
-      commitTs: Option[Long] = None): Unit = {
-    val spark = ids.sparkSession
-    val st = cpState(spark, indexDir, "deleteFromCpIndex")
-    import spark.implicits._
-    graft.sources.EpochStore.deleteEpochChecked(indexDir,
-      "deleteFromCpIndex", ids, "vec_id",
-      indexVectors(spark, indexDir, st.floor, st.epoch)
-        .select(col("vec_id").as("id")),
-      s"delete id(s) are not live in the index at $indexDir — a " +
-        "retraction must name stored vectors (already-deleted or " +
-        "never-stored ids refuse loudly, they do not no-op).",
-      Seq.empty,
-      n => Seq((index.id, st.k, st.bands, st.dim, st.targetMiss,
-          st.threshold, st.count - n, st.epoch + 1, st.paramsDerived))
-        .toDF("family", "k", "bands", "dim", "target_miss",
-          "threshold", "corpus_count", "epoch", "params_derived"),
-      st.epoch + 1, st.floor, commitTs)
-  }
 
   /** FOLD a deduped shard INTO the artifact — the missing quarter of
     * the index lifecycle (write → probe → search → APPEND): after

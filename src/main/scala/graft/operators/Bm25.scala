@@ -178,7 +178,17 @@ object Bm25 {
       graft.sources.EpochStore.CompactTable("dfs", None,
         d => d.groupBy(col("term")).agg(sum(col("df")).as("df"))
           .filter(col("df") =!= 0))),
-    "docs", "doc_id")
+    "docs", "doc_id", deleteKey = "doc_id", countCol = "n_docs",
+    // a delete shrinks Σdl by the deleted docs' lengths and carries
+    // NEGATIVE df rows — per term, minus the deleted docs containing
+    // it, from the live postings — so the probe's sum-across-epochs
+    // serves the retracted df with zero plan change
+    onDelete = Some(graft.sources.IndexFamily.DeleteHook(
+      Seq(coalesce(sum(col("dl")), lit(0L)).as("sum_dl")),
+      (live, del) => Seq("dfs" -> live("postings")
+        .join(broadcast(del), col("doc_id") === col("id"))
+        .groupBy(col("term"))
+        .agg((lit(0L) - count(lit(1))).as("df"))))))
 
   /** The tokenized corpus half: postings (term, doc_id, tf, dl —
     * dl denormalized so scoring never joins a lengths table) and the
@@ -289,62 +299,6 @@ object Bm25 {
     writeBm25Epoch(spark, indexDir, st.epoch + 1, postings, lengths,
       st.nDocs + c(0), st.sumDl + c(2), st.floor,
       commitTs = commitTs)
-  }
-
-  /** RETRACT stored documents (r13 — the deletion side of the
-    * additivity story): BM25's corpus statistics are additive over
-    * disjoint doc sets in BOTH directions, so a delete is one more
-    * epoch carrying NEGATIVE df rows — per term, minus the number of
-    * deleted docs containing it, computed from the live postings —
-    * while N and Σdl shrink on the meta in the same meta-last commit.
-    * The probe's existing sum-across-epochs then serves the retracted
-    * df with ZERO plan change, and postings/docs rows suppress via the
-    * layout tombstones, so a deleted index scores bit-identically to
-    * one rebuilt without the deleted docs (the q172 gate). Loud
-    * premises: one id space; every id CURRENTLY LIVE in the stored
-    * docs table. A deleted id may be re-appended afterwards (its new
-    * postings bring new positive df rows — the sums compose); physical
-    * reclaim = `index.compact` (which re-sums df so the negatives
-    * cancel) + `index.vacuum` ([[graft.sources.IndexFamily]]). Single
-    * writer.
-    */
-  def deleteFromBm25Index(indexDir: String, ids: DataFrame,
-      commitTs: Option[Long] = None): Unit = {
-    val spark = ids.sparkSession
-    val st = bm25State(spark, indexDir, "deleteFromBm25Index")
-    val del = graft.CacheScope.scoped(
-      ids.select(col("doc_id").cast("long").as("id")))
-    val counts = del.agg(count(lit(1)).as("n"),
-      count_distinct(col("id")).as("nd")).head()
-    require(counts.getLong(0) == counts.getLong(1),
-      "deleteFromBm25Index: the delete set is not one id space — " +
-        s"${counts.getLong(0) - counts.getLong(1)} duplicate id(s); " +
-        "de-duplicate it upstream.")
-    // the deleted docs' (count, Σdl) and the liveness premise in ONE
-    // scan of the live docs table
-    val liveDocs = graft.sources.EpochStore.tableThroughLive(spark,
-      indexDir, "docs", "doc_id", st.floor, st.epoch)
-    val hit = liveDocs.join(broadcast(del),
-        liveDocs("doc_id") === del("id"))
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum(col("dl")), lit(0L)).as("sum_dl")).head()
-    require(hit.getLong(0) == counts.getLong(0),
-      s"deleteFromBm25Index: ${counts.getLong(0) - hit.getLong(0)} " +
-        s"delete id(s) are not live in the index at $indexDir — a " +
-        "retraction must name stored docs (already-deleted or " +
-        "never-stored ids refuse loudly, they do not no-op).")
-    // negative df rows: per term, minus the deleted docs containing it
-    val negDfs = graft.sources.EpochStore.tableThroughLive(spark,
-        indexDir, "postings", "doc_id", st.floor, st.epoch)
-      .join(broadcast(del), col("doc_id") === col("id"))
-      .groupBy(col("term"))
-      .agg((lit(0L) - count(lit(1))).as("df"))
-    import spark.implicits._
-    val meta = Seq((index.id, st.nDocs - hit.getLong(0),
-        st.sumDl - hit.getLong(1), st.epoch + 1))
-      .toDF("family", "n_docs", "sum_dl", "epoch")
-    graft.sources.EpochStore.writeDeleteEpoch(indexDir, st.epoch + 1,
-      del, Seq("dfs" -> negDfs), meta, st.floor, commitTs)
   }
 
   /** Score a bag-of-words query against the STORED index — [[topK]]'s

@@ -77,7 +77,7 @@ object Dedup {
     "probing across fingerprint versions treats every stored doc as " +
       "novel",
     Seq(graft.sources.EpochStore.CompactTable("fps", Some("owner"))),
-    "fps", "owner")
+    "fps", "owner", deleteKey = "doc_id", countCol = "corpus_count")
 
   /** (doc_id, fp) for the given docs. NULL text → NULL fp: such a doc
     * has no content to match and is always its own owner downstream.
@@ -89,7 +89,7 @@ object Dedup {
   /** Persist the corpus's fingerprint → owner map as epoch 0:
     * `fps/epoch=N` (fp, owner = min doc_id per distinct fp; NULL fps
     * are not stored — a NULL has no identity to collide with) and a
-    * one-row `meta_N` (family, corpus_count, fp_count, epoch). Deletes
+    * one-row `meta_N` (family, corpus_count, epoch). Deletes
     * any previous artifact at `dir` first — the EpochStore contract
     * (single writer; a rebuild reading this artifact's own files must
     * build to a fresh directory).
@@ -396,37 +396,5 @@ object Dedup {
       .withColumn("kept", col("doc_id") === col("owner"))
       .select(col("doc_id"), col("fp"), col("owner"), col("kept"))
       .orderBy(col("doc_id"))
-  }
-
-  /** RETRACT stored documents (r13 — takedown / dedup retraction /
-    * corrupted-shard replacement): one DELETE epoch tombstones the
-    * given owner ids ([[graft.sources.EpochStore.writeDeleteEpoch]] —
-    * meta-last, so the shrunken corpus_count and the tombstones commit
-    * atomically), and every probe immediately serves the retracted
-    * state: the fingerprints those docs owned are novel again (the
-    * next arrival claims them as its own). Two loud premises: the
-    * delete set is one id space, and every id is a CURRENTLY LIVE
-    * stored owner — retracting a doc that is not stored is a caller
-    * bug, not a no-op. A tombstone names the PAST, so a deleted id may
-    * be re-appended afterwards (it serves again); physical reclaim is
-    * `index.compact` + `index.vacuum` ([[graft.sources.IndexFamily]]),
-    * which fold the tombstones away. Single writer, like every mutation.
-    */
-  def deleteFromFingerprintIndex(indexDir: String, ids: DataFrame,
-      commitTs: Option[Long] = None): Unit = {
-    val spark = ids.sparkSession
-    val st = fpState(spark, indexDir, "deleteFromFingerprintIndex")
-    import spark.implicits._
-    graft.sources.EpochStore.deleteEpochChecked(indexDir,
-      "deleteFromFingerprintIndex", ids, "doc_id",
-      graft.sources.EpochStore.tableThroughLive(spark, indexDir, "fps",
-        "owner", st.floor, st.epoch).select(col("owner").as("id")),
-      s"delete id(s) are not live stored owners at $indexDir — a " +
-        "retraction must name stored docs (already-deleted or " +
-        "never-stored ids refuse loudly, they do not no-op).",
-      Seq.empty,
-      n => Seq((index.id, st.count - n, st.epoch + 1))
-        .toDF("family", "corpus_count", "epoch"),
-      st.epoch + 1, st.floor, commitTs)
   }
 }

@@ -681,7 +681,8 @@ object Multimodal {
     "probing across hash versions silently loses recall",
     Seq(graft.sources.EpochStore.CompactTable("hashes", Some("media_id")),
       graft.sources.EpochStore.CompactTable("bands", Some("media_id"))),
-    "hashes", "media_id")
+    "hashes", "media_id", deleteKey = "media_id",
+    countCol = "corpus_count")
 
   /** Broadcast cap for an incoming shard's band rows: (long, int, long)
     * ≈ the cp band-row width the 8M-row ≈ ~800 MB heap argument was
@@ -874,34 +875,5 @@ object Multimodal {
       .filter(col("hamming") <= maxHamming)
       .select(col("media_a"), col("media_b"), col("hamming"))
       .orderBy(col("media_a"), col("media_b"))
-  }
-
-  /** RETRACT stored images (r13 — takedown is the CANONICAL image
-    * use-case): one tombstone epoch suppresses them from every probe,
-    * the shrunken corpus_count in the same meta-last commit. No
-    * parameter currency exists to re-derive (the 4×16 banding is
-    * fixed). Loud premises: one id space; every id CURRENTLY LIVE. A
-    * deleted id may be re-appended afterwards; physical reclaim =
-    * `index.compact` + `index.vacuum` ([[graft.sources.IndexFamily]])
-    * — after which the retracted images' hashes are bytes on no disk,
-    * the right-to-be-forgotten end state. Single writer.
-    */
-  def deleteFromDHashIndex(indexDir: String, ids: DataFrame,
-      commitTs: Option[Long] = None): Unit = {
-    val spark = ids.sparkSession
-    val st = dHashState(spark, indexDir, "deleteFromDHashIndex")
-    import spark.implicits._
-    graft.sources.EpochStore.deleteEpochChecked(indexDir,
-      "deleteFromDHashIndex", ids, "media_id",
-      graft.sources.EpochStore.tableThroughLive(spark, indexDir,
-        "hashes", "media_id", st.floor, st.epoch)
-        .select(col("media_id").as("id")),
-      s"delete id(s) are not live in the index at $indexDir — a " +
-        "retraction must name stored images (already-deleted or " +
-        "never-stored ids refuse loudly, they do not no-op).",
-      Seq.empty,
-      n => Seq((index.id, 4, st.count - n, st.epoch + 1))
-        .toDF("family", "bands", "corpus_count", "epoch"),
-      st.epoch + 1, st.floor, commitTs)
   }
 }

@@ -1034,7 +1034,7 @@ object TextDedup {
     "probing across window conventions silently misses contamination",
     Seq(graft.sources.EpochStore.CompactTable("docs", Some("doc_id")),
       graft.sources.EpochStore.CompactTable("grams", Some("doc_id"))),
-    "docs", "doc_id")
+    "docs", "doc_id", deleteKey = "doc_id", countCol = "bench_count")
 
   private case class DeconIndexState(w: Int, benchCount: Long,
       epoch: Int, floor: Int)
@@ -1133,38 +1133,6 @@ object TextDedup {
     val (docs, grams) = deconTables(b, st.w)
     writeDeconEpoch(spark, indexDir, st.epoch + 1, docs, grams, st.w,
       st.benchCount + n, st.floor, commitTs = commitTs)
-  }
-
-  /** RETIRE stored benchmarks (r13 — the takedown semantics an eval
-    * suite genuinely needs: a leaked benchmark stops gating training
-    * data the moment it leaks): one DELETE epoch tombstones the given
-    * benchmark doc ids ([[graft.sources.EpochStore.writeDeleteEpoch]] —
-    * meta-last, shrunken bench_count in the same commit), and every
-    * probe immediately stops cutting that benchmark's windows. Loud
-    * premises: one id space; every id a CURRENTLY LIVE stored
-    * benchmark. A retired id may be re-appended afterwards (a
-    * benchmark version restored); physical reclaim is
-    * `index.compact` + `index.vacuum` ([[graft.sources.IndexFamily]]).
-    * Single writer.
-    */
-  def deleteFromDeconIndex(indexDir: String, ids: DataFrame,
-      commitTs: Option[Long] = None): Unit = {
-    val spark = ids.sparkSession
-    val st = deconState(spark, indexDir, "deleteFromDeconIndex")
-    import spark.implicits._
-    graft.sources.EpochStore.deleteEpochChecked(indexDir,
-      "deleteFromDeconIndex", ids, "doc_id",
-      graft.sources.EpochStore.tableThroughLive(spark, indexDir,
-        "docs", "doc_id", st.floor, st.epoch)
-        .select(col("doc_id").as("id")),
-      s"delete id(s) are not live stored benchmarks at $indexDir — a " +
-        "retirement must name stored docs (already-retired or " +
-        "never-stored ids refuse loudly, they do not no-op).",
-      Seq.empty,
-      n => Seq((index.id, st.w, st.benchCount - n,
-          st.epoch + 1))
-        .toDF("family", "w", "bench_count", "epoch"),
-      st.epoch + 1, st.floor, commitTs)
   }
 
   /** The live stored benchmark ids — tombstone-aware, the audit read a

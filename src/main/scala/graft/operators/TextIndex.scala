@@ -55,14 +55,16 @@ object TextIndex {
     * recall. Compaction rewrites under the FROZEN stored banding with
     * the meta carried verbatim, so probes and the append's id-space
     * premise are unchanged (q162 gate). Changes never read the shingle
-    * payloads; q187 gates them against a declarative recompute.
+    * payloads; q187 gates them against a declarative recompute. Only
+    * docs with ≥ 3 words are stored, so deleting a shorter one refuses
+    * as not live (it was never indexed).
     */
   val index: graft.sources.IndexFamily = graft.sources.IndexFamily(
     "minhash64-w3-v1", "writeJaccardIndex",
     "probing across hash versions silently loses recall",
     Seq(EpochStore.CompactTable("docs", Some("doc_id")),
       EpochStore.CompactTable("bands", Some("doc_id"))),
-    "docs", "doc_id")
+    "docs", "doc_id", deleteKey = "doc_id", countCol = "corpus_count")
 
   /** Signature budget: `graft_minhash64` emits 64 slots. */
   private val SigSlots = 64
@@ -445,40 +447,6 @@ object TextIndex {
     survived.select(col("doc_a"), col("doc_b"), col("jaccard"))
       .unionByName(fresh)
       .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  /** RETRACT stored documents (r13 — takedown / retraction): one
-    * DELETE epoch tombstones the given doc ids across BOTH tables
-    * (docs + bands suppress on the same id at probe time), with the
-    * shrunken corpus_count committing in the same meta-last write.
-    * Loud premises: one id space, and every id is CURRENTLY LIVE in
-    * the stored docs table — note only docs with ≥ 3 words were ever
-    * stored, so retracting a shorter doc refuses (it was never
-    * indexed). A tombstone names the past: the id may be re-appended
-    * afterwards. Physical reclaim = `index.compact` + `index.vacuum`
-    * ([[graft.sources.IndexFamily]]). Banding is count-independent, so a
-    * shrunken corpus cannot rot the stored parameters (the same
-    * argument as append, in reverse). Single writer.
-    */
-  def deleteFromJaccardIndex(indexDir: String, ids: DataFrame,
-      commitTs: Option[Long] = None): Unit = {
-    val spark = ids.sparkSession
-    val st = jaccardState(spark, indexDir, "deleteFromJaccardIndex")
-    import spark.implicits._
-    EpochStore.deleteEpochChecked(indexDir, "deleteFromJaccardIndex",
-      ids, "doc_id",
-      EpochStore.tableThroughLive(spark, indexDir, "docs", "doc_id",
-        st.floor, st.epoch).select(col("doc_id").as("id")),
-      s"delete id(s) are not live in the index at $indexDir — a " +
-        "retraction must name stored docs (already-deleted, " +
-        "never-stored, or sub-3-word ids refuse loudly, they do not " +
-        "no-op).",
-      Seq.empty,
-      n => Seq((index.id, st.r, st.b, st.threshold,
-          st.targetMiss, 3, st.count - n, st.epoch + 1))
-        .toDF("family", "rows_per_band", "bands", "threshold",
-          "target_miss", "shingle_k", "corpus_count", "epoch"),
-      st.epoch + 1, st.floor, commitTs)
   }
 
   /** Probe a [[writeJaccardIndex]] artifact with an arriving shard —

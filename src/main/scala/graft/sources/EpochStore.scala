@@ -45,15 +45,15 @@ import org.apache.spark.sql.functions.{col, lit}
   * folded the per-epoch states away and the read refuses — compaction
   * is snapshot expiry, history retention = delayed compaction.
   *
-  * PARTIAL COMPACTION (r14 — bounded history retention): [[compact]]
-  * makes housekeeping and history mutually exclusive (its floor is
-  * its own fresh epoch, so EVERY horizon expires). [[compactBelow]]
-  * folds only the history up to a chosen horizon into a per-table
-  * CHECKPOINT directory (`<table>/checkpoint=C`, served as effective
-  * epoch C), so an artifact can reclaim a year of micro-batch sprawl
-  * while last week's as-of horizons keep serving bit-for-bit. A
-  * checkpoint is live iff the serving floor names it; [[vacuum]]
-  * reclaims the folded epoch dirs and superseded checkpoints.
+  * PARTIAL COMPACTION (r14 — bounded history retention): a full
+  * [[compact]] makes housekeeping and history mutually exclusive (its
+  * floor is its own fresh epoch, so EVERY horizon expires). A partial
+  * one (`below` = a horizon) folds only the history up to that horizon
+  * into a per-table CHECKPOINT directory (`<table>/checkpoint=C`, served
+  * as effective epoch C), so an artifact can reclaim a year of
+  * micro-batch sprawl while last week's as-of horizons keep serving
+  * bit-for-bit. A checkpoint is live iff the serving floor names it;
+  * [[vacuum]] reclaims the folded epoch dirs and superseded checkpoints.
   *
   * SINGLE WRITER, like any parquet layout without a table format: two
   * concurrent appends both target epoch N+1 and the loser's data is
@@ -127,7 +127,7 @@ object EpochStore {
   // a drain loop's next append then compares against the shape its own
   // previous mutation recorded, paying zero footer reads. Invalidation
   // is exact: [[deleteAll]] clears the artifact's prefix (a rebuild to
-  // the same dir may change schemas) and the compact/compactBelow
+  // the same dir may change schemas) and the full/partial compact
   // renames re-put the rewrite's shape at its destination.
 
   private val schemaShapes =
@@ -348,7 +348,7 @@ object EpochStore {
     *
     * The write holds the artifact's writer LEASE (r14, the fencing
     * section above): acquired at entry unless the caller passed its
-    * own token via `lease` (compact/compactBelow hold it across their
+    * own token via `lease` (compact holds it across its
     * whole rewrite), re-verified strictly before the meta commit, and
     * released on every exit path — only a JVM crash leaks it, and the
     * next writer's refusal says how to break a dead writer's lease.
@@ -396,7 +396,7 @@ object EpochStore {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // writer fencing (r14): acquire the lease unless the caller
-    // (compact/compactBelow) already holds it and passed its token
+    // (compact) already holds it and passed its token
     val held = lease.getOrElse(acquireLease(fs, dir, "writeEpoch"))
     try {
       // TARGET RE-CHECK (r15 — r14 ADVICE #1): the lease detects only
@@ -524,7 +524,7 @@ object EpochStore {
       // the commit's KIND, derivable here and nowhere later: which
       // table set this epoch committed (deletes ⇒ 'delete'; any data
       // tables, renamed-into-place ones included ⇒ 'data'; none ⇒ a
-      // compactBelow retention commit). Persisted so history survives
+      // partial-compact retention commit). Persisted so history survives
       // the directory shapes it would otherwise be inferred from.
       val kind =
         if (tables.exists(_._1 == DeletesTable) ||
@@ -554,43 +554,30 @@ object EpochStore {
   private val TornMetaConditions: Set[String] =
     Set("UNABLE_TO_INFER_SCHEMA", "PATH_NOT_FOUND")
 
-  /** Read `meta_N` if it is COMMITTED — None on the two torn shapes
-    * and the zero-row commit (see [[TornMetaConditions]]); every other
-    * failure PROPAGATES (the r11 narrowing). The one torn-meta read
+  /** Read `meta_N` through the write-once cache. By default it reads
+    * only a COMMITTED meta — None on the two torn shapes and the
+    * zero-row commit (see [[TornMetaConditions]]); every other failure
+    * PROPAGATES (the r11 narrowing). The one torn-meta read
     * [[servingState]] and [[describeHistory]] share — a future
-    * narrowing must not diverge between them.
+    * narrowing must not diverge between them. `loud` is
+    * [[servingStateAt]]'s mode: every epoch in `[floor, serving]`
+    * committed meta-last, so there a torn shape is a broken artifact
+    * and propagates too.
     */
-  private def readMetaRow(spark: SparkSession, dir: String, n: Int)
-      : Option[Row] = {
+  private def readMetaRow(spark: SparkSession, dir: String, n: Int,
+      loud: Boolean = false): Option[Row] = {
     val key = s"$dir/meta_$n"
-    val cached = metaRows.get(key)
-    if (cached != null) Some(cached)
-    else
+    Option(metaRows.get(key)).orElse {
       try {
         val r = spark.read.parquet(key).head()
         metaRows.put(key, r)
         Some(r)
       } catch {
         case ae: org.apache.spark.sql.AnalysisException
-            if TornMetaConditions.contains(ae.getCondition) => None
-        case _: java.util.NoSuchElementException => None
+            if !loud && TornMetaConditions.contains(ae.getCondition) =>
+          None
+        case _: java.util.NoSuchElementException if !loud => None
       }
-  }
-
-  /** The LOUD committed-meta read ([[servingStateAt]]'s shape — every
-    * epoch in `[floor, serving]` committed meta-last, so a failure here
-    * is a broken artifact and PROPAGATES, deliberately not the
-    * torn-skipping [[readMetaRow]]). Rides the same write-once cache.
-    */
-  private def readMetaRowLoud(spark: SparkSession, dir: String,
-      n: Int): Row = {
-    val key = s"$dir/meta_$n"
-    val cached = metaRows.get(key)
-    if (cached != null) cached
-    else {
-      val r = spark.read.parquet(key).head()
-      metaRows.put(key, r)
-      r
     }
   }
 
@@ -676,12 +663,12 @@ object EpochStore {
     else {
       // every epoch in [floor, serving] committed meta-last under the
       // single-writer contract, so this read can only fail on a broken
-      // artifact — let that propagate loudly (deliberately NOT the
-      // torn-skipping readMetaRow)
-      val meta = readMetaRowLoud(spark, dir, asOf)
+      // artifact — let that propagate loudly (the torn-skipping mode
+      // would hide it)
+      val meta = readMetaRow(spark, dir, asOf, loud = true).get
       val floor = metaFloor(meta)
       // The CURRENT floor wins over the historical one (r14): after a
-      // [[compactBelow]], the epochs below the serving floor C were
+      // partial [[compact]], the epochs below the serving floor C were
       // folded into `checkpoint=C` and their directories are vacuum
       // bait, so a historical read must start at C (where the
       // checkpoint serves the folded prefix exactly) — the stale
@@ -766,8 +753,8 @@ object EpochStore {
   /** The checkpoint directory prefix inside each table root (r14 —
     * PARTIAL compaction, r13 VERDICT #1): `<table>/checkpoint=C/`
     * holds the table's as-of-C live row set materialized by
-    * [[compactBelow]]. A checkpoint is LIVE iff the serving floor
-    * equals its number (floors are monotone and only [[compactBelow]]
+    * a partial [[compact]]. A checkpoint is LIVE iff the serving floor
+    * equals its number (floors are monotone and only a partial [[compact]]
     * sets floor = C after rewriting `checkpoint=C`, so existence at
     * the floor is a sound liveness test); any other `checkpoint=K` is
     * a superseded or torn relic no reader touches ([[vacuum]] sweeps
@@ -890,7 +877,8 @@ object EpochStore {
   // `deletes/epoch=N` table holds the retracted row ids, committed by
   // the same meta-last discipline (a torn delete is invisible and
   // retried; the family meta carries its shrunken cumulative counts in
-  // the same commit, so counts and tombstones can never skew). Readers
+  // the same commit, so counts and tombstones can never skew — the one
+  // writer is [[IndexFamily.delete]]). Readers
   // apply live tombstones as an anti-join at [[tableThroughLive]] time;
   // [[compact]] folds them away PHYSICALLY (tombstoned rows are dropped
   // from the rewrite and no deletes table is carried above the floor),
@@ -907,64 +895,6 @@ object EpochStore {
     * LONG `id` column naming the rows epoch N retracted.
     */
   private[graft] val DeletesTable = "deletes"
-
-  /** Write a DELETE epoch: `ids` (exactly one LONG column named `id`)
-    * lands as the layout-owned deletes table, any family side tables
-    * (e.g. BM25's negative df rows) land beside it, and the family's
-    * UPDATED meta (shrunken cumulative counts, same family string and
-    * parameters) commits LAST — tombstones and counts move atomically
-    * or not at all. Which ids are legal to retract is family
-    * semantics: families refuse ids that are not currently live
-    * BEFORE calling this.
-    */
-  def writeDeleteEpoch(dir: String, epoch: Int, ids: DataFrame,
-      extraTables: Seq[(String, DataFrame)], meta: DataFrame,
-      floor: Int, commitTs: Option[Long] = None): Unit = {
-    require(ids.schema.length == 1 && ids.schema.head.name == "id" &&
-        ids.schema.head.dataType ==
-          org.apache.spark.sql.types.LongType,
-      "writeDeleteEpoch: ids must be exactly one LONG column named " +
-        s"'id', got ${ids.schema.simpleString}")
-    writeEpoch(dir, epoch, (DeletesTable -> ids) +: extraTables, meta,
-      floor, commitTs = commitTs)
-  }
-
-  /** The shared DELETE-epoch scaffold (r13 review — five families
-    * carried byte-similar ~25-line copies of it): validates the
-    * delete set (one id space; every id present in the family's live
-    * frame — a retraction must name stored rows, never no-op) and
-    * commits the tombstone epoch meta-last via [[writeDeleteEpoch]].
-    * The family supplies only what is genuinely family semantics: its
-    * live-id frame (one LONG column named `id`), the refusal's noun
-    * phrasing, any side tables, and the shrunken meta built from the
-    * validated delete count. BM25 stays bespoke by design: its
-    * liveness check is fused with the deleted docs' (count, Σdl)
-    * aggregate and its side table derives from the live postings.
-    */
-  def deleteEpochChecked(dir: String, who: String, ids: DataFrame,
-      idCol: String, liveIds: DataFrame, notLiveMsg: String,
-      extraTables: Seq[(String, DataFrame)],
-      shrunkenMeta: Long => DataFrame, epoch: Int, floor: Int,
-      commitTs: Option[Long] = None): Unit = {
-    val del = graft.CacheScope.scoped(
-      ids.select(col(idCol).cast("long").as("id")))
-    // dup + liveness premises fused into ONE action (r15 —
-    // graft.operators.Checks): each was its own driver job round-trip
-    val Seq(counts, miss) = graft.operators.Checks.counts(
-      del.agg(
-        org.apache.spark.sql.functions.count(lit(1)).as("n"),
-        org.apache.spark.sql.functions.count_distinct(col("id"))
-          .as("nd")),
-      del.join(liveIds, Seq("id"), "left_anti")
-        .agg(org.apache.spark.sql.functions.count(lit(1)).as("c")))
-    require(counts(0) == counts(1),
-      s"$who: the delete set is not one id space — " +
-        s"${counts(0) - counts(1)} duplicate id(s); " +
-        "de-duplicate it upstream.")
-    require(miss(0) == 0, s"$who: $notLiveMsg")
-    writeDeleteEpoch(dir, epoch, del, extraTables,
-      shrunkenMeta(counts(0)), floor, commitTs)
-  }
 
   /** The LIVE tombstones in `[floor, epoch]` as (id, del_epoch) — or
     * None when the artifact has no delete epoch in the live range (the
@@ -1006,10 +936,6 @@ object EpochStore {
     live.drop("epoch")
   }
 
-  /** Bytes of committed data files across a table's live epochs —
-    * driver-side listing only, sizes the compaction's output file
-    * count the same way [[Compaction.compactParquet]] does.
-    */
   // --------------------------------------------------------------------
   // DIFFERENTIAL reads (r14 — r13 VERDICT #2): the layout serves any
   // retained horizon; changesBetween answers "what changed between
@@ -1037,7 +963,7 @@ object EpochStore {
       s"$who: change range start $from predates the floor ${st.floor} " +
         s"at $dir — a compaction folded that history away, so the " +
         "delta from it no longer exists. History retention is the " +
-        "floor: delay compaction (or compactBelow a later horizon) on " +
+        "floor: delay compaction (or compact below a later horizon) on " +
         "artifacts that must serve differential reads.")
     st
   }
@@ -1096,14 +1022,14 @@ object EpochStore {
     *   - `epoch`, `floor_at_commit` (the floor that epoch's meta
     *     recorded — the artifact's retention point as of that commit),
     *   - `kind`: 'checkpoint' (the serving floor's epoch when a
-    *     [[compactBelow]] fold backs it — a CURRENT-state label, so it
+    *     partial [[compact]] fold backs it — a CURRENT-state label, so it
     *     takes precedence), else the PERSISTED `commit_kind` the epoch
     *     recorded at commit time (r15 — 'delete' / 'data' /
     *     'retention'; a vacuumed epoch keeps reporting its true kind).
     *     Pre-r15 metas carry no commit_kind and fall back to the r14
     *     inference from surviving directory shapes: 'delete' (a
     *     tombstone table at the epoch), 'data' (any family table),
-    *     'retention' (live, no tables — a compactBelow commit), or
+    *     'retention' (live, no tables — a partial-compact commit), or
     *     'superseded' (a SUB-FLOOR epoch whose directories are gone —
     *     only reachable without a persisted kind, where the original
     *     is genuinely unknowable),
@@ -1141,7 +1067,7 @@ object EpochStore {
             else if (tables.exists(t => fs.exists(
                 new org.apache.hadoop.fs.Path(s"$dir/$t/epoch=$n"))))
               "data"
-            // a live epoch with no dirs committed none (a compactBelow
+            // a live epoch with no dirs committed none (a partial-compact
             // retention commit); a SUB-FLOOR one may simply have been
             // reclaimed — without a persisted kind it is unknowable,
             // say so
@@ -1192,6 +1118,10 @@ object EpochStore {
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
       .map(_.getLen).sum
 
+  /** Bytes of committed data files across a table's live epochs —
+    * driver-side listing only, sizes the compaction's output file
+    * count the same way [[Compaction.compactParquet]] does.
+    */
   private def liveBytes(fs: org.apache.hadoop.fs.FileSystem,
       dir: String, name: String, floor: Int, epoch: Int): Long = {
     val cp = checkpointDir(fs, dir, name, floor)
@@ -1215,51 +1145,81 @@ object EpochStore {
       idCol: Option[String] = None,
       rewrite: DataFrame => DataFrame = identity)
 
-  /** COMPACT the artifact: rewrite every table's live row set
-    * (`[floor, serving]`, MINUS tombstoned rows — see the tombstone
-    * section comment) into the single fresh epoch `serving + 1`, meta
-    * written LAST with `floor_epoch = serving + 1` — so the new epoch
-    * both IS the whole artifact and supersedes everything below it in
-    * one atomic meta commit. Tombstones fold away PHYSICALLY: the
-    * rewrite drops the rows they suppress, no deletes table is carried
-    * above the floor, and [[vacuum]] reclaims the old ones — so
-    * delete + compact is how a 100 TB artifact actually sheds retracted
-    * bytes. A compaction that dies mid-write leaves only hidden staging
-    * (below) or a torn epoch — invisible either way, retried. The
-    * family meta row is carried VERBATIM (same family string, same
-    * parameters, same cumulative counts — deletes already shrank them
-    * in their own commit), so every family premise (drift refusals,
-    * parameter currency) holds across it unchanged.
+  /** COMPACT the artifact — full (`below` = None) or partial
+    * (`below` = Some(horizon)); one staging/commit body serves both.
     *
-    * The rewrite STAGES OUTSIDE the epoch namespace (a dot-prefixed
-    * dir Spark's listing ignores) and only RENAMES into
-    * `epoch=<target>` after re-checking that the serving epoch did
-    * not advance — so a concurrent append (a single-writer-contract
-    * violation) is detected and REFUSED without the rewrite ever
-    * having clobbered the append's committed data, and the appended
-    * state keeps serving. The refusal is best-effort DETECTION of a
-    * contract violation, not a concurrency guarantee: like any
-    * parquet layout without a table format, two writers racing inside
-    * the rename→meta window can still corrupt the artifact —
-    * serialize writers externally; that is the contract. (Concurrent
-    * READERS remain safe under serialized writers: they serve the
-    * highest complete meta, and staging is invisible to them.)
+    * FULL: rewrite every table's live row set (`[floor, serving]`,
+    * MINUS tombstoned rows — see the tombstone section comment) into
+    * the single fresh epoch `serving + 1`, meta written LAST with
+    * `floor_epoch = serving + 1` — so the new epoch both IS the whole
+    * artifact and supersedes everything below it in one atomic meta
+    * commit. Tombstones fold away PHYSICALLY: the rewrite drops the
+    * rows they suppress, no deletes table is carried above the floor,
+    * and [[vacuum]] reclaims the old ones — so delete + compact is how
+    * a 100 TB artifact actually sheds retracted bytes. Every horizon
+    * expires (compaction is snapshot expiry).
+    *
+    * PARTIAL (r14, r13 VERDICT #1 — bounded history retention): fold
+    * the history UP TO `horizon` into one materialized CHECKPOINT while
+    * every as-of horizon in `[horizon, serving]` stays exactly
+    * servable — the production middle between reclaiming a year of
+    * micro-batch sprawl and keeping last week's horizons (q164/q175
+    * cadence). Each table's as-of-`horizon` live row set (epochs
+    * `[floor, horizon]`, tombstones ≤ horizon applied — exactly what
+    * [[tableThroughLive]] serves at that horizon) lands in
+    * `<table>/checkpoint=<horizon>/`, then ONE meta commit publishes
+    * epoch `serving + 1` with `floor_epoch = horizon`. Readers under
+    * the new floor serve the checkpoint as effective epoch `horizon`
+    * plus the retained deltas ([[rowsWithEpoch]]): retained tombstones
+    * still suppress checkpoint rows (effective epoch `horizon` < their
+    * del_epoch), historical metas in `[horizon, serving]` stay
+    * untouched, and as-of below `horizon` refuses. Checkpoints are
+    * live only when the floor names them, so an unreferenced one is
+    * invisible; the superseded epoch dirs (≤ horizon) and any prior
+    * checkpoint become [[vacuum]] bait. A horizon above the serving
+    * epoch or below the floor refuses.
+    *
+    * Both shapes carry the family meta row VERBATIM (same family
+    * string, same parameters, same cumulative counts — deletes already
+    * shrank them in their own commit), so every family premise (drift
+    * refusals, parameter currency) holds across it unchanged. The
+    * rewrite STAGES OUTSIDE the epoch namespace (a dot-prefixed dir
+    * Spark's listing ignores) and only RENAMES into place after
+    * re-checking that the serving epoch did not advance — so a
+    * concurrent append (a single-writer-contract violation) is detected
+    * and REFUSED without the rewrite ever having clobbered the
+    * append's committed data. The refusal is best-effort DETECTION,
+    * not a concurrency guarantee: two writers racing inside the
+    * rename→meta window can still corrupt the artifact — serialize
+    * writers externally; that is the contract. A compaction that dies
+    * mid-write leaves only hidden staging, a torn epoch or an
+    * unreferenced checkpoint — invisible either way, retried.
     *
     * Output files are sized from the live input bytes (128 MB target,
     * the [[Compaction]] convention) — the point of compacting is to
     * collapse an epoch-per-micro-batch sprawl of small files, not to
     * re-shard it verbatim.
     *
-    * Returns false (and writes nothing) when the artifact is already
-    * a single live epoch — compacting it again would only move bytes.
+    * Returns false (and writes nothing) when the fold's horizon IS the
+    * floor — a single live epoch (full) or an artifact already based
+    * at `horizon` (partial): compacting again would only move bytes.
     */
   def compact(spark: SparkSession, dir: String,
       tables: Seq[CompactTable], who: String, rebuildHint: String,
+      below: Option[Int] = None,
       targetFileBytes: Long = 128L * 1024 * 1024,
       commitTs: Option[Long] = None): Boolean = {
     require(targetFileBytes > 0, s"$who: target file size must be positive")
     val st = servingState(spark, dir, who, rebuildHint)
-    if (st.epoch == st.floor) return false
+    val horizon = below.getOrElse(st.epoch)
+    require(horizon <= st.epoch,
+      s"$who: retention horizon $horizon does not exist at $dir — " +
+        s"the serving epoch is ${st.epoch}")
+    require(horizon >= st.floor,
+      s"$who: retention horizon $horizon predates the floor " +
+        s"${st.floor} at $dir — that history was already folded away " +
+        "by an earlier compaction.")
+    if (horizon == st.floor) return false
     // every family meta carries its serving epoch in an `epoch` column
     // (all current families do); fail fast on a new family that forgot
     // — BEFORE the rewrite, not after the renames (r13 review: a
@@ -1278,13 +1238,17 @@ object EpochStore {
     val token = acquireLease(fs, dir, who)
     try {
     val target = st.epoch + 1
-    // the live tombstones, computed once for every table's rewrite; a
-    // delete always writes a NEW epoch above its floor, so live
-    // tombstones imply epoch > floor and the early return above can
-    // never hide them
-    val dels = deletesThrough(spark, dir, st.floor, st.epoch)
+    // the fold's destination inside each table root: the fresh epoch
+    // (full) or the horizon's checkpoint (partial)
+    val dest = below.fold(s"epoch=$target")(h => s"$CheckpointPrefix$h")
+    // the tombstones ≤ horizon, computed once for every table's
+    // rewrite; later ones stay live and keep suppressing a checkpoint
+    // (effective epoch = horizon). A delete always writes a NEW epoch
+    // above its floor, so live tombstones imply horizon > floor and
+    // the early return above can never hide them
+    val dels = deletesThrough(spark, dir, st.floor, horizon)
     val stagedShapes = tables.map { t =>
-      val bytes = liveBytes(fs, dir, t.name, st.floor, st.epoch)
+      val bytes = liveBytes(fs, dir, t.name, st.floor, horizon)
       val parts = Compaction.partsFor(bytes, targetFileBytes,
         s"$who ('${t.name}')")
       // the shared checkpoint-aware EXPLICIT-directory read (never the
@@ -1293,150 +1257,6 @@ object EpochStore {
       // compaction would otherwise re-list its own half-written stage.
       // The epoch column rides along for the epoch-qualified tombstone
       // anti-join (checkpoint rows at the effective floor epoch).
-      val raw = rowsWithEpoch(spark, dir, t.name, st.floor, st.epoch)
-      val alive = (dels, t.idCol) match {
-        case (Some(dd), Some(ic)) =>
-          raw.join(dd, raw(ic) === dd("id") &&
-            raw("epoch") < dd("del_epoch"), "left_anti")
-        case _ => raw
-      }
-      val live = alive.drop("epoch")
-      val rewritten = t.rewrite(live)
-      // REWRITE-SHAPE PREMISE (r15 review): the family hook must
-      // preserve the table's (possibly additively-widened) schema —
-      // a re-aggregating rewrite written before an evolution would
-      // otherwise silently DROP the evolved columns' data in the fold
-      // (and recordShape below would bless the narrowed shape as the
-      // stored schema, so no later premise could ever catch it).
-      // Driver-side schema comparison only; nothing executes here.
-      require(shapeOf(rewritten.schema) == shapeOf(live.schema),
-        s"$who: the '${t.name}' rewrite hook changed the table's " +
-          s"schema — live ${live.schema.simpleString} vs rewritten " +
-          s"${rewritten.schema.simpleString}. A compaction moves " +
-          "bytes, never shapes; after an additive evolution the " +
-          "rewrite must carry the widened columns through (decide " +
-          "how they fold, e.g. a first()/sum() per group) or the " +
-          "fold silently loses their data.")
-      rewritten
-        .repartition(parts)
-        .write.mode("overwrite").parquet(s"$dir/${t.name}/$StagingDir")
-      t.name -> rewritten.schema
-    }.toMap
-    beforeCompactCommit()
-    val now = servingState(spark, dir, who, rebuildHint)
-    require(now.epoch == st.epoch,
-      s"$who: the artifact at $dir advanced during compaction " +
-        s"(epoch ${st.epoch} → ${now.epoch}) — a concurrent append " +
-        "violated the single-writer contract, and committing the " +
-        "compacted meta would silently drop its rows. The rewrite " +
-        "was left in hidden staging (never renamed into the epoch " +
-        "namespace — readers serve the appended state untouched); " +
-        "serialize writers and retry. This is best-effort DETECTION, " +
-        "not a guarantee: a writer racing inside the rename→meta " +
-        "window is still undetected (the single-writer contract).")
-    tables.foreach { t =>
-      val stage = new org.apache.hadoop.fs.Path(
-        s"$dir/${t.name}/$StagingDir")
-      val dst = new org.apache.hadoop.fs.Path(
-        s"$dir/${t.name}/epoch=$target")
-      // the re-check above just proved no meta_<target> exists, so any
-      // data already at the target is a TORN epoch (a died append or
-      // compaction) — exactly what the retry contract overwrites. (An
-      // in-flight concurrent writer's pre-meta data is
-      // indistinguishable from torn garbage; that hazard is what the
-      // single-writer contract exists for — see the scaladoc.)
-      if (fs.exists(dst)) fs.delete(dst, true)
-      require(fs.rename(stage, dst),
-        s"$who: could not rename $stage to $dst")
-      recordShape(s"$dir/${t.name}/epoch=$target", stagedShapes(t.name))
-    }
-    val carried = spark.createDataFrame(
-        java.util.Collections.singletonList(st.meta),
-        st.meta.schema)
-      .withColumn("epoch", lit(target))
-      .drop("floor_epoch")
-    // ownedTables: the renamed family tables must survive the torn-
-    // sibling sweep; a torn deletes/epoch=<target> (a died delete at
-    // the same number) is NOT owned and gets swept — otherwise this
-    // meta commit would carry a zombie tombstone table above the
-    // floor forever (r13 review), violating "no deletes table above
-    // the floor" and taxing every future read with its anti-join
-    writeEpoch(dir, target, Seq.empty, carried, floor = target,
-      ownedTables = tables.map(_.name), lease = Some(token),
-      commitTs = commitTs)
-    true
-    } finally { releaseLease(fs, dir, token) }
-  }
-
-  /** PARTIAL compaction (r14, r13 VERDICT #1 — bounded history
-    * retention): fold the artifact's history UP TO `horizon` into one
-    * materialized CHECKPOINT while every epoch above it — and every
-    * as-of horizon in `[horizon, serving]` — stays exactly servable.
-    * [[compact]] collapses ALL history (floor = its own epoch), which
-    * makes housekeeping and audit reads mutually exclusive: at the
-    * epoch-per-micro-batch cadence (q164/q175) an owner must choose
-    * between reclaiming a year of sprawl and keeping last week's
-    * horizons. compactBelow is the production middle: reclaim the
-    * sprawl below the retention point, keep the recent history.
-    *
-    * Mechanism: each table's as-of-`horizon` live row set (epochs
-    * `[floor, horizon]`, tombstones ≤ horizon applied — exactly what
-    * [[tableThroughLive]] serves at that horizon) is rewritten into
-    * `<table>/checkpoint=<horizon>/` (staged hidden, renamed only
-    * after the serve-skew re-check), then ONE meta commit publishes
-    * epoch `serving + 1` with `floor_epoch = horizon`. Readers under
-    * the new floor serve the checkpoint as effective epoch `horizon`
-    * plus the retained deltas ([[rowsWithEpoch]]): the serving row
-    * set is unchanged, every as-of in `[horizon, serving]` reproduces
-    * its pre-compaction read bit-for-bit (retained tombstones still
-    * suppress checkpoint rows — effective epoch `horizon` < their
-    * del_epoch, exactly as the folded originals were), and as-of
-    * below `horizon` refuses (that history is folded — snapshot
-    * expiry, now BOUNDED instead of total). Historical metas in
-    * `[horizon, serving]` stay untouched and keep serving their
-    * horizons' family rows. A crash anywhere before the meta commit
-    * leaves only hidden staging or unreferenced checkpoint dirs —
-    * invisible either way (checkpoints are live only when the floor
-    * names them), retried by re-running. The superseded epoch dirs
-    * (≤ horizon) and any prior checkpoint become [[vacuum]] bait.
-    *
-    * Returns false (writes nothing) when `horizon` IS the floor —
-    * the artifact is already based there. Refuses a horizon above the
-    * serving epoch or below the floor (that history is already gone).
-    * Single-writer, like every mutation; the serve-skew re-check is
-    * the same best-effort detection [[compact]] documents.
-    */
-  def compactBelow(spark: SparkSession, dir: String,
-      tables: Seq[CompactTable], horizon: Int, who: String,
-      rebuildHint: String,
-      targetFileBytes: Long = 128L * 1024 * 1024,
-      commitTs: Option[Long] = None): Boolean = {
-    require(targetFileBytes > 0, s"$who: target file size must be positive")
-    val st = servingState(spark, dir, who, rebuildHint)
-    require(horizon <= st.epoch,
-      s"$who: retention horizon $horizon does not exist at $dir — " +
-        s"the serving epoch is ${st.epoch}")
-    require(horizon >= st.floor,
-      s"$who: retention horizon $horizon predates the floor " +
-        s"${st.floor} at $dir — that history was already folded away " +
-        "by an earlier compaction.")
-    if (horizon == st.floor) return false
-    require(st.meta.schema.fieldNames.contains("epoch"),
-      s"$who: the family meta at $dir has no 'epoch' column — every " +
-        "EpochStore family meta must carry its serving epoch so " +
-        "compaction can rewrite it; fix the family's writeEpoch call")
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val token = acquireLease(fs, dir, who)
-    try {
-    val target = st.epoch + 1
-    // tombstones ≤ horizon fold into the checkpoint; later ones stay
-    // live and keep suppressing it (effective epoch = horizon)
-    val dels = deletesThrough(spark, dir, st.floor, horizon)
-    val stagedShapes = tables.map { t =>
-      val bytes = liveBytes(fs, dir, t.name, st.floor, horizon)
-      val parts = Compaction.partsFor(bytes, targetFileBytes,
-        s"$who ('${t.name}')")
       val raw = rowsWithEpoch(spark, dir, t.name, st.floor, horizon)
       val alive = (dels, t.idCol) match {
         case (Some(dd), Some(ic)) =>
@@ -1473,36 +1293,57 @@ object EpochStore {
         s"(epoch ${st.epoch} → ${now.epoch}) — a concurrent append " +
         "violated the single-writer contract, and committing the " +
         "compacted meta would silently drop its rows. The rewrite " +
-        "was left in hidden staging (readers serve the appended " +
-        "state untouched); serialize writers and retry.")
+        "was left in hidden staging (never renamed into place — " +
+        "readers serve the appended state untouched); serialize " +
+        "writers and retry. This is best-effort DETECTION, not a " +
+        "guarantee: a writer racing inside the rename→meta window is " +
+        "still undetected (the single-writer contract).")
     tables.foreach { t =>
       val stage = new org.apache.hadoop.fs.Path(
         s"$dir/${t.name}/$StagingDir")
-      val dst = new org.apache.hadoop.fs.Path(
-        s"$dir/${t.name}/$CheckpointPrefix$horizon")
-      // any data already at checkpoint=<horizon> is a torn prior
-      // compactBelow at the same horizon (a live checkpoint at it
-      // would mean floor == horizon, refused above) — retry overwrites
+      val dst = new org.apache.hadoop.fs.Path(s"$dir/${t.name}/$dest")
+      // the re-check above just proved no meta_<target> exists, so any
+      // data already at the destination is TORN — a died append or
+      // compaction at epoch=<target>, or a died partial compaction at
+      // checkpoint=<horizon> (a live checkpoint there would mean
+      // floor == horizon, returned above) — exactly what the retry
+      // contract overwrites. (An in-flight concurrent writer's pre-meta
+      // data is indistinguishable from torn garbage; that hazard is
+      // what the single-writer contract exists for.)
       if (fs.exists(dst)) fs.delete(dst, true)
       require(fs.rename(stage, dst),
         s"$who: could not rename $stage to $dst")
-      recordShape(s"$dir/${t.name}/$CheckpointPrefix$horizon",
-        stagedShapes(t.name))
+      recordShape(s"$dir/${t.name}/$dest", stagedShapes(t.name))
     }
-    val carried = spark.createDataFrame(
-        java.util.Collections.singletonList(st.meta),
-        st.meta.schema)
-      .withColumn("epoch", lit(target))
-      .drop("floor_epoch")
-    // ownedTables EMPTY: unlike [[compact]], nothing of this commit
-    // lives in the epoch=<target> namespace (the fold went to the
-    // checkpoint dirs), so any epoch=<target> relic in ANY table is a
-    // torn prior write and must be swept before the meta names it
-    writeEpoch(dir, target, Seq.empty, carried, floor = horizon,
+    // ownedTables: a full fold's renamed family tables must survive the
+    // torn-sibling sweep; a torn deletes/epoch=<target> (a died delete
+    // at the same number) is NOT owned and gets swept — otherwise this
+    // meta commit would carry a zombie tombstone table above the floor
+    // forever (r13 review). A partial fold owns nothing in the
+    // epoch=<target> namespace (it went to the checkpoint dirs), so
+    // any epoch=<target> relic in ANY table is torn and swept.
+    writeEpoch(dir, target, Seq.empty, carriedMeta(spark, st.meta, target),
+      floor = below.getOrElse(target),
+      ownedTables = if (below.isEmpty) tables.map(_.name) else Seq.empty,
       lease = Some(token), commitTs = commitTs)
     true
     } finally { releaseLease(fs, dir, token) }
   }
+
+  /** A committed meta row carried into epoch `epoch`: every family
+    * column kept verbatim, `epoch` set, each `shrink` column reduced by
+    * its amount (a delete's counts), and the layout's `floor_epoch`
+    * dropped for [[writeEpoch]] to restamp (with `commit_ts` and
+    * `commit_kind`). The one meta rewrite compaction and deletes share.
+    */
+  private[graft] def carriedMeta(spark: SparkSession, meta: Row,
+      epoch: Int, shrink: Seq[(String, Long)] = Seq.empty): DataFrame =
+    shrink.foldLeft(spark.createDataFrame(
+        java.util.Collections.singletonList(meta), meta.schema)
+      .withColumn("epoch", lit(epoch))
+      .drop("floor_epoch")) { case (m, (c, n)) =>
+      m.withColumn(c, col(c) - lit(n))
+    }
 
   /** The hidden rewrite-staging dir inside each table root — dot-
     * prefixed, so Spark's file listing never reads it as data.
@@ -1523,13 +1364,13 @@ object EpochStore {
     */
   private[graft] var beforeCompactCommit: () => Unit = () => ()
 
-  /** Reclaim the sprawl a [[compact]] or [[compactBelow]] superseded:
+  /** Reclaim the sprawl a full or partial [[compact]] superseded:
     * delete every table's `epoch=N` directories AND every `meta_N`
     * with N < the serving floor (for a checkpoint-based floor the
     * `epoch=floor` delta directories sweep too — the checkpoint holds
     * the folded state — while `meta_floor` stays as the as-of-floor
     * horizon's family row), any checkpoint not named by the floor
-    * (superseded retention points and torn compactBelow relics), plus
+    * (superseded retention points and torn partial-compact relics), plus
     * any leaked rewrite staging (a refused or crashed compaction
     * leaves `.compact_staging` behind; it is invisible to readers, so
     * deleting it is always safe — r12 ADVICE). Epoch reclaim is a
@@ -1556,7 +1397,7 @@ object EpochStore {
     // never race a compaction's staging or a writer's in-flight epoch.
     // The serving state is read UNDER the lease (r14 second review):
     // a snapshot taken before acquisition could carry a floor a
-    // concurrent compactBelow has since advanced, and the stale-floor
+    // concurrent partial compact has since advanced, and the stale-floor
     // checkpoint sweep below would then delete the LIVE checkpoint —
     // the one stale-state sweep that destroys data silently.
     val token = acquireLease(fs, dir, who)
@@ -1570,8 +1411,8 @@ object EpochStore {
       "(\\d+)").r
     // a checkpoint not named by the serving floor is superseded (an
     // older retention point) or torn-never-live (a crashed
-    // compactBelow before its meta) — either way vacuum bait. At
-    // floor 0 NO checkpoint can be live (compactBelow always raises
+    // partial compact before its meta) — either way vacuum bait. At
+    // floor 0 NO checkpoint can be live (a partial compact always raises
     // the floor), so relics there reclaim ungated like staging.
     def sweepStaleCheckpoints(): Unit =
       tables.foreach { name =>
@@ -1585,7 +1426,7 @@ object EpochStore {
         }
       }
     if (st.floor == 0) { sweepStaleCheckpoints(); return }
-    // is the floor checkpoint-based (a compactBelow fold) or
+    // is the floor checkpoint-based (a partial-compact fold) or
     // epoch-based (a full compact whose epoch=floor IS the base)?
     val cpBased = tables.exists(name =>
       checkpointDir(fs, dir, name, st.floor).isDefined)
@@ -1594,7 +1435,7 @@ object EpochStore {
       // meta's commit (the compaction that superseded everything
       // below it); for a checkpoint-based floor that meta is ancient
       // history — approximate with the SERVING meta's commit, which
-      // is ≥ the compactBelow's and therefore conservative (active
+      // is ≥ the partial compact's and therefore conservative (active
       // appends defer reclaim, never hasten it)
       val marker = new org.apache.hadoop.fs.Path(
         if (cpBased) s"$dir/meta_${st.epoch}" else s"$dir/meta_${st.floor}")

@@ -1,11 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, count,
+  count_distinct, lit}
 
 /** One stored-index family on the [[EpochStore]] layout, as data, and
   * the ONE lifecycle every family shares: the serving read with the
-  * family refusal, compact, vacuum, timestamp as-of and id changes.
+  * family refusal, delete, compact, vacuum, timestamp as-of and id
+  * changes.
   *
   *   - `id`: the family version string the family writes into its meta
   *     `family` column; an artifact built under another id refuses.
@@ -14,13 +16,20 @@ import org.apache.spark.sql.functions.{col, lit}
   *     tail of the refusal.
   *   - `tables`: the tables a compaction rewrites (and a vacuum
   *     reclaims), with their tombstone keys and fold hooks.
-  *   - `idTable` / `idCol`: the table and id column [[changes]] reports.
+  *   - `idTable` / `idCol`: the table and id column [[changes]] reports
+  *     and [[delete]] checks liveness against.
+  *   - `deleteKey`: the column a delete set names its ids in.
+  *   - `countCol`: the meta count a delete shrinks by the deleted ids.
+  *   - `onDelete`: the family's extra delete-epoch content — see
+  *     [[IndexFamily.DeleteHook]] (BM25 only).
   *
-  * What stays with each family: write, append, delete and probe, its
-  * meta schema, and its currency and drift premises.
+  * What stays with each family: write, append and probe, its meta
+  * schema, and its currency and drift premises.
   */
 final case class IndexFamily(id: String, writer: String, mismatch: String,
-    tables: Seq[EpochStore.CompactTable], idTable: String, idCol: String) {
+    tables: Seq[EpochStore.CompactTable], idTable: String, idCol: String,
+    deleteKey: String, countCol: String,
+    onDelete: Option[IndexFamily.DeleteHook] = None) {
 
   /** The artifact's serving state (`asOf` = None) or its historical
     * horizon (Some(e), see [[EpochStore.servingStateAt]]), refused by
@@ -47,26 +56,71 @@ final case class IndexFamily(id: String, writer: String, mismatch: String,
     who
   }
 
+  /** RETRACT stored rows: `ids` names them in its `deleteKey` column,
+    * and one DELETE epoch commits their tombstones (the layout-owned
+    * deletes table, see [[EpochStore.tableThroughLive]]) with the meta
+    * carried forward LAST — every column kept, `epoch` advanced and
+    * `countCol` shrunk by the number of ids (plus the hook's shrinks),
+    * so tombstones and counts move atomically or not at all. Every
+    * probe immediately serves the retracted state. Two loud premises,
+    * fused into one action with the hook's aggregate: the delete set
+    * is one id space, and every id is CURRENTLY LIVE in `idTable` —
+    * retracting an already-deleted or never-stored id is a caller bug,
+    * not a no-op. A tombstone names the past, so a deleted id may be
+    * re-appended afterwards (it serves again); physical reclaim is
+    * [[compact]] + [[vacuum]], which fold the tombstones away.
+    * Parameters never re-derive on a shrink (a smaller corpus cannot
+    * rot a recall bound sized for a larger one). Single writer.
+    */
+  def delete(indexDir: String, ids: DataFrame,
+      commitTs: Option[Long] = None): Unit = {
+    val spark = ids.sparkSession
+    val who = s"delete($id)"
+    val st = serving(spark, indexDir, who)
+    val del = graft.CacheScope.scoped(
+      ids.select(col(deleteKey).cast("long").as("id")))
+    def live(table: String): DataFrame = EpochStore.tableThroughLive(
+      spark, indexDir, table, idCol, st.floor, st.epoch)
+    // the dup premise and ONE join of the live id table with the
+    // (small, broadcast) delete set — its row count is the liveness
+    // premise and it feeds the hook's shrink aggregates — fused into ONE
+    // action (r15 — graft.operators.Checks)
+    val hit = live(idTable).join(broadcast(del), col(idCol) === del("id"))
+      .agg(count(lit(1)).as(countCol), onDelete.toSeq.flatMap(_.shrink): _*)
+    val Seq(counts, found) = graft.operators.Checks.counts(
+      del.agg(count(lit(1)).as("n"), count_distinct(col("id")).as("nd")),
+      hit)
+    require(counts(0) == counts(1),
+      s"$who: the delete set is not one id space — " +
+        s"${counts(0) - counts(1)} duplicate id(s); " +
+        "de-duplicate it upstream.")
+    require(found(0) == counts(0),
+      s"$who: ${counts(0) - found(0)} delete id(s) are not live stored " +
+        s"${idCol}s ('$idTable') at $indexDir — a retraction must name " +
+        "stored rows (already-deleted or never-stored ids refuse loudly, " +
+        "they do not no-op).")
+    EpochStore.writeEpoch(indexDir, st.epoch + 1,
+      (EpochStore.DeletesTable -> del) +:
+        onDelete.toSeq.flatMap(_.sideTables(live, del)),
+      EpochStore.carriedMeta(spark, st.meta, st.epoch + 1,
+        hit.columns.toSeq.zip(found)),
+      st.floor, commitTs = commitTs)
+  }
+
   /** COMPACT the artifact: None rewrites the live epochs into ONE fresh
-    * epoch (all history expires, see [[EpochStore.compact]]); Some(h)
-    * folds the history up to epoch h into a checkpoint while every
-    * as-of horizon in [h, serving] keeps serving bit-for-bit (see
-    * [[EpochStore.compactBelow]]). The family meta is carried
-    * verbatim, so compaction moves bytes, never rows or scores.
-    * Returns false when there is nothing to fold. Single writer;
-    * superseded epochs are reclaimed by [[vacuum]].
+    * epoch (all history expires); Some(h) folds the history up to epoch
+    * h into a checkpoint while every as-of horizon in [h, serving]
+    * keeps serving bit-for-bit (both: [[EpochStore.compact]]). The
+    * family meta is carried verbatim, so compaction moves bytes, never
+    * rows or scores. Returns false when there is nothing to fold.
+    * Single writer; superseded epochs are reclaimed by [[vacuum]].
     */
   def compact(spark: SparkSession, indexDir: String,
       below: Option[Int] = None, commitTs: Option[Long] = None)
-      : Boolean = {
-    val who = checked(spark, indexDir, "compact")
-    below match {
-      case Some(h) => EpochStore.compactBelow(spark, indexDir, tables, h,
-        who, writer, commitTs = commitTs)
-      case None => EpochStore.compact(spark, indexDir, tables, who,
-        writer, commitTs = commitTs)
-    }
-  }
+      : Boolean =
+    EpochStore.compact(spark, indexDir, tables,
+      checked(spark, indexDir, "compact"), writer, below = below,
+      commitTs = commitTs)
 
   /** Reclaim what a [[compact]] superseded — see [[EpochStore.vacuum]]
     * (safe against readers of the current serving state; quiesce
@@ -109,4 +163,20 @@ final case class IndexFamily(id: String, writer: String, mismatch: String,
           idCol, fromEpoch, toEpoch, who, writer)
         .select(lit("removed").as("change"), col(idCol)))
   }
+}
+
+object IndexFamily {
+
+  /** A family's extra DELETE-epoch content (BM25's additive statistics
+    * are the one user):
+    *   - `shrink`: aggregates over the deleted rows of the live
+    *     `idTable`, each named after the meta column it shrinks by that
+    *     amount (evaluated in the delete's one premise action);
+    *   - `sideTables`: given the live-table read (`table` => its live
+    *     rows at the serving epoch) and the delete set (one LONG column
+    *     `id`), the tables that land beside the tombstones.
+    */
+  final case class DeleteHook(shrink: Seq[Column],
+      sideTables: (String => DataFrame, DataFrame) =>
+        Seq[(String, DataFrame)])
 }

@@ -350,10 +350,10 @@ object IndexIngest {
   }
 
   /** The q164 cadence with BOUNDED HISTORY RETENTION (q188, r14 —
-    * compactBelow in the loop): every micro-batch folds its survivors
+    * partial compact in the loop): every micro-batch folds its survivors
     * in and then runs PARTIAL compaction at the pre-fold horizon —
-    * `compactBelow(serving − 1)` — plus vacuum, so the artifact never
-    * carries more than the checkpoint + the latest fold as epochs
+    * `compact(below = Some(serving − 1))` — plus vacuum, so the artifact
+    * never carries more than the checkpoint + the latest fold as epochs
     * while the LAST pre-fold horizon stays servable. This is the
     * production answer to "housekeep every batch AND keep yesterday's
     * horizon auditable" that full compaction (q164's loop) cannot
@@ -364,10 +364,10 @@ object IndexIngest {
     * load-bearing): A = `% 3 == 0`, B = `% 3 == 1` ∪ exact copies of
     * A's `% 9 == 0` slice (+9e6 — the cross-batch ownership premise:
     * owned by their wave-A originals only if A's fold SURVIVED batch
-    * A's compactBelow), C = `% 3 == 2`. After the drain the gate
+    * A's partial compact), C = `% 3 == 2`. After the drain the gate
     * probes a FIXED novel shard (wave-C texts under +7e6 ids) at the
     * RETAINED horizon (the post-B state — served from the checkpoint
-    * the last compactBelow wrote) and at serving; the oracle
+    * the last partial compact wrote) and at serving; the oracle
     * recomputes both as declarative tier-coalesces, knowing nothing
     * about epochs, checkpoints, or batches. Loud premises: the final
     * floor/serving are exactly the retention policy's (3, 5), the
@@ -392,7 +392,7 @@ object IndexIngest {
     val dir = idxDir(queryName)
 
     // cross-batch ownership: a wave-B copy owned by its wave-A
-    // original proves batch A's fold survived batch A's compactBelow
+    // original proves batch A's fold survived batch A's partial compact
     requireCrossBatch(verdicts, col("doc_id") >= 9000000L &&
         !col("kept") && col("owner") < 9000000L &&
         col("owner") % 7 === 3, queryName,

@@ -62,7 +62,7 @@ class DeconIndexSpec extends AnyFunSuite {
     // RETIRE the planted benchmark: its windows stop cutting the
     // instant the tombstone commits — equals the live path without it
     CacheScope.withScope {
-      TextDedup.deleteFromDeconIndex(dir, Seq(900000L).toDF("doc_id"))
+      TextDedup.index.delete(dir, Seq(900000L).toDF("doc_id"))
     }
     val withoutPlanted = outSet(TextDedup.decontaminateSpans(corpus,
       bench.filter(col("doc_id") =!= 900000L), 60))
@@ -108,7 +108,7 @@ class DeconIndexSpec extends AnyFunSuite {
     } == 1L)
     // ... and deletable
     CacheScope.withScope {
-      TextDedup.deleteFromDeconIndex(dir, Seq(910000L).toDF("doc_id"))
+      TextDedup.index.delete(dir, Seq(910000L).toDF("doc_id"))
     }
     // append id clash refuses
     val clash = intercept[IllegalArgumentException] {
@@ -121,7 +121,7 @@ class DeconIndexSpec extends AnyFunSuite {
     // deleting a never-stored id refuses
     val ne = intercept[IllegalArgumentException] {
       CacheScope.withScope {
-        TextDedup.deleteFromDeconIndex(dir, Seq(987654321L).toDF("doc_id"))
+        TextDedup.index.delete(dir, Seq(987654321L).toDF("doc_id"))
       }
     }
     assert(ne.getMessage.contains("not live stored"))

@@ -51,7 +51,7 @@ class EpochAsOfSpec extends AnyFunSuite {
       val doomed = spark.read.parquet(doomedDir)
       assert(doomed.limit(1).count() == 1, "test premise: non-empty " +
         "delete set at this SF")
-      Dedup.deleteFromFingerprintIndex(dir, doomed)
+      Dedup.index.delete(dir, doomed)
       Dedup.appendFingerprintIndex(dir,
         corpus.join(doomed.filter(col("doc_id") % 2 === 0),
           Seq("doc_id"), "left_semi"))
@@ -162,7 +162,7 @@ class EpochAsOfSpec extends AnyFunSuite {
         .select(col("owner").as("doc_id"))
         .write.mode("overwrite").parquet(doomedDir)
       val doomed = spark.read.parquet(doomedDir)
-      Dedup.deleteFromFingerprintIndex(dir, doomed)
+      Dedup.index.delete(dir, doomed)
       Dedup.appendFingerprintIndex(dir,
         corpus.join(doomed.filter(col("doc_id") % 2 === 0),
           Seq("doc_id"), "left_semi"))
@@ -258,7 +258,7 @@ class EpochAsOfSpec extends AnyFunSuite {
     CacheScope.withScope {
       Bm25.writeBm25Index(base, dir)
       Bm25.appendBm25Index(dir, d.filter(col("doc_id") % 11 === 5))
-      Bm25.deleteFromBm25Index(dir,
+      Bm25.index.delete(dir,
         d.filter(col("doc_id") % 13 === 2).select("doc_id"))
     }
     val terms = Seq("spark", "hash", "window")
@@ -294,7 +294,7 @@ class EpochAsOfSpec extends AnyFunSuite {
       Bm25.writeBm25Index(base, baseOnly)
       Bm25.writeBm25Index(base, dir)
       Bm25.appendBm25Index(dir, d.filter(col("doc_id") % 11 === 5))
-      Bm25.deleteFromBm25Index(dir,
+      Bm25.index.delete(dir,
         d.filter(col("doc_id") % 13 === 2).select("doc_id"))
     }
     val terms = Seq("spark", "hash", "window")

@@ -285,7 +285,7 @@ class EpochCompactionSpec extends AnyFunSuite {
       s"the second writer must refuse at acquisition, got: $refusal")
     // the lease is released after the compaction: a next writer runs
     CacheScope.withScope {
-      Dedup.deleteFromFingerprintIndex(dir,
+      Dedup.index.delete(dir,
         Dedup.storedOwners(spark, dir).orderBy(col("owner")).limit(1)
           .select(col("owner").as("doc_id")))
     }
@@ -713,18 +713,30 @@ class EpochCompactionSpec extends AnyFunSuite {
     val families = Seq(Dedup.index, TextIndex.index, Bm25.index, Ann.index,
       Multimodal.index, TextDedup.index)
     assert(families.map(_.id).distinct.size == 6)
-    // (op, call, what the artifact's own family returns)
-    val ops = Seq[(String, graft.sources.IndexFamily => Any, Any)](
-      ("compact", _.compact(spark, dir), false), // single epoch: no-op
-      ("vacuum", _.vacuum(spark, dir), ()),
-      ("epochAtTime", _.epochAtTime(spark, dir, 1000L), 0), // stamped base
-      ("changes", _.changes(spark, dir, 0, 0).count(), 0L)) // empty window
+    // (op, call, what the artifact's own family returns — or Left(m):
+    // it refuses with a message containing m)
+    val ops = Seq[(String, graft.sources.IndexFamily => Any,
+        Either[String, Any])](
+      ("compact", _.compact(spark, dir), Right(false)), // single epoch
+      ("compact(below = Some(0))", _.compact(spark, dir, below = Some(0)),
+        Right(false)), // the horizon IS the floor: nothing to fold
+      ("vacuum", _.vacuum(spark, dir), Right(())),
+      ("epochAtTime", _.epochAtTime(spark, dir, 1000L),
+        Right(0)), // stamped base
+      ("changes", _.changes(spark, dir, 0, 0).count(),
+        Right(0L)), // empty window
+      ("delete", f => CacheScope.withScope {
+        f.delete(dir, Seq(987654321L).toDF("doc_id")) },
+        Left("not live"))) // a never-stored id
     for (fam <- families; (op, run, own) <- ops) {
-      if (fam == Dedup.index) assert(run(fam) == own, s"${fam.id} $op")
-      else {
-        val e = intercept[IllegalArgumentException] { run(fam) }
-        assert(e.getMessage.contains("family"),
-          s"${fam.id} $op: ${e.getMessage}")
+      val refusal =
+        if (fam == Dedup.index) own.left.toOption else Some("family")
+      refusal match {
+        case None => assert(Right(run(fam)) == own, s"${fam.id} $op")
+        case Some(want) =>
+          val e = intercept[IllegalArgumentException] { run(fam) }
+          assert(e.getMessage.contains(want),
+            s"${fam.id} $op: ${e.getMessage}")
       }
       assert(state == before, s"${fam.id} $op moved the artifact")
     }

@@ -46,7 +46,7 @@ class EpochDeleteSpec extends AnyFunSuite {
     val doomed = spark.read.parquet(doomedDir)
     assert(doomed.limit(1).count() == 1, "test premise: a non-empty " +
       "delete set must exist at this SF")
-    CacheScope.withScope { Dedup.deleteFromFingerprintIndex(dir, doomed) }
+    CacheScope.withScope { Dedup.index.delete(dir, doomed) }
     // the engine yardstick: a fresh build over corpus-minus-deleted
     CacheScope.withScope {
       Dedup.writeFingerprintIndex(
@@ -121,7 +121,7 @@ class EpochDeleteSpec extends AnyFunSuite {
     // never-stored ids refuse
     val ne = intercept[IllegalArgumentException] {
       CacheScope.withScope {
-        Dedup.deleteFromFingerprintIndex(dir,
+        Dedup.index.delete(dir,
           Seq(987654321L).toDF("doc_id"))
       }
     }
@@ -129,15 +129,15 @@ class EpochDeleteSpec extends AnyFunSuite {
     // a duplicated delete set refuses
     val de = intercept[IllegalArgumentException] {
       CacheScope.withScope {
-        Dedup.deleteFromFingerprintIndex(dir,
+        Dedup.index.delete(dir,
           doomed.unionByName(doomed.limit(1)))
       }
     }
     assert(de.getMessage.contains("not one id space"))
     // deleting twice refuses (the ids are no longer live)
-    CacheScope.withScope { Dedup.deleteFromFingerprintIndex(dir, doomed) }
+    CacheScope.withScope { Dedup.index.delete(dir, doomed) }
     val te = intercept[IllegalArgumentException] {
-      CacheScope.withScope { Dedup.deleteFromFingerprintIndex(dir, doomed) }
+      CacheScope.withScope { Dedup.index.delete(dir, doomed) }
     }
     assert(te.getMessage.contains("not live stored owners"))
   }
@@ -152,7 +152,7 @@ class EpochDeleteSpec extends AnyFunSuite {
     CacheScope.withScope { Bm25.writeBm25Index(docs, dir) }
     val gone = docs.filter(col("doc_id") % 13 === 2)
     CacheScope.withScope {
-      Bm25.deleteFromBm25Index(dir, gone.select("doc_id"))
+      Bm25.index.delete(dir, gone.select("doc_id"))
     }
     val live = CacheScope.withScope {
       Bm25.topK(docs.filter(col("doc_id") % 13 =!= 2), terms, 50)
@@ -218,7 +218,7 @@ class EpochDeleteSpec extends AnyFunSuite {
     }
     val doomed = spark.read.parquet(doomedDir)
     assert(doomed.limit(1).count() == 1, "test premise: non-empty")
-    CacheScope.withScope { TextIndex.deleteFromJaccardIndex(dir, doomed) }
+    CacheScope.withScope { TextIndex.index.delete(dir, doomed) }
     CacheScope.withScope {
       TextIndex.writeJaccardIndex(
         corpus.join(doomed, Seq("doc_id"), "left_anti"), rebuilt, 0.6)
@@ -252,7 +252,7 @@ class EpochDeleteSpec extends AnyFunSuite {
     if (shortIds.count() == 1) {
       val se = intercept[IllegalArgumentException] {
         CacheScope.withScope {
-          TextIndex.deleteFromJaccardIndex(dir, shortIds)
+          TextIndex.index.delete(dir, shortIds)
         }
       }
       assert(se.getMessage.contains("not live"))
@@ -275,7 +275,7 @@ class EpochDeleteSpec extends AnyFunSuite {
     CacheScope.withScope {
       graft.operators.Ann.writeCpIndex(corpus, dir, 0.4,
         hashesPerBand = k, bands = b)
-      graft.operators.Ann.deleteFromCpIndex(dir,
+      graft.operators.Ann.index.delete(dir,
         corpus.filter(col("vec_id") % 13 === 2).select("vec_id"))
       graft.operators.Ann.writeCpIndex(
         corpus.filter(col("vec_id") % 13 =!= 2), rebuilt, 0.4,
@@ -316,7 +316,7 @@ class EpochDeleteSpec extends AnyFunSuite {
       graft.operators.Multimodal.writeDHashIndex(corpus, dir)
       // only the image slice (doc_id % 3 == 0) is ever stored — the
       // delete set must name LIVE media ids
-      graft.operators.Multimodal.deleteFromDHashIndex(dir,
+      graft.operators.Multimodal.index.delete(dir,
         corpus.filter(col("doc_id") % 13 === 2 && col("doc_id") % 3 === 0)
           .select(col("doc_id").as("media_id")))
       graft.operators.Multimodal.writeDHashIndex(
@@ -466,7 +466,7 @@ class EpochDeleteSpec extends AnyFunSuite {
       Dedup.storedOwners(spark, dir).filter(col("owner") === victim)
         .select(col("owner").as("doc_id"))
         .write.mode("overwrite").parquet(doomedDir)
-      Dedup.deleteFromFingerprintIndex(dir,
+      Dedup.index.delete(dir,
         spark.read.parquet(doomedDir))
     }
     assert(CacheScope.withScope {
@@ -521,7 +521,7 @@ class EpochDeleteSpec extends AnyFunSuite {
       Dedup.storedOwners(spark, dir).filter(col("owner") % 13 === 2)
         .select(col("owner").as("doc_id"))
         .write.mode("overwrite").parquet(doomedDir)
-      Dedup.deleteFromFingerprintIndex(dir,
+      Dedup.index.delete(dir,
         spark.read.parquet(doomedDir))
       Dedup.appendFingerprintIndex(dir,
         corpus.join(spark.read.parquet(doomedDir)
@@ -632,7 +632,7 @@ class EpochDeleteSpec extends AnyFunSuite {
         operators.Ann.writeCpIndex(base, dir, threshold = 0.4,
           hashesPerBand = k, bands = b)
         operators.Ann.appendCpIndex(dir, slice)
-        operators.Ann.deleteFromCpIndex(dir,
+        operators.Ann.index.delete(dir,
           e.filter(col("vec_id") % 5 === 0).select("vec_id"))
       }
       val (a, r) = sets(operators.Ann.index.changes(spark, dir, 0, 2))
@@ -651,7 +651,7 @@ class EpochDeleteSpec extends AnyFunSuite {
       CacheScope.withScope {
         operators.Bm25.writeBm25Index(base, dir)
         operators.Bm25.appendBm25Index(dir, slice)
-        operators.Bm25.deleteFromBm25Index(dir,
+        operators.Bm25.index.delete(dir,
           d.filter(col("doc_id") % 5 === 0).select("doc_id"))
       }
       val (a, r) = sets(operators.Bm25.index.changes(spark, dir, 0, 2))
@@ -670,7 +670,7 @@ class EpochDeleteSpec extends AnyFunSuite {
       CacheScope.withScope {
         operators.Multimodal.writeDHashIndex(base, dir)
         operators.Multimodal.appendDHashIndex(dir, slice)
-        operators.Multimodal.deleteFromDHashIndex(dir,
+        operators.Multimodal.index.delete(dir,
           d.filter(col("doc_id") % 5 === 0)
             .select(col("doc_id").as("media_id")))
       }
@@ -692,7 +692,7 @@ class EpochDeleteSpec extends AnyFunSuite {
       CacheScope.withScope {
         operators.TextDedup.writeDeconIndex(base, dir, w = 60)
         operators.TextDedup.appendDeconIndex(dir, slice)
-        operators.TextDedup.deleteFromDeconIndex(dir,
+        operators.TextDedup.index.delete(dir,
           d.filter(col("doc_id") % 5 === 0).select("doc_id"))
       }
       val (a, r) = sets(
@@ -701,6 +701,72 @@ class EpochDeleteSpec extends AnyFunSuite {
         r == ids(base.filter(col("doc_id") % 5 === 0), "doc_id") &&
         a.nonEmpty && r.nonEmpty,
         "decon differential must match the declarative delta")
+    }
+  }
+
+  test("every family's delete commits the stored meta carried forward: " +
+      "all columns kept, epoch + 1, the count shrunk by the deleted " +
+      "ids (BM25's n_docs and sum_dl exactly), commit_kind 'delete'") {
+    val d = Tables.documents(spark, TestSpark.sf)
+    val docs = d.filter(col("doc_id") < 400).select("doc_id", "text")
+    val e = Tables.embeddings(spark, TestSpark.sf)
+      .filter(col("vec_id") < 400).select("vec_id", "embedding")
+    val images = d.filter(col("doc_id") < 900 && col("doc_id") % 3 === 0)
+    val bench = docs.filter(length(col("text")) >= 60)
+    // (family, artifact, its base build)
+    val builds = Seq[(graft.sources.IndexFamily, String, String => Unit)](
+      (Dedup.index, "/tmp/graft_test_delmeta_fp",
+        Dedup.writeFingerprintIndex(docs, _)),
+      (TextIndex.index, "/tmp/graft_test_delmeta_txt",
+        TextIndex.writeJaccardIndex(docs, _, 0.6)),
+      (Bm25.index, "/tmp/graft_test_delmeta_bm25",
+        Bm25.writeBm25Index(docs, _)),
+      (operators.Ann.index, "/tmp/graft_test_delmeta_cp",
+        operators.Ann.writeCpIndex(e, _, 0.4)),
+      (operators.Multimodal.index, "/tmp/graft_test_delmeta_dh",
+        operators.Multimodal.writeDHashIndex(images, _)),
+      (operators.TextDedup.index, "/tmp/graft_test_delmeta_dc",
+        operators.TextDedup.writeDeconIndex(bench, _, w = 60)))
+    val layout = Set("floor_epoch", "commit_ts", "commit_kind")
+    for ((fam, dir, build) <- builds) {
+      CacheScope.withScope { build(dir) }
+      val before = fam.serving(spark, dir, "deleteMetaTest")
+      // the delete set: live stored ids ≡ 0 (mod 5), collected so no
+      // lineage reads the artifact it mutates
+      val ids = CacheScope.withScope {
+        graft.sources.EpochStore.tableThroughLive(spark, dir, fam.idTable,
+            fam.idCol, before.floor, before.epoch)
+          .filter(col(fam.idCol) % 5 === 0).select(col(fam.idCol))
+          .distinct().as[Long].collect().toSeq
+      }
+      assert(ids.nonEmpty, s"${fam.id}: test premise — a delete set")
+      val shrink = Map(fam.countCol -> ids.size.toLong) ++
+        (if (fam == Bm25.index) Map("sum_dl" -> CacheScope.withScope {
+          docs.filter(col("doc_id").isin(ids: _*))
+            .agg(sum(size(split(col("text"), " ")).cast("long")))
+            .head().getLong(0)
+        }) else Map.empty)
+      CacheScope.withScope {
+        fam.delete(dir, ids.toDF(fam.deleteKey), commitTs = Some(2000L))
+      }
+      val after = fam.serving(spark, dir, "deleteMetaTest")
+      assert(after.epoch == before.epoch + 1)
+      val m0 = before.meta
+      val m1 = after.meta
+      assert(m1.schema.fieldNames.toSet == m0.schema.fieldNames.toSet,
+        s"${fam.id}: meta columns ${m1.schema.fieldNames.mkString(",")}")
+      for (c <- m0.schema.fieldNames if !layout(c)) {
+        val want: Any = c match {
+          case "epoch" => m0.getAs[Int](c) + 1
+          case k if shrink.contains(k) => m0.getAs[Long](k) - shrink(k)
+          case _ => m0.getAs[Any](c)
+        }
+        assert(m1.getAs[Any](c) == want,
+          s"${fam.id}: meta column $c = ${m1.getAs[Any](c)}, want $want")
+      }
+      assert(m1.getAs[String]("commit_kind") == "delete" &&
+        m1.getAs[Long]("commit_ts") == 2000L,
+        s"${fam.id}: the commit is stamped a delete")
     }
   }
 }

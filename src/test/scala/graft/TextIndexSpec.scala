@@ -218,7 +218,7 @@ class TextIndexSpec extends AnyFunSuite {
       TextIndex.storedDocIds(spark, dir)
         .filter(col("doc_id") % 13 === 2)
         .write.mode("overwrite").parquet(doomedDir)
-      TextIndex.deleteFromJaccardIndex(dir, spark.read.parquet(doomedDir))
+      TextIndex.index.delete(dir, spark.read.parquet(doomedDir))
     }
     // the shard: exact copies of the %9==1 slice — J=1 pairs with
     // appended originals exist only at serving (the window's adds are
