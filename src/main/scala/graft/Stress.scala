@@ -68,6 +68,13 @@ object Stress {
   private val copies = 10
   private val offset = 100000000L // clears every sf0.1 id space
 
+  /** Wall seconds `body` takes — the one timer every section reads. */
+  private def seconds(body: => Unit): Double = {
+    val t0 = System.nanoTime()
+    body
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt.max(1)
     // optional section selectors (heavy / emb / skew / link); no args =
@@ -113,11 +120,9 @@ object Stress {
     // loop and the r8 sections must not drift apart
     def timedN(mk: () => DataFrame, n: Int): Double =
       (1 to n).map { _ =>
-        val t0 = System.nanoTime()
-        CacheScope.withScope {
+        seconds(CacheScope.withScope {
           mk().write.format("noop").mode("overwrite").save()
-        }
-        (System.nanoTime() - t0) / 1e9
+        })
       }.min
     // min-of-passes with passes >= 2 for the UN-warmed shapes: their
     // first pass pays one-shot codegen, the min discards it
@@ -378,13 +383,9 @@ object Stress {
       // corpus size would REFUSE (the derived-params premise, working
       // as designed) — report it loudly instead of killing the
       // section's remaining rows (r11 review)
-      def timeAppend(idx: String): Double = {
-        val t0 = System.nanoTime()
-        CacheScope.withScope {
-          operators.Ann.appendCpIndex(idx, incShard())
-        }
-        (System.nanoTime() - t0) / 1e9
-      }
+      def timeAppend(idx: String): Double = seconds(CacheScope.withScope {
+        operators.Ann.appendCpIndex(idx, incShard())
+      })
       try report("q152_append@0.7 fixed-shard (1 pass)",
         timeAppend(idx1), timeAppend(idx10))
       catch {
@@ -437,13 +438,10 @@ object Stress {
       // top of every run); one pass each — an id space appends once.
       // No currency premise exists to refuse here: MinHash banding is
       // count-independent (TextIndex.appendJaccardIndex scaladoc).
-      def timeTxtAppend(idx: String): Double = {
-        val t0 = System.nanoTime()
-        CacheScope.withScope {
+      def timeTxtAppend(idx: String): Double =
+        seconds(CacheScope.withScope {
           operators.TextIndex.appendJaccardIndex(idx, txtShard())
-        }
-        (System.nanoTime() - t0) / 1e9
-      }
+        })
       report("q155_text_append@0.6 fixed-shard (1 pass)",
         timeTxtAppend(txtIdx1), timeTxtAppend(txtIdx10))
       // the EXACT-granularity arrival (q159) on the same fixtures: a
@@ -574,22 +572,23 @@ object Stress {
       def drain(policy: graft.sources.RetentionPolicy, idx: String)
           : Double = {
         val docs = txtDocs(txtDoc1)
-        val t0 = System.nanoTime()
-        CacheScope.withScope {
-          operators.TextIndex.writeJaccardIndex(
-            docs.filter(col("doc_id") % nShards === 0), idx,
-            threshold = 0.6)
-        }
-        (1 until nShards).foreach { k =>
+        seconds {
           CacheScope.withScope {
-            operators.TextIndex.appendJaccardIndex(idx,
-              docs.filter(col("doc_id") % nShards === k))
-            val fam = operators.TextIndex.index
-            policy.housekeep(spark, idx, k - 1L, "stress_pol", fam.writer)(
-              fam.compact(spark, idx, _), () => fam.vacuum(spark, idx))
+            operators.TextIndex.writeJaccardIndex(
+              docs.filter(col("doc_id") % nShards === 0), idx,
+              threshold = 0.6)
+          }
+          (1 until nShards).foreach { k =>
+            CacheScope.withScope {
+              operators.TextIndex.appendJaccardIndex(idx,
+                docs.filter(col("doc_id") % nShards === k))
+              val fam = operators.TextIndex.index
+              policy.housekeep(spark, idx, k - 1L, "stress_pol",
+                  fam.writer)(
+                fam.compact(spark, idx, _), () => fam.vacuum(spark, idx))
+            }
           }
         }
-        (System.nanoTime() - t0) / 1e9
       }
       val polIdx1 = "/tmp/graft_stress_polidx_every1"
       val polIdx4 = "/tmp/graft_stress_polidx_every4"
@@ -642,13 +641,10 @@ object Stress {
       val doomed1 = doom(idx1, "/tmp/graft_stress_fpdel_doom1")
       val doomed10 = doom(idx10, "/tmp/graft_stress_fpdel_doom10")
       // one pass each — an id set deletes once (the append-timing rule)
-      def timeDelete(idx: String, ids: DataFrame): Double = {
-        val t0 = System.nanoTime()
-        CacheScope.withScope {
+      def timeDelete(idx: String, ids: DataFrame): Double =
+        seconds(CacheScope.withScope {
           operators.Dedup.index.delete(idx, ids)
-        }
-        (System.nanoTime() - t0) / 1e9
-      }
+        })
       report("fp_delete_op owners%13==2 (1 pass)",
         timeDelete(idx1, doomed1), timeDelete(idx10, doomed10))
       // probe the 10× artifact with its tombstones LIVE, then after a
@@ -703,13 +699,13 @@ object Stress {
       }
       val survivors = docs.join(spark.read.parquet(keptDir),
         Seq("doc_id"), "left_semi")
-      val tBuild0 = System.nanoTime()
-      for (k <- 0 until 99) CacheScope.withScope {
-        operators.Dedup.appendFingerprintIndex(idx,
-          survivors.filter(pmod(col("doc_id"), lit(99)) === lit(k)))
+      val tBuild = seconds {
+        for (k <- 0 until 99) CacheScope.withScope {
+          operators.Dedup.appendFingerprintIndex(idx,
+            survivors.filter(pmod(col("doc_id"), lit(99)) === lit(k)))
+        }
       }
-      println(f"STRESS fp_asof_build 99-micro-appends " +
-        f"t=${(System.nanoTime() - tBuild0) / 1e9}%.1fs")
+      println(f"STRESS fp_asof_build 99-micro-appends t=$tBuild%.1fs")
       def probeAt(asOf: Option[Int]): Double = timed(() =>
         operators.Dedup.dedupAgainstIndex(idx, txtShard(), asOf))
       val tEarly = probeAt(Some(5))

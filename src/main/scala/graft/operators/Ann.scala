@@ -700,7 +700,62 @@ object Ann {
     "probing across hash versions silently loses recall",
     Seq(graft.sources.EpochStore.CompactTable("vectors", Some("vec_id")),
       graft.sources.EpochStore.CompactTable("bands", Some("vec_id"))),
-    "vectors", "vec_id", deleteKey = "vec_id", countCol = "corpus_count")
+    "vectors", "vec_id", deleteKey = "vec_id", countCol = "corpus_count",
+    shard = graft.sources.IndexFamily.Shard("appendCpIndex",
+      Seq("family", "k", "bands", "dim", "target_miss", "threshold",
+        "corpus_count", "epoch", "params_derived"),
+      _.select(col("vec_id"), VecFns.toDouble(col("embedding")).as("v")),
+      cpTables, dup = s". $PairDupConsequence",
+      clash = dir => s"appended vec_id(s) already exist in the index at " +
+        s"$dir — one id space is the contract (an id stored twice " +
+        "silently drops its future probe pairs); re-key or dedup the " +
+        "shard first.",
+      check = requireCurrent))
+
+  /** One epoch's tables: the vectors and their band rows hashed under
+    * the meta's frozen (k, bands, dim).
+    */
+  private def cpTables(v: DataFrame, meta: org.apache.spark.sql.Row)
+      : Seq[(String, DataFrame)] = {
+    GraftFunctions.register(v.sparkSession)
+    val (k, nBands, dim) = (meta.getAs[Int]("k"), meta.getAs[Int]("bands"),
+      meta.getAs[Int]("dim"))
+    Seq("vectors" -> v, "bands" -> v.select(col("vec_id"),
+      posexplode(expr(s"graft_cplsh(v, $k, $nBands, $dim)"))
+        .as(Seq("band_id", "code"))))
+  }
+
+  /** Parameter currency (derived-parameter artifacts only): k was
+    * derived from the BASE corpus count (k grows ~log n — the
+    * Indyk–Motwani scaling); when the grown corpus would derive a
+    * DIFFERENT k, this artifact is no longer the index that count
+    * deserves, and append REFUSES with the rederived value — rebuild.
+    * Recall is never at stake (the banding bound is count-independent);
+    * candidate-volume optimality is, and a silently-stale k is how an
+    * index rots. An artifact built with EXPLICIT (hashesPerBand, bands)
+    * skips this check — pinning parameters is how a pipeline sizes an
+    * index for planned growth, and currency is then the caller's
+    * decision.
+    */
+  private def requireCurrent(meta: org.apache.spark.sql.Row, n: Long)
+      : Unit =
+    if (meta.getAs[Boolean]("params_derived")) {
+      val (count, k) = (meta.getAs[Long]("corpus_count"),
+        meta.getAs[Int]("k"))
+      val total = count + n
+      val kNow = CrossPolytope.chooseHashesPerBand(total,
+        meta.getAs[Double]("threshold"), meta.getAs[Int]("dim"),
+        meta.getAs[Double]("target_miss"))
+      require(kNow == k,
+        s"appendCpIndex: the corpus has outgrown this artifact's " +
+          s"parameters — $count vectors derived k = $k, but " +
+          s"$total derives k = $kNow. Recall is unaffected; candidate " +
+          "volume is not — rebuild with writeCpIndex at the new size " +
+          "(to a FRESH directory if the rebuild's input reads this " +
+          "artifact's own files — the base build deletes its target " +
+          "first), or pin parameters explicitly to size for planned " +
+          "growth.")
+    }
 
   /** Write the corpus half of incremental dedup as a stored artifact:
     * band rows, vectors, and derived parameters persisted as parquet,
@@ -737,56 +792,27 @@ object Ann {
     */
   def writeCpIndex(corpus: DataFrame, dir: String, threshold: Double,
       hashesPerBand: Int = 0, bands: Int = 0, dim: Int = 64,
-      targetMiss: Double = 1e-4, commitTs: Option[Long] = None): Unit = {
-    val spark = corpus.sparkSession
-    GraftFunctions.register(spark)
-    val v = graft.CacheScope.scoped(corpus.select(col("vec_id"),
-      VecFns.toDouble(col("embedding")).as("v")))
-    val n = requireDistinctIds(v, "writeCpIndex", "within the corpus")
-    val k =
-      if (hashesPerBand > 0) hashesPerBand
-      else CrossPolytope.chooseHashesPerBand(n, threshold, dim, targetMiss)
-    val nBands =
-      if (bands > 0) bands else CrossPolytope.bandsFor(threshold, k, dim,
-        targetMiss)
-    graft.sources.EpochStore.deleteAll(spark, dir)
-    writeEpoch(spark, dir, 0, v, k, nBands, dim, targetMiss, threshold,
-      n, paramsDerived = hashesPerBand <= 0 && bands <= 0,
-      commitTs = commitTs)
-  }
-
-  /** One epoch's three writes, meta LAST (shared by base build and
-    * append): vectors, band rows hashed under the artifact's frozen
-    * (k, bands, dim), then `meta_N` naming the epoch complete — the
-    * write ordering and layout live in [[graft.sources.EpochStore]].
-    */
-  private def writeEpoch(spark: org.apache.spark.sql.SparkSession,
-      dir: String, epoch: Int, v: DataFrame, k: Int, nBands: Int,
-      dim: Int, targetMiss: Double, threshold: Double,
-      totalCount: Long, paramsDerived: Boolean, floor: Int = 0,
-      commitTs: Option[Long] = None): Unit = {
-    import spark.implicits._
-    val bandRows = v.select(col("vec_id"),
-      posexplode(expr(s"graft_cplsh(v, $k, $nBands, $dim)"))
-        .as(Seq("band_id", "code")))
-    val meta = Seq((index.id, k, nBands, dim, targetMiss, threshold,
-        totalCount, epoch, paramsDerived))
-      .toDF("family", "k", "bands", "dim", "target_miss", "threshold",
-        "corpus_count", "epoch", "params_derived")
-    graft.sources.EpochStore.writeEpoch(dir, epoch,
-      Seq("vectors" -> v, "bands" -> bandRows), meta, floor,
-      commitTs = commitTs)
-  }
+      targetMiss: Double = 1e-4, commitTs: Option[Long] = None): Unit =
+    index.write(corpus, dir, n => {
+      val k =
+        if (hashesPerBand > 0) hashesPerBand
+        else CrossPolytope.chooseHashesPerBand(n, threshold, dim,
+          targetMiss)
+      Seq("k" -> k, "bands" -> (if (bands > 0) bands
+          else CrossPolytope.bandsFor(threshold, k, dim, targetMiss)),
+        "dim" -> dim, "target_miss" -> targetMiss,
+        "threshold" -> threshold,
+        "params_derived" -> (hashesPerBand <= 0 && bands <= 0))
+    }, commitTs)
 
   /** The artifact's serving state: (k, bands, threshold, targetMiss,
-    * dim, corpus_count, epoch) of the HIGHEST complete epoch — the one
-    * whose `meta_N` exists. Data files of higher (torn) epochs are
-    * invisible by construction. Refuses, by `who`'s name, an artifact
-    * with no complete epoch (torn base build, or a pre-epoch layout).
+    * dim, epoch, floor) of the HIGHEST complete epoch — the one whose
+    * `meta_N` exists. Data files of higher (torn) epochs are invisible
+    * by construction. Refuses, by `who`'s name, an artifact with no
+    * complete epoch (torn base build, or a pre-epoch layout).
     */
   private case class CpIndexState(k: Int, bands: Int, threshold: Double,
-      targetMiss: Double, dim: Int, count: Long, epoch: Int,
-      floor: Int, paramsDerived: Boolean)
+      targetMiss: Double, dim: Int, epoch: Int, floor: Int)
 
   private def cpState(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, who: String, asOf: Option[Int] = None)
@@ -798,8 +824,7 @@ object Ann {
     val meta = st.meta
     CpIndexState(meta.getAs[Int]("k"), meta.getAs[Int]("bands"),
       meta.getAs[Double]("threshold"), meta.getAs[Double]("target_miss"),
-      meta.getAs[Int]("dim"), meta.getAs[Long]("corpus_count"), st.epoch,
-      st.floor, meta.getAs[Boolean]("params_derived"))
+      meta.getAs[Int]("dim"), st.epoch, st.floor)
   }
 
   /** Read a [[writeCpIndex]] artifact's serving state and refuse, by
@@ -851,18 +876,9 @@ object Ann {
     * last, so a torn append is invisible to every reader and simply
     * retried.
     *
-    * TWO loud premises guard what append cannot silently absorb:
-    *   - parameter currency (derived-parameter artifacts only): k was
-    *     derived from the BASE corpus count (k grows ~log n — the
-    *     Indyk–Motwani scaling); when the grown corpus would derive a
-    *     DIFFERENT k, this artifact is no longer the index that count
-    *     deserves, and append REFUSES with the rederived value —
-    *     rebuild. Recall is never at stake (the banding bound is
-    *     count-independent); candidate-volume optimality is, and a
-    *     silently-stale k is how an index rots. An artifact built with
-    *     EXPLICIT (hashesPerBand, bands) skips this check — pinning
-    *     parameters is how a pipeline sizes an index for planned
-    *     growth, and currency is then the caller's decision.
+    * TWO loud premises guard what append cannot silently absorb, in
+    * the shard's one premise action ([[graft.sources.IndexFamily.append]]):
+    *   - parameter currency — see [[requireCurrent]];
     *   - one id space: shard-internal duplicates AND shard∩stored
     *     collisions refuse (an id appended twice would make its future
     *     probe pairs vanish through the self-pair filter).
@@ -875,48 +891,8 @@ object Ann {
     * none.
     */
   def appendCpIndex(indexDir: String, more: DataFrame,
-      commitTs: Option[Long] = None): Unit = {
-    val spark = more.sparkSession
-    GraftFunctions.register(spark)
-    val st = cpState(spark, indexDir, "appendCpIndex")
-    val v = graft.CacheScope.scoped(more.select(col("vec_id"),
-      VecFns.toDouble(col("embedding")).as("v")))
-    val nNew = requireDistinctIds(v, "appendCpIndex",
-      "within the appended shard")
-    // parameter currency FIRST — it is free arithmetic on counts the
-    // shard job already produced, and a doomed append must not pay
-    // the stored-vector semi-scan just to be refused (r11 review).
-    // Skipped for explicitly-pinned artifacts: their k was a caller's
-    // decision (e.g. sized for planned growth), not a derivation this
-    // check could go stale against.
-    val total = st.count + nNew
-    if (st.paramsDerived) {
-      val kNow = CrossPolytope.chooseHashesPerBand(total, st.threshold,
-        st.dim, st.targetMiss)
-      require(kNow == st.k,
-        s"appendCpIndex: the corpus has outgrown this artifact's " +
-          s"parameters — ${st.count} vectors derived k = ${st.k}, but " +
-          s"$total derives k = $kNow. Recall is unaffected; candidate " +
-          "volume is not — rebuild with writeCpIndex at the new size " +
-          "(to a FRESH directory if the rebuild's input reads this " +
-          "artifact's own files — the base build deletes its target " +
-          "first), or pin parameters explicitly to size for planned " +
-          "growth.")
-    }
-    val nClash = v.select("vec_id")
-      .join(indexVectors(spark, indexDir, st.floor, st.epoch)
-          .select("vec_id"),
-        Seq("vec_id"), "left_semi")
-      .limit(1).count()
-    require(nClash == 0,
-      s"appendCpIndex: appended vec_id(s) already exist in the index " +
-        s"at $indexDir — one id space is the contract (an id stored " +
-        "twice silently drops its future probe pairs); re-key or dedup " +
-        "the shard first.")
-    writeEpoch(spark, indexDir, st.epoch + 1, v, st.k, st.bands, st.dim,
-      st.targetMiss, st.threshold, total, st.paramsDerived, st.floor,
-      commitTs = commitTs)
-  }
+      commitTs: Option[Long] = None): Unit =
+    index.append(indexDir, more, commitTs)
 
   /** Probe a [[writeCpIndex]] artifact with an arriving shard — the
     * same contract as [[cosinePairsCpIncremental]] (every pair at

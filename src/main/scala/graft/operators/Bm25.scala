@@ -179,6 +179,18 @@ object Bm25 {
         d => d.groupBy(col("term")).agg(sum(col("df")).as("df"))
           .filter(col("df") =!= 0))),
     "docs", "doc_id", deleteKey = "doc_id", countCol = "n_docs",
+    // an append grows Σdl by the shard's word count (N and Σdl are
+    // additive over disjoint doc sets)
+    shard = graft.sources.IndexFamily.Shard("appendBm25Index",
+      Seq("family", "n_docs", "sum_dl", "epoch"),
+      _.select("doc_id", "text"), (d, _) => tokenized(d),
+      dup = "; a doc indexed twice double-counts df and N. Re-key " +
+        "upstream.",
+      clash = dir => s"appended doc_id(s) already indexed at $dir — one " +
+        "id space is the contract (an id indexed twice double-counts df " +
+        "and N); re-key or dedup the shard first.",
+      grow = Seq(coalesce(sum(size(split(col("text"), " ")).cast("long")),
+        lit(0L)).as("sum_dl"))),
     // a delete shrinks Σdl by the deleted docs' lengths and carries
     // NEGATIVE df rows — per term, minus the deleted docs containing
     // it, from the live postings — so the probe's sum-across-epochs
@@ -190,13 +202,14 @@ object Bm25 {
         .groupBy(col("term"))
         .agg((lit(0L) - count(lit(1))).as("df"))))))
 
-  /** The tokenized corpus half: postings (term, doc_id, tf, dl —
-    * dl denormalized so scoring never joins a lengths table) and the
-    * per-doc membership/length table (doc_id, dl — every doc, even
-    * ones whose text yields no postings row, so the append id-space
-    * check is exact).
+  /** The tokenized corpus half, one epoch's three tables: postings
+    * (term, doc_id, tf, dl — dl denormalized so scoring never joins a
+    * lengths table), the per-doc membership/length table `docs`
+    * (doc_id, dl — every doc, even ones whose text yields no postings
+    * row, so the append id-space check is exact), and the epoch's
+    * per-term `dfs` (term, df).
     */
-  private def tokenized(docs: DataFrame): (DataFrame, DataFrame) = {
+  private def tokenized(docs: DataFrame): Seq[(String, DataFrame)] = {
     val lengths = docs.select(col("doc_id"),
       size(split(col("text"), " ")).cast("long").as("dl"))
     val postings = docs
@@ -205,21 +218,8 @@ object Bm25 {
         explode(split(col("text"), " ")).as("term"))
       .groupBy(col("term"), col("doc_id"), col("dl"))
       .agg(count(lit(1)).as("tf"))
-    (postings, lengths)
-  }
-
-  private def writeBm25Epoch(spark: org.apache.spark.sql.SparkSession,
-      dir: String, epoch: Int, postings: DataFrame, lengths: DataFrame,
-      nDocs: Long, sumDl: Long, floor: Int = 0,
-      commitTs: Option[Long] = None): Unit = {
-    import spark.implicits._
-    val dfs = postings.groupBy(col("term"))
-      .agg(count(lit(1)).as("df"))
-    val meta = Seq((index.id, nDocs, sumDl, epoch))
-      .toDF("family", "n_docs", "sum_dl", "epoch")
-    graft.sources.EpochStore.writeEpoch(dir, epoch,
-      Seq("postings" -> postings, "docs" -> lengths, "dfs" -> dfs),
-      meta, floor, commitTs = commitTs)
+    Seq("postings" -> postings, "docs" -> lengths,
+      "dfs" -> postings.groupBy(col("term")).agg(count(lit(1)).as("df")))
   }
 
   /** Persist the corpus half as epoch 0 of an [[graft.sources
@@ -231,23 +231,8 @@ object Bm25 {
     * input reads this artifact's own files must build elsewhere).
     */
   def writeBm25Index(docs: DataFrame, dir: String,
-      commitTs: Option[Long] = None): Unit = {
-    val spark = docs.sparkSession
-    val d = graft.CacheScope.scoped(docs.select("doc_id", "text"))
-    val c = d.agg(count(lit(1)).as("n"),
-      count_distinct(col("doc_id")).as("nd"),
-      coalesce(sum(size(split(col("text"), " ")).cast("long")), lit(0L))
-        .as("sum_dl")).head()
-    require(c.getLong(0) == c.getLong(1),
-      "writeBm25Index: doc_id is not one id space — " +
-        s"${c.getLong(0) - c.getLong(1)} duplicate id(s) within the " +
-        "corpus; a doc indexed twice double-counts df and N. Re-key " +
-        "upstream.")
-    val (postings, lengths) = tokenized(d)
-    graft.sources.EpochStore.deleteAll(spark, dir)
-    writeBm25Epoch(spark, dir, 0, postings, lengths, c.getLong(0),
-      c.getLong(2), commitTs = commitTs)
-  }
+      commitTs: Option[Long] = None): Unit =
+    index.write(docs, dir, commitTs = commitTs)
 
   private case class Bm25IndexState(nDocs: Long, sumDl: Long,
       epoch: Int, floor: Int)
@@ -270,36 +255,8 @@ object Bm25 {
     * retried. Single writer.
     */
   def appendBm25Index(indexDir: String, moreDocs: DataFrame,
-      commitTs: Option[Long] = None): Unit = {
-    val spark = moreDocs.sparkSession
-    val st = bm25State(spark, indexDir, "appendBm25Index")
-    val d = graft.CacheScope.scoped(moreDocs.select("doc_id", "text"))
-    // dup/Σdl aggregate + id-clash premises fused into ONE action
-    // (r15 — Checks): each was its own driver job at drain cadence
-    val Seq(c, idc) = Checks.counts(
-      d.agg(count(lit(1)).as("n"),
-        count_distinct(col("doc_id")).as("nd"),
-        coalesce(sum(size(split(col("text"), " ")).cast("long")),
-          lit(0L)).as("sum_dl")),
-      d.select("doc_id")
-        .join(graft.sources.EpochStore.tableThroughLive(spark, indexDir,
-            "docs", "doc_id", st.floor, st.epoch).select("doc_id"),
-          Seq("doc_id"), "left_semi")
-        .agg(count(lit(1)).as("c")))
-    require(c(0) == c(1),
-      "appendBm25Index: doc_id is not one id space — " +
-        s"${c(0) - c(1)} duplicate id(s) within the " +
-        "appended shard; re-key upstream.")
-    require(idc(0) == 0,
-      s"appendBm25Index: appended doc_id(s) already indexed at " +
-        s"$indexDir — one id space is the contract (an id indexed " +
-        "twice double-counts df and N); re-key or dedup the shard " +
-        "first.")
-    val (postings, lengths) = tokenized(d)
-    writeBm25Epoch(spark, indexDir, st.epoch + 1, postings, lengths,
-      st.nDocs + c(0), st.sumDl + c(2), st.floor,
-      commitTs = commitTs)
-  }
+      commitTs: Option[Long] = None): Unit =
+    index.append(indexDir, moreDocs, commitTs)
 
   /** Score a bag-of-words query against the STORED index — [[topK]]'s
     * exact contract and output shape (doc_id, score_micro, n_terms;

@@ -71,13 +71,25 @@ object Dedup {
     * epochs by the append premise, so the compacted union IS the map —
     * compaction moves bytes, never rows (q163 gate). Its id-only
     * changes name owners; [[fingerprintIndexChanges]] carries the fp.
+    * The shard is (doc_id, fp); its one table is the owner map, and an
+    * append refuses a fingerprint already stored as well as an id.
     */
   val index: graft.sources.IndexFamily = graft.sources.IndexFamily(
     "fp-md5-norm-v1", "writeFingerprintIndex",
     "probing across fingerprint versions treats every stored doc as " +
       "novel",
     Seq(graft.sources.EpochStore.CompactTable("fps", Some("owner"))),
-    "fps", "owner", deleteKey = "doc_id", countCol = "corpus_count")
+    "fps", "owner", deleteKey = "doc_id", countCol = "corpus_count",
+    shard = graft.sources.IndexFamily.Shard("appendFingerprintIndex",
+      Seq("family", "corpus_count", "epoch"), fps,
+      (f, _) => Seq("fps" -> owners(f)),
+      dup = "; re-key upstream.",
+      clash = dir => s"appended doc_id(s) already own stored " +
+        s"fingerprints at $dir — one id space is the contract.",
+      clashOn = Some("fp" -> (dir =>
+        s"appended fingerprint(s) already exist at $dir — two owners " +
+          "for one identity. Append the survivors dedupAgainstIndex " +
+          "marked kept, not the raw shard."))))
 
   /** (doc_id, fp) for the given docs. NULL text → NULL fp: such a doc
     * has no content to match and is always its own owner downstream.
@@ -86,43 +98,24 @@ object Dedup {
     docs.select(col("doc_id"),
       graft.functions.TextFns.fingerprint(col("text")).as("fp"))
 
+  /** The (fp, owner) map of a shard: owner = min doc_id per distinct
+    * fp; NULL fps are not stored (a NULL has no identity to collide
+    * with). Shard-internal duplicate fps are one identity arriving
+    * together, so they collapse to their min-id owner.
+    */
+  private def owners(f: DataFrame): DataFrame =
+    f.filter(col("fp").isNotNull)
+      .groupBy(col("fp")).agg(min(col("doc_id")).as("owner"))
+
   /** Persist the corpus's fingerprint → owner map as epoch 0:
-    * `fps/epoch=N` (fp, owner = min doc_id per distinct fp; NULL fps
-    * are not stored — a NULL has no identity to collide with) and a
-    * one-row `meta_N` (family, corpus_count, epoch). Deletes
-    * any previous artifact at `dir` first — the EpochStore contract
-    * (single writer; a rebuild reading this artifact's own files must
-    * build to a fresh directory).
+    * `fps/epoch=N` (fp, owner) and a one-row `meta_N` (family,
+    * corpus_count, epoch). Deletes any previous artifact at `dir`
+    * first — the EpochStore contract (single writer; a rebuild reading
+    * this artifact's own files must build to a fresh directory).
     */
   def writeFingerprintIndex(corpus: DataFrame, dir: String,
-      commitTs: Option[Long] = None): Unit = {
-    val spark = corpus.sparkSession
-    val f = graft.CacheScope.scoped(fps(corpus))
-    val counts = f.agg(count(lit(1)).as("n"),
-      count_distinct(col("doc_id")).as("nd")).head()
-    require(counts.getLong(0) == counts.getLong(1),
-      "writeFingerprintIndex: doc_id is not one id space — " +
-        s"${counts.getLong(0) - counts.getLong(1)} duplicate id(s) " +
-        "within the corpus; re-key upstream.")
-    val owners = f.filter(col("fp").isNotNull)
-      .groupBy(col("fp")).agg(min(col("doc_id")).as("owner"))
-    graft.sources.EpochStore.deleteAll(spark, dir)
-    writeFpEpoch(spark, dir, 0, owners, counts.getLong(0),
-      commitTs = commitTs)
-  }
-
-  private def writeFpEpoch(spark: org.apache.spark.sql.SparkSession,
-      dir: String, epoch: Int, owners: DataFrame,
-      totalCount: Long, floor: Int = 0,
-      allowAdditive: Boolean = false,
-      commitTs: Option[Long] = None): Unit = {
-    import spark.implicits._
-    val meta = Seq((index.id, totalCount, epoch))
-      .toDF("family", "corpus_count", "epoch")
-    graft.sources.EpochStore.writeEpoch(dir, epoch,
-      Seq("fps" -> owners), meta, floor,
-      allowAdditive = allowAdditive, commitTs = commitTs)
-  }
+      commitTs: Option[Long] = None): Unit =
+    index.write(corpus, dir, commitTs = commitTs)
 
   /** Broadcast cap for the shard side of [[dedupAgainstIndex]]'s probe
     * (r11 ADVICE: this path must not silently couple to the ANN cap's
@@ -136,16 +129,6 @@ object Dedup {
     * which completes.
     */
   private[graft] val MaxBroadcastFpRows: Long = 4L * 1000 * 1000
-
-  private case class FpIndexState(floor: Int, epoch: Int, count: Long)
-
-  private def fpState(spark: org.apache.spark.sql.SparkSession,
-      dir: String, who: String, asOf: Option[Int] = None)
-      : FpIndexState = {
-    val st = index.serving(spark, dir, who, asOf)
-    FpIndexState(st.floor, st.epoch,
-      st.meta.getAs[Long]("corpus_count"))
-  }
 
   /** Verdict an arriving shard against the stored corpus: per incoming
     * doc — its fingerprint, its OWNER (the stored owner if the fp is
@@ -176,13 +159,13 @@ object Dedup {
     // has since appended, deleted, and re-appended. History retention
     // is the floor (compaction is snapshot expiry); same plan, pure
     // partition pruning.
-    val st = fpState(spark, indexDir, "dedupAgainstIndex", asOf)
+    val st = index.serving(spark, indexDir, "dedupAgainstIndex", asOf)
     probeAgainst(spark, indexDir, st, incoming, "dedupAgainstIndex")
   }
 
   private def probeAgainst(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, st: FpIndexState, incoming: DataFrame,
-      who: String): DataFrame = {
+      indexDir: String, st: graft.sources.EpochStore.Serving,
+      incoming: DataFrame, who: String): DataFrame = {
     val inc = graft.CacheScope.scoped(fps(incoming))
     val counts = inc.agg(count(lit(1)).as("n"),
       count_distinct(col("doc_id")).as("nd")).head()
@@ -257,50 +240,16 @@ object Dedup {
     */
   def appendFingerprintIndex(indexDir: String, survivors: DataFrame,
       evolve: Seq[(String, Column)] = Seq.empty,
-      commitTs: Option[Long] = None): Unit = {
-    val spark = survivors.sparkSession
-    val st = fpState(spark, indexDir, "appendFingerprintIndex")
-    val f = graft.CacheScope.scoped(fps(survivors))
-    val stored = graft.sources.EpochStore.tableThroughLive(spark,
-      indexDir, "fps", "owner", st.floor, st.epoch)
-    val owners = f.filter(col("fp").isNotNull)
-      .groupBy(col("fp")).agg(min(col("doc_id")).as("owner"))
-    // all three premises (dup, id-clash, fp-clash) fused into ONE
-    // action (r15 — Checks): three one-row aggregates that each paid a
-    // full driver job round-trip at drain cadence
-    val Seq(dup, idc, fpc) = Checks.counts(
-      f.agg(count(lit(1)).as("n"),
-        count_distinct(col("doc_id")).as("nd")),
-      f.select(col("doc_id").as("owner"))
-        .join(stored.select("owner"), Seq("owner"), "left_semi")
-        .agg(count(lit(1)).as("c")),
-      owners.select("fp")
-        .join(stored.select("fp"), Seq("fp"), "left_semi")
-        .agg(count(lit(1)).as("c")))
-    val counts = dup
-    require(counts(0) == counts(1),
-      "appendFingerprintIndex: doc_id is not one id space — " +
-        s"${counts(0) - counts(1)} duplicate id(s) " +
-        "within the appended shard; re-key upstream.")
-    require(idc(0) == 0,
-      s"appendFingerprintIndex: appended doc_id(s) already own stored " +
-        s"fingerprints at $indexDir — one id space is the contract.")
-    require(fpc(0) == 0,
-      s"appendFingerprintIndex: appended fingerprint(s) already exist " +
-        s"at $indexDir — two owners for one identity. Append the " +
-        "survivors dedupAgainstIndex marked kept, not the raw shard.")
-    evolve.foreach { case (n, _) =>
-      require(!owners.columns.contains(n),
-        s"appendFingerprintIndex: evolve column '$n' already exists " +
-          "in the owner map — replacing a stored column is drift, " +
-          "not evolution; pick a new name or rebuild.")
-    }
-    val widened = evolve.foldLeft(owners) { case (df, (n, c)) =>
-      df.withColumn(n, c) }
-    writeFpEpoch(spark, indexDir, st.epoch + 1, widened,
-      st.count + counts(0), st.floor,
-      allowAdditive = evolve.nonEmpty, commitTs = commitTs)
-  }
+      commitTs: Option[Long] = None): Unit =
+    index.append(indexDir, survivors, commitTs,
+      widen = Option.when(evolve.nonEmpty)(owners =>
+        evolve.foldLeft(owners) { case (df, (n, c)) =>
+          require(!owners.columns.contains(n),
+            s"appendFingerprintIndex: evolve column '$n' already exists " +
+              "in the owner map — replacing a stored column is drift, " +
+              "not evolution; pick a new name or rebuild.")
+          df.withColumn(n, c)
+        }))
 
   /** The live (fp, owner) map the artifact currently serves —
     * tombstone-aware, the "audit what the index holds" read (and the
@@ -310,7 +259,7 @@ object Dedup {
     */
   def storedOwners(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame = {
-    val st = fpState(spark, indexDir, "storedOwners")
+    val st = index.serving(spark, indexDir, "storedOwners")
     graft.sources.EpochStore.tableThroughLive(spark, indexDir, "fps",
       "owner", st.floor, st.epoch)
   }
@@ -333,7 +282,7 @@ object Dedup {
     */
   def fingerprintIndexChanges(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, fromEpoch: Int, toEpoch: Int): DataFrame = {
-    fpState(spark, indexDir, "fingerprintIndexChanges")
+    index.serving(spark, indexDir, "fingerprintIndexChanges")
     val added = graft.sources.EpochStore.addedBetween(spark, indexDir,
         "fps", "owner", fromEpoch, toEpoch, "fingerprintIndexChanges",
         "writeFingerprintIndex")

@@ -682,7 +682,18 @@ object Multimodal {
     Seq(graft.sources.EpochStore.CompactTable("hashes", Some("media_id")),
       graft.sources.EpochStore.CompactTable("bands", Some("media_id"))),
     "hashes", "media_id", deleteKey = "media_id",
-    countCol = "corpus_count")
+    countCol = "corpus_count",
+    shard = graft.sources.IndexFamily.Shard("appendDHashIndex",
+      Seq("family", "bands", "corpus_count", "epoch"),
+      dHashes(_).toDF(),
+      (h, _) => Seq("hashes" -> h.select("media_id", "dhash_hi", "dhash_lo"),
+        "bands" -> dHashBandRows(h)),
+      dup = "; a shared id silently drops its real pair through the " +
+        "self-pair filter. Re-key upstream.",
+      clash = dir => s"appended media_id(s) already indexed at $dir — " +
+        "one id space is the contract (an id stored twice silently " +
+        "drops its future probe pairs); re-key or dedup the shard " +
+        "first."))
 
   /** Broadcast cap for an incoming shard's band rows: (long, int, long)
     * ≈ the cp band-row width the 8M-row ≈ ~800 MB heap argument was
@@ -715,40 +726,6 @@ object Multimodal {
       .select(col("media_id"), col("bk.band_id").as("band_id"),
         col("bk.band_key").as("band_key"))
 
-  private def requireOneMediaIdSpace(hashes: DataFrame, who: String,
-      scope: String): Long = {
-    val c = hashes.agg(count(lit(1)).as("n"),
-      count_distinct(col("media_id")).as("nd")).head()
-    require(c.getLong(0) == c.getLong(1),
-      s"$who: media_id is not one id space — " +
-        s"${c.getLong(0) - c.getLong(1)} duplicate id(s) $scope; a " +
-        "shared id silently drops its real pair through the self-pair " +
-        "filter. Re-key upstream.")
-    c.getLong(0)
-  }
-
-  private def writeDHashEpoch(spark: org.apache.spark.sql.SparkSession,
-      dir: String, epoch: Int, hashes: DataFrame, totalCount: Long,
-      floor: Int = 0, commitTs: Option[Long] = None): Unit = {
-    import spark.implicits._
-    val meta = Seq((index.id, 4, totalCount, epoch))
-      .toDF("family", "bands", "corpus_count", "epoch")
-    graft.sources.EpochStore.writeEpoch(dir, epoch,
-      Seq("hashes" -> hashes.select("media_id", "dhash_hi", "dhash_lo"),
-        "bands" -> dHashBandRows(hashes)), meta, floor,
-      commitTs = commitTs)
-  }
-
-  private case class DHashIndexState(count: Long, epoch: Int, floor: Int)
-
-  private def dHashState(spark: org.apache.spark.sql.SparkSession,
-      dir: String, who: String, asOf: Option[Int] = None)
-      : DHashIndexState = {
-    val st = index.serving(spark, dir, who, asOf)
-    DHashIndexState(st.meta.getAs[Long]("corpus_count"), st.epoch,
-      st.floor)
-  }
-
   /** Persist the corpus half of image near-dup detection as epoch 0 of
     * an [[graft.sources.EpochStore]] artifact: the DECODED corpus's
     * dHashes (`hashes/`: media_id, dhash_hi, dhash_lo) and their 4×16
@@ -763,14 +740,8 @@ object Multimodal {
     * hot-bucket note.
     */
   def writeDHashIndex(docs: DataFrame, dir: String,
-      commitTs: Option[Long] = None): Unit = {
-    val spark = docs.sparkSession
-    val h = graft.CacheScope.scoped(dHashes(docs).toDF())
-    val n = requireOneMediaIdSpace(h, "writeDHashIndex",
-      "within the corpus")
-    graft.sources.EpochStore.deleteAll(spark, dir)
-    writeDHashEpoch(spark, dir, 0, h, n, commitTs = commitTs)
-  }
+      commitTs: Option[Long] = None): Unit =
+    index.write(docs, dir, _ => Seq("bands" -> 4), commitTs)
 
   /** FOLD an arriving shard's survivors into the artifact as epoch
     * N+1 under the FROZEN 4×16 banding — no parameter-currency premise
@@ -782,28 +753,8 @@ object Multimodal {
     * writer; meta last; torn appends invisible and retried.
     */
   def appendDHashIndex(indexDir: String, more: DataFrame,
-      commitTs: Option[Long] = None): Unit = {
-    val spark = more.sparkSession
-    val st = dHashState(spark, indexDir, "appendDHashIndex")
-    val h = graft.CacheScope.scoped(dHashes(more).toDF())
-    // dup + id-clash premises fused into ONE action (r15 — Checks);
-    // the decode cost lands once either way (h is cache-scoped)
-    val (n, nd, clash) = Checks.dupAndClash(h, "media_id",
-      graft.sources.EpochStore.tableThroughLive(spark, indexDir,
-        "hashes", "media_id", st.floor, st.epoch))
-    require(n == nd,
-      s"appendDHashIndex: media_id is not one id space — " +
-        s"${n - nd} duplicate id(s) within the appended shard; a " +
-        "shared id silently drops its real pair through the self-pair " +
-        "filter. Re-key upstream.")
-    require(clash == 0,
-      s"appendDHashIndex: appended media_id(s) already indexed at " +
-        s"$indexDir — one id space is the contract (an id stored twice " +
-        "silently drops its future probe pairs); re-key or dedup the " +
-        "shard first.")
-    writeDHashEpoch(spark, indexDir, st.epoch + 1, h, st.count + n,
-      st.floor, commitTs = commitTs)
-  }
+      commitTs: Option[Long] = None): Unit =
+    index.append(indexDir, more, commitTs)
 
   /** Probe the stored artifact with an arriving shard: every pair at
     * Hamming ≤ `maxHamming` with at least one incoming side — raw
@@ -828,7 +779,7 @@ object Multimodal {
     // asOf (r13): verdict against the corpus exactly as that epoch's
     // commit served it — the banding is parameter-free, so every
     // horizon is probe-valid; same plan, pure partition pruning
-    val st = dHashState(spark, indexDir, "imageDHashNearIndexed",
+    val st = index.serving(spark, indexDir, "imageDHashNearIndexed",
       asOf)
     val inc = graft.CacheScope.scoped(dHashes(incoming).toDF())
     val storedHashes = graft.sources.EpochStore.tableThroughLive(spark,

@@ -1034,17 +1034,25 @@ object TextDedup {
     "probing across window conventions silently misses contamination",
     Seq(graft.sources.EpochStore.CompactTable("docs", Some("doc_id")),
       graft.sources.EpochStore.CompactTable("grams", Some("doc_id"))),
-    "docs", "doc_id", deleteKey = "doc_id", countCol = "bench_count")
+    "docs", "doc_id", deleteKey = "doc_id", countCol = "bench_count",
+    shard = graft.sources.IndexFamily.Shard("appendDeconIndex",
+      Seq("family", "w", "bench_count", "epoch"),
+      _.select("doc_id", "text"),
+      (b, meta) => deconTables(b, meta.getAs[Int]("w")),
+      dup = "; re-key upstream.",
+      clash = dir => s"appended benchmark doc_id(s) already stored at " +
+        s"$dir — one id space is the contract (a later delete of that " +
+        "id would mis-target both versions); re-key the wave.",
+      corpusNoun = "the benchmark suite",
+      shardNoun = "the appended benchmark wave"))
 
-  private case class DeconIndexState(w: Int, benchCount: Long,
-      epoch: Int, floor: Int)
+  private case class DeconIndexState(w: Int, epoch: Int, floor: Int)
 
   private def deconState(spark: org.apache.spark.sql.SparkSession,
       dir: String, who: String, asOf: Option[Int] = None)
       : DeconIndexState = {
     val st = index.serving(spark, dir, who, asOf)
-    DeconIndexState(st.meta.getAs[Int]("w"),
-      st.meta.getAs[Long]("bench_count"), st.epoch, st.floor)
+    DeconIndexState(st.meta.getAs[Int]("w"), st.epoch, st.floor)
   }
 
   /** A benchmark shard's two tables: `docs` (doc_id — EVERY doc, even
@@ -1053,7 +1061,7 @@ object TextDedup {
     * w-char windows).
     */
   private def deconTables(benchmark: DataFrame, w: Int)
-      : (DataFrame, DataFrame) = {
+      : Seq[(String, DataFrame)] = {
     val docs = benchmark.select(col("doc_id"))
     val grams = benchmark
       .filter(length(col("text")) >= w)
@@ -1062,19 +1070,7 @@ object TextDedup {
         s"transform(sequence(1, length(t) - ${w - 1}), " +
           s"i -> substring(t, i, $w))")).as("gram"))
       .distinct()
-    (docs, grams)
-  }
-
-  private def writeDeconEpoch(spark: org.apache.spark.sql.SparkSession,
-      dir: String, epoch: Int, docs: DataFrame, grams: DataFrame,
-      w: Int, benchCount: Long, floor: Int = 0,
-      commitTs: Option[Long] = None): Unit = {
-    import spark.implicits._
-    val meta = Seq((index.id, w, benchCount, epoch))
-      .toDF("family", "w", "bench_count", "epoch")
-    graft.sources.EpochStore.writeEpoch(dir, epoch,
-      Seq("docs" -> docs, "grams" -> grams), meta, floor,
-      commitTs = commitTs)
+    Seq("docs" -> docs, "grams" -> grams)
   }
 
   /** Persist the benchmark suite's window set as epoch 0: `docs/`
@@ -1090,18 +1086,7 @@ object TextDedup {
   def writeDeconIndex(benchmark: DataFrame, dir: String, w: Int,
       commitTs: Option[Long] = None): Unit = {
     require(w >= 2, "a 1-char window marks shared letters; use w >= 2")
-    val spark = benchmark.sparkSession
-    val b = graft.CacheScope.scoped(benchmark.select("doc_id", "text"))
-    val c = b.agg(count(lit(1)).as("n"),
-      count_distinct(col("doc_id")).as("nd")).head()
-    require(c.getLong(0) == c.getLong(1),
-      "writeDeconIndex: doc_id is not one id space — " +
-        s"${c.getLong(0) - c.getLong(1)} duplicate id(s) within the " +
-        "benchmark suite; re-key upstream.")
-    val (docs, grams) = deconTables(b, w)
-    graft.sources.EpochStore.deleteAll(spark, dir)
-    writeDeconEpoch(spark, dir, 0, docs, grams, w, c.getLong(0),
-      commitTs = commitTs)
+    index.write(benchmark, dir, _ => Seq("w" -> w), commitTs)
   }
 
   /** FOLD a new benchmark wave into the suite as epoch N+1 (a fresh
@@ -1114,26 +1099,8 @@ object TextDedup {
     * invisible and retried. Single writer.
     */
   def appendDeconIndex(indexDir: String, moreBench: DataFrame,
-      commitTs: Option[Long] = None): Unit = {
-    val spark = moreBench.sparkSession
-    val st = deconState(spark, indexDir, "appendDeconIndex")
-    val b = graft.CacheScope.scoped(moreBench.select("doc_id", "text"))
-    // dup + id-clash premises fused into ONE action (r15 — Checks)
-    val (n, nd, idClash) = Checks.dupAndClash(b, "doc_id",
-      graft.sources.EpochStore.tableThroughLive(spark, indexDir,
-        "docs", "doc_id", st.floor, st.epoch))
-    require(n == nd,
-      "appendDeconIndex: doc_id is not one id space — " +
-        s"${n - nd} duplicate id(s) within the " +
-        "appended benchmark wave; re-key upstream.")
-    require(idClash == 0,
-      s"appendDeconIndex: appended benchmark doc_id(s) already stored " +
-        s"at $indexDir — one id space is the contract (a later delete " +
-        "of that id would mis-target both versions); re-key the wave.")
-    val (docs, grams) = deconTables(b, st.w)
-    writeDeconEpoch(spark, indexDir, st.epoch + 1, docs, grams, st.w,
-      st.benchCount + n, st.floor, commitTs = commitTs)
-  }
+      commitTs: Option[Long] = None): Unit =
+    index.append(indexDir, moreBench, commitTs)
 
   /** The live stored benchmark ids — tombstone-aware, the audit read a
     * retirement pipeline filters its delete set from (snapshot to disk

@@ -48,6 +48,15 @@ import graft.sources.EpochStore
   */
 object TextIndex {
 
+  /** The duplicate-id consequence every pair path and the family's
+    * build and append refusals share (defined before [[index]], which
+    * reads it at initialization).
+    */
+  private val PairDupConsequence: String =
+    "A shared doc_id would silently drop its real pair through the " +
+      "self-pair filter and double-match the verify joins; " +
+      "de-duplicate or re-key upstream."
+
   /** The MinHash text family on the shared lifecycle. The id is
     * bumped if the shingling (w=3 word grams), the signature family
     * (`graft_minhash64`), or the band hashing ever change, so an old
@@ -64,7 +73,17 @@ object TextIndex {
     "probing across hash versions silently loses recall",
     Seq(EpochStore.CompactTable("docs", Some("doc_id")),
       EpochStore.CompactTable("bands", Some("doc_id"))),
-    "docs", "doc_id", deleteKey = "doc_id", countCol = "corpus_count")
+    "docs", "doc_id", deleteKey = "doc_id", countCol = "corpus_count",
+    shard = graft.sources.IndexFamily.Shard("appendJaccardIndex",
+      Seq("family", "rows_per_band", "bands", "threshold", "target_miss",
+        "shingle_k", "corpus_count", "epoch"), shingled,
+      (sh, meta) => Seq("docs" -> sh, "bands" -> bandRows(sh,
+        meta.getAs[Int]("rows_per_band"), meta.getAs[Int]("bands"))),
+      dup = s". $PairDupConsequence",
+      clash = dir => s"appended doc_id(s) already exist in the index at " +
+        s"$dir — one id space is the contract (an id stored twice " +
+        "silently drops its future probe pairs); re-key or dedup the " +
+        "shard first."))
 
   /** Signature budget: `graft_minhash64` emits 64 slots. */
   private val SigSlots = 64
@@ -176,11 +195,6 @@ object TextIndex {
         (col("ni").cast("double") / col("un")).as("jaccard"))
   }
 
-  private val PairDupConsequence: String =
-    "A shared doc_id would silently drop its real pair through the " +
-      "self-pair filter and double-match the verify joins; " +
-      "de-duplicate or re-key upstream."
-
   /** LIVE arrival dedup: every pair at exact shingle-Jaccard ≥
     * threshold with at least one `incoming` side — incoming×corpus
     * and incoming×incoming, corpus×corpus structurally impossible
@@ -243,38 +257,14 @@ object TextIndex {
   def writeJaccardIndex(corpus: DataFrame, dir: String,
       threshold: Double, targetMiss: Double = 1e-4,
       commitTs: Option[Long] = None): Unit = {
-    val spark = corpus.sparkSession
     val (r, b) = bandingFor(threshold, targetMiss)
-    val sh = graft.CacheScope.scoped(shingled(corpus))
-    val agg = sh.agg(count(lit(1)).as("n"),
-      count_distinct(col("doc_id")).as("nd")).head()
-    require(agg.getLong(0) == agg.getLong(1),
-      "writeJaccardIndex: doc_id is not one id space — " +
-        s"${agg.getLong(0) - agg.getLong(1)} duplicate id(s) within " +
-        s"the corpus. $PairDupConsequence")
-    EpochStore.deleteAll(spark, dir)
-    writeEpoch(dir, 0, sh, r, b, threshold, targetMiss, agg.getLong(0),
-      commitTs = commitTs)
-  }
-
-  private def writeEpoch(dir: String, epoch: Int, sh: DataFrame,
-      r: Int, b: Int, threshold: Double, targetMiss: Double,
-      totalCount: Long, floor: Int = 0,
-      commitTs: Option[Long] = None): Unit = {
-    val spark = sh.sparkSession
-    import spark.implicits._
-    val meta = Seq((index.id, r, b, threshold, targetMiss,
-        3, totalCount, epoch))
-      .toDF("family", "rows_per_band", "bands", "threshold",
-        "target_miss", "shingle_k", "corpus_count", "epoch")
-    EpochStore.writeEpoch(dir, epoch,
-      Seq("docs" -> sh, "bands" -> bandRows(sh, r, b)), meta, floor,
-      commitTs = commitTs)
+    index.write(corpus, dir, _ => Seq("rows_per_band" -> r, "bands" -> b,
+      "threshold" -> threshold, "target_miss" -> targetMiss,
+      "shingle_k" -> 3), commitTs)
   }
 
   private case class JaccardIndexState(r: Int, b: Int,
-      threshold: Double, targetMiss: Double, count: Long, epoch: Int,
-      floor: Int)
+      threshold: Double, targetMiss: Double, epoch: Int, floor: Int)
 
   private def jaccardState(spark: org.apache.spark.sql.SparkSession,
       dir: String, who: String, asOf: Option[Int] = None)
@@ -283,8 +273,7 @@ object TextIndex {
     val meta = st.meta
     JaccardIndexState(meta.getAs[Int]("rows_per_band"),
       meta.getAs[Int]("bands"), meta.getAs[Double]("threshold"),
-      meta.getAs[Double]("target_miss"),
-      meta.getAs[Long]("corpus_count"), st.epoch, st.floor)
+      meta.getAs[Double]("target_miss"), st.epoch, st.floor)
   }
 
   /** The shared drift front door of [[jaccardPairsIndexed]] and
@@ -321,27 +310,8 @@ object TextIndex {
     * silently drops its future probe pairs). Single writer.
     */
   def appendJaccardIndex(indexDir: String, more: DataFrame,
-      commitTs: Option[Long] = None): Unit = {
-    val spark = more.sparkSession
-    val st = jaccardState(spark, indexDir, "appendJaccardIndex")
-    val sh = graft.CacheScope.scoped(shingled(more))
-    // dup + id-clash premises fused into ONE action (r15 — Checks)
-    val (n, nd, nClash) = Checks.dupAndClash(sh, "doc_id",
-      EpochStore.tableThroughLive(spark, indexDir, "docs", "doc_id",
-        st.floor, st.epoch))
-    require(n == nd,
-      "appendJaccardIndex: doc_id is not one id space — " +
-        s"${n - nd} duplicate id(s) within " +
-        s"the appended shard. $PairDupConsequence")
-    require(nClash == 0,
-      s"appendJaccardIndex: appended doc_id(s) already exist in the " +
-        s"index at $indexDir — one id space is the contract (an id " +
-        "stored twice silently drops its future probe pairs); re-key " +
-        "or dedup the shard first.")
-    writeEpoch(indexDir, st.epoch + 1, sh, st.r, st.b, st.threshold,
-      st.targetMiss, st.count + n, st.floor,
-      commitTs = commitTs)
-  }
+      commitTs: Option[Long] = None): Unit =
+    index.append(indexDir, more, commitTs)
 
   /** The live stored doc ids — tombstone-aware, the "audit what the
     * index holds" read (and the frame a retraction pipeline filters

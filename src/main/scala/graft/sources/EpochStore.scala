@@ -73,9 +73,9 @@ import org.apache.spark.sql.functions.{col, lit}
   * What stays with each index family: the meta SCHEMA, the hash-family
   * version string and its drift refusals, and parameter-currency
   * premises — those are semantics of the family's hashes, not of the
-  * layout. Each family declares its version string, refusal and tables
-  * once as an [[IndexFamily]], whose generic lifecycle rides this
-  * layout.
+  * layout. Each family declares them once as an [[IndexFamily]] (meta
+  * schema, shard tables, refusals), whose generic lifecycle — build
+  * and append included — rides this layout.
   */
 object EpochStore {
 
@@ -148,6 +148,9 @@ object EpochStore {
   // floor-guarded away from. So a successfully-read meta Row can be
   // cached for the JVM's life, keyed on its path; [[deleteAll]] clears
   // the artifact's prefix (a rebuild may recommit the same numbers).
+  // Like the shape cache it is POPULATED AT WRITE TIME: [[writeEpoch]]
+  // puts the row it just committed, so the serving read after a build,
+  // append, delete or compaction pays no read-back.
   //
   // SINGLE-PROCESS-READER ASSUMPTION (r15 ADVICE): invalidation is
   // in-process only. A rebuild by a DIFFERENT process at the same path
@@ -531,11 +534,23 @@ object EpochStore {
             ownedTables.contains(DeletesTable)) "delete"
         else if (tables.nonEmpty || ownedTables.nonEmpty) "data"
         else "retention"
-      meta.withColumn("floor_epoch", lit(floor))
+      val stamped = meta.withColumn("floor_epoch", lit(floor))
         .withColumn("commit_ts",
           commitTs.map(lit(_)).getOrElse(lit(null)).cast("long"))
         .withColumn("commit_kind", lit(kind))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta_$epoch")
+      // the committed row, as the next serving read would read it back
+      // (every parquet column reads nullable) — collected from the
+      // one-row driver-local meta frame, which runs no Spark job
+      val committed = stamped.collect()
+      stamped.coalesce(1).write.mode("overwrite")
+        .parquet(s"$dir/meta_$epoch")
+      // seeded only after the write returned: the write-once cache must
+      // never hold a meta that did not commit
+      if (committed.length == 1) metaRows.put(s"$dir/meta_$epoch",
+        new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+          committed(0).toSeq.toArray,
+          org.apache.spark.sql.types.StructType(committed(0).schema.fields
+            .map(_.copy(nullable = true)))))
     } finally {
       if (lease.isEmpty) releaseLease(fs, dir, held)
     }
@@ -820,7 +835,12 @@ object EpochStore {
     // order (the additive premise pins the stored prefix). The per-dir
     // shape consult rides the write-once cache, so the homogeneous
     // fast path — every artifact that never evolved — stays today's
-    // single multi-dir scan with zero extra footer reads in-JVM.
+    // single multi-dir scan with zero extra footer reads in-JVM. Each
+    // run reads under its cached shape, so no read pays a footer-
+    // inference job; `basePath` discovery still adds `epoch`.
+    def read(path: String) = spark.read.schema(
+      org.apache.spark.sql.types.StructType(storedShapeAt(spark, path)
+        .map { case (n, t) => org.apache.spark.sql.types.StructField(n, t) }))
     val delta =
       if (dirs.isEmpty) None
       else {
@@ -834,12 +854,12 @@ object EpochStore {
           }
         }.reverse.map { case (_, ds) => ds.reverse }
         Some(runs
-          .map(ds => spark.read.option("basePath", s"$dir/$name")
+          .map(ds => read(ds.head).option("basePath", s"$dir/$name")
             .parquet(ds: _*))
           .reduce((a, b) => a.unionByName(b, allowMissingColumns = true)))
       }
     val base = cp.map(c =>
-      spark.read.parquet(c).withColumn("epoch", lit(floor)))
+      read(c).parquet(c).withColumn("epoch", lit(floor)))
     (base, delta) match {
       // allowMissingColumns: after an evolution the checkpoint (the
       // folded OLD shape) is narrower than the deltas until the next
@@ -1331,18 +1351,18 @@ object EpochStore {
   }
 
   /** A committed meta row carried into epoch `epoch`: every family
-    * column kept verbatim, `epoch` set, each `shrink` column reduced by
-    * its amount (a delete's counts), and the layout's `floor_epoch`
-    * dropped for [[writeEpoch]] to restamp (with `commit_ts` and
-    * `commit_kind`). The one meta rewrite compaction and deletes share.
+    * column kept verbatim, `epoch` set, and each `delta` column moved
+    * by its signed amount (an append's counts grow, a delete's shrink);
+    * [[writeEpoch]] restamps the layout's `floor_epoch`, `commit_ts`
+    * and `commit_kind` in place. The one meta rewrite appends, deletes
+    * and compaction share.
     */
   private[graft] def carriedMeta(spark: SparkSession, meta: Row,
-      epoch: Int, shrink: Seq[(String, Long)] = Seq.empty): DataFrame =
-    shrink.foldLeft(spark.createDataFrame(
+      epoch: Int, delta: Seq[(String, Long)] = Seq.empty): DataFrame =
+    delta.foldLeft(spark.createDataFrame(
         java.util.Collections.singletonList(meta), meta.schema)
-      .withColumn("epoch", lit(epoch))
-      .drop("floor_epoch")) { case (m, (c, n)) =>
-      m.withColumn(c, col(c) - lit(n))
+      .withColumn("epoch", lit(epoch))) { case (m, (c, d)) =>
+      m.withColumn(c, col(c) + lit(d))
     }
 
   /** The hidden rewrite-staging dir inside each table root — dot-

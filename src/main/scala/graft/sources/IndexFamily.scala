@@ -1,13 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, count,
   count_distinct, lit}
 
 /** One stored-index family on the [[EpochStore]] layout, as data, and
-  * the ONE lifecycle every family shares: the serving read with the
-  * family refusal, delete, compact, vacuum, timestamp as-of and id
-  * changes.
+  * the ONE lifecycle every family shares: build, append, the serving
+  * read with the family refusal, delete, compact, vacuum, timestamp
+  * as-of and id changes.
   *
   *   - `id`: the family version string the family writes into its meta
   *     `family` column; an artifact built under another id refuses.
@@ -17,18 +17,22 @@ import org.apache.spark.sql.functions.{broadcast, col, count,
   *   - `tables`: the tables a compaction rewrites (and a vacuum
   *     reclaims), with their tombstone keys and fold hooks.
   *   - `idTable` / `idCol`: the table and id column [[changes]] reports
-  *     and [[delete]] checks liveness against.
-  *   - `deleteKey`: the column a delete set names its ids in.
-  *   - `countCol`: the meta count a delete shrinks by the deleted ids.
+  *     and [[delete]] checks liveness (and [[append]] clashes) against.
+  *   - `deleteKey`: the column a delete set — and a build or append
+  *     shard — names its ids in.
+  *   - `countCol`: the meta count an append grows and a delete shrinks
+  *     by the number of ids.
+  *   - `shard`: how a build or append input becomes the epoch's tables
+  *     and meta — see [[IndexFamily.Shard]].
   *   - `onDelete`: the family's extra delete-epoch content — see
   *     [[IndexFamily.DeleteHook]] (BM25 only).
   *
-  * What stays with each family: write, append and probe, its meta
-  * schema, and its currency and drift premises.
+  * What stays with each family: its probes, and its currency and drift
+  * premises.
   */
 final case class IndexFamily(id: String, writer: String, mismatch: String,
     tables: Seq[EpochStore.CompactTable], idTable: String, idCol: String,
-    deleteKey: String, countCol: String,
+    deleteKey: String, countCol: String, shard: IndexFamily.Shard,
     onDelete: Option[IndexFamily.DeleteHook] = None) {
 
   /** The artifact's serving state (`asOf` = None) or its historical
@@ -47,6 +51,112 @@ final case class IndexFamily(id: String, writer: String, mismatch: String,
         s"code reads '$id' — rebuild it with $writer; $mismatch")
     st
   }
+
+  /** BUILD the artifact from `input` as epoch 0: the projected shard,
+    * cached once, passes the one-id-space premise (one action, which
+    * also evaluates the shard's `grow` aggregates), then any previous
+    * artifact at `dir` is deleted ([[EpochStore.deleteAll]] — a rebuild
+    * whose input reads this artifact's own files must build to a fresh
+    * directory) and the epoch commits meta-last. The meta row is
+    * `shard.meta` filled from the family id, epoch 0, `countCol` = the
+    * shard's row count, each grown column = its aggregate, and
+    * `params(n)` — the family's parameter columns, which every later
+    * epoch carries frozen. Single writer.
+    */
+  def write(input: DataFrame, dir: String,
+      params: Long => Seq[(String, Any)] = _ => Seq.empty,
+      commitTs: Option[Long] = None): Unit = {
+    val spark = input.sparkSession
+    val s = scopedOnce(shard.project(input))
+    val idSpace = idSpaceOf(s)
+    val Seq(c) = graft.operators.Checks.counts(idSpace)
+    requireOneIdSpace(writer, shard.corpusNoun, c)
+    val values = (Seq("family" -> id, countCol -> c(0), "epoch" -> 0) ++
+      grown(idSpace, c) ++ params(c(0))).toMap
+    require(values.keySet == shard.meta.toSet,
+      s"$writer: meta columns ${values.keySet.mkString(", ")} are not " +
+        s"the family's meta schema ${shard.meta.mkString(", ")}")
+    val meta = new org.apache.spark.sql.catalyst.expressions
+      .GenericRowWithSchema(shard.meta.map(values).toArray,
+        org.apache.spark.sql.types.StructType(shard.meta.map(m =>
+          org.apache.spark.sql.types.StructField(m,
+            org.apache.spark.sql.catalyst.expressions.Literal(values(m))
+              .dataType))))
+    EpochStore.deleteAll(spark, dir)
+    EpochStore.writeEpoch(dir, 0, shard.build(s, meta),
+      spark.createDataFrame(java.util.Collections.singletonList[Row](meta),
+        meta.schema),
+      commitTs = commitTs)
+  }
+
+  /** FOLD `more` into the artifact as epoch N+1 under the parameters
+    * frozen in the stored meta. The projected shard, cached once, is
+    * checked in ONE action: it is one id space, and none of its ids is
+    * live in `idTable` (nor, with `shard.clashOn`, any of its second
+    * keys) — an id stored twice silently drops its probe pairs or
+    * double-counts its statistics. Refusal order: duplicates, the
+    * family's `shard.check`, then the clashes. The meta is the stored
+    * row carried forward ([[EpochStore.carriedMeta]]): `epoch` + 1,
+    * `countCol` + n, each grown column + its aggregate, every other
+    * column verbatim. `widen` (additive schema evolution) widens the
+    * `idTable` frame before the write. Meta last, so a torn append is
+    * invisible and retried. Single writer.
+    */
+  def append(indexDir: String, more: DataFrame,
+      commitTs: Option[Long] = None,
+      widen: Option[DataFrame => DataFrame] = None): Unit = {
+    val spark = more.sparkSession
+    val who = shard.appender
+    val st = serving(spark, indexDir, who)
+    val s = scopedOnce(shard.project(more))
+    val live = EpochStore.tableThroughLive(spark, indexDir, idTable, idCol,
+      st.floor, st.epoch)
+    val clashes = (deleteKey, idCol, shard.clash) +:
+      shard.clashOn.toSeq.map { case (k, refusal) => (k, k, refusal) }
+    val idSpace = idSpaceOf(s)
+    val c +: hits = graft.operators.Checks.counts(idSpace +:
+      clashes.map { case (mine, stored, _) =>
+        s.select(col(mine).as(stored))
+          .join(live.select(stored), Seq(stored), "left_semi")
+          .agg(count(lit(1)).as("c"))
+      }: _*)
+    requireOneIdSpace(who, shard.shardNoun, c)
+    shard.check(st.meta, c(0))
+    clashes.zip(hits).foreach { case ((_, _, refusal), h) =>
+      require(h(0) == 0, s"$who: ${refusal(indexDir)}")
+    }
+    val tables = shard.build(s, st.meta).map { case (name, df) =>
+      name -> widen.filter(_ => name == idTable).fold(df)(_(df))
+    }
+    EpochStore.writeEpoch(indexDir, st.epoch + 1, tables,
+      EpochStore.carriedMeta(spark, st.meta, st.epoch + 1,
+        (countCol -> c(0)) +: grown(idSpace, c)),
+      st.floor, allowAdditive = widen.isDefined, commitTs = commitTs)
+  }
+
+  /** The shard's (n, n_distinct ids) aggregate plus its `grow` ones. */
+  private def idSpaceOf(s: DataFrame): DataFrame =
+    s.agg(count(lit(1)).as("n"),
+      (count_distinct(col(deleteKey)).as("nd") +: shard.grow): _*)
+
+  /** The `grow` aggregates' values, by the meta column each grows. */
+  private def grown(idSpace: DataFrame, c: IndexedSeq[Long])
+      : Seq[(String, Long)] =
+    idSpace.columns.toSeq.drop(2).zip(c.drop(2))
+
+  private def requireOneIdSpace(who: String, scope: String,
+      c: IndexedSeq[Long]): Unit =
+    require(c(0) == c(1),
+      s"$who: $deleteKey is not one id space — ${c(0) - c(1)} " +
+        s"duplicate id(s) within $scope${shard.dup}")
+
+  /** Cache the shard once: a caller that already cached the same plan
+    * (a probe scoping the batch the fold then appends) is reused, not
+    * cached a second time.
+    */
+  private def scopedOnce(df: DataFrame): DataFrame =
+    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
+    else graft.CacheScope.scoped(df)
 
   /** The name a lifecycle op reports under, after the family refusal. */
   private def checked(spark: SparkSession, dir: String, op: String)
@@ -103,7 +213,7 @@ final case class IndexFamily(id: String, writer: String, mismatch: String,
       (EpochStore.DeletesTable -> del) +:
         onDelete.toSeq.flatMap(_.sideTables(live, del)),
       EpochStore.carriedMeta(spark, st.meta, st.epoch + 1,
-        hit.columns.toSeq.zip(found)),
+        hit.columns.toSeq.zip(found.map(-_))),
       st.floor, commitTs = commitTs)
   }
 
@@ -166,6 +276,36 @@ final case class IndexFamily(id: String, writer: String, mismatch: String,
 }
 
 object IndexFamily {
+
+  /** How a family's build or append input becomes an epoch:
+    *   - `appender`: the family's append entry point, named in refusals;
+    *   - `meta`: the family's meta schema, its column names in order —
+    *     `family`, the parameter columns, `countCol` and the grown
+    *     columns, `epoch`;
+    *   - `project`: the input → the shard, ids in `deleteKey`;
+    *   - `build`: the epoch's tables from the (cached) shard and the
+    *     epoch's meta row, whose parameter columns it hashes under;
+    *   - `dup`: the tail of the duplicate-id refusal, after "within
+    *     `corpusNoun`" (a build) or "within `shardNoun`" (an append);
+    *   - `clash`: the append's id-clash refusal, given the artifact dir;
+    *   - `grow`: shard aggregates, each named after the meta column it
+    *     grows (BM25's Σdl) — evaluated in the premise action;
+    *   - `clashOn`: a second key shared by the shard and the live
+    *     `idTable` that must not clash either, with its refusal (fp's
+    *     fingerprint);
+    *   - `check`: the append's family premise on (stored meta, shard
+    *     row count), run after the duplicate refusal and before the
+    *     clashes (cp's parameter currency).
+    */
+  final case class Shard(appender: String, meta: Seq[String],
+      project: DataFrame => DataFrame,
+      build: (DataFrame, Row) => Seq[(String, DataFrame)],
+      dup: String, clash: String => String,
+      corpusNoun: String = "the corpus",
+      shardNoun: String = "the appended shard",
+      grow: Seq[Column] = Seq.empty,
+      clashOn: Option[(String, String => String)] = None,
+      check: (Row, Long) => Unit = (_, _) => ())
 
   /** A family's extra DELETE-epoch content (BM25's additive statistics
     * are the one user):

@@ -740,6 +740,30 @@ class EpochCompactionSpec extends AnyFunSuite {
       }
       assert(state == before, s"${fam.id} $op moved the artifact")
     }
+    // write and append, each fed its own family's input: a duplicate id
+    // refuses a build in the family's words before anything is deleted;
+    // an append refuses by family on another family's artifact, and on
+    // this fp artifact by a duplicate id and by a stored id
+    val storedOwner = CacheScope.withScope {
+      Dedup.storedOwners(spark, dir).agg(min(col("owner"))).head().getLong(0)
+    }
+    for (fx <- FamilyFixtures.all(spark)) {
+      val fam = fx.family
+      def own(refusal: String) = if (fam == Dedup.index) refusal else "family"
+      val dup = FamilyFixtures.withDup(fx.input(0, 300), fx.key)
+      for ((op, run, want) <- Seq[(String, () => Unit, String)](
+          ("write", () => fx.build(dup, dir), fx.writeDup),
+          ("append", () => fam.append(dir, dup), own(fx.appendDup)),
+          ("append a stored id",
+            () => fam.append(dir, fx.input(storedOwner, storedOwner + 1)),
+            own(fx.clash)))) {
+        val e = intercept[IllegalArgumentException] {
+          CacheScope.withScope { run() }
+        }
+        assert(e.getMessage.contains(want), s"${fam.id} $op: ${e.getMessage}")
+        assert(state == before, s"${fam.id} $op moved the artifact")
+      }
+    }
   }
 
   test("writeEpoch sizes append output by bytes: a many-partition tiny " +

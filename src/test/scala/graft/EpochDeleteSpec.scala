@@ -769,4 +769,81 @@ class EpochDeleteSpec extends AnyFunSuite {
         s"${fam.id}: the commit is stamped a delete")
     }
   }
+
+  test("every family's append commits the stored meta carried forward: " +
+      "all columns kept, epoch + 1, the count grown by the shard " +
+      "(BM25's sum_dl by its exact word count), commit_kind 'data'; the " +
+      "epoch-0 meta keeps the family's schema; duplicate and stored ids " +
+      "refuse in the family's words") {
+    val layout = Set("floor_epoch", "commit_ts", "commit_kind")
+    for (fx <- FamilyFixtures.all(spark)) {
+      val fam = fx.family
+      val dir = s"/tmp/graft_test_appmeta_${fam.id}"
+      CacheScope.withScope { fx.build(fx.input(0, 300), dir) }
+      val before = fam.serving(spark, dir, "appendMetaTest")
+      // the epoch-0 meta has the family's schema, and the serving read
+      // (seeded at commit) is exactly what meta_0 reads back as
+      val meta0 = spark.read.parquet(s"$dir/meta_0")
+      assert(meta0.schema.fields.toSeq
+          .map(f => f.name -> f.dataType.simpleString) == fx.meta0,
+        s"${fam.id}: epoch-0 meta schema ${meta0.schema.simpleString}")
+      assert(before.meta.schema == meta0.schema &&
+        before.meta == meta0.head(), s"${fam.id}: seeded meta_0")
+      def liveIds(st: graft.sources.EpochStore.Serving): Long =
+        CacheScope.withScope {
+          graft.sources.EpochStore.tableThroughLive(spark, dir, fam.idTable,
+            fam.idCol, st.floor, st.epoch).count()
+        }
+      val shard = fx.input(300, 400)
+      val storedId = CacheScope.withScope {
+        graft.sources.EpochStore.tableThroughLive(spark, dir, fam.idTable,
+          fam.idCol, before.floor, before.epoch)
+          .agg(min(col(fam.idCol))).head().getLong(0)
+      }
+      for ((what, input, want) <- Seq(
+          ("a duplicate shard id", FamilyFixtures.withDup(shard, fx.key),
+            fx.appendDup),
+          ("a stored id", fx.input(storedId, storedId + 1), fx.clash))) {
+        val e = intercept[IllegalArgumentException] {
+          CacheScope.withScope { fam.append(dir, input) }
+        }
+        assert(e.getMessage.contains(want),
+          s"${fam.id} $what: ${e.getMessage}")
+        assert(fam.serving(spark, dir, "appendMetaTest").epoch ==
+          before.epoch, s"${fam.id}: $what moved the artifact")
+      }
+      // BM25's Σdl grows by the shard's exact word count
+      val grow = if (fam != Bm25.index) Map.empty[String, Long]
+        else Map("sum_dl" -> CacheScope.withScope {
+          shard.agg(sum(size(split(col("text"), " ")).cast("long")))
+            .head().getLong(0)
+        })
+      CacheScope.withScope {
+        fam.append(dir, shard, commitTs = Some(3000L))
+      }
+      val after = fam.serving(spark, dir, "appendMetaTest")
+      assert(after.epoch == before.epoch + 1)
+      val n = liveIds(after) - liveIds(before)
+      assert(n > 0, s"${fam.id}: test premise — the shard is stored")
+      val m0 = before.meta
+      val m1 = after.meta
+      assert(m1 == spark.read.parquet(s"$dir/meta_${after.epoch}").head(),
+        s"${fam.id}: seeded meta_${after.epoch}")
+      assert(m1.schema.fieldNames.toSet == m0.schema.fieldNames.toSet,
+        s"${fam.id}: meta columns ${m1.schema.fieldNames.mkString(",")}")
+      for (c <- m0.schema.fieldNames if !layout(c)) {
+        val want: Any = c match {
+          case "epoch" => m0.getAs[Int](c) + 1
+          case k if k == fam.countCol => m0.getAs[Long](k) + n
+          case k if grow.contains(k) => m0.getAs[Long](k) + grow(k)
+          case _ => m0.getAs[Any](c)
+        }
+        assert(m1.getAs[Any](c) == want,
+          s"${fam.id}: meta column $c = ${m1.getAs[Any](c)}, want $want")
+      }
+      assert(m1.getAs[String]("commit_kind") == "data" &&
+        m1.getAs[Long]("commit_ts") == 3000L,
+        s"${fam.id}: the commit is stamped a data epoch")
+    }
+  }
 }
