@@ -540,7 +540,7 @@ object EpochStore {
         .withColumn("commit_kind", lit(kind))
       // the committed row, as the next serving read would read it back
       // (every parquet column reads nullable) — collected from the
-      // one-row driver-local meta frame, which runs no Spark job
+      // one-row local meta frame, which runs no Spark job
       val committed = stamped.collect()
       stamped.coalesce(1).write.mode("overwrite")
         .parquet(s"$dir/meta_$epoch")
