@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.storage.StorageLevel
 
 /** Registry for operator-internal caches so the harness can release them
   * once a query's action completes.
@@ -45,9 +46,12 @@ object CacheScope {
   private val global = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
 
   /** Cache `ds` and register it with the innermost [[withScope]] frame on
-    * this thread (global fallback registry if none is open).
+    * this thread (global fallback registry if none is open). An already
+    * cached plan is returned as is and NOT registered: its first owner
+    * releases it, so an inner scope never unpersists an outer one's.
     */
   def scoped[T](ds: Dataset[T]): Dataset[T] = {
+    if (ds.storageLevel != StorageLevel.NONE) return ds
     val c = ds.cache()
     frames.get() match {
       case f :: _ => f.items += c

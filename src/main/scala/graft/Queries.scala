@@ -29,15 +29,19 @@ object Queries {
     * materialized staging table every downstream query reads instead of
     * re-running the ETL.
     *
-    * No registry map is kept: `cache()` is idempotent through Spark's
-    * CacheManager, which deduplicates by *canonicalized* plan — every call
-    * rebuilds the (cheap) logical plan and lands on the same cached copy.
-    * Cached blocks therefore live and die with their session instead of
+    * No registry map is kept: Spark's CacheManager matches by
+    * *canonicalized* plan, so every call rebuilds the (cheap) logical
+    * plan and finds the same cached copy — only the first caches (a
+    * repeated `cache()` would land on that copy too, but warn). Cached
+    * blocks therefore live and die with their session instead of
     * being pinned by a process-global map (the r1 advisor flagged that
     * leak).
     */
-  private[graft] def cleaned(s: SparkSession, dir: String): DataFrame =
-    TxnTransform.pipeline(RunTs)(TxnView.dirty(s, dir)).cache()
+  private[graft] def cleaned(s: SparkSession, dir: String): DataFrame = {
+    val df = TxnTransform.pipeline(RunTs)(TxnView.dirty(s, dir))
+    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
+    else df.cache()
+  }
 
   /** The events table behind the ts-VALUE-dependent gate queries, with
     * the corpus span premise asserted ([[Events.requireSpanHours]]): a
@@ -921,7 +925,7 @@ object Queries {
     // stored-index lifecycle all the families share — a production
     // cadence appends one epoch per micro-batch, so tableThrough's
     // file fan-in and servingState's meta walk grow O(epochs) forever.
-    // EpochStore.compact rewrites the live row set into ONE fresh
+    // `index.compact` rewrites the live row set into ONE fresh
     // epoch (meta-last, torn-safe, family meta carried verbatim) and
     // floors the artifact above the sprawl; vacuum reclaims it. One
     // gate per family pins compacted ≡ sprawled at the probe OUTPUT:
@@ -1632,8 +1636,7 @@ object Queries {
     // (the q07 precedent), not a recompute.
     "q190_epoch_history" -> ((s, dir) => {
       val idx = fpCbIndexDir(s, dir)
-      graft.sources.EpochStore.describeHistory(s, idx, Seq("fps"),
-          "q190_epoch_history", "writeFingerprintIndex")
+      Dedup.index.history(s, idx, "q190_epoch_history")
         .select(col("epoch").cast("long").as("epoch"),
           col("floor_at_commit").cast("long").as("floor_at_commit"),
           col("kind"), col("live").cast("long").as("live"))
@@ -1696,8 +1699,7 @@ object Queries {
     // oracle (the q07/q190 precedent).
     "q193_epoch_history_ts" -> ((s, dir) => {
       val idx = fpTsIndexDir(s, dir)
-      graft.sources.EpochStore.describeHistory(s, idx, Seq("fps"),
-          "q193_epoch_history_ts", "writeFingerprintIndex")
+      Dedup.index.history(s, idx, "q193_epoch_history_ts")
         .select(col("epoch").cast("long").as("epoch"),
           col("floor_at_commit").cast("long").as("floor_at_commit"),
           col("kind"), col("live").cast("long").as("live"),

@@ -805,39 +805,18 @@ object Ann {
         "params_derived" -> (hashesPerBand <= 0 && bands <= 0))
     }, commitTs)
 
-  /** The artifact's serving state: (k, bands, threshold, targetMiss,
-    * dim, epoch, floor) of the HIGHEST complete epoch — the one whose
-    * `meta_N` exists. Data files of higher (torn) epochs are invisible
-    * by construction. Refuses, by `who`'s name, an artifact with no
-    * complete epoch (torn base build, or a pre-epoch layout).
-    */
-  private case class CpIndexState(k: Int, bands: Int, threshold: Double,
-      targetMiss: Double, dim: Int, epoch: Int, floor: Int)
-
-  private def cpState(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, who: String, asOf: Option[Int] = None)
-      : CpIndexState = {
-    // completeness = the meta READS (EpochStore's contract, r11
-    // review): the highest READABLE meta serves; each lower epoch was
-    // admitted by the same rule when it was current
-    val st = index.serving(spark, indexDir, who, asOf)
-    val meta = st.meta
-    CpIndexState(meta.getAs[Int]("k"), meta.getAs[Int]("bands"),
-      meta.getAs[Double]("threshold"), meta.getAs[Double]("target_miss"),
-      meta.getAs[Int]("dim"), st.epoch, st.floor)
-  }
-
-  /** Read a [[writeCpIndex]] artifact's serving state and refuse, by
+  /** Read a [[writeCpIndex]] artifact live at `asOf` and refuse, by
     * `who`'s name, on hash-family or parameter drift between the
     * artifact and the probe — the shared front door of
-    * [[cosinePairsCpIndexed]] and [[cpTopKIndexed]]. Returns the
-    * stored (hashesPerBand, bands, floor, servingEpoch).
+    * [[cosinePairsCpIndexed]] and [[cpTopKIndexed]]. Returns the stored
+    * (hashesPerBand, bands) and the live read.
     */
   private def readCpMeta(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, who: String, threshold: Double, dim: Int,
       targetMiss: Double, asOf: Option[Int] = None)
-      : (Int, Int, Int, Int) = {
-    val st = cpState(spark, indexDir, who, asOf)
+      : (Int, Int, graft.sources.IndexFamily.Live) = {
+    val lv = index.live(spark, indexDir, who, asOf)
+    val meta = lv.meta
     def drift(name: String, stored: Any, asked: Any): Unit =
       require(stored == asked,
         s"$who: $name drift — artifact at $indexDir " +
@@ -845,26 +824,11 @@ object Ann {
           "stored band rows were sized/rotated for the stored value; " +
           "probing under a different one silently loses recall. " +
           "Rebuild the index or match the artifact.")
-    drift("threshold", st.threshold, threshold)
-    drift("dim", st.dim, dim)
-    drift("target_miss", st.targetMiss, targetMiss)
-    (st.k, st.bands, st.floor, st.epoch)
+    drift("threshold", meta.getAs[Double]("threshold"), threshold)
+    drift("dim", meta.getAs[Int]("dim"), dim)
+    drift("target_miss", meta.getAs[Double]("target_miss"), targetMiss)
+    (meta.getAs[Int]("k"), meta.getAs[Int]("bands"), lv)
   }
-
-  /** The artifact's vectors / band rows through `epoch` — partition
-    * pruning on the epoch directory column skips torn higher epochs
-    * without reading a byte of them.
-    */
-  private def indexVectors(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, floor: Int, epoch: Int): DataFrame =
-    graft.sources.EpochStore.tableThroughLive(spark, indexDir,
-      "vectors", "vec_id", floor, epoch).select(col("vec_id"), col("v"))
-
-  private def indexBands(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, floor: Int, epoch: Int): DataFrame =
-    graft.sources.EpochStore.tableThroughLive(spark, indexDir, "bands",
-      "vec_id", floor, epoch)
-      .select(col("vec_id"), col("band_id"), col("code"))
 
   /** FOLD a deduped shard INTO the artifact — the missing quarter of
     * the index lifecycle (write → probe → search → APPEND): after
@@ -931,12 +895,12 @@ object Ann {
     // (identical at every horizon: append/delete carry them verbatim),
     // so a historical probe hashes under the same rotations the stored
     // band rows were built with. Same plan; pure partition pruning.
-    val (k, nBands, floor, epoch) = readCpMeta(spark, indexDir,
+    val (k, nBands, lv) = readCpMeta(spark, indexDir,
       "cosinePairsCpIndexed", threshold, dim, targetMiss, asOf)
 
     val inc = graft.CacheScope.scoped(incoming.select(col("vec_id"),
       VecFns.toDouble(col("embedding")).as("v")))
-    val corpusVecs = indexVectors(spark, indexDir, floor, epoch)
+    val corpusVecs = lv.table("vectors").select(col("vec_id"), col("v"))
     // dup + id-clash premises fused into ONE action (r15 — Checks)
     val (nInc, ndInc, nClash) = Checks.dupAndClash(inc, "vec_id",
       corpusVecs)
@@ -951,7 +915,7 @@ object Ann {
       .select(col("vec_id"), lit(true).as("inc"),
         posexplode(expr(s"graft_cplsh(v, $k, $nBands, $dim)"))
           .as(Seq("band_id", "code"))))
-    val allBands = indexBands(spark, indexDir, floor, epoch)
+    val allBands = lv.table("bands")
       .select(col("vec_id"), lit(false).as("inc"), col("band_id"),
         col("code"))
       .unionByName(incBands)
@@ -1024,7 +988,7 @@ object Ann {
       asOf: Option[Int] = None): DataFrame = {
     val spark = queries.sparkSession
     GraftFunctions.register(spark)
-    val (kHashes, nBands, floor, epoch) = readCpMeta(spark, indexDir,
+    val (kHashes, nBands, lv) = readCpMeta(spark, indexDir,
       "cpTopKIndexed", threshold, dim, targetMiss, asOf)
     val q = graft.CacheScope.scoped(queries.select(col("vec_id"),
       VecFns.toDouble(col("embedding")).as("qv")))
@@ -1040,7 +1004,7 @@ object Ann {
       posexplode(expr(s"graft_cplsh(qv, $kHashes, $nBands, $dim)"))
         .as(Seq("band_id", "code")))
     val cand = hintIfSmall(qBands, nQ * nBands)
-      .join(indexBands(spark, indexDir, floor, epoch)
+      .join(lv.table("bands")
           .select(col("vec_id").as("neighbor_id"), col("band_id"),
             col("code")),
         Seq("band_id", "code"))
@@ -1048,7 +1012,7 @@ object Ann {
       .select(col("query_id"), col("neighbor_id"))
       .distinct()
     val scored = cand
-      .join(indexVectors(spark, indexDir, floor, epoch)
+      .join(lv.table("vectors")
           .select(col("vec_id").as("neighbor_id"), col("v").as("cv")),
         Seq("neighbor_id"))
       .join(q.select(col("vec_id").as("query_id"), col("qv")),

@@ -234,15 +234,11 @@ object Bm25 {
       commitTs: Option[Long] = None): Unit =
     index.write(docs, dir, commitTs = commitTs)
 
-  private case class Bm25IndexState(nDocs: Long, sumDl: Long,
-      epoch: Int, floor: Int)
-
-  private def bm25State(spark: org.apache.spark.sql.SparkSession,
-      dir: String, who: String, asOf: Option[Int] = None)
-      : Bm25IndexState = {
-    val st = index.serving(spark, dir, who, asOf)
-    Bm25IndexState(st.meta.getAs[Long]("n_docs"),
-      st.meta.getAs[Long]("sum_dl"), st.epoch, st.floor)
+  /** The live read's corpus statistics: (N, avgdl) from its meta. */
+  private def corpusStats(lv: graft.sources.IndexFamily.Live)
+      : (Long, Long) = {
+    val nDocs = lv.meta.getAs[Long]("n_docs")
+    (nDocs, lv.meta.getAs[Long]("sum_dl") / math.max(nDocs, 1L))
   }
 
   /** FOLD new documents into the artifact as epoch N+1 — EXACT, never
@@ -280,24 +276,17 @@ object Bm25 {
     */
   def topKIndexed(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, queryTerms: Seq[String], k: Int,
-      asOf: Option[Int] = None): DataFrame =
-    topKIndexedState(spark, indexDir, queryTerms, k,
-      bm25State(spark, indexDir, "topKIndexed", asOf))
-
-  private def topKIndexedState(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, queryTerms: Seq[String], k: Int,
-      st: Bm25IndexState): DataFrame = {
+      asOf: Option[Int] = None): DataFrame = {
+    val lv = index.live(spark, indexDir, "topKIndexed", asOf)
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
-    val ad = st.sumDl / math.max(st.nDocs, 1L)
-    val tf = graft.sources.EpochStore.tableThroughLive(spark, indexDir,
-        "postings", "doc_id", st.floor, st.epoch)
+    val (nDocs, ad) = corpusStats(lv)
+    val tf = lv.table("postings")
       .filter(col("term").isin(queryTerms: _*))
-    val dfreq = graft.sources.EpochStore.tableThrough(spark, indexDir,
-        "dfs", st.floor, st.epoch)
+    val dfreq = lv.table("dfs")
       .filter(col("term").isin(queryTerms: _*))
       .groupBy(col("term")).agg(sum(col("df")).as("df"))
     tf.join(broadcast(dfreq), "term")
-      .withColumn("n_docs", lit(st.nDocs))
+      .withColumn("n_docs", lit(nDocs))
       .withColumn("ad", lit(ad))
       .withColumn("score_micro_t", expr(scoreMicroT))
       .groupBy(col("doc_id"))
@@ -320,19 +309,17 @@ object Bm25 {
     */
   def topKPerQueryIndexed(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, queries: DataFrame, k: Int): DataFrame = {
-    val st = bm25State(spark, indexDir, "topKPerQueryIndexed")
-    val ad = st.sumDl / math.max(st.nDocs, 1L)
+    val lv = index.live(spark, indexDir, "topKPerQueryIndexed")
+    val (nDocs, ad) = corpusStats(lv)
     // distinct query terms, pinned: feeds the postings pruning
     // semi-join, the df pruning, and the scoring fan-out
     val qterms = graft.CacheScope.scoped(queries
       .select(col("query_id"),
         explode(array_distinct(split(col("text"), " "))).as("term")))
     val anyTerm = qterms.select("term").distinct()
-    val tf = graft.sources.EpochStore.tableThroughLive(spark, indexDir,
-        "postings", "doc_id", st.floor, st.epoch)
+    val tf = lv.table("postings")
       .join(broadcast(anyTerm), Seq("term"), "left_semi")
-    val dfreq = graft.sources.EpochStore.tableThrough(spark, indexDir,
-        "dfs", st.floor, st.epoch)
+    val dfreq = lv.table("dfs")
       .join(broadcast(anyTerm), Seq("term"), "left_semi")
       .groupBy(col("term")).agg(sum(col("df")).as("df"))
     val w = Window.partitionBy(col("query_id"))
@@ -340,7 +327,7 @@ object Bm25 {
     tf.join(broadcast(dfreq), "term")
       .join(broadcast(qterms), "term")
       .filter(col("doc_id") =!= col("query_id"))
-      .withColumn("n_docs", lit(st.nDocs))
+      .withColumn("n_docs", lit(nDocs))
       .withColumn("ad", lit(ad))
       .withColumn("score_micro_t", expr(scoreMicroT))
       .groupBy(col("query_id"), col("doc_id"))

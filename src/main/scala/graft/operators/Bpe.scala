@@ -58,28 +58,34 @@ object Bpe {
       |                   array(concat(lhs, rhs)))
       |       ELSE concat(acc, array(x)) END)""".stripMargin
 
-  /** Artifact version for [[writeMerges]] — bumped if the fuse or the
-    * merge-table semantics ever change.
+  /** The frozen-tokenizer family on the shared lifecycle: one epoch
+    * whose `merges` table holds the k rows (merge_rank, lhs, rhs,
+    * pair_count) — everything an apply site needs; the learn corpus's
+    * word table is a cache, not part of the tokenizer — and whose meta
+    * counts them in `k`. The id is bumped if the fuse or the
+    * merge-table semantics ever change. A frozen tokenizer is immutable
+    * by definition: there is deliberately NO append (one refuses) and
+    * no delete entry point — retraining is a rebuild.
     */
-  private[graft] val MergesFamily = "bpe-merges-v1"
+  val index: graft.sources.IndexFamily = graft.sources.IndexFamily(
+    "bpe-merges-v1", "writeMerges",
+    "applying across fuse versions silently mistokenizes",
+    Seq(graft.sources.EpochStore.CompactTable("merges")),
+    "merges", "merge_rank", deleteKey = "merge_rank", countCol = "k",
+    shard = graft.sources.IndexFamily.Shard("writeMerges",
+      Seq("family", "k", "epoch"), identity, (m, _) => Seq("merges" -> m),
+      dup = "; every round learns one merge.",
+      clash = dir => s"merge rank(s) already stored at $dir",
+      corpusNoun = "the learned merge table",
+      check = (_, _) => throw new IllegalArgumentException(
+        "writeMerges: a frozen tokenizer has no append — retraining is " +
+          "a rebuild")))
 
   /** FREEZE a tokenizer: learn the k-round merge table over `docs` and
-    * persist it as an [[graft.sources.EpochStore]] artifact (single
-    * epoch — a frozen tokenizer is immutable by definition, so there
-    * is deliberately NO append API; retraining is a rebuild). The k
-    * rows (merge_rank, lhs, rhs, pair_count) are everything an apply
-    * site needs — the learn corpus's word table is a cache, not part
-    * of the tokenizer.
+    * persist it as epoch 0 of a [[index]] artifact.
     */
-  def writeMerges(docs: DataFrame, dir: String, k: Int): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val merges = learnCore(docs, k)._1
-    graft.sources.EpochStore.deleteAll(spark, dir)
-    graft.sources.EpochStore.writeEpoch(dir, 0,
-      Seq("merges" -> merges),
-      Seq((MergesFamily, k, 0)).toDF("family", "k", "epoch"))
-  }
+  def writeMerges(docs: DataFrame, dir: String, k: Int): Unit =
+    index.write(learnCore(docs, k)._1, dir)
 
   /** ENCODE against a FROZEN tokenizer ([[writeMerges]] artifact) —
     * the apply-at-arrival shape every training pipeline runs once its
@@ -100,17 +106,9 @@ object Bpe {
   def encodeWithStoredMerges(indexDir: String, docs: DataFrame)
       : DataFrame = {
     val spark = docs.sparkSession
-    val st = graft.sources.EpochStore.servingState(spark,
-      indexDir, "encodeWithStoredMerges", "writeMerges")
-    val meta = st.meta
-    val family = meta.getAs[String]("family")
-    require(family == MergesFamily,
-      s"encodeWithStoredMerges: artifact at $indexDir holds family " +
-        s"'$family' but this code applies '$MergesFamily' — rebuild; " +
-        "applying across fuse versions silently mistokenizes")
-    val k = meta.getAs[Int]("k")
-    val merges = graft.CacheScope.scoped(graft.sources.EpochStore
-      .tableThrough(spark, indexDir, "merges", st.floor, st.epoch))
+    val lv = index.live(spark, indexDir, "encodeWithStoredMerges")
+    val k = lv.meta.getAs[Long]("k").toInt
+    val merges = graft.CacheScope.scoped(lv.table("merges"))
     var words = docs
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0).distinct()

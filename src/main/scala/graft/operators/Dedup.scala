@@ -154,18 +154,13 @@ object Dedup {
     // convention shared by every family probe): the shard verdicts
     // against the owner map exactly as it stood when epoch `asOf`
     // committed — later appends invisible, later tombstones not
-    // suppressing (EpochStore.servingStateAt pins the horizon) — so
+    // suppressing (`index.live` pins the horizon) — so
     // yesterday's verdicts re-run bit-identically on an artifact that
     // has since appended, deleted, and re-appended. History retention
     // is the floor (compaction is snapshot expiry); same plan, pure
     // partition pruning.
-    val st = index.serving(spark, indexDir, "dedupAgainstIndex", asOf)
-    probeAgainst(spark, indexDir, st, incoming, "dedupAgainstIndex")
-  }
-
-  private def probeAgainst(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, st: graft.sources.EpochStore.Serving,
-      incoming: DataFrame, who: String): DataFrame = {
+    val who = "dedupAgainstIndex"
+    val lv = index.live(spark, indexDir, who, asOf)
     val inc = graft.CacheScope.scoped(fps(incoming))
     val counts = inc.agg(count(lit(1)).as("n"),
       count_distinct(col("doc_id")).as("nd")).head()
@@ -173,8 +168,7 @@ object Dedup {
       s"$who: doc_id is not one id space — " +
         s"${counts.getLong(0) - counts.getLong(1)} duplicate id(s) " +
         "within the incoming shard; re-key upstream.")
-    val stored = graft.sources.EpochStore.tableThroughLive(spark,
-      indexDir, "fps", "owner", st.floor, st.epoch)
+    val stored = lv.table("fps")
       .select(col("fp"), col("owner").as("_stored_owner"))
     // The shard must be the BROADCAST side and the stored table must
     // STREAM — but Spark cannot build the preserved (left) side of a
@@ -258,11 +252,8 @@ object Dedup {
     * artifact).
     */
   def storedOwners(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): DataFrame = {
-    val st = index.serving(spark, indexDir, "storedOwners")
-    graft.sources.EpochStore.tableThroughLive(spark, indexDir, "fps",
-      "owner", st.floor, st.epoch)
-  }
+      indexDir: String): DataFrame =
+    index.live(spark, indexDir, "storedOwners").table("fps")
 
   /** DIFFERENTIAL read (r14 — r13 VERDICT #2): what changed in the
     * stored owner map between two retained horizons, so an incremental
@@ -275,21 +266,19 @@ object Dedup {
     * inside the window appears in BOTH (apply removes, then adds —
     * honest replace semantics). Both horizons must be retained
     * (floor ≤ from ≤ to ≤ serving); below the floor refuses, exactly
-    * like as-of — see [[graft.sources.EpochStore.addedBetween]]. Cost
+    * like as-of — see [[graft.sources.IndexFamily.addedBetween]]. Cost
     * is proportional to the delta plus one id-projected live scan at
     * `fromEpoch`, never a re-fingerprint. The q186 gate recomputes
     * both sides declaratively.
     */
   def fingerprintIndexChanges(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, fromEpoch: Int, toEpoch: Int): DataFrame = {
-    index.serving(spark, indexDir, "fingerprintIndexChanges")
-    val added = graft.sources.EpochStore.addedBetween(spark, indexDir,
-        "fps", "owner", fromEpoch, toEpoch, "fingerprintIndexChanges",
-        "writeFingerprintIndex")
+    val who = "fingerprintIndexChanges"
+    val added = index.addedBetween(spark, indexDir, "fps", fromEpoch,
+        toEpoch, who)
       .select(lit("added").as("change"), col("owner"), col("fp"))
-    val removed = graft.sources.EpochStore.removedBetween(spark,
-        indexDir, "fps", "owner", fromEpoch, toEpoch,
-        "fingerprintIndexChanges", "writeFingerprintIndex")
+    val removed = index.removedBetween(spark, indexDir, fromEpoch, toEpoch,
+        who)
       .select(lit("removed").as("change"), col("owner"),
         lit(null).cast("string").as("fp"))
     added.unionByName(removed)

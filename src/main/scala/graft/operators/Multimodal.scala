@@ -779,11 +779,9 @@ object Multimodal {
     // asOf (r13): verdict against the corpus exactly as that epoch's
     // commit served it — the banding is parameter-free, so every
     // horizon is probe-valid; same plan, pure partition pruning
-    val st = index.serving(spark, indexDir, "imageDHashNearIndexed",
-      asOf)
+    val lv = index.live(spark, indexDir, "imageDHashNearIndexed", asOf)
     val inc = graft.CacheScope.scoped(dHashes(incoming).toDF())
-    val storedHashes = graft.sources.EpochStore.tableThroughLive(spark,
-      indexDir, "hashes", "media_id", st.floor, st.epoch)
+    val storedHashes = lv.table("hashes")
     // dup + id-clash premises fused into ONE action (r15 — Checks);
     // the shard decodes once either way (inc is cache-scoped)
     val (nInc, ndInc, clash) = Checks.dupAndClash(inc, "media_id",
@@ -799,8 +797,7 @@ object Multimodal {
         "contract (a shared id silently drops its real pair); re-key " +
         "the shard.")
     val incBands = graft.CacheScope.scoped(dHashBandRows(inc))
-    val allBands = graft.sources.EpochStore.tableThroughLive(spark,
-        indexDir, "bands", "media_id", st.floor, st.epoch)
+    val allBands = lv.table("bands")
       .select("media_id", "band_id", "band_key")
       .unionByName(incBands)
     val hinted =

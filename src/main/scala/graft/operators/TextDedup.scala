@@ -1046,15 +1046,6 @@ object TextDedup {
       corpusNoun = "the benchmark suite",
       shardNoun = "the appended benchmark wave"))
 
-  private case class DeconIndexState(w: Int, epoch: Int, floor: Int)
-
-  private def deconState(spark: org.apache.spark.sql.SparkSession,
-      dir: String, who: String, asOf: Option[Int] = None)
-      : DeconIndexState = {
-    val st = index.serving(spark, dir, who, asOf)
-    DeconIndexState(st.meta.getAs[Int]("w"), st.epoch, st.floor)
-  }
-
   /** A benchmark shard's two tables: `docs` (doc_id — EVERY doc, even
     * ones too short to yield a window, so liveness/id-clash checks are
     * exact) and `grams` (doc_id, gram — the per-doc DISTINCT verbatim
@@ -1108,11 +1099,8 @@ object TextDedup {
     * mutated state).
     */
   def storedDeconDocIds(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): DataFrame = {
-    val st = deconState(spark, indexDir, "storedDeconDocIds")
-    graft.sources.EpochStore.tableThroughLive(spark, indexDir, "docs",
-      "doc_id", st.floor, st.epoch)
-  }
+      indexDir: String): DataFrame =
+    index.live(spark, indexDir, "storedDeconDocIds").table("docs")
 
   /** Span-decontaminate an arriving corpus shard against the STORED
     * suite: exactly [[decontaminateSpans]]'s contract and output shape
@@ -1134,11 +1122,9 @@ object TextDedup {
     // real compliance question, and the answer must use exactly the
     // windows that suite version held (later-added benchmarks must not
     // cut, later-retired ones must). Same plan; pure partition pruning.
-    val st = deconState(spark, indexDir,
-      "decontaminateAgainstIndex", asOf)
-    val benchGrams = graft.sources.EpochStore.tableThroughLive(spark,
-        indexDir, "grams", "doc_id", st.floor, st.epoch)
-      .select(col("gram")).distinct()
-    decontaminateWithGrams(corpus, benchGrams, st.w)
+    val lv = index.live(spark, indexDir, "decontaminateAgainstIndex",
+      asOf)
+    val benchGrams = lv.table("grams").select(col("gram")).distinct()
+    decontaminateWithGrams(corpus, benchGrams, lv.meta.getAs[Int]("w"))
   }
 }

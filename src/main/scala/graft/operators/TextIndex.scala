@@ -263,29 +263,19 @@ object TextIndex {
       "shingle_k" -> 3), commitTs)
   }
 
-  private case class JaccardIndexState(r: Int, b: Int,
-      threshold: Double, targetMiss: Double, epoch: Int, floor: Int)
-
-  private def jaccardState(spark: org.apache.spark.sql.SparkSession,
-      dir: String, who: String, asOf: Option[Int] = None)
-      : JaccardIndexState = {
-    val st = index.serving(spark, dir, who, asOf)
-    val meta = st.meta
-    JaccardIndexState(meta.getAs[Int]("rows_per_band"),
-      meta.getAs[Int]("bands"), meta.getAs[Double]("threshold"),
-      meta.getAs[Double]("target_miss"), st.epoch, st.floor)
-  }
-
-  /** The shared drift front door of [[jaccardPairsIndexed]] and
-    * [[appendJaccardIndex]]'s probe side: the caller's (threshold,
-    * targetMiss) must equal the stored ones — the stored band rows
-    * were sized for the stored values, and a LOWER threshold than the
-    * artifact's would demand more bands than were stored.
+  /** The shared drift front door of the indexed probes: the live read
+    * at `asOf` and its stored banding, refusing unless the caller's
+    * (threshold, targetMiss) equal the stored ones — the stored band
+    * rows were sized for the stored values, and a LOWER threshold than
+    * the artifact's would demand more bands than were stored. Returns
+    * the stored banding (rows per band, bands) and the live read.
     */
   private def readMeta(spark: org.apache.spark.sql.SparkSession,
       dir: String, who: String, threshold: Double, targetMiss: Double,
-      asOf: Option[Int] = None): JaccardIndexState = {
-    val st = jaccardState(spark, dir, who, asOf)
+      asOf: Option[Int] = None)
+      : (Int, Int, graft.sources.IndexFamily.Live) = {
+    val lv = index.live(spark, dir, who, asOf)
+    val meta = lv.meta
     def drift(name: String, stored: Any, asked: Any): Unit =
       require(stored == asked,
         s"$who: $name drift — artifact at $dir stores $name = $stored " +
@@ -293,9 +283,9 @@ object TextIndex {
           "sized for the stored value; probing under a different one " +
           "silently loses recall. Rebuild the index or match the " +
           "artifact.")
-    drift("threshold", st.threshold, threshold)
-    drift("target_miss", st.targetMiss, targetMiss)
-    st
+    drift("threshold", meta.getAs[Double]("threshold"), threshold)
+    drift("target_miss", meta.getAs[Double]("target_miss"), targetMiss)
+    (meta.getAs[Int]("rows_per_band"), meta.getAs[Int]("bands"), lv)
   }
 
   /** FOLD a deduped shard INTO the artifact as epoch N+1 under the
@@ -319,11 +309,9 @@ object TextIndex {
     * lineage re-reads the mutated artifact).
     */
   def storedDocIds(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): DataFrame = {
-    val st = jaccardState(spark, indexDir, "storedDocIds")
-    EpochStore.tableThroughLive(spark, indexDir, "docs", "doc_id",
-      st.floor, st.epoch).select("doc_id")
-  }
+      indexDir: String): DataFrame =
+    index.live(spark, indexDir, "storedDocIds").table("docs")
+      .select("doc_id")
 
   /** The text family's CDC CONSUMER (r15 — r14 VERDICT #4, what
     * `index.changes` exists FOR): patch a shard's horizon-`fromEpoch`
@@ -338,7 +326,7 @@ object TextIndex {
     *   - RE-PROBE the shard against ONLY the delta docs: band rows and
     *     shingle sets of docs committed in the window and live at
     *     `toEpoch` are read from the artifact DELTA-PRUNED
-    *     ([[graft.sources.EpochStore.addedBetween]] — the checkpoint
+    *     ([[graft.sources.IndexFamily.addedBetween]] — the checkpoint
     *     and pre-window epochs never read a row, and the delta side is
     *     never re-shingled), the shard's bands broadcast under the
     *     usual gate, and candidates verify exactly on true shingle
@@ -365,17 +353,16 @@ object TextIndex {
       incoming: DataFrame, fromEpoch: Int, toEpoch: Int,
       threshold: Double, targetMiss: Double = 1e-4): DataFrame = {
     val spark = incoming.sparkSession
-    val st = readMeta(spark, indexDir, "patchJaccardVerdicts",
-      threshold, targetMiss)
-    require(fromEpoch <= toEpoch && toEpoch <= st.epoch,
+    val who = "patchJaccardVerdicts"
+    val (r, b, lv) = readMeta(spark, indexDir, who, threshold, targetMiss)
+    require(fromEpoch <= toEpoch && toEpoch <= lv.state.epoch,
       s"patchJaccardVerdicts: window ($fromEpoch, $toEpoch] is not a " +
-        s"retained range at $indexDir (serving epoch ${st.epoch})")
+        s"retained range at $indexDir (serving epoch ${lv.state.epoch})")
     val inc = graft.CacheScope.scoped(shingled(incoming))
     // the delta docs WITH their stored shingles — pruned to the window
     // epochs at the driver; the corpus-sized prefix never reads a row
     val addedDocs = graft.CacheScope.scoped(
-      EpochStore.addedBetween(spark, indexDir, "docs", "doc_id",
-        fromEpoch, toEpoch, "patchJaccardVerdicts", "writeJaccardIndex"))
+      index.addedBetween(spark, indexDir, "docs", fromEpoch, toEpoch, who))
     // dup + window-clash premises fused into ONE action (r15 — Checks)
     val (nInc, nd, clash) = Checks.dupAndClash(inc, "doc_id", addedDocs)
     require(nInc == nd,
@@ -388,12 +375,11 @@ object TextIndex {
         s"horizon $toEpoch would refuse this id clash, and the patch " +
         "refuses identically (a shared id silently drops its real " +
         "pair); re-key the shard.")
-    val addedBands = EpochStore.addedBetween(spark, indexDir, "bands",
-      "doc_id", fromEpoch, toEpoch, "patchJaccardVerdicts",
-      "writeJaccardIndex")
-    val incBands = bandRows(inc, st.r, st.b)
+    val addedBands = index.addedBetween(spark, indexDir, "bands",
+      fromEpoch, toEpoch, who)
+    val incBands = bandRows(inc, r, b)
     val hinted =
-      if (nInc * st.b <= Ann.MaxBroadcastBandRows) broadcast(incBands)
+      if (nInc * b <= Ann.MaxBroadcastBandRows) broadcast(incBands)
       else incBands
     // DIRECTED: shard bands probe, delta bands answer — the sides are
     // disjoint (the clash premise), so no self-pair filter is needed
@@ -406,9 +392,8 @@ object TextIndex {
       .distinct()
     val fresh = verifyExactUnsorted(cand, addedDocs.unionByName(inc),
       threshold)
-    val removed = EpochStore.removedBetween(spark, indexDir, "docs",
-      "doc_id", fromEpoch, toEpoch, "patchJaccardVerdicts",
-      "writeJaccardIndex")
+    val removed = index.removedBetween(spark, indexDir, fromEpoch,
+      toEpoch, who)
     val survived = prior
       .join(removed.select(col("doc_id").as("doc_a")), Seq("doc_a"),
         "left_anti")
@@ -441,11 +426,10 @@ object TextIndex {
       threshold: Double, targetMiss: Double = 1e-4,
       asOf: Option[Int] = None): DataFrame = {
     val spark = incoming.sparkSession
-    val st = readMeta(spark, indexDir, "jaccardPairsIndexed",
+    val (r, b, lv) = readMeta(spark, indexDir, "jaccardPairsIndexed",
       threshold, targetMiss, asOf)
     val inc = graft.CacheScope.scoped(shingled(incoming))
-    val storedDocs = EpochStore.tableThroughLive(spark, indexDir,
-      "docs", "doc_id", st.floor, st.epoch)
+    val storedDocs = lv.table("docs")
     // dup + id-clash premises fused into ONE action (r15 — Checks)
     val (nInc, nd, nClash) = Checks.dupAndClash(inc, "doc_id",
       storedDocs)
@@ -457,13 +441,12 @@ object TextIndex {
       "jaccardPairsIndexed: incoming doc_id(s) already exist in the " +
         s"indexed corpus at $indexDir — one id space is the contract " +
         "(a shared id silently drops its real pair); re-key the shard.")
-    val incBands = graft.CacheScope.scoped(bandRows(inc, st.r, st.b))
-    val allBands = EpochStore.tableThroughLive(spark, indexDir,
-        "bands", "doc_id", st.floor, st.epoch)
+    val incBands = graft.CacheScope.scoped(bandRows(inc, r, b))
+    val allBands = lv.table("bands")
       .select(col("doc_id"), col("band_id"), col("band_hash"))
       .unionByName(incBands)
     val hinted =
-      if (nInc * st.b <= Ann.MaxBroadcastBandRows) broadcast(incBands)
+      if (nInc * b <= Ann.MaxBroadcastBandRows) broadcast(incBands)
       else incBands
     val cand = hinted.as("x")
       .join(allBands.as("y"),
@@ -501,11 +484,10 @@ object TextIndex {
       asOf: Option[Int] = None): DataFrame = {
     require(k > 0, s"jaccardTopKIndexed: k must be positive, got $k")
     val spark = queries.sparkSession
-    val st = readMeta(spark, indexDir, "jaccardTopKIndexed",
+    val (r, b, lv) = readMeta(spark, indexDir, "jaccardTopKIndexed",
       threshold, targetMiss, asOf)
     val inc = graft.CacheScope.scoped(shingled(queries))
-    val storedDocs = EpochStore.tableThroughLive(spark, indexDir,
-      "docs", "doc_id", st.floor, st.epoch)
+    val storedDocs = lv.table("docs")
     // dup + id-clash premises fused into ONE action (r15 — Checks)
     val (nInc, nd, nClash) = Checks.dupAndClash(inc, "doc_id",
       storedDocs)
@@ -518,11 +500,10 @@ object TextIndex {
         s"indexed corpus at $indexDir — one id space is the contract " +
         "(a shared id would score a doc against itself); re-key the " +
         "batch.")
-    val incBands = bandRows(inc, st.r, st.b)
-    val storedBands = EpochStore.tableThroughLive(spark, indexDir,
-      "bands", "doc_id", st.floor, st.epoch)
+    val incBands = bandRows(inc, r, b)
+    val storedBands = lv.table("bands")
     val hinted =
-      if (nInc * st.b <= Ann.MaxBroadcastBandRows) broadcast(incBands)
+      if (nInc * b <= Ann.MaxBroadcastBandRows) broadcast(incBands)
       else incBands
     // DIRECTED candidates: query side probes, stored side answers.
     // Read three times (both verify semi-joins + the final pair join)

@@ -74,8 +74,13 @@ import org.apache.spark.sql.functions.{col, lit}
   * version string and its drift refusals, and parameter-currency
   * premises — those are semantics of the family's hashes, not of the
   * layout. Each family declares them once as an [[IndexFamily]] (meta
-  * schema, shard tables, refusals), whose generic lifecycle — build
-  * and append included — rides this layout.
+  * schema, shard tables, refusals), whose generic lifecycle — build,
+  * append and the probes' one read, `live`, included — rides this
+  * layout.
+  *
+  * PRIVATE to `sources`: every member but the [[Serving]] and
+  * [[CompactTable]] types is `private[sources]` — [[IndexFamily]] (and
+  * [[RetentionPolicy]]'s serving read) are the layout's only clients.
   */
 object EpochStore {
 
@@ -93,7 +98,7 @@ object EpochStore {
     * elsewhere first or build to a fresh directory — lineage recomputed
     * after the delete would find nothing.
     */
-  def deleteAll(spark: SparkSession, dir: String): Unit = {
+  private[sources] def deleteAll(spark: SparkSession, dir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(p, true)
@@ -250,7 +255,7 @@ object EpochStore {
     * is ours — leaving it would block every future writer on an
     * ownerless file) and the original error propagates.
     */
-  private[graft] def acquireLease(fs: org.apache.hadoop.fs.FileSystem,
+  private[sources] def acquireLease(fs: org.apache.hadoop.fs.FileSystem,
       dir: String, who: String): String = {
     val p = leasePath(dir)
     val root = new org.apache.hadoop.fs.Path(dir)
@@ -385,7 +390,7 @@ object EpochStore {
     * derived from the table set) so [[describeHistory]] reports a
     * vacuumed epoch's true kind instead of degrading to 'superseded'.
     */
-  def writeEpoch(dir: String, epoch: Int,
+  private[sources] def writeEpoch(dir: String, epoch: Int,
       tables: Seq[(String, DataFrame)], meta: DataFrame,
       floor: Int = 0, ownedTables: Seq[String] = Seq.empty,
       lease: Option[String] = None, allowAdditive: Boolean = false,
@@ -610,8 +615,8 @@ object EpochStore {
     * build, missing directory, or a foreign layout); `rebuildHint`
     * names the family's rebuild entry point.
     */
-  def servingState(spark: SparkSession, dir: String, who: String,
-      rebuildHint: String): Serving = {
+  private[sources] def servingState(spark: SparkSession, dir: String,
+      who: String, rebuildHint: String): Serving = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val rx = "meta_(\\d+)".r
@@ -662,8 +667,8 @@ object EpochStore {
     * remnants happen to survive. Keep history by delaying compaction;
     * compaction is snapshot expiry.
     */
-  def servingStateAt(spark: SparkSession, dir: String, asOf: Int,
-      who: String, rebuildHint: String): Serving = {
+  private[sources] def servingStateAt(spark: SparkSession, dir: String,
+      asOf: Int, who: String, rebuildHint: String): Serving = {
     val cur = servingState(spark, dir, who, rebuildHint)
     require(asOf <= cur.epoch,
       s"$who: as-of epoch $asOf does not exist at $dir — the serving " +
@@ -721,8 +726,8 @@ object EpochStore {
     * Cost: one driver-side meta read per retained horizon — bounded
     * by the retention policy, no table data read.
     */
-  def servingStateAtTime(spark: SparkSession, dir: String, ts: Long,
-      who: String, rebuildHint: String): Serving = {
+  private[sources] def servingStateAtTime(spark: SparkSession,
+      dir: String, ts: Long, who: String, rebuildHint: String): Serving = {
     val st = servingState(spark, dir, who, rebuildHint)
     val stamped = (st.floor to st.epoch).map { n =>
       // the shared torn-aware read (r15 review — the narrowing must
@@ -884,8 +889,8 @@ object EpochStore {
     * column is dropped here). NOT tombstone-aware — families with a
     * delete entry point read through [[tableThroughLive]] instead.
     */
-  def tableThrough(spark: SparkSession, dir: String, name: String,
-      floor: Int, epoch: Int): DataFrame =
+  private[sources] def tableThrough(spark: SparkSession, dir: String,
+      name: String, floor: Int, epoch: Int): DataFrame =
     rowsWithEpoch(spark, dir, name, floor, epoch).drop("epoch")
 
   // --------------------------------------------------------------------
@@ -914,14 +919,14 @@ object EpochStore {
   /** The layout-owned tombstone table: `deletes/epoch=N` holds one
     * LONG `id` column naming the rows epoch N retracted.
     */
-  private[graft] val DeletesTable = "deletes"
+  private[sources] val DeletesTable = "deletes"
 
   /** The LIVE tombstones in `[floor, epoch]` as (id, del_epoch) — or
     * None when the artifact has no delete epoch in the live range (the
     * common case: one driver-side existence probe, zero plan change).
     */
-  def deletesThrough(spark: SparkSession, dir: String, floor: Int,
-      epoch: Int): Option[DataFrame] = {
+  private[sources] def deletesThrough(spark: SparkSession, dir: String,
+      floor: Int, epoch: Int): Option[DataFrame] = {
     val root = new org.apache.hadoop.fs.Path(s"$dir/$DeletesTable")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val rx = "epoch=(\\d+)".r
@@ -944,8 +949,8 @@ object EpochStore {
     * anti join (never a nested loop); with no live tombstones the plan
     * is [[tableThrough]]'s, unchanged.
     */
-  def tableThroughLive(spark: SparkSession, dir: String, name: String,
-      idCol: String, floor: Int, epoch: Int): DataFrame = {
+  private[sources] def tableThroughLive(spark: SparkSession, dir: String,
+      name: String, idCol: String, floor: Int, epoch: Int): DataFrame = {
     val rows = rowsWithEpoch(spark, dir, name, floor, epoch)
     val live = deletesThrough(spark, dir, floor, epoch) match {
       case None => rows
@@ -995,8 +1000,8 @@ object EpochStore {
     * reads a row), so the cost is proportional to the DELTA, not the
     * artifact.
     */
-  def addedBetween(spark: SparkSession, dir: String, name: String,
-      idCol: String, from: Int, to: Int, who: String,
+  private[sources] def addedBetween(spark: SparkSession, dir: String,
+      name: String, idCol: String, from: Int, to: Int, who: String,
       rebuildHint: String): DataFrame = {
     val st = changeBounds(spark, dir, from, to, who, rebuildHint)
     val rows = rowsWithEpoch(spark, dir, name, st.floor, to)
@@ -1018,8 +1023,8 @@ object EpochStore {
     * `from` side is an id-projected (column-pruned) scan consumed by
     * a semi join.
     */
-  def removedBetween(spark: SparkSession, dir: String, name: String,
-      idCol: String, from: Int, to: Int, who: String,
+  private[sources] def removedBetween(spark: SparkSession, dir: String,
+      name: String, idCol: String, from: Int, to: Int, who: String,
       rebuildHint: String): DataFrame = {
     val st = changeBounds(spark, dir, from, to, who, rebuildHint)
     deletesThrough(spark, dir, from + 1, to) match {
@@ -1061,7 +1066,7 @@ object EpochStore {
     * live = false. `tables` names the family's data tables (the
     * [[vacuum]] convention) for the fallback kind detection.
     */
-  def describeHistory(spark: SparkSession, dir: String,
+  private[sources] def describeHistory(spark: SparkSession, dir: String,
       tables: Seq[String], who: String, rebuildHint: String)
       : DataFrame = {
     val st = servingState(spark, dir, who, rebuildHint)
@@ -1118,14 +1123,14 @@ object EpochStore {
     * convention by string concatenation (r14 second review — a layout
     * rename would silently make such premises vacuous).
     */
-  private[graft] def checkpointDirExists(spark: SparkSession,
+  private[sources] def checkpointDirExists(spark: SparkSession,
       dir: String, name: String, k: Int): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     checkpointDir(fs, dir, name, k).isDefined
   }
 
-  private[graft] def epochDirExists(spark: SparkSession, dir: String,
+  private[sources] def epochDirExists(spark: SparkSession, dir: String,
       name: String, n: Int): Boolean = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/$name/epoch=$n")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
@@ -1224,7 +1229,7 @@ object EpochStore {
     * floor — a single live epoch (full) or an artifact already based
     * at `horizon` (partial): compacting again would only move bytes.
     */
-  def compact(spark: SparkSession, dir: String,
+  private[sources] def compact(spark: SparkSession, dir: String,
       tables: Seq[CompactTable], who: String, rebuildHint: String,
       below: Option[Int] = None,
       targetFileBytes: Long = 128L * 1024 * 1024,
@@ -1357,7 +1362,7 @@ object EpochStore {
     * and `commit_kind` in place. The one meta rewrite appends, deletes
     * and compaction share.
     */
-  private[graft] def carriedMeta(spark: SparkSession, meta: Row,
+  private[sources] def carriedMeta(spark: SparkSession, meta: Row,
       epoch: Int, delta: Seq[(String, Long)] = Seq.empty): DataFrame =
     delta.foldLeft(spark.createDataFrame(
         java.util.Collections.singletonList(meta), meta.schema)
@@ -1382,7 +1387,7 @@ object EpochStore {
     * serve-skew re-check — the only way to exercise the concurrent-
     * append refusal without a real race. Never set outside tests.
     */
-  private[graft] var beforeCompactCommit: () => Unit = () => ()
+  private[sources] var beforeCompactCommit: () => Unit = () => ()
 
   /** Reclaim the sprawl a full or partial [[compact]] superseded:
     * delete every table's `epoch=N` directories AND every `meta_N`
@@ -1408,8 +1413,9 @@ object EpochStore {
     * production scale pass a grace comfortably above the longest
     * probe.
     */
-  def vacuum(spark: SparkSession, dir: String, tables: Seq[String],
-      who: String, rebuildHint: String, graceMs: Long = 0L): Unit = {
+  private[sources] def vacuum(spark: SparkSession, dir: String,
+      tables: Seq[String], who: String, rebuildHint: String,
+      graceMs: Long = 0L): Unit = {
     require(graceMs >= 0, s"$who: graceMs must be >= 0, got $graceMs")
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

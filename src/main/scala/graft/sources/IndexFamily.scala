@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions.{broadcast, col, count,
   *   - `writer`: the family's rebuild entry point, named in refusals.
   *   - `mismatch`: why reading across family versions is wrong — the
   *     tail of the refusal.
-  *   - `tables`: the tables a compaction rewrites (and a vacuum
-  *     reclaims), with their tombstone keys and fold hooks.
+  *   - `tables`: every table [[live]] reads, a compaction rewrites and
+  *     a vacuum reclaims, with their tombstone keys and fold hooks.
   *   - `idTable` / `idCol`: the table and id column [[changes]] reports
   *     and [[delete]] checks liveness (and [[append]] clashes) against.
   *   - `deleteKey`: the column a delete set — and a build or append
@@ -27,8 +27,10 @@ import org.apache.spark.sql.functions.{broadcast, col, count,
   *   - `onDelete`: the family's extra delete-epoch content — see
   *     [[IndexFamily.DeleteHook]] (BM25 only).
   *
-  * What stays with each family: its probes, and its currency and drift
-  * premises.
+  * Every read and write of a family's artifact goes through here — the
+  * [[EpochStore]] layout is private to `sources`. What stays with each
+  * family: its probes' join and scoring logic over [[live]]'s tables,
+  * and its currency and drift premises.
   */
 final case class IndexFamily(id: String, writer: String, mismatch: String,
     tables: Seq[EpochStore.CompactTable], idTable: String, idCol: String,
@@ -52,6 +54,29 @@ final case class IndexFamily(id: String, writer: String, mismatch: String,
     st
   }
 
+  /** THE probe read: [[serving]] at `asOf`, and a reader of each
+    * declared table's rows at that horizon — tombstone-aware
+    * ([[EpochStore.tableThroughLive]]) through the table's declared
+    * `idCol`, else the plain [[EpochStore.tableThrough]]. No cache, no
+    * Spark job; an undeclared table refuses by the family's name.
+    */
+  def live(spark: SparkSession, dir: String, who: String,
+      asOf: Option[Int] = None): IndexFamily.Live = {
+    val st = serving(spark, dir, who, asOf)
+    IndexFamily.Live(st, name => declared(name, who).idCol match {
+      case Some(key) => EpochStore.tableThroughLive(spark, dir, name, key,
+        st.floor, st.epoch)
+      case None => EpochStore.tableThrough(spark, dir, name, st.floor,
+        st.epoch)
+    })
+  }
+
+  private def declared(name: String, who: String)
+      : EpochStore.CompactTable =
+    tables.find(_.name == name).getOrElse(throw new
+      IllegalArgumentException(s"$who: family '$id' declares no table " +
+        s"'$name' (its tables: ${tables.map(_.name).mkString(", ")})"))
+
   /** BUILD the artifact from `input` as epoch 0: the projected shard,
     * cached once, passes the one-id-space premise (one action, which
     * also evaluates the shard's `grow` aggregates), then any previous
@@ -67,7 +92,7 @@ final case class IndexFamily(id: String, writer: String, mismatch: String,
       params: Long => Seq[(String, Any)] = _ => Seq.empty,
       commitTs: Option[Long] = None): Unit = {
     val spark = input.sparkSession
-    val s = scopedOnce(shard.project(input))
+    val s = graft.CacheScope.scoped(shard.project(input))
     val idSpace = idSpaceOf(s)
     val Seq(c) = graft.operators.Checks.counts(idSpace)
     requireOneIdSpace(writer, shard.corpusNoun, c)
@@ -107,17 +132,17 @@ final case class IndexFamily(id: String, writer: String, mismatch: String,
       widen: Option[DataFrame => DataFrame] = None): Unit = {
     val spark = more.sparkSession
     val who = shard.appender
-    val st = serving(spark, indexDir, who)
-    val s = scopedOnce(shard.project(more))
-    val live = EpochStore.tableThroughLive(spark, indexDir, idTable, idCol,
-      st.floor, st.epoch)
+    val lv = live(spark, indexDir, who)
+    val st = lv.state
+    val s = graft.CacheScope.scoped(shard.project(more))
+    val stored = lv.table(idTable)
     val clashes = (deleteKey, idCol, shard.clash) +:
       shard.clashOn.toSeq.map { case (k, refusal) => (k, k, refusal) }
     val idSpace = idSpaceOf(s)
     val c +: hits = graft.operators.Checks.counts(idSpace +:
-      clashes.map { case (mine, stored, _) =>
-        s.select(col(mine).as(stored))
-          .join(live.select(stored), Seq(stored), "left_semi")
+      clashes.map { case (mine, key, _) =>
+        s.select(col(mine).as(key))
+          .join(stored.select(key), Seq(key), "left_semi")
           .agg(count(lit(1)).as("c"))
       }: _*)
     requireOneIdSpace(who, shard.shardNoun, c)
@@ -150,14 +175,6 @@ final case class IndexFamily(id: String, writer: String, mismatch: String,
       s"$who: $deleteKey is not one id space — ${c(0) - c(1)} " +
         s"duplicate id(s) within $scope${shard.dup}")
 
-  /** Cache the shard once: a caller that already cached the same plan
-    * (a probe scoping the batch the fold then appends) is reused, not
-    * cached a second time.
-    */
-  private def scopedOnce(df: DataFrame): DataFrame =
-    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
-    else graft.CacheScope.scoped(df)
-
   /** The name a lifecycle op reports under, after the family refusal. */
   private def checked(spark: SparkSession, dir: String, op: String)
       : String = {
@@ -186,16 +203,15 @@ final case class IndexFamily(id: String, writer: String, mismatch: String,
       commitTs: Option[Long] = None): Unit = {
     val spark = ids.sparkSession
     val who = s"delete($id)"
-    val st = serving(spark, indexDir, who)
+    val lv = live(spark, indexDir, who)
+    val st = lv.state
     val del = graft.CacheScope.scoped(
       ids.select(col(deleteKey).cast("long").as("id")))
-    def live(table: String): DataFrame = EpochStore.tableThroughLive(
-      spark, indexDir, table, idCol, st.floor, st.epoch)
     // the dup premise and ONE join of the live id table with the
     // (small, broadcast) delete set — its row count is the liveness
     // premise and it feeds the hook's shrink aggregates — fused into ONE
     // action (r15 — graft.operators.Checks)
-    val hit = live(idTable).join(broadcast(del), col(idCol) === del("id"))
+    val hit = lv.table(idTable).join(broadcast(del), col(idCol) === del("id"))
       .agg(count(lit(1)).as(countCol), onDelete.toSeq.flatMap(_.shrink): _*)
     val Seq(counts, found) = graft.operators.Checks.counts(
       del.agg(count(lit(1)).as("n"), count_distinct(col("id")).as("nd")),
@@ -211,7 +227,7 @@ final case class IndexFamily(id: String, writer: String, mismatch: String,
         "they do not no-op).")
     EpochStore.writeEpoch(indexDir, st.epoch + 1,
       (EpochStore.DeletesTable -> del) +:
-        onDelete.toSeq.flatMap(_.sideTables(live, del)),
+        onDelete.toSeq.flatMap(_.sideTables(lv.table, del)),
       EpochStore.carriedMeta(spark, st.meta, st.epoch + 1,
         hit.columns.toSeq.zip(found.map(-_))),
       st.floor, commitTs = commitTs)
@@ -255,27 +271,80 @@ final case class IndexFamily(id: String, writer: String, mismatch: String,
 
   /** DIFFERENTIAL read: which ids of `idTable` changed between two
     * retained horizons, as `('added'|'removed', <idCol>)` — added =
-    * committed in `(fromEpoch, toEpoch]` and live at `toEpoch`
-    * ([[EpochStore.addedBetween]], payload columns dropped), removed =
-    * tombstoned in that window and live at `fromEpoch`
-    * ([[EpochStore.removedBetween]]) — so a downstream consumer
-    * re-verdicts only the delta (CDC out of the stored index). Both
-    * horizons must be retained (floor ≤ from ≤ to ≤ serving; below the
-    * floor refuses like as-of).
+    * [[addedBetween]]'s rows, payload columns dropped; removed =
+    * [[removedBetween]] — so a downstream consumer re-verdicts only the
+    * delta (CDC out of the stored index).
     */
   def changes(spark: SparkSession, indexDir: String, fromEpoch: Int,
       toEpoch: Int): DataFrame = {
-    val who = checked(spark, indexDir, "changes")
-    EpochStore.addedBetween(spark, indexDir, idTable, idCol, fromEpoch,
-        toEpoch, who, writer)
+    val who = s"changes($id)"
+    addedBetween(spark, indexDir, idTable, fromEpoch, toEpoch, who)
       .select(lit("added").as("change"), col(idCol))
-      .unionByName(EpochStore.removedBetween(spark, indexDir, idTable,
-          idCol, fromEpoch, toEpoch, who, writer)
+      .unionByName(removedBetween(spark, indexDir, fromEpoch, toEpoch, who)
         .select(lit("removed").as("change"), col(idCol)))
   }
+
+  /** The rows of id-keyed table `name` committed in `(fromEpoch,
+    * toEpoch]` and still live at `toEpoch`, payload kept
+    * ([[EpochStore.addedBetween]]). Both horizons must be retained
+    * (floor ≤ from ≤ to ≤ serving; below the floor refuses like as-of).
+    */
+  def addedBetween(spark: SparkSession, indexDir: String, name: String,
+      fromEpoch: Int, toEpoch: Int, who: String): DataFrame = {
+    serving(spark, indexDir, who)
+    EpochStore.addedBetween(spark, indexDir, declared(name, who).name,
+      idCol, fromEpoch, toEpoch, who, writer)
+  }
+
+  /** The `idTable` ids tombstoned in `(fromEpoch, toEpoch]` that were
+    * live at `fromEpoch` ([[EpochStore.removedBetween]]).
+    */
+  def removedBetween(spark: SparkSession, indexDir: String,
+      fromEpoch: Int, toEpoch: Int, who: String): DataFrame = {
+    serving(spark, indexDir, who)
+    EpochStore.removedBetween(spark, indexDir, idTable, idCol, fromEpoch,
+      toEpoch, who, writer)
+  }
+
+  /** The artifact's mutation history, one row per readable meta — see
+    * [[EpochStore.describeHistory]].
+    */
+  def history(spark: SparkSession, indexDir: String, who: String)
+      : DataFrame = {
+    serving(spark, indexDir, who)
+    EpochStore.describeHistory(spark, indexDir, tables.map(_.name), who,
+      writer)
+  }
+
+  /** Layout facts a gate asserts after a [[vacuum]]: whether table
+    * `name`'s epoch-`n` directory, or the checkpoint a partial
+    * [[compact]] folded at horizon `n`, is on disk.
+    */
+  def epochDirExists(spark: SparkSession, indexDir: String, name: String,
+      n: Int): Boolean = EpochStore.epochDirExists(spark, indexDir, name, n)
+
+  def checkpointDirExists(spark: SparkSession, indexDir: String,
+      name: String, n: Int): Boolean =
+    EpochStore.checkpointDirExists(spark, indexDir, name, n)
 }
 
 object IndexFamily {
+
+  /** One probe's read of the artifact ([[IndexFamily.live]]): the
+    * serving `state` at the asked horizon and `table`, the reader of
+    * each declared table's rows there.
+    */
+  final case class Live(state: EpochStore.Serving,
+      table: String => DataFrame) {
+    def meta: Row = state.meta
+  }
+
+  /** Delete whatever artifact is at `dir`, of any family, with the
+    * layout's cache invalidation ([[EpochStore.deleteAll]]) — for a
+    * caller that replaces the directory's bytes itself (a staged copy).
+    */
+  def wipe(spark: SparkSession, dir: String): Unit =
+    EpochStore.deleteAll(spark, dir)
 
   /** How a family's build or append input becomes an epoch:
     *   - `appender`: the family's append entry point, named in refusals;

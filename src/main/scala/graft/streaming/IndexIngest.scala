@@ -85,9 +85,9 @@ object IndexIngest {
     }
     val pristine = idxDir + "_pristine"
     graft.SharedStage.buildOnce(pristine, key) { build(pristine) }
-    // a fresh mutable copy EVERY pass — deleteAll also invalidates the
-    // EpochStore in-JVM caches and cached plans over the old copy
-    graft.sources.EpochStore.deleteAll(spark, idxDir)
+    // a fresh mutable copy EVERY pass — the wipe also invalidates the
+    // layout's in-JVM caches and cached plans over the old copy
+    IndexFamily.wipe(spark, idxDir)
     val src = java.nio.file.Paths.get(pristine)
     val dst = java.nio.file.Paths.get(idxDir)
     val walk = java.nio.file.Files.walk(src)
@@ -402,18 +402,15 @@ object IndexIngest {
     // cb(0) no-op, B-fold 2, cb(1)→epoch 3 floor 1, C-fold 4,
     // cb(3)→epoch 5 floor 3 — deterministic because one wave = one
     // batch (one file per trigger over three stamped files)
-    val st = graft.sources.EpochStore.servingState(spark, dir,
-      queryName, "writeFingerprintIndex")
+    val st = Dedup.index.serving(spark, dir, queryName)
     require(st.epoch == 5 && st.floor == 3,
       s"$queryName premise violated: expected (serving, floor) = " +
         s"(5, 3) from the per-batch retention policy, got " +
         s"(${st.epoch}, ${st.floor})")
     // through the layout's own existence probes, never by rebuilding
     // its path convention by hand (r14 second review)
-    require(!graft.sources.EpochStore.epochDirExists(spark, dir,
-        "fps", 0) &&
-      graft.sources.EpochStore.checkpointDirExists(spark, dir,
-        "fps", 3),
+    require(!Dedup.index.epochDirExists(spark, dir, "fps", 0) &&
+      Dedup.index.checkpointDirExists(spark, dir, "fps", 3),
       s"$queryName premise violated: the folded epochs must be " +
         "physically reclaimed and the retention checkpoint present — " +
         "otherwise the probes below prove nothing about the fold")

@@ -43,6 +43,31 @@ class CacheScopeSpec extends AnyFunSuite {
     }
   }
 
+  test("scoping an already-cached plan returns it unregistered") {
+    CacheScope.withScope {
+      val first = CacheScope.scoped(spark.range(0, 7).toDF("z"))
+      first.count()
+      val n = CacheScope.activeCount
+      // the same plan again: the cached frame itself and a fresh one
+      CacheScope.scoped(first).count()
+      CacheScope.scoped(spark.range(0, 7).toDF("z")).count()
+      assert(CacheScope.activeCount === n)
+    }
+  }
+
+  test("an inner scope re-scoping an outer scope's cached plan leaves " +
+      "it cached on exit") {
+    CacheScope.withScope {
+      val outer = CacheScope.scoped(spark.range(0, 11).toDF("w"))
+      outer.count()
+      CacheScope.withScope {
+        CacheScope.scoped(spark.range(0, 11).toDF("w")).count()
+      }
+      assert(outer.storageLevel.useMemory,
+        "the inner scope's exit unpersisted the outer scope's cache")
+    }
+  }
+
   test("scope release is owner-scoped: cannot drop another thread's cache") {
     import spark.implicits._
     CacheScope.withScope {

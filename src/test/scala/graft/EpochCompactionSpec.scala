@@ -132,7 +132,7 @@ class EpochCompactionSpec extends AnyFunSuite {
     // well-behaved concurrent append refuses at acquisition; only a
     // lease-breaker can still land mid-compaction) and appends after
     // compact's rewrite but before its meta commit
-    graft.sources.EpochStore.beforeCompactCommit = () => {
+    graft.sources.EpochLayer.beforeCompactCommit = () => {
       val lockFs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
         spark.sparkContext.hadoopConfiguration)
       lockFs.delete(new org.apache.hadoop.fs.Path(s"$dir/_writer_lock"),
@@ -150,7 +150,7 @@ class EpochCompactionSpec extends AnyFunSuite {
       }
       assert(se.getMessage.contains("advanced during compaction"))
     } finally {
-      graft.sources.EpochStore.beforeCompactCommit = () => ()
+      graft.sources.EpochLayer.beforeCompactCommit = () => ()
     }
     // the appended state serves — nothing of the aborted rewrite leaks,
     // and a RETRIED compact (writers now serialized) succeeds and
@@ -208,7 +208,7 @@ class EpochCompactionSpec extends AnyFunSuite {
       "a torn (unreferenced) checkpoint must be invisible to probes")
     // the race the single-writer contract forbids, at the partial
     // path — the violator must force-break the lease first (r14)
-    graft.sources.EpochStore.beforeCompactCommit = () => {
+    graft.sources.EpochLayer.beforeCompactCommit = () => {
       fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_writer_lock"),
         false)
       CacheScope.withScope {
@@ -225,7 +225,7 @@ class EpochCompactionSpec extends AnyFunSuite {
       }
       assert(se.getMessage.contains("advanced during compaction"))
     } finally {
-      graft.sources.EpochStore.beforeCompactCommit = () => ()
+      graft.sources.EpochLayer.beforeCompactCommit = () => ()
     }
     val afterSkew = probe()
     // the retried partial compaction (writers serialized again)
@@ -265,7 +265,7 @@ class EpochCompactionSpec extends AnyFunSuite {
     // the second writer plays by the rules: it tries to acquire and
     // must refuse LOUDLY instead of interleaving with the rewrite
     var refusal: String = ""
-    graft.sources.EpochStore.beforeCompactCommit = () => {
+    graft.sources.EpochLayer.beforeCompactCommit = () => {
       refusal = intercept[IllegalArgumentException] {
         CacheScope.withScope {
           Dedup.appendFingerprintIndex(dir,
@@ -279,7 +279,7 @@ class EpochCompactionSpec extends AnyFunSuite {
         Dedup.index.compact(spark, dir) },
         "the fenced compaction must complete — the intruder refused")
     } finally {
-      graft.sources.EpochStore.beforeCompactCommit = () => ()
+      graft.sources.EpochLayer.beforeCompactCommit = () => ()
     }
     assert(refusal.contains("another writer holds the lease"),
       s"the second writer must refuse at acquisition, got: $refusal")
@@ -319,7 +319,7 @@ class EpochCompactionSpec extends AnyFunSuite {
     // a second writer breaks the lease and installs its own token but
     // commits nothing — the serve-skew re-check cannot see it; only
     // the fencing check can
-    graft.sources.EpochStore.beforeCompactCommit = () => {
+    graft.sources.EpochLayer.beforeCompactCommit = () => {
       fs.delete(lock, false)
       val out = fs.create(lock, false)
       out.write("intruder|fake-token|0".getBytes(
@@ -333,7 +333,7 @@ class EpochCompactionSpec extends AnyFunSuite {
       assert(fenced.getMessage.contains("changed hands"),
         s"expected the fencing refusal, got: ${fenced.getMessage}")
     } finally {
-      graft.sources.EpochStore.beforeCompactCommit = () => ()
+      graft.sources.EpochLayer.beforeCompactCommit = () => ()
     }
     assert(probe() == before,
       "nothing of the fenced-off compaction may be visible")
@@ -469,8 +469,7 @@ class EpochCompactionSpec extends AnyFunSuite {
         grown.join(kept, Seq("doc_id"), "left_semi"))
     }
     // the serving state a slow reader pinned BEFORE the compaction
-    val pre = graft.sources.EpochStore.servingState(spark, dir,
-      "test", "writeFingerprintIndex")
+    val pre = Dedup.index.serving(spark, dir, "test")
     assert(pre.floor == 0 && pre.epoch == 1)
     CacheScope.withScope {
       assert(Dedup.index.compact(spark, dir))
@@ -487,7 +486,7 @@ class EpochCompactionSpec extends AnyFunSuite {
       metas(dir) == Set(0, 1, 2),
       s"grace window must defer reclaim, left ${epochDirs(dir, "fps")}")
     // …so the pre-compaction reader's scan still succeeds
-    val staleRead = graft.sources.EpochStore.tableThrough(spark, dir,
+    val staleRead = graft.sources.EpochLayer.tableThrough(spark, dir,
       "fps", pre.floor, pre.epoch).count()
     assert(staleRead > 0,
       "a reader mid-probe on the pre-compaction serving state must " +
@@ -500,14 +499,14 @@ class EpochCompactionSpec extends AnyFunSuite {
   test("compact refuses a family meta with no epoch column — the " +
       "carried-meta rewrite premise fails fast on a forgetful family") {
     val dir = "/tmp/graft_test_noepochmeta"
-    graft.sources.EpochStore.deleteAll(spark, dir)
+    graft.sources.EpochLayer.deleteAll(spark, dir)
     val rows = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     val badMeta = Seq(("fake-family-v0", 2L)).toDF("family", "n")
-    graft.sources.EpochStore.writeEpoch(dir, 0, Seq("t" -> rows), badMeta)
-    graft.sources.EpochStore.writeEpoch(dir, 1, Seq("t" -> rows
+    graft.sources.EpochLayer.writeEpoch(dir, 0, Seq("t" -> rows), badMeta)
+    graft.sources.EpochLayer.writeEpoch(dir, 1, Seq("t" -> rows
       .withColumn("id", col("id") + 10L)), badMeta)
     val e = intercept[IllegalArgumentException] {
-      graft.sources.EpochStore.compact(spark, dir,
+      graft.sources.EpochLayer.compact(spark, dir,
         Seq(graft.sources.EpochStore.CompactTable("t", Some("id"))),
         "test", "rebuild")
     }
@@ -520,25 +519,25 @@ class EpochCompactionSpec extends AnyFunSuite {
       "acquired the lease serialize on it but target the same epoch; " +
       "the second must refuse, never silently overwrite the first") {
     val dir = "/tmp/graft_test_targetrecheck"
-    graft.sources.EpochStore.deleteAll(spark, dir)
+    graft.sources.EpochLayer.deleteAll(spark, dir)
     val rows = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     val meta = Seq(("fake-family-v0", 2L, 0)).toDF("family", "n", "epoch")
-    graft.sources.EpochStore.writeEpoch(dir, 0, Seq("t" -> rows), meta)
+    graft.sources.EpochLayer.writeEpoch(dir, 0, Seq("t" -> rows), meta)
     // writer A lands epoch 1 (it computed target = serving + 1 = 1)
-    graft.sources.EpochStore.writeEpoch(dir, 1,
+    graft.sources.EpochLayer.writeEpoch(dir, 1,
       Seq("t" -> rows.withColumn("id", col("id") + 10L)),
       meta.withColumn("epoch", lit(1)))
     // writer B computed the SAME target from the stale serving state;
     // the lease is free (A released), so only the re-check stands
     // between B and silently clobbering A's committed epoch
     val e = intercept[IllegalArgumentException] {
-      graft.sources.EpochStore.writeEpoch(dir, 1,
+      graft.sources.EpochLayer.writeEpoch(dir, 1,
         Seq("t" -> rows.withColumn("id", col("id") + 20L)),
         meta.withColumn("epoch", lit(1)))
     }
     assert(e.getMessage.contains("already committed"))
     // A's rows serve untouched
-    val ids = graft.sources.EpochStore.tableThrough(spark, dir, "t",
+    val ids = graft.sources.EpochLayer.tableThrough(spark, dir, "t",
         0, 1).select("id").as[Long].collect().toSet
     assert(ids == Set(1L, 2L, 11L, 12L),
       "the refused late write must leave the committed epoch intact")
@@ -705,8 +704,7 @@ class EpochCompactionSpec extends AnyFunSuite {
         .select("doc_id", "text").limit(20), dir, commitTs = Some(1000L))
     }
     def state = {
-      val st = graft.sources.EpochStore.servingState(spark, dir,
-        "IndexFamilyTable", "writeFingerprintIndex")
+      val st = Dedup.index.serving(spark, dir, "IndexFamilyTable")
       (st.epoch, st.floor)
     }
     val before = state
@@ -725,6 +723,11 @@ class EpochCompactionSpec extends AnyFunSuite {
         Right(0)), // stamped base
       ("changes", _.changes(spark, dir, 0, 0).count(),
         Right(0L)), // empty window
+      ("live", _.live(spark, dir, "IndexFamilyTable").state.epoch,
+        Right(0)),
+      ("live of an undeclared table",
+        _.live(spark, dir, "IndexFamilyTable").table("no_such_table"),
+        Left("family 'fp-md5-norm-v1' declares no table 'no_such_table'")),
       ("delete", f => CacheScope.withScope {
         f.delete(dir, Seq(987654321L).toDF("doc_id")) },
         Left("not live"))) // a never-stored id
@@ -764,12 +767,67 @@ class EpochCompactionSpec extends AnyFunSuite {
         assert(state == before, s"${fam.id} $op moved the artifact")
       }
     }
+    // live, on each family's own artifact: every declared table reads
+    // exactly the layer's rows under the key the probes passed by hand
+    // (None: the plain read), at the serving epoch and at the horizon
+    // before a delete; an undeclared table refuses by the family's name
+    val probeKeys = Map[String, Map[String, Option[String]]](
+      Dedup.index.id -> Map("fps" -> Some("owner")),
+      TextIndex.index.id -> Map("docs" -> Some("doc_id"),
+        "bands" -> Some("doc_id")),
+      Bm25.index.id -> Map("postings" -> Some("doc_id"),
+        "docs" -> Some("doc_id"), "dfs" -> None),
+      Ann.index.id -> Map("vectors" -> Some("vec_id"),
+        "bands" -> Some("vec_id")),
+      Multimodal.index.id -> Map("hashes" -> Some("media_id"),
+        "bands" -> Some("media_id")),
+      TextDedup.index.id -> Map("docs" -> Some("doc_id"),
+        "grams" -> Some("doc_id")))
+    for (fx <- FamilyFixtures.all(spark)) {
+      val fam = fx.family
+      val at = s"/tmp/graft_test_family_live_${fam.id}"
+      CacheScope.withScope { fx.build(fx.input(0, 200), at) }
+      val ids = CacheScope.withScope {
+        fam.live(spark, at, "familyLive").table(fam.idTable)
+          .filter(col(fam.idCol) % 5 === 0).select(col(fam.idCol))
+          .distinct().as[Long].collect().toSeq
+      }
+      assert(ids.nonEmpty, s"${fam.id}: test premise — a delete set")
+      CacheScope.withScope { fam.delete(at, ids.toDF(fam.deleteKey)) }
+      assert(fam.tables.map(_.name).toSet == probeKeys(fam.id).keySet)
+      def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+        CacheScope.withScope { df.collect().map(_.toString).toSeq.sorted }
+      for (asOf <- Seq(None, Some(0)); (t, key) <- probeKeys(fam.id)) {
+        val lv = fam.live(spark, at, "familyLive", asOf)
+        val st = lv.state
+        val direct = key.fold(graft.sources.EpochLayer.tableThrough(spark,
+            at, t, st.floor, st.epoch))(k =>
+          graft.sources.EpochLayer.tableThroughLive(spark, at, t, k,
+            st.floor, st.epoch))
+        val (got, want) = (rows(lv.table(t)), rows(direct))
+        val same = lv.table(t).columns.toSeq == direct.columns.toSeq &&
+          got == want
+        assert(same, s"${fam.id} $t at $asOf: ${got.diff(want).size} " +
+          s"extra and ${want.diff(got).size} missing rows")
+      }
+      val liveIds = Seq(Some(0), None).map(h => CacheScope.withScope {
+        fam.live(spark, at, "familyLive", h).table(fam.idTable)
+          .select(col(fam.idCol)).distinct().count()
+      })
+      assert(liveIds(0) - liveIds(1) == ids.size,
+        s"${fam.id}: the delete serves only after its horizon")
+      val e = intercept[IllegalArgumentException] {
+        fam.live(spark, at, "familyLive").table("no_such_table")
+      }
+      assert(e.getMessage.contains(
+        s"family '${fam.id}' declares no table 'no_such_table'"))
+    }
   }
 
   test("writeEpoch sizes append output by bytes: a many-partition tiny " +
       "frame lands as ONE file, rows exactly preserved") {
     val dir = "/tmp/graft_test_sized_append"
-    graft.sources.EpochStore.deleteAll(spark, dir)
+    graft.sources.EpochLayer.deleteAll(spark, dir)
     // 32 map partitions with ~31 rows each — pre-r16 this landed 32
     // tiny files (the frame's partitioning); byte-derived sizing must
     // collapse it to partsFor(bytes, 128MB) = 1
@@ -777,7 +835,7 @@ class EpochCompactionSpec extends AnyFunSuite {
       .select(col("id"), (col("id") * 2).as("v"))
     val meta = Seq(("sized-append-test", 1000L, 0))
       .toDF("family", "corpus_count", "epoch")
-    graft.sources.EpochStore.writeEpoch(dir, 0, Seq("t" -> df), meta)
+    graft.sources.EpochLayer.writeEpoch(dir, 0, Seq("t" -> df), meta)
     val files = new java.io.File(s"$dir/t/epoch=0").listFiles().toSeq
       .map(_.getName)
       .filter(n => !n.startsWith("_") && !n.startsWith("."))
@@ -790,7 +848,7 @@ class EpochCompactionSpec extends AnyFunSuite {
     assert(back.count() == 1000L &&
       back.agg(sum(col("v"))).head().getLong(0) == 999000L)
     // and the epoch serves normally (meta committed after the rewrite)
-    val st = graft.sources.EpochStore.servingState(spark, dir,
+    val st = graft.sources.EpochLayer.servingState(spark, dir,
       "sizedAppendTest", "rebuild")
     assert(st.epoch == 0 && st.floor == 0)
   }

@@ -734,8 +734,7 @@ class EpochDeleteSpec extends AnyFunSuite {
       // the delete set: live stored ids ≡ 0 (mod 5), collected so no
       // lineage reads the artifact it mutates
       val ids = CacheScope.withScope {
-        graft.sources.EpochStore.tableThroughLive(spark, dir, fam.idTable,
-            fam.idCol, before.floor, before.epoch)
+        fam.live(spark, dir, "deleteMetaTest").table(fam.idTable)
           .filter(col(fam.idCol) % 5 === 0).select(col(fam.idCol))
           .distinct().as[Long].collect().toSeq
       }
@@ -791,13 +790,12 @@ class EpochDeleteSpec extends AnyFunSuite {
         before.meta == meta0.head(), s"${fam.id}: seeded meta_0")
       def liveIds(st: graft.sources.EpochStore.Serving): Long =
         CacheScope.withScope {
-          graft.sources.EpochStore.tableThroughLive(spark, dir, fam.idTable,
-            fam.idCol, st.floor, st.epoch).count()
+          fam.live(spark, dir, "appendMetaTest", Some(st.epoch))
+            .table(fam.idTable).count()
         }
       val shard = fx.input(300, 400)
       val storedId = CacheScope.withScope {
-        graft.sources.EpochStore.tableThroughLive(spark, dir, fam.idTable,
-          fam.idCol, before.floor, before.epoch)
+        fam.live(spark, dir, "appendMetaTest").table(fam.idTable)
           .agg(min(col(fam.idCol))).head().getLong(0)
       }
       for ((what, input, want) <- Seq(

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.{Ann, Bm25, Dedup, Multimodal, TextDedup, TextIndex}
-import graft.sources.EpochStore
+import graft.sources.{EpochLayer, EpochStore}
 
 /** The append-path SCHEMA PREMISE (r14 — r13 VERDICT #4): every epoch
   * of a table must carry the table's stored schema. Parquet mixed
@@ -37,14 +37,14 @@ class EpochSchemaSpec extends AnyFunSuite {
     * refusal each time, then prove the artifact did not move.
     */
   private def assertDriftRefused(dir: String, table: String): Unit = {
-    val st = EpochStore.servingState(spark, dir, "EpochSchemaSpec",
+    val st = EpochLayer.servingState(spark, dir, "EpochSchemaSpec",
       "rebuild")
     val meta = carryMeta(st)
-    val good = EpochStore.tableThrough(spark, dir, table, st.floor,
+    val good = EpochLayer.tableThrough(spark, dir, table, st.floor,
       st.epoch).limit(1)
     def refuse(df: org.apache.spark.sql.DataFrame, what: String): Unit = {
       val e = intercept[IllegalArgumentException] {
-        EpochStore.writeEpoch(dir, st.epoch + 1, Seq(table -> df),
+        EpochLayer.writeEpoch(dir, st.epoch + 1, Seq(table -> df),
           meta, st.floor)
       }
       assert(e.getMessage.contains("schema drift") &&
@@ -63,7 +63,7 @@ class EpochSchemaSpec extends AnyFunSuite {
       refuse(good.withColumn(first, col(first).cast(retyped)),
         "a retyped column")
     }
-    val after = EpochStore.servingState(spark, dir, "EpochSchemaSpec",
+    val after = EpochLayer.servingState(spark, dir, "EpochSchemaSpec",
       "rebuild")
     assert(after.epoch == st.epoch && after.floor == st.floor,
       "a refused drifted append must leave the artifact untouched")
@@ -77,10 +77,10 @@ class EpochSchemaSpec extends AnyFunSuite {
     */
   private def assertAdditive(dir: String, table: String): Unit =
     CacheScope.withScope {
-      val st = EpochStore.servingState(spark, dir, "EpochSchemaSpec",
+      val st = EpochLayer.servingState(spark, dir, "EpochSchemaSpec",
         "rebuild")
       val meta = carryMeta(st)
-      val live = EpochStore.tableThrough(spark, dir, table, st.floor,
+      val live = EpochLayer.tableThrough(spark, dir, table, st.floor,
         st.epoch)
       val n = live.count()
       assert(n > 0, "test premise: a non-empty stored table")
@@ -88,7 +88,7 @@ class EpochSchemaSpec extends AnyFunSuite {
       // refuses without the flag (covered above as "an extra column",
       // re-pinned here against the exact widened frame)
       intercept[IllegalArgumentException] {
-        EpochStore.writeEpoch(dir, st.epoch + 1, Seq(table -> widened),
+        EpochLayer.writeEpoch(dir, st.epoch + 1, Seq(table -> widened),
           meta, st.floor)
       }
       // prefix violations refuse EVEN under the flag
@@ -97,7 +97,7 @@ class EpochSchemaSpec extends AnyFunSuite {
         val reordered = live.select((cols.reverse.map(col) :+
           lit("x").as("evo_tag")): _*)
         val e = intercept[IllegalArgumentException] {
-          EpochStore.writeEpoch(dir, st.epoch + 1,
+          EpochLayer.writeEpoch(dir, st.epoch + 1,
             Seq(table -> reordered), meta, st.floor,
             allowAdditive = true)
         }
@@ -105,15 +105,15 @@ class EpochSchemaSpec extends AnyFunSuite {
           "a reorder under allowAdditive must refuse as drift")
       }
       // the widening epoch lands with the flag...
-      EpochStore.writeEpoch(dir, st.epoch + 1, Seq(table -> widened),
+      EpochLayer.writeEpoch(dir, st.epoch + 1, Seq(table -> widened),
         meta, st.floor, allowAdditive = true)
-      val after = EpochStore.servingState(spark, dir, "EpochSchemaSpec",
+      val after = EpochLayer.servingState(spark, dir, "EpochSchemaSpec",
         "rebuild")
       assert(after.epoch == st.epoch + 1,
         "the additive epoch must commit")
       // ...and the mixed read serves old + new epochs in one frame,
       // NULL-backfilling the pre-evolution rows
-      val mixed = EpochStore.tableThrough(spark, dir, table,
+      val mixed = EpochLayer.tableThrough(spark, dir, table,
         after.floor, after.epoch)
       assert(mixed.columns.last == "evo_tag",
         "the widened column must append after the stored prefix")
@@ -125,7 +125,7 @@ class EpochSchemaSpec extends AnyFunSuite {
       // the widened schema IS the stored schema now: a narrow append
       // refuses until the writer carries (or re-widens) the column
       intercept[IllegalArgumentException] {
-        EpochStore.writeEpoch(dir, after.epoch + 1,
+        EpochLayer.writeEpoch(dir, after.epoch + 1,
           Seq(table -> live.limit(1)), meta, after.floor)
       }
     }

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.operators.Dedup
-import graft.sources.{EpochStore, RetentionPolicy}
+import graft.sources.RetentionPolicy
 import graft.streaming.IndexIngest
 
 /** The contract of the one ingest loop every streaming index gate runs
@@ -24,8 +24,7 @@ class IngestLoopSpec extends AnyFunSuite {
     StructField("doc_id", LongType), StructField("text", StringType)))
 
   private def state(dir: String): (Int, Int) = {
-    val st = EpochStore.servingState(spark, dir, name,
-      "writeFingerprintIndex")
+    val st = Dedup.index.serving(spark, dir, name)
     (st.epoch, st.floor)
   }
 

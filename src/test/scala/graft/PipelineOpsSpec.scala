@@ -439,6 +439,36 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(fe.getMessage.contains("family"))
   }
 
+  test("stored BPE merges are an IndexFamily: the merge and fp " +
+      "families each refuse the other's artifact by family, and a " +
+      "frozen tokenizer refuses an append") {
+    val bpeDir = "/tmp/graft_test_bpe_family"
+    val fpDir = "/tmp/graft_test_bpe_family_fp"
+    val docs = Seq((0L, "aaab aab"), (1L, "zz b")).toDF("doc_id", "text")
+    CacheScope.withScope {
+      Bpe.writeMerges(Seq("aaab aaab b", "aaab ab aab").toDF("text"),
+        bpeDir, k = 2)
+      graft.operators.Dedup.writeFingerprintIndex(docs, fpDir)
+    }
+    assert(Bpe.index.serving(spark, bpeDir, "bpeFamily").meta
+      .getAs[Long]("k") == 2L)
+    val fe = intercept[IllegalArgumentException] {
+      Bpe.encodeWithStoredMerges(fpDir, docs)
+    }
+    assert(fe.getMessage.contains("family"))
+    val be = intercept[IllegalArgumentException] {
+      graft.operators.Dedup.dedupAgainstIndex(bpeDir, docs)
+    }
+    assert(be.getMessage.contains("family"))
+    val ae = intercept[IllegalArgumentException] {
+      CacheScope.withScope {
+        Bpe.index.append(bpeDir, Seq((3, "a", "b", 1L))
+          .toDF("merge_rank", "lhs", "rhs", "pair_count"))
+      }
+    }
+    assert(ae.getMessage.contains("a frozen tokenizer has no append"))
+  }
+
   test("bpe refuses loudly when k exceeds the learnable merges") {
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)

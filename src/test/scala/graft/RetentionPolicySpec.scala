@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
-import graft.sources.{EpochStore, RetentionPolicy}
+import graft.sources.RetentionPolicy
 
 /** The ingestion loops' housekeeping policy (r15 — r14 VERDICT #5):
   * one value type replaces five hand-rolled per-loop lambdas. The
@@ -117,8 +117,7 @@ class RetentionPolicySpec extends AnyFunSuite {
           () => Dedup.index.vacuum(spark, idx))
       }
     }
-    val st = EpochStore.servingState(spark, idx, "RetentionPolicySpec",
-      "writeFingerprintIndex")
+    val st = Dedup.index.serving(spark, idx, "RetentionPolicySpec")
     assert(st.epoch == 5 && st.floor == 3,
       s"expected the q188 end state (5, 3), got (${st.epoch}, ${st.floor})")
   }
