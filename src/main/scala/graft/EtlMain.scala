@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Observation, SparkSession}
 import graft.operators.{Dedup, Stats, TxnTransform}
 import graft.sources.CsvSource
 
@@ -20,18 +21,71 @@ import graft.sources.CsvSource
   *  - post-load indexes → parquet min/max stats (+ partitionBy if wanted)
   *  - faulty chunk log  → per-ROW corrupt capture written to --corrupt-dir
   *
-  * Exit code 0 on success with the reference's stats/validation report
-  * printed (A1-A5), 1 on failure. An OutOfMemoryError in a task exits
-  * 52 instead: Spark's executor uncaught-exception handler ends the JVM
-  * before the catch below can map it to 1 (measured at -Xmx1g on a
-  * 1.3 GB input; the fix is ROADMAP item 2).
+  * Exit codes: 0 on success, with the reference's stats/validation report
+  * printed (A1-A4 and the quarantined-row count); 1 on failure; 52 on an
+  * OutOfMemoryError in a task, because in local mode Spark's executor
+  * uncaught-exception handler ends the JVM before the catch below can
+  * map it to 1.
   */
 object EtlMain {
+
+  /** [[run]]'s report: the written table's A1+A3 stats, A2 status counts
+    * (in status order) and A4 integrity counters, and the quarantined rows.
+    */
+  final case class Report(tableStats: Map[String, Any],
+      statusCounts: Seq[(String, Long)], integrity: Map[String, Any],
+      quarantined: Long)
+
+  /** Load `input` into `output`/transactions, quarantine its malformed
+    * raw lines under `corruptDir`, print the report and return it.
+    */
+  def run(spark: SparkSession, input: String, output: String, runTs: String,
+      corruptDir: String): Report = CacheScope.withScope {
+    // scan with per-row malformed capture (S1/S2)
+    val (clean, corrupt) = CsvSource.readTxn(spark, input)
+
+    // quarantine corrupt raw lines (the reference's "faulty chunk" log,
+    // done per-row; reference: README.md:65)
+    corrupt.select(CsvSource.corruptCol).write.mode("overwrite")
+      .option("header", "false").csv(corruptDir)
+
+    // transform (P2-P12) + deterministic upsert semantics (S7)
+    val piped = TxnTransform.pipeline(runTs)(clean)
+    val deduped = Dedup.lastWriterWinsAgg(piped,
+      keys = Seq("transaction_id"),
+      payload = TxnTransform.outputCols.filterNot(_ == "transaction_id"),
+      orderCols = Seq("amount", "user_id", "ts", "status"))
+
+    // sink (S6/S7) — parquet with stats in footers (S8 analogue); the
+    // A1/A3 and A4 aggregates ride the write's own pass
+    val (stats, integrity) = (Observation(), Observation())
+    val (sa, ia) = (Stats.tableStatsAggs(), Stats.integrityAggs)
+    deduped.observe(stats, sa.head, sa.tail: _*)
+      .observe(integrity, ia.head, ia.tail: _*)
+      .write.mode("overwrite").parquet(s"$output/transactions")
+
+    // the reference's read path, A2: the one read-back of the table
+    val statusCounts = Stats.statusCounts(
+      spark.read.parquet(s"$output/transactions")).collect().toSeq
+      .map(r => (r.getString(0), r.getLong(1)))
+    val report = Report(stats.get, statusCounts, integrity.get,
+      corrupt.count())
+
+    def kv(m: Iterable[(String, Any)]) =
+      m.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(" ")
+    println(s"== table stats ==\n${kv(report.tableStats)}")
+    println(s"== status counts ==\n${kv(report.statusCounts)}")
+    println(s"== integrity ==\n${kv(report.integrity)}")
+    println(s"== corrupt rows quarantined: ${report.quarantined} -> $corruptDir ==")
+    report
+  }
+
   def main(args: Array[String]): Unit = {
     if (args.length < 2) {
       System.err.println(
         "usage: EtlMain <input.csv> <output_dir> [--cores N] " +
-          "[--run-ts ISO8601] [--corrupt-dir DIR]")
+          "[--run-ts ISO8601] [--corrupt-dir DIR]\n" +
+          "exit codes: 0 success, 1 failure, 52 a task ran out of memory")
       sys.exit(1)
     }
     val input = args(0)
@@ -49,44 +103,14 @@ object EtlMain {
     }
 
     val spark = LocalSpark.session(cores = cores.toInt)
-
-    try {
-      // scan with per-row malformed capture (S1/S2)
-      val (clean, corrupt) = CsvSource.splitCorrupt(
-        CsvSource.readTxnCsv(spark, input))
-
-      // quarantine corrupt raw lines (the reference's "faulty chunk"
-      // log, done per-row; reference: README.md:65)
-      corrupt.select(CsvSource.corruptCol).write.mode("overwrite")
-        .option("header", "false").csv(corruptDir)
-
-      // transform (P2-P12) + deterministic upsert semantics (S7)
-      val piped = TxnTransform.pipeline(runTs)(clean)
-      val deduped = Dedup.lastWriterWinsAgg(piped,
-        keys = Seq("transaction_id"),
-        payload = TxnTransform.outputCols.filterNot(_ == "transaction_id"),
-        orderCols = Seq("amount", "user_id", "ts", "status"))
-
-      // sink (S6/S7) — parquet with stats in footers (S8 analogue)
-      deduped.write.mode("overwrite").parquet(s"$output/transactions")
-
-      // the reference's read path: stats + integrity report (A1-A5)
-      val back = spark.read.parquet(s"$output/transactions")
-      println("== table stats ==")
-      Stats.tableStats(back).show(truncate = false)
-      println("== status counts ==")
-      Stats.statusCounts(back).show(truncate = false)
-      println("== integrity ==")
-      Stats.integrity(back).show(truncate = false)
-      val nCorrupt = corrupt.count()
-      println(s"== corrupt rows quarantined: $nCorrupt -> $corruptDir ==")
-      sys.exit(0)
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"pipeline failed: ${e.getMessage}")
-        sys.exit(1)
-    } finally {
-      spark.stop()
-    }
+    val code =
+      try { run(spark, input, output, runTs, corruptDir); 0 }
+      catch {
+        case e: Throwable =>
+          System.err.println(s"pipeline failed: ${e.getMessage}")
+          1
+      }
+    spark.stop()
+    sys.exit(code)
   }
 }

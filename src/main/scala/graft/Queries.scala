@@ -1767,8 +1767,7 @@ object Queries {
     // clean side. Counts pinned from the fixture's documented anatomy.
     "q08_malformed_csv" -> ((s, dir) => {
       val path = Fixtures.materializeMalformed()
-      val (clean, corrupt) = CsvSource.splitCorrupt(
-        CsvSource.readTxnCsv(s, path))
+      val (clean, corrupt) = CsvSource.readTxn(s, path)
       val piped = TxnTransform.pipeline(RunTs)(clean)
       clean.agg(count(lit(1)).as("n_clean"))
         .crossJoin(corrupt.agg(count(lit(1)).as("n_corrupt")))

@@ -54,12 +54,6 @@ object TxnView {
           FROM lineitem) raw_txn
   """
 
-  /** DuckDB WITH-clause prefix: `WITH transactions AS (...)` over the
-    * driver's `lineitem` view. Prepend to any oracle SQL that reads the
-    * dirty view.
-    */
-  val oracleCte: String = s"WITH transactions AS ($selectSql)"
-
   /** The dirty view as a Spark DataFrame (same SQL text, evaluated by
     * Catalyst over the parquet `lineitem`).
     *

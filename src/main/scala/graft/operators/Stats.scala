@@ -23,13 +23,24 @@ object Stats {
     * (reference: src/core/db_manager.py:262, :270-278).
     */
   def tableStats(df: DataFrame, amountCol: String = "amount"): DataFrame =
-    df.agg(
-      count(lit(1)).as("n_rows"),
-      min(col(amountCol)).as("min_amount"),
-      max(col(amountCol)).as("max_amount"),
-      (sum(col(amountCol).cast(dec)).cast(DoubleType) / count(lit(1)))
-        .as("avg_amount"),
-      sum(col(amountCol).cast(dec)).cast(DoubleType).as("sum_amount"))
+    aggOf(df, tableStatsAggs(amountCol))
+
+  /** [[tableStats]]'s aggregates, to observe on a write. */
+  def tableStatsAggs(amountCol: String = "amount"): Seq[Column] = Seq(
+    count(lit(1)).as("n_rows"),
+    min(col(amountCol)).as("min_amount"),
+    max(col(amountCol)).as("max_amount"),
+    (sum(col(amountCol).cast(dec)).cast(DoubleType) / count(lit(1)))
+      .as("avg_amount"),
+    sum(col(amountCol).cast(dec)).cast(DoubleType).as("sum_amount"))
+
+  private def aggOf(df: DataFrame, aggs: Seq[Column]): DataFrame =
+    df.agg(aggs.head, aggs.tail: _*)
+
+  // coalesce: SUM over an empty relation is NULL, but a row counter must
+  // read 0 (found by the empty-survivor property test)
+  private def countIf(c: Column, name: String): Column =
+    coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L)).as(name)
 
   /** A2: per-status row counts (reference: src/core/db_manager.py:266-267),
     * hash-aggregated (map-side partial combine, one shuffle on `status`).
@@ -42,22 +53,19 @@ object Stats {
     * 7 separate full-table queries — src/core/db_manager.py:326-343; at
     * 100 TB that is 7 scans too many).
     */
-  def integrity(df: DataFrame): DataFrame = {
-    // coalesce: SUM over an empty relation is NULL, but a violation
-    // counter must read 0 (found by the empty-survivor property test)
-    def bad(c: org.apache.spark.sql.Column, name: String) =
-      coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L)).as(name)
-    df.agg(
-      count(lit(1)).as("n_rows"),
-      bad(col("transaction_id").isNull, "null_transaction_id"),
-      bad(col("user_id").isNull, "null_user_id"),
-      bad(col("amount").isNull, "null_amount"),
-      bad(col("status").isNull, "null_status"),
-      bad(col("processed_at").isNull, "null_processed_at"),
-      bad(col("amount") < 0, "negative_amount"),
-      bad(lower(trim(col("status"))) === "cancelled", "cancelled_rows"),
-      bad(col("status") === "unknown", "unknown_status"))
-  }
+  def integrity(df: DataFrame): DataFrame = aggOf(df, integrityAggs)
+
+  /** [[integrity]]'s aggregates, to observe on a write. */
+  def integrityAggs: Seq[Column] = Seq(
+    count(lit(1)).as("n_rows"),
+    countIf(col("transaction_id").isNull, "null_transaction_id"),
+    countIf(col("user_id").isNull, "null_user_id"),
+    countIf(col("amount").isNull, "null_amount"),
+    countIf(col("status").isNull, "null_status"),
+    countIf(col("processed_at").isNull, "null_processed_at"),
+    countIf(col("amount") < 0, "negative_amount"),
+    countIf(lower(trim(col("status"))) === "cancelled", "cancelled_rows"),
+    countIf(col("status") === "unknown", "unknown_status"))
 
   /** A5: pipeline funnel stats over the RAW (dirty) input — how many rows
     * each cleaning rule removes (reference: src/data_processor.py:188-210).
@@ -67,16 +75,14 @@ object Stats {
     val keysOk = col("transaction_id").isNotNull && col("user_id").isNotNull
     val parsed = expr("try_cast(amount AS DOUBLE)")
     val statusNorm = lower(trim(coalesce(col("status"), lit("unknown"))))
-    def cnt(c: org.apache.spark.sql.Column, name: String) =
-      coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L)).as(name)
     raw.agg(
       count(lit(1)).as("n_input"),
-      cnt(!keysOk, "n_null_key"),
-      cnt(keysOk && parsed.isNull, "n_unparseable_amount"),
-      cnt(keysOk && parsed.isNotNull && parsed < 0, "n_negative_amount"),
-      cnt(keysOk && parsed.isNotNull && parsed >= 0 &&
+      countIf(!keysOk, "n_null_key"),
+      countIf(keysOk && parsed.isNull, "n_unparseable_amount"),
+      countIf(keysOk && parsed.isNotNull && parsed < 0, "n_negative_amount"),
+      countIf(keysOk && parsed.isNotNull && parsed >= 0 &&
         statusNorm === "cancelled", "n_cancelled"),
-      cnt(keysOk && parsed.isNotNull && parsed >= 0 &&
+      countIf(keysOk && parsed.isNotNull && parsed >= 0 &&
         statusNorm =!= "cancelled", "n_output"))
   }
 
@@ -88,7 +94,8 @@ object Stats {
     * uses (observe → write → harvest), demonstrated here against a noop
     * action; the observed values come back through the listener bus, and
     * the 1-row frame built from them is what a metrics sink would
-    * receive. Same decimal policy as every oracle-facing SUM.
+    * receive. The aggregates are [[tableStats]]'s (avg observed, not
+    * emitted), so `amountCol` must be DOUBLE, as in the cleaned frame.
     *
     * At 100 TB this is the difference between "load + profile" costing
     * one scan or two — observe's aggregates ride the write's own pass
@@ -98,11 +105,8 @@ object Stats {
       : DataFrame = {
     val spark = df.sparkSession
     val obs = org.apache.spark.sql.Observation()
-    df.observe(obs,
-        count(lit(1)).as("n_rows"),
-        min(col(amountCol)).cast(DoubleType).as("min_amount"),
-        max(col(amountCol)).cast(DoubleType).as("max_amount"),
-        sum(col(amountCol).cast(dec)).cast(DoubleType).as("sum_amount"))
+    val aggs = tableStatsAggs(amountCol)
+    df.observe(obs, aggs.head, aggs.tail: _*)
       .write.format("noop").mode("overwrite").save()
     val m = obs.get
     // min/max/sum observe as null on an empty input AND on a non-empty
@@ -151,8 +155,7 @@ object Stats {
       "rule names must be identifier-safe (they ride a stack() expr)")
     require(uniqueKey.forall(_.matches(ident)),
       "uniqueKey must be identifier-safe (it rides a stack() expr)")
-    val rowAggs = rules.map { case (n, c) =>
-      coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L)).as(n) }
+    val rowAggs = rules.map { case (n, c) => countIf(c, n) }
     val uniqAgg = uniqueKey.map { k =>
       (count(col(k)) - count_distinct(col(k))).as(s"duplicate_$k") }
     val aggs = rowAggs ++ uniqAgg

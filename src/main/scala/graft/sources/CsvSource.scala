@@ -8,10 +8,15 @@ import org.apache.spark.sql.types._
   *
   * Re-expresses the reference's chunked CSV scan + per-chunk error handling
   * (reference: src/file_manager.py:30-47 chunked read; :70-103 bad-chunk
-  * skip) Spark-first: one partition-parallel scan with an explicit schema
-  * (no per-chunk type inference) and PERMISSIVE per-ROW corrupt-record
-  * capture — strictly finer-grained than the reference, which drops a whole
+  * skip) Spark-first: partition-parallel scans with an explicit schema
+  * (no per-chunk type inference) and per-ROW malformed-row handling —
+  * strictly finer-grained than the reference, which drops a whole
   * 1000-row chunk when any row in it breaks parsing.
+  *
+  * Spark's CSV parser parses only the columns a query reads, so it flags a
+  * malformed row (wrong column count, unclosed quote, ...) only in a read
+  * that parses all of them; [[readTxn]] builds both of its sides so that
+  * every consumer gets one, whichever columns it reads.
   *
   * Scale note: CSV is splittable; Spark assigns ~`maxPartitionBytes` splits
   * per task, so a 100 TB input parallelizes across the cluster with no
@@ -30,36 +35,27 @@ object CsvSource {
     StructField("user_id", StringType, nullable = true),
     StructField("amount", StringType, nullable = true),
     StructField("ts", StringType, nullable = true),
-    StructField("status", StringType, nullable = true),
-    StructField(corruptCol, StringType, nullable = true)))
+    StructField("status", StringType, nullable = true)))
 
   /** Name of the PERMISSIVE-mode corrupt record capture column. */
   def corruptCol: String = "_corrupt_record"
 
-  /** Read a transaction CSV with header, explicit schema, and per-row
-    * malformed-row capture (SURVEY.md S1, S2, P1).
+  /** Read a transaction CSV with header and explicit schema, split into
+    * (clean rows, corrupt rows) (SURVEY.md S1, S2, P1). clean is
+    * DROPMALFORMED with column pruning off, uncached. corrupt is the
+    * PERMISSIVE read's malformed rows, raw line in [[corruptCol]], cached
+    * for the current [[graft.CacheScope]]: the cached plan parses all six
+    * columns, where an uncached read of the capture column alone is
+    * refused (QUERY_ONLY_CORRUPT_RECORD_COLUMN).
     */
-  def readTxnCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", corruptCol)
-      .schema(txnRawSchema)
-      .csv(path)
-
-  /** Split a PERMISSIVE read into (clean rows, corrupt rows). A row is
-    * corrupt when the capture column is non-null (wrong column count,
-    * unclosed quote, ...). The clean side drops the capture column.
-    */
-  def splitCorrupt(df: DataFrame): (DataFrame, DataFrame) = {
-    // PERMISSIVE-mode corrupt capture requires caching the raw scan before
-    // filtering on the corrupt column (Spark requirement: the column is
-    // populated at parse time, and a direct filter over it is disallowed).
-    // Scoped: released by the harness after the consuming query's action.
-    val cached = graft.CacheScope.scoped(df)
-    val clean = cached.filter(col(corruptCol).isNull).drop(corruptCol)
-    val corrupt = cached.filter(col(corruptCol).isNotNull)
-    (clean, corrupt)
+  def readTxn(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
+    def csv(mode: String) =
+      spark.read.option("header", "true").option("mode", mode)
+    val clean = csv("DROPMALFORMED").option("columnPruning", "false")
+      .schema(txnRawSchema).csv(path)
+    val raw = csv("PERMISSIVE").option("columnNameOfCorruptRecord", corruptCol)
+      .schema(txnRawSchema.add(corruptCol, StringType)).csv(path)
+    (clean, graft.CacheScope.scoped(raw.filter(col(corruptCol).isNotNull)))
   }
 
   /** Required-column runtime guard for the API surface (SURVEY.md P1) —

@@ -13,13 +13,26 @@ class SourcesAndDedupSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("S2: malformed fixture splits 12 clean / 3 corrupt; pipeline keeps 7") {
-    val (clean, corrupt) = CsvSource.splitCorrupt(
-      CsvSource.readTxnCsv(spark, Fixtures.materializeMalformed()))
+    val (clean, corrupt) =
+      CsvSource.readTxn(spark, Fixtures.materializeMalformed())
     assert(clean.count() == 12)
     assert(corrupt.count() == 3)
     // every corrupt row retains its raw text for quarantine/debugging
     assert(corrupt.filter(col(CsvSource.corruptCol).isNull).count() == 0)
     assert(TxnTransform.pipeline("TS0")(clean).count() == 7)
+  }
+
+  test("S2: column-subset reads of the split still see the malformed rows") {
+    val (clean, corrupt) =
+      CsvSource.readTxn(spark, Fixtures.materializeMalformed())
+    assert(clean.select("transaction_id").count() == 12)
+    // all 12 well-formed rows carry an amount string (t005's "abc"
+    // included: the cast comes later, in TxnTransform.clean)
+    assert(clean.filter(col("amount").isNotNull).count() == 12)
+    assert(corrupt.select("transaction_id").count() == 3)
+    assert(corrupt.select(CsvSource.corruptCol).as[String].collect().toSet ==
+      Set("t011,u11,55.00,2024-01-11,completed,EXTRA_FIELD,MORE", "t012,u12",
+        "t013,u13,\"unclosed quote,2024-01-13,completed"))
   }
 
   test("P1: requireColumns rejects missing columns") {
