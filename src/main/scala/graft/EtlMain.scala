@@ -103,6 +103,11 @@ object EtlMain {
     }
 
     val spark = LocalSpark.session(cores = cores.toInt)
+    // one reduce partition per 1/32 of the heap of input, so the dedup's
+    // sort fits a task's share of a small heap (at -Xmx512m a 1.1 GB input
+    // ran out of heap with 4 partitions, exit 52, and loaded with 64)
+    val parts = new java.io.File(input).length / (Runtime.getRuntime.maxMemory / 32)
+    spark.conf.set("spark.sql.shuffle.partitions", math.max(cores.toLong, parts))
     val code =
       try { run(spark, input, output, runTs, corruptDir); 0 }
       catch {
