@@ -13,11 +13,6 @@ import org.apache.spark.sql.types._
   * strictly finer-grained than the reference, which drops a whole
   * 1000-row chunk when any row in it breaks parsing.
   *
-  * Spark's CSV parser parses only the columns a query reads, so it flags a
-  * malformed row (wrong column count, unclosed quote, ...) only in a read
-  * that parses all of them; [[readTxn]] builds both of its sides so that
-  * every consumer gets one, whichever columns it reads.
-  *
   * Scale note: CSV is splittable; Spark assigns ~`maxPartitionBytes` splits
   * per task, so a 100 TB input parallelizes across the cluster with no
   * driver-side chunk loop and no temp-file spill (reference:
@@ -41,12 +36,14 @@ object CsvSource {
   def corruptCol: String = "_corrupt_record"
 
   /** Read a transaction CSV with header and explicit schema, split into
-    * (clean rows, corrupt rows) (SURVEY.md S1, S2, P1). clean is
-    * DROPMALFORMED with column pruning off, uncached. corrupt is the
-    * PERMISSIVE read's malformed rows, raw line in [[corruptCol]], cached
-    * for the current [[graft.CacheScope]]: the cached plan parses all six
-    * columns, where an uncached read of the capture column alone is
-    * refused (QUERY_ONLY_CORRUPT_RECORD_COLUMN).
+    * (clean rows, corrupt rows) (SURVEY.md S1, S2, P1). Spark's parser
+    * parses only the columns a query reads, and flags a malformed row
+    * (wrong column count, unclosed quote, ...) only when it parses them
+    * all. So clean is DROPMALFORMED with column pruning off, uncached;
+    * corrupt is the PERMISSIVE read's malformed rows, raw line in
+    * [[corruptCol]], cached for the current [[graft.CacheScope]]. The
+    * cached plan parses all six columns; uncached, a read of the capture
+    * column alone is refused (QUERY_ONLY_CORRUPT_RECORD_COLUMN).
     */
   def readTxn(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
     def csv(mode: String) =

@@ -208,11 +208,26 @@ object EventStreams {
   private[graft] def deleteStagingForTest(root: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(root)) deleteRecursively(root)
 
-  private def deleteRecursively(root: java.nio.file.Path): Unit = {
+  // Retries while the tree still changes: a stop that interrupts a state
+  // commit leaves aborting tasks writing under the checkpoint for a
+  // moment after `awaitTermination` returns (DirectoryNotEmptyException
+  // mid-walk, seen at q98 in Verify and in RegistrySpec's walk).
+  private def deleteRecursively(root: java.nio.file.Path,
+      attempts: Int = 50): Unit = {
     val walk = java.nio.file.Files.walk(root)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-    finally walk.close()
+    val done =
+      try {
+        walk.sorted(java.util.Comparator.reverseOrder())
+          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
+        true
+      } catch {
+        case _: java.nio.file.DirectoryNotEmptyException if attempts > 1 =>
+          false
+      } finally walk.close()
+    if (!done) {
+      Thread.sleep(100)
+      deleteRecursively(root, attempts - 1)
+    }
   }
 
   /** Staging premise guard for the gate queries: the staged events'
