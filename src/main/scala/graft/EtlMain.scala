@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import graft.operators.{Dedup, Stats, TxnTransform}
 import graft.sources.CsvSource
 
@@ -45,9 +46,11 @@ object EtlMain {
     val (clean, corrupt) = CsvSource.readTxn(spark, input)
 
     // quarantine corrupt raw lines (the reference's "faulty chunk" log,
-    // done per-row; reference: README.md:65)
-    corrupt.select(CsvSource.corruptCol).write.mode("overwrite")
-      .option("header", "false").csv(corruptDir)
+    // done per-row; reference: README.md:65), counted by the write itself
+    val quarantined = Observation()
+    corrupt.select(CsvSource.corruptCol)
+      .observe(quarantined, count(lit(1)).as("n"))
+      .write.mode("overwrite").option("header", "false").csv(corruptDir)
 
     // transform (P2-P12) + deterministic upsert semantics (S7)
     val piped = TxnTransform.pipeline(runTs)(clean)
@@ -64,12 +67,13 @@ object EtlMain {
       .observe(integrity, ia.head, ia.tail: _*)
       .write.mode("overwrite").parquet(s"$output/transactions")
 
-    // the reference's read path, A2: the one read-back of the table
-    val statusCounts = Stats.statusCounts(
-      spark.read.parquet(s"$output/transactions")).collect().toSeq
+    // the reference's read path, A2: the one read-back of the table, with
+    // the schema just written (no inference job)
+    val statusCounts = Stats.statusCounts(spark.read.schema(deduped.schema)
+      .parquet(s"$output/transactions")).collect().toSeq
       .map(r => (r.getString(0), r.getLong(1)))
     val report = Report(stats.get, statusCounts, integrity.get,
-      corrupt.count())
+      quarantined.get("n").asInstanceOf[Long])
 
     def kv(m: Iterable[(String, Any)]) =
       m.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(" ")

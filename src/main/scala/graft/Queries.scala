@@ -52,7 +52,7 @@ object Queries {
     */
   private def guardedEvents(s: SparkSession, dir: String,
       name: String): DataFrame =
-    Events.requireSpanHours(Tables.events(s, dir), name)
+    Events.requireSpanHours(Tables.events(s, dir), name)._1
 
   /** The segmented edit-distance pair stage q142 gates and q136 builds
     * on — ONE definition so the two can never diverge, shared at bench

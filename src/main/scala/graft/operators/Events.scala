@@ -35,42 +35,38 @@ object Events {
     if (df.columns.contains("ts_us")) df
     else df.withColumn("ts_us", unix_micros(col("ts")))
 
+  /** The [min, max] `ts_us` of `ev` in one driver-side aggregate, None
+    * when `ev` has no rows.
+    */
+  def timeSpan(ev: DataFrame): Option[(Long, Long)] = {
+    val r = ev.agg(min(col("ts_us")), max(col("ts_us"))).head()
+    if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
+  }
+
   /** Corpus premise guard for GATE queries over the events table: the
     * event-time span must cover ≥ `minHours` hours or the query REFUSES
     * loudly instead of emitting a confidently wrong answer. The r6
     * unit shift collapsed months of event time 1000× into minutes and
-    * every ts-dependent query drained wrong rows; with this folded into
-    * the consumed `ts_us` (+0 on success — assert_true returns NULL;
-    * a free-standing check column could be pruned before evaluating),
-    * semantic drift of that class fails at the scan, batch and
-    * streaming alike. 24 h is the gate corpus's premise (months of
-    * data; a 1000× collapse of anything under ~3 years lands below
-    * it), not a library constraint — production callers use the
-    * operators directly on their own frames.
+    * every ts-dependent query drained wrong rows; checked once, eagerly,
+    * on the driver, semantic drift of that class fails before any plan
+    * over `ev` runs, batch and streaming alike. 24 h is the gate
+    * corpus's premise (months of data; a 1000× collapse of anything
+    * under ~3 years lands below it), not a library constraint —
+    * production callers use the operators directly on their own frames.
+    *
+    * Returns `ev` with `ts` rebuilt from `ts_us`, and its checked span
+    * (a, z) for callers that cut by time. An empty frame has no span and
+    * passes vacuously with (0, 0): every cut of it is empty.
     */
   def requireSpanHours(ev: DataFrame, label: String,
-      minHours: Long = 24L): DataFrame = {
-    val minSpanUs = minHours * 3600L * 1000000L
-    // the guard consumes `ev` on BOTH sides (bounds aggregate + main
-    // frame) — the CLAUDE.md self-join rule applies: cache it so a
-    // guarded gate query scans events once, not once per side per
-    // action (scope-released by the harness's CacheScope.withScope)
-    val evC = graft.CacheScope.scoped(ev)
-    val bounds = evC.agg(min(col("ts_us")).as("_a"), max(col("ts_us")).as("_z"))
-    evC.crossJoin(broadcast(bounds))
-      .withColumn("ts_us",
-        (col("ts_us") + coalesce(
-          assert_true(col("_z") - col("_a") >= lit(minSpanUs),
-            lit(s"$label premise violated: event-time span < " +
-              s"$minHours h — semantic drift (wrong time unit? collapsed " +
-              "event time?); refusing to emit a wrong answer"))
-            .cast("long"),
-          lit(0L))))
-      // rebuild ts FROM the guarded ts_us so a consumer of EITHER time
-      // column evaluates the assert (q16 reads only ts; folding into
-      // ts_us alone would let column pruning delete the check there)
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-      .drop("_a", "_z")
+      minHours: Long = 24L): (DataFrame, (Long, Long)) = {
+    val span = timeSpan(ev)
+    require(span.forall { case (a, z) => z - a >= minHours * 3600L * 1000000L },
+      s"$label premise violated: event-time span < $minHours h — semantic " +
+        "drift (wrong time unit? collapsed event time?); refusing to " +
+        "emit a wrong answer")
+    (ev.withColumn("ts", timestamp_micros(col("ts_us"))),
+      span.getOrElse((0L, 0L)))
   }
 
   private val dec6 = DecimalType(18, 6)

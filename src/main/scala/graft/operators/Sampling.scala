@@ -135,8 +135,8 @@ object Sampling {
     val mn = totals.agg(min(col("_toks")).as("_mn"))
     val weights = totals.crossJoin(broadcast(mn))
       // exact-widening premise consumed through the rate column (+0 on
-      // success — the requireSpanHours idiom; a free-standing check
-      // column could be pruned before evaluating). The condition is
+      // success; a free-standing check column could be pruned before
+      // evaluating). The condition is
       // coalesced to PASS on a NULL mass (assert_true(NULL) THROWS in
       // Spark 4 — the r8 gotcha): an all-NULL-size group has no mass
       // to mis-widen; its rate is NULL and its rows drop, exactly

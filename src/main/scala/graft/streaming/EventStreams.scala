@@ -230,27 +230,6 @@ object EventStreams {
     }
   }
 
-  /** Staging premise guard for the gate queries: the staged events'
-    * event-time span must cover ≥ `minHours` hours, or the query REFUSES
-    * instead of draining to a wrong answer. The r6 unit shift collapsed
-    * event time 1000× and most staged drains emitted confidently wrong
-    * rows (only q64's existing span guard tripped) — watermark, gap, and
-    * window semantics all silently degenerate when months of data
-    * collapse into minutes, so semantic drift must fail LOUD at staging.
-    *
-    * 24 h is a GATE premise (the driver corpus spans months; a 1000×
-    * collapse of anything under ~3 years lands below it), not a library
-    * constraint — production callers stage their own sources and never
-    * pass through these *Once harness entrypoints.
-    *
-    * Folded into the consumed `ts_us` column via assert_true (+0 on
-    * success) exactly like q64's guard: a free-standing check column
-    * could legally be pruned before it ever evaluated.
-    */
-  private def requireSpanHours(ev: DataFrame, label: String,
-      minHours: Long = 24L): DataFrame =
-    graft.operators.Events.requireSpanHours(ev, label, minHours)
-
   /** The staging dir of one gate query: one file per micro-batch. */
   private def srcDir(queryName: String) = s"/tmp/graft_stream_src_$queryName"
 
@@ -343,19 +322,26 @@ object EventStreams {
 
   /** [[stage]] over the events table: `batches` gets the events read
     * through [[graft.Tables.events]] (the ONE sanctioned read, unit
-    * erased to `ts_us`) behind the [[requireSpanHours]] guard, and
-    * returns the micro-batches in arrival order.
+    * erased to `ts_us`) and their span (a, z), checked by
+    * [[guardedEvents]], and returns the micro-batches in arrival order.
+    * The check runs with the staging, so reused staging runs none.
     */
   private def stageEvents(ss: SparkSession, sfDir: String,
-      queryName: String)(batches: DataFrame => Seq[DataFrame]): DataFrame =
+      queryName: String)(
+      batches: (DataFrame, (Long, Long)) => Seq[DataFrame]): DataFrame =
     stage(ss, sfDir, queryName)(
-      batches(requireSpanHours(graft.Tables.events(ss, sfDir), queryName)))
+      batches.tupled(guardedEvents(ss, sfDir, queryName)))
 
-  /** The [min, max] `ts_us` of `ev`, in one driver-side aggregate. */
-  private def span(ev: DataFrame): (Long, Long) = {
-    val r = ev.agg(min(col("ts_us")), max(col("ts_us"))).head()
-    (r.getLong(0), r.getLong(1))
-  }
+  /** The events behind every staged gate, with their span (a, z), after
+    * the 24 h span premise ([[graft.operators.Events.requireSpanHours]]):
+    * watermark, gap and window semantics all silently degenerate when
+    * months of data collapse into minutes (the r6 unit shift), so a
+    * collapsed corpus REFUSES before anything is staged.
+    */
+  private def guardedEvents(ss: SparkSession, sfDir: String,
+      queryName: String): (DataFrame, (Long, Long)) =
+    graft.operators.Events.requireSpanHours(graft.Tables.events(ss, sfDir),
+      queryName)
 
   /** `ev` cut at the ascending µs `cuts`: slice i holds
     * cuts(i−1) ≤ ts_us < cuts(i), the first and last open-ended.
@@ -368,14 +354,15 @@ object EventStreams {
     }
 
   /** `ev` in `n` event-time slices, earliest first, cut at
-    * a + ((z − a) div n)·i over its [a, z] span — the integral µs
+    * a + ((z − a) div n)·i over its [a, z] `span` — the integral µs
     * arithmetic the oracles reproduce, so both sides see the same
     * slices. Time-ordered slices give every user time-ordered arrival
     * across micro-batches, which the stateful gates' cross-batch
     * arguments rest on.
     */
-  private def timeSlices(ev: DataFrame, n: Int): Seq[DataFrame] = {
-    val (a, z) = span(ev)
+  private def timeSlices(ev: DataFrame, span: (Long, Long),
+      n: Int): Seq[DataFrame] = {
+    val (a, z) = span
     sliceAt(ev, (1 until n).map(i => a + (z - a) / n * i))
   }
 
@@ -384,18 +371,16 @@ object EventStreams {
     */
   private val sentinelLeadUs = 10L * 86400 * 1000000L
 
-  /** A sentinel batch: one row per `types` entry at the events' max
-    * `ts_us` + `offsetUs`, with event and user id −1 (the gates filter
-    * it from their output). It exists only to push the watermark or to
-    * trigger one more micro-batch. Built declaratively from the 1-row
-    * max aggregate — no driver collect.
+  /** A sentinel batch: one [[stagedSchema]] row per `types` entry at the
+    * events' max time `z` + `offsetUs`, with event and user id −1 (the
+    * gates filter it from their output). It exists only to push the
+    * watermark or to trigger one more micro-batch.
     */
-  private def sentinel(ev: DataFrame, offsetUs: Long,
+  private def sentinel(ss: SparkSession, z: Long, offsetUs: Long,
       types: Seq[String] = Seq("sentinel")): DataFrame =
-    ev.agg(max(col("ts_us")).as("mx"))
-      .select(lit(-1L).as("event_id"), (col("mx") + lit(offsetUs)).as("ts_us"),
-        lit(-1L).as("user_id"), explode(typedLit(types)).as("event_type"),
-        lit(0.0).as("value"), lit(null).cast("string").as("props"))
+    ss.createDataFrame(types.map(t =>
+      org.apache.spark.sql.Row(-1L, z + offsetUs, -1L, t, 0.0, null)).asJava,
+      stagedSchema)
 
   /** The planted byte-identical duplicates of the dedup gates: a copy of
     * every 10th event.
@@ -414,7 +399,7 @@ object EventStreams {
     */
   def dedupOnce(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
-    val src = stageEvents(streamingSession(spark), sfDir, queryName)(ev =>
+    val src = stageEvents(streamingSession(spark), sfDir, queryName)((ev, _) =>
       Seq(ev, plantedCopies(ev)))
     runToMemory(dedupedStream(src).select("event_id", "event_type", "value"),
       queryName, OutputMode.Append)
@@ -439,7 +424,7 @@ object EventStreams {
     */
   def hourlyRollupOnce(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
-    val src = stageEvents(streamingSession(spark), sfDir, queryName)(ev =>
+    val src = stageEvents(streamingSession(spark), sfDir, queryName)((ev, _) =>
       Seq(0, 1).map(b => ev.filter(pmod(col("event_id"), lit(2L)) === b)))
     bucketed(runToMemory(windowedCounts(src), queryName, OutputMode.Complete))
       .orderBy(col("bucket"), col("event_type"))
@@ -474,16 +459,16 @@ object EventStreams {
       queryName: String): DataFrame = {
     val outDir = s"/tmp/graft_stream_upd_$queryName"
     deleteStagingForTest(java.nio.file.Paths.get(outDir))
-    val src = stageEvents(streamingSession(spark), sfDir, queryName) { ev =>
-      // split at NOON of the midpoint day, not the raw µs midpoint: the
-      // corpus spans a near-integral number of days, so the raw midpoint
-      // sits within seconds of a day boundary and the "straddling" day
-      // gets no batch-1 rows (measured: the merge premise trips) —
-      // pinning the cut to 12:00 UTC guarantees the straddling day
-      // splits mid-day
-      val (a, z) = span(ev)
-      val dayUs = 86400000000L
-      sliceAt(ev, Seq((a + (z - a) / 2) / dayUs * dayUs + dayUs / 2))
+    val src = stageEvents(streamingSession(spark), sfDir, queryName) {
+      case (ev, (a, z)) =>
+        // split at NOON of the midpoint day, not the raw µs midpoint: the
+        // corpus spans a near-integral number of days, so the raw midpoint
+        // sits within seconds of a day boundary and the "straddling" day
+        // gets no batch-1 rows (measured: the merge premise trips) —
+        // pinning the cut to 12:00 UTC guarantees the straddling day
+        // splits mid-day
+        val dayUs = 86400000000L
+        sliceAt(ev, Seq((a + (z - a) / 2) / dayUs * dayUs + dayUs / 2))
     }
     // DAILY windows, not q57's hourly: the cross-batch-merge premise
     // needs the midpoint-straddling bucket to hold the same event_type
@@ -543,19 +528,19 @@ object EventStreams {
     */
   def lateDropOnce(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
-    val src = stageEvents(streamingSession(spark), sfDir, queryName) { ev =>
-      // Late-drop parity PREMISE (r3 advisor): every earliest-third row
-      // must lie below the final watermark z − 2 h, which holds iff the
-      // event-time span z − a ≥ 3 h. On a narrower dataset Spark would
-      // admit rows in [z − 2 h, a + (z − a)/3) that the oracle's WHERE
-      // excludes, surfacing as a confusing gate diff — so the premise
-      // fails LOUD instead.
-      val (a, z) = span(ev)
-      require(z - a >= 3L * 3600L * 1000000L,
-        "q64 premise violated: event-time span < 3h — late-drop " +
-          "parity needs the earliest third fully below watermark z-2h")
-      val Seq(earliest, middle, newest) = timeSlices(ev, 3)
-      Seq(middle, newest, earliest)
+    val src = stageEvents(streamingSession(spark), sfDir, queryName) {
+      case (ev, span @ (a, z)) =>
+        // Late-drop parity PREMISE (r3 advisor): every earliest-third row
+        // must lie below the final watermark z − 2 h, which holds iff the
+        // event-time span z − a ≥ 3 h. On a narrower dataset Spark would
+        // admit rows in [z − 2 h, a + (z − a)/3) that the oracle's WHERE
+        // excludes, surfacing as a confusing gate diff — so the premise
+        // fails LOUD instead.
+        require(z - a >= 3L * 3600L * 1000000L,
+          "q64 premise violated: event-time span < 3h — late-drop " +
+            "parity needs the earliest third fully below watermark z-2h")
+        val Seq(earliest, middle, newest) = timeSlices(ev, span, 3)
+        Seq(middle, newest, earliest)
     }
     bucketed(runToMemory(windowedCounts(src), queryName, OutputMode.Append))
       .orderBy(col("bucket"), col("event_type"))
@@ -613,7 +598,7 @@ object EventStreams {
   def enrichOnce(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
     val ss = streamingSession(spark)
-    val src = stageEvents(ss, sfDir, queryName)(timeSlices(_, 2))
+    val src = stageEvents(ss, sfDir, queryName)(timeSlices(_, _, 2))
     val dim = graft.Tables.customer(ss, sfDir)
       .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
     val agg = src.join(broadcast(dim), Seq("user_id"))
@@ -870,8 +855,8 @@ object EventStreams {
     val gapUs = gapMinutes.toLong * 60L * 1000000L
     val ss = streamingSession(spark, rocksDb = true)
     import ss.implicits._
-    val ev = requireSpanHours(graft.Tables.events(ss, sfDir), queryName)
-    val Seq(early, late) = timeSlices(ev, 2)
+    val (ev, span) = guardedEvents(ss, sfDir, queryName)
+    val Seq(early, late) = timeSlices(ev, span, 2)
     val initState = graft.CacheScope.scoped(early
       .select(col("user_id"), col("ts_us").as("us"))
       .withColumn("brk", when(col("us") -
@@ -886,7 +871,9 @@ object EventStreams {
       .as[(Long, Long, Long, Long, Long)]
       .map(r => (r._1, SessionState(r._2, r._3, r._4, r._5)))
       .groupByKey(_._1).mapValues(_._2)
-    val src = stage(ss, sfDir, queryName)(timeSlices(late, 2))
+    // the late half's own bounds: its cuts depend on them
+    val src = stage(ss, sfDir, queryName)(timeSlices(late,
+      graft.operators.Events.timeSpan(late).getOrElse(span), 2))
     val streamed = src
       .select(col("user_id"), col("ts_us"))
       .as[(Long, Long)]
@@ -950,7 +937,7 @@ object EventStreams {
       queryName: String): DataFrame = {
     val ss = streamingSession(spark, rocksDb = true)
     import ss.implicits._
-    val src = stageEvents(ss, sfDir, queryName)(timeSlices(_, 2))
+    val src = stageEvents(ss, sfDir, queryName)(timeSlices(_, _, 2))
     val ticks = src
       .select(col("user_id"), col("event_id"))
       .as[(Long, Long)]
@@ -1037,7 +1024,7 @@ object EventStreams {
   def lastKEventsOnce(spark: SparkSession, sfDir: String, k: Int,
       queryName: String): DataFrame = {
     val src = stageEvents(streamingSession(spark, rocksDb = true), sfDir,
-      queryName)(timeSlices(_, 2))
+      queryName)(timeSlices(_, _, 2))
     val updates = graft.CacheScope.scoped(
       runToMemory(lastKEvents(src, k), queryName, OutputMode.Update))
     // final emission per user = max emit_seq (strictly monotone per key
@@ -1106,7 +1093,7 @@ object EventStreams {
   def typeCountsOnce(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
     val src = stageEvents(streamingSession(spark, rocksDb = true), sfDir,
-      queryName)(timeSlices(_, 2))
+      queryName)(timeSlices(_, _, 2))
     runToMemory(typeCounts(src), queryName, OutputMode.Update)
       .groupBy(col("user_id"), col("event_type"))
       .agg(max(col("n")).as("n"))
@@ -1186,14 +1173,16 @@ object EventStreams {
     */
   def visitEmitOnce(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
-    val src = stageEvents(streamingSession(spark), sfDir, queryName) { ev =>
-      // batch id: cohort 0 → events alternate batches 0/2 (gap at 1);
-      // cohort 1 → batch 1 only; cohort 2 → spread over all three
-      val batchOf = expr(
-        """CASE pmod(user_id, 3) WHEN 0 THEN pmod(event_id, 2) * 2
-                                 WHEN 1 THEN 1
-                                 ELSE pmod(event_id, 3) END""")
-      (0 to 2).map(b => ev.filter(batchOf === b)) :+ sentinel(ev, 0L)
+    val src = stageEvents(streamingSession(spark), sfDir, queryName) {
+      case (ev, (_, z)) =>
+        // batch id: cohort 0 → events alternate batches 0/2 (gap at 1);
+        // cohort 1 → batch 1 only; cohort 2 → spread over all three
+        val batchOf = expr(
+          """CASE pmod(user_id, 3) WHEN 0 THEN pmod(event_id, 2) * 2
+                                   WHEN 1 THEN 1
+                                   ELSE pmod(event_id, 3) END""")
+        (0 to 2).map(b => ev.filter(batchOf === b)) :+
+          sentinel(ev.sparkSession, z, 0L)
     }
     drainToTableManual(visitEmit(src, ttlMs = 1L), queryName,
         OutputMode.Append)
@@ -1220,8 +1209,9 @@ object EventStreams {
     */
   private def timerSessions(ss: SparkSession, sfDir: String,
       queryName: String)(emit: DataFrame => DataFrame): DataFrame = {
-    val src = stageEvents(ss, sfDir, queryName)(ev =>
-      timeSlices(ev, 2) :+ sentinel(ev, sentinelLeadUs))
+    val src = stageEvents(ss, sfDir, queryName) { case (ev, span @ (_, z)) =>
+      timeSlices(ev, span, 2) :+ sentinel(ss, z, sentinelLeadUs)
+    }
     runToMemory(emit(src), queryName, OutputMode.Append)
       .filter(col("user_id") >= 0) // the sentinel's own session is noise
       .orderBy(col("user_id"), col("session_idx"))
@@ -1239,7 +1229,7 @@ object EventStreams {
   def sessionizeOnce(spark: SparkSession, sfDir: String, gapMinutes: Int,
       queryName: String): DataFrame = {
     val src = stageEvents(streamingSession(spark), sfDir, queryName)(
-      timeSlices(_, 2))
+      timeSlices(_, _, 2))
     lastSessions(runToMemory(sessionize(src, gapMinutes), queryName,
       OutputMode.Update))
   }
@@ -1316,7 +1306,7 @@ object EventStreams {
   def sessionizeTwsOnce(spark: SparkSession, sfDir: String,
       gapMinutes: Int, queryName: String): DataFrame = {
     val src = stageEvents(streamingSession(spark, rocksDb = true), sfDir,
-      queryName)(timeSlices(_, 2))
+      queryName)(timeSlices(_, _, 2))
     lastSessions(runToMemory(sessionizeTws(src, gapMinutes), queryName,
       OutputMode.Update))
   }
@@ -1356,8 +1346,10 @@ object EventStreams {
       queryName: String): DataFrame = {
     // batch 1 = originals, batch 2 = the planted duplicate copies,
     // batch 3 = the watermark sentinel
-    val src = stageEvents(streamingSession(spark), sfDir, queryName)(ev =>
-      Seq(ev, plantedCopies(ev), sentinel(ev, sentinelLeadUs)))
+    val src = stageEvents(streamingSession(spark), sfDir, queryName) {
+      case (ev, (_, z)) =>
+        Seq(ev, plantedCopies(ev), sentinel(ev.sparkSession, z, sentinelLeadUs))
+    }
     val chained = windowedCounts(dedupedStream(src), watermark = None)
     bucketed(runToMemory(chained, queryName, OutputMode.Append))
       .filter(col("event_type") =!= "sentinel")
@@ -1404,7 +1396,7 @@ object EventStreams {
     val ss = streamingSession(spark)
     Seq(dir, outDir, ckptDir).foreach(d =>
       deleteStagingForTest(java.nio.file.Paths.get(d)))
-    val ev = requireSpanHours(graft.Tables.events(ss, sfDir), queryName)
+    val (ev, (_, z)) = guardedEvents(ss, sfDir, queryName)
 
     // One full drain of the chained pipeline against the SHARED
     // checkpoint + file sink; each call is an independent query instance
@@ -1432,7 +1424,7 @@ object EventStreams {
     // far-future sentinel that flushes every real window
     writeStampedBatch(dir, plantedCopies(ev), 1,
       s"$queryName planted copies")
-    writeStampedBatch(dir, sentinel(ev, sentinelLeadUs), 2,
+    writeStampedBatch(dir, sentinel(ss, z, sentinelLeadUs), 2,
       s"$queryName watermark sentinel")
     // run 2: fresh query instance, SAME checkpoint
     runInstance()
@@ -1528,11 +1520,13 @@ object EventStreams {
   private def intervalJoin(spark: SparkSession, sfDir: String,
       queryName: String, joinType: String, userId: Column,
       order: Column*): DataFrame = {
-    val src = stageEvents(streamingSession(spark), sfDir, queryName) { ev =>
-      Seq(ev.filter(col("event_type") === "click"),
-        ev.filter(col("event_type") === "view")) ++
-        (if (joinType == "inner") Nil
-         else Seq(sentinel(ev, sentinelLeadUs, Seq("click", "view"))))
+    val src = stageEvents(streamingSession(spark), sfDir, queryName) {
+      case (ev, (_, z)) =>
+        Seq(ev.filter(col("event_type") === "click"),
+          ev.filter(col("event_type") === "view")) ++
+          (if (joinType == "inner") Nil
+           else Seq(sentinel(ev.sparkSession, z, sentinelLeadUs,
+             Seq("click", "view"))))
     }
     def side(eventType: String, p: String): DataFrame =
       src.filter(col("event_type") === eventType)
@@ -1585,7 +1579,7 @@ object EventStreams {
     Seq(stateDir, nextDir).foreach(d =>
       deleteStagingForTest(java.nio.file.Paths.get(d)))
     val src = stageEvents(streamingSession(spark), sfDir, queryName)(
-      timeSlices(_, 2))
+      timeSlices(_, _, 2))
 
     val stateSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("user_id",

@@ -762,33 +762,57 @@ class EventsAndStreamingSpec extends AnyFunSuite {
     val root = java.nio.file.Paths.get(dir)
     EventStreams.deleteStagingForTest(root)
     java.nio.file.Files.createDirectories(root)
+    // `n` events `stepUs` apart: a span of (n − 1)·stepUs
+    def writeEvents(to: String, n: Int, stepUs: Long): Unit =
+      (1 to n).toDF("event_id")
+        .select(col("event_id").cast("long"),
+          timestamp_micros(lit(1700000000L * 1000000L) +
+            col("event_id").cast("long") * stepUs).as("ts"),
+          (col("event_id") % 7).cast("long").as("user_id"),
+          lit("click").as("event_type"), lit(1.0).as("value"),
+          lit(null).cast("string").as("props"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$to/events.parquet")
     // ~50 min event-time span — what months of data collapse to under a
     // wrong-unit read; every premise-guarded gate query must refuse
-    (1 to 100).toDF("event_id")
-      .select(col("event_id").cast("long"),
-        timestamp_micros(lit(1700000000L * 1000000L) +
-          col("event_id").cast("long") * 30000000L).as("ts"),
-        (col("event_id") % 7).cast("long").as("user_id"),
-        lit("click").as("event_type"), lit(1.0).as("value"),
-        lit(null).cast("string").as("props"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
+    writeEvents(dir, 100, 30000000L)
     def refusal(body: => Unit): String = {
       val e = intercept[Throwable](body)
       Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
         .map(t => String.valueOf(t.getMessage)).mkString("\n")
     }
     // streaming gate: refuses at staging
+    val gate = "narrow_span_guard_test"
+    val staging = java.nio.file.Paths.get(s"/tmp/graft_stream_src_$gate")
+    EventStreams.deleteStagingForTest(staging)
     val streamMsg = refusal {
-      EventStreams.dedupOnce(spark, dir, "narrow_span_guard_test")
+      EventStreams.dedupOnce(spark, dir, gate)
     }
     assert(streamMsg.contains("premise violated"),
       s"expected the loud span-premise refusal, got: $streamMsg")
-    // batch ts-dependent gates: refuse at the scan, same guard
+    // ... BEFORE staging: no part- file, not even the write's directory
+    assert(!java.nio.file.Files.exists(staging),
+      s"the refusal came after staging began: $staging exists")
+    // a time-sliced gate and a sentinel gate refuse with the same text
+    val text = s"$gate premise violated: event-time span < 24 h"
+    Seq(streamMsg,
+      refusal(EventStreams.typeCountsOnce(spark, dir, gate)),
+      refusal(EventStreams.sessionEmitOnce(spark, dir, 30, gate)))
+      .foreach(m => assert(m.contains(text), s"expected '$text', got: $m"))
+    // batch ts-dependent gates: refuse when built, same guard
     val batchMsg = refusal {
       Queries.all("q16_events_hourly")(spark, dir).collect()
     }
     assert(batchMsg.contains("premise violated"),
       s"expected the batch-gate refusal, got: $batchMsg")
+    // a span of exactly 24 h meets the premise; an empty events table
+    // has no span and passes vacuously
+    val edgeDir = "/tmp/graft_edge_span_sf"
+    writeEvents(edgeDir, 2, 24L * 3600L * 1000000L)
+    assert(Queries.all("q16_events_hourly")(spark, edgeDir).count() == 2)
+    val emptyDir = "/tmp/graft_empty_events_sf"
+    writeEvents(emptyDir, 0, 1L)
+    assert(Queries.all("q16_events_hourly")(spark, emptyDir).collect()
+      .isEmpty)
   }
 
   test("band join: binned equi-join equals the naive theta-join at " +

@@ -36,13 +36,6 @@ class RegistrySpec extends AnyFunSuite {
       "cross-joined; data rows join the grid by equi-key"),
     "q35_ann_ivf" -> ("1-row centroid-array frame broadcast onto corpus " +
       "and queries (cells are chosen per-row from the array)"),
-    "q42_props_map" -> "single-row aggregate comparison frame",
-    "q02_funnel" -> "single-row aggregate frames",
-    "q07_csv_roundtrip" -> "single-row aggregate parity frames",
-    "q41_json_roundtrip" -> "single-row aggregate parity frames",
-    "q54_orc_roundtrip" -> "single-row aggregate parity frames",
-    "q64_streaming_late_drop" -> ("bounds row (min/max ts) broadcast onto " +
-      "the staged stream"),
     "q75_bloom_join" -> ("the ONE-ROW bloom-bits frame is cross-joined " +
       "(broadcast) onto the fact — the delivery mechanism of the filter, " +
       "constant-size by construction"),
@@ -61,36 +54,16 @@ class RegistrySpec extends AnyFunSuite {
       "mechanism as q75/q97"),
     "q50_name_neardup" -> ("the ONE-ROW max-block-size premise frame is " +
       "cross-joined (broadcast) onto the probe side — the r5-VERDICT " +
-      "loud blocking guard, same bounds-frame mechanism as q64"),
-    // the 8 ts-VALUE-dependent batch gates: Events.requireSpanHours
-    // broadcasts the ONE-ROW (min, max) ts_us bounds frame onto the
-    // events scan — the r6-VERDICT collapsed-time refusal, same
-    // bounds-frame mechanism as q64/q50
-    "q16_events_hourly" -> "requireSpanHours 1-row bounds broadcast",
-    "q18_sessionize" -> "requireSpanHours 1-row bounds broadcast",
-    "q30_events_sliding" -> "requireSpanHours 1-row bounds broadcast",
-    "q31_asof_join" -> "requireSpanHours 1-row bounds broadcast",
-    "q65_grouped_transform" -> "requireSpanHours 1-row bounds broadcast",
-    "q102_band_join" -> "requireSpanHours 1-row bounds broadcast",
-    "q106_overlap_join" -> "requireSpanHours 1-row bounds broadcast",
-    "q113_session_window" -> "requireSpanHours 1-row bounds broadcast",
-    "q119_event_funnel" -> "requireSpanHours 1-row bounds broadcast",
-    "q120_cohort_retention" -> "requireSpanHours 1-row bounds broadcast",
-    "q123_event_pattern" -> "requireSpanHours 1-row bounds broadcast",
-    "q131_asof_tolerance" -> "requireSpanHours 1-row bounds broadcast",
+      "loud blocking guard"),
     "q139_vocab_oov" -> ("the ONE-ROW sorted vocabulary array (top-V, " +
       "broadcast-small by construction) is cross-joined onto the corpus " +
       "— the sanctioned q75/q100 broadcast-set delivery mechanism"),
-    "q136_entity_resolution" -> ("segmentedEditPairs' TWO 1-row premise " +
-      "frames (hottest-segment-key volume; short-suffix block size) " +
-      "cross-joined onto the candidate stream — the sanctioned " +
-      "loud-blocking-guard mechanism, same as q142"),
-    "q137_resample_fill" -> ("requireSpanHours bounds PLUS the spine's " +
-      "own 1-row (min,max) bucket frame cross-joined onto the key list " +
-      "— both sanctioned constant-size bounds mechanisms"),
+    "q137_resample_fill" -> ("the spine's own 1-row (min,max) bucket " +
+      "frame cross-joined onto the key list — a sanctioned " +
+      "constant-size bounds mechanism"),
     "q121_mixture_sample" -> ("the ONE-ROW min-group-mass frame is " +
       "cross-joined (broadcast) onto the |groups|-row totals — same " +
-      "bounds-frame mechanism as q50/q64; the corpus itself joins the " +
+      "bounds-frame mechanism as q50; the corpus itself joins the " +
       "tiny weights frame by equi-key"),
     "q157_temperature_mixture" -> ("q121's identical ONE-ROW " +
       "min-group-mass bounds broadcast onto the |groups|-row totals " +
@@ -109,12 +82,8 @@ class RegistrySpec extends AnyFunSuite {
     "q142_linkage_segmented" -> ("segmentedEditPairs' TWO 1-row premise " +
       "frames (hottest-segment-key volume; short-suffix block size) " +
       "cross-joined onto the candidate stream — the sanctioned " +
-      "loud-blocking-guard mechanism (q50/q136 family); the candidate " +
-      "join itself is a 5-key equi-join"),
-    "q143_bpe_merges" -> ("each BPE round cross-joins its ONE-ROW argmax " +
-      "merge pair (broadcast) onto the vocab-sized word table for the " +
-      "fuse — the q35-centroid/q121-bounds constant-size delivery " +
-      "mechanism, k rows total across the run"))
+      "loud-blocking-guard mechanism (q50 family); the candidate " +
+      "join itself is a 5-key equi-join"))
 
   private val streaming =
     Set("q57_streaming_rollup", "q60_streaming_sessionize",
@@ -185,11 +154,12 @@ class RegistrySpec extends AnyFunSuite {
     }
   }
 
+  private val nestedLoops = Seq("CartesianProduct", "BroadcastNestedLoopJoin")
+
   test("no unsanctioned nested-loop or cartesian join in any batch plan") {
     val offenders = walk.flatMap { case (name, built) =>
       built.get._1.flatMap { plan =>
-        val hits = Seq("CartesianProduct", "BroadcastNestedLoopJoin")
-          .filter(plan.contains)
+        val hits = nestedLoops.filter(plan.contains)
         if (hits.nonEmpty && !nestedLoopAllowed.contains(name))
           Some(s"$name: ${hits.mkString(", ")}")
         else None
@@ -202,5 +172,11 @@ class RegistrySpec extends AnyFunSuite {
   test("allowlisted nested-loop queries still exist in the registry") {
     val gone = nestedLoopAllowed.keySet -- Queries.all.keySet
     assert(gone.isEmpty, s"allowlist entries for dead queries: $gone")
+    // an entry whose audited plan holds no nested loop (or that has no
+    // audited plan at all) sanctions nothing: it must go
+    val stale = walk.collect { case (name, built)
+        if nestedLoopAllowed.contains(name) &&
+          !built.get._1.exists(p => nestedLoops.exists(p.contains)) => name }
+    assert(stale.isEmpty, s"allowlist entries without a nested loop: $stale")
   }
 }
