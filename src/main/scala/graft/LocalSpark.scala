@@ -16,7 +16,7 @@ object LocalSpark {
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** @param aqe off only where formatted plans must show the
-    *   WholeStageCodegen spans AQE hides (PlanDump, PlanFile)
+    *   WholeStageCodegen spans AQE hides (PlanDump)
     */
   def session(cores: Int = cpus, aqe: Boolean = true,
       logLevel: String = "WARN"): SparkSession = {

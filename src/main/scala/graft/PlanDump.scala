@@ -4,9 +4,14 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.execution.FormattedMode
 
-/** Dump formatted physical plans for a representative query per operator
-  * family into PLANS.md — the audit-trail artifact behind ARCHITECTURE.md's
-  * shuffle inventory. Run: `sbt 'runMain graft.PlanDump'`.
+/** Dump formatted physical plans at sf0.001. With no arguments: a
+  * representative query per operator family into PLANS.md — the
+  * audit-trail artifact behind ARCHITECTURE.md's shuffle inventory. Run:
+  * `sbt 'runMain graft.PlanDump'`. With arguments: the NAMED queries, one
+  * file each — the per-round optimization-evidence artifact
+  * (plans/rNN/<query>_{before,after}.txt). Run:
+  * `sbt 'runMain graft.PlanDump <outDir> <suffix> q108_triangles ...'`
+  * writes `<outDir>/<query>_<suffix>.txt`.
   */
 object PlanDump {
   val representative: Seq[String] = Seq(
@@ -228,32 +233,49 @@ object PlanDump {
     val orphaned = notes.keySet -- representative.toSet
     require(orphaned.isEmpty,
       s"PlanDump.notes keys not in representative: ${orphaned.mkString(", ")}")
-    // AQE off HERE (and in PlanFile) ONLY: formatted plans under AQE
-    // hide the WholeStageCodegen spans this artifact exists to show (the
-    // harness sessions keep AQE on)
+    val files = args.nonEmpty
+    require(!files || args.length >= 3,
+      "usage: PlanDump [<outDir> <suffix> <queryName>...]")
+    val names = if (files) args.drop(2).toSeq else representative
+    val unknown = names.filterNot(Queries.all.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    // AQE off HERE ONLY: formatted plans under AQE hide the
+    // WholeStageCodegen spans these artifacts exist to show (the harness
+    // sessions keep AQE on)
     val spark = LocalSpark.session(cores = 8, aqe = false, logLevel = "ERROR")
     val dir = "/root/testdata/sf0.001"
-    val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans (generated by graft.PlanDump at sf0.001)\n\n")
-    sb.append("One representative query per operator family; regenerate with\n")
-    sb.append("`sbt 'runMain graft.PlanDump'`. Read together with ARCHITECTURE.md's\n")
-    sb.append("shuffle inventory — scans show PushedFilters/ReadSchema pruning,\n")
-    sb.append("joins show broadcast vs shuffle strategy.\n")
-    representative.foreach { name =>
-      // withScope per query — the CacheScope harness contract (r15:
-      // scope-less loops leave every query's operator caches
-      // REGISTERED for the JVM's life, and queries sharing a rebuilt
-      // /tmp artifact then poison later plans with dead file listings;
-      // the RegistrySpec flake's mechanism, same fix)
-      val plan = CacheScope.withScope {
+    // withScope per query — the CacheScope harness contract (r15:
+    // scope-less loops leave every query's operator caches
+    // REGISTERED for the JVM's life, and queries sharing a rebuilt
+    // /tmp artifact then poison later plans with dead file listings;
+    // the RegistrySpec flake's mechanism, same fix)
+    val plans = names.map { name =>
+      name -> CacheScope.withScope {
         Queries.all(name)(spark, dir)
           .queryExecution.explainString(FormattedMode)
       }
-      val note = notes.get(name).map(_ + "\n\n").getOrElse("")
-      sb.append(s"\n## $name\n\n$note```\n$plan```\n")
     }
-    Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    println(s"wrote PLANS.md (${representative.size} plans)")
+    if (files) {
+      val outDir = Paths.get(args(0))
+      Files.createDirectories(outDir)
+      plans.foreach { case (name, plan) =>
+        Files.writeString(outDir.resolve(s"${name}_${args(1)}.txt"), plan)
+        println(s"wrote ${name}_${args(1)}.txt")
+      }
+    } else {
+      val sb = new StringBuilder
+      sb.append("# PLANS — formatted physical plans (generated by graft.PlanDump at sf0.001)\n\n")
+      sb.append("One representative query per operator family; regenerate with\n")
+      sb.append("`sbt 'runMain graft.PlanDump'`. Read together with ARCHITECTURE.md's\n")
+      sb.append("shuffle inventory — scans show PushedFilters/ReadSchema pruning,\n")
+      sb.append("joins show broadcast vs shuffle strategy.\n")
+      plans.foreach { case (name, plan) =>
+        val note = notes.get(name).map(_ + "\n\n").getOrElse("")
+        sb.append(s"\n## $name\n\n$note```\n$plan```\n")
+      }
+      Files.writeString(Paths.get("PLANS.md"), sb.toString)
+      println(s"wrote PLANS.md (${plans.size} plans)")
+    }
     spark.stop()
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators._
-import graft.sources.CsvSource
+import graft.sources.{CsvSource, IndexFamily}
 
 /** The operator inventory (SURVEY.md §2) exposed as named queries over the
   * driver testdata, each paired with equivalent DuckDB SQL in [[Oracles]].
@@ -68,8 +68,7 @@ object Queries {
         Tables.customer(s, dir)
           .select(col("c_custkey").as("id"), col("c_name").as("name")),
         prefixLen = 15, maxDist = 2),
-      "/tmp/graft_shared_segpairs_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_"),
+      artifactDir("shared_segpairs", dir),
       s"segpairs|$dir|prefix15|dist2")
 
   /** The exact char-12-gram Jaccard pair stage q69 gates and q70 runs
@@ -85,8 +84,7 @@ object Queries {
     SharedStage.parquetOnce(
       TextDedup.charGramJaccardJoin(Tables.documents(s, dir),
         n = 12, thetaNum = 7, thetaDen = 10),
-      "/tmp/graft_shared_chargram_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_"),
+      artifactDir("shared_chargram", dir),
       s"chargram|$dir|n12|t7_10")
 
   /** The cross-polytope cosine pair stage q144 gates and q118 runs
@@ -97,8 +95,7 @@ object Queries {
   private def cpEmbeddingPairs(s: SparkSession, dir: String): DataFrame =
     SharedStage.parquetOnce(
       Ann.cosinePairsCp(Tables.embeddings(s, dir), threshold = 0.4),
-      "/tmp/graft_shared_cppairs_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_"),
+      artifactDir("shared_cppairs", dir),
       s"cppairs|$dir|t0.4")
 
   /** The co-purchase edge stage q108 counts triangles over and q134
@@ -123,30 +120,77 @@ object Queries {
       Triangles.coOccurrenceEdges(
         ol.select(col("p").as("key"), col("c").as("item")),
         minShared = 3, maxPerKey = 256),
-      "/tmp/graft_shared_copurchase_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_"),
+      artifactDir("shared_copurchase", dir),
       s"copurchase|$dir|min3|cap256")
   }
 
+  /** `/tmp/graft_<name>_<dir>` with `dir` made a file name: runs at
+    * different scale factors must not clobber each other's artifacts,
+    * and the suffix stays traceable to its source (unlike a hash).
+    */
+  private def artifactDir(name: String, dir: String): String =
+    s"/tmp/graft_${name}_" + dir.replaceAll("[^A-Za-z0-9._-]", "_")
+
+  /** The stored index at [[artifactDir]]`(name, dir)`: `build` writes it
+    * per call for hermeticity outside Bench; within a Bench JVM
+    * `SharedStage.buildOnce` reuses it under `key`, so the build lands
+    * on the first consumer in sorted order (the BASELINE.md
+    * charge-shift note applies). Returns the dir.
+    */
+  private def storedIndex(name: String, dir: String, key: String)(
+      build: String => Unit): String = {
+    val idx = artifactDir(name, dir)
+    SharedStage.buildOnce(idx, key)(build(idx))
+    idx
+  }
+
+  /** The embedding arrival family's shared (corpus, incoming) recipe —
+    * the vector twin of [[textArrival]]: corpus = vec_id % 7 != 3;
+    * incoming = the % 7 == 3 slice plus every 10th corpus vector under
+    * shifted ids, scaled by 1.001 (planted hits at cosine exactly 1 by
+    * scale invariance).
+    */
+  private def vecArrival(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    val e = Tables.embeddings(s, dir)
+    val corpus = e.filter(col("vec_id") % 7 =!= 3)
+      .select("vec_id", "embedding")
+    val incoming = e.filter(col("vec_id") % 7 === 3)
+      .select("vec_id", "embedding")
+      .unionByName(corpus.filter(col("vec_id") % 10 === 0)
+        .select((col("vec_id") + lit(5000000L)).as("vec_id"),
+          transform(col("embedding").cast("array<double>"),
+            x => x * lit(1.001d)).as("embedding")))
+    (corpus, incoming)
+  }
+
+  /** Write the threshold-0.4 cp index over `base` at `idx` with
+    * (k, bands) PINNED from `corpus`'s count — the corpus the index
+    * serves after its appends (the planned-growth sizing
+    * `appendCpIndex`'s scaladoc prescribes), so a gate never straddles
+    * a k-chooser step between base and grown counts at some future SF
+    * (r11 review), and the pinned-parameter path gets gate coverage.
+    */
+  private def writePinnedCpIndex(corpus: DataFrame, base: DataFrame,
+      idx: String): Unit = {
+    val k = graft.plans.CrossPolytope.chooseHashesPerBand(
+      corpus.count(), 0.4, 64, 1e-4)
+    val b = graft.plans.CrossPolytope.bandsFor(0.4, k, 64, 1e-4)
+    Ann.writeCpIndex(base, idx, threshold = 0.4, hashesPerBand = k,
+      bands = b)
+  }
+
   /** The write-once cross-polytope index over the q147/q148 corpus
-    * (embeddings with vec_id % 7 =!= 3, threshold 0.4), shared by q148
+    * ([[vecArrival]]'s corpus, threshold 0.4), shared by q148
     * (incremental PAIR probe) and q151 (threshold-floored SEARCH) —
     * one artifact serving both arrival shapes is exactly the 100 TB
-    * deployment story. Built per call for hermeticity outside Bench;
-    * within a Bench JVM `SharedStage.buildOnce` reuses it, so the
-    * write lands on the first consumer in sorted order (q148 — the
-    * BASELINE.md charge-shift note applies).
+    * deployment story. The build lands on q148 under Bench.
     */
   private def cpIndexDir(s: SparkSession, dir: String): String = {
-    val corpus = Tables.embeddings(s, dir)
-      .filter(col("vec_id") % 7 =!= 3)
-      .select("vec_id", "embedding")
-    val idx = "/tmp/graft_cpindex_" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    SharedStage.buildOnce(idx, s"cpindex|$dir|t0.4") {
+    val (corpus, _) = vecArrival(s, dir)
+    storedIndex("cpindex", dir, s"cpindex|$dir|t0.4") { idx =>
       Ann.writeCpIndex(corpus, idx, threshold = 0.4)
     }
-    idx
   }
 
   /** The text arrival family's shared (corpus, incoming) recipe —
@@ -156,7 +200,7 @@ object Queries {
     * are identical, so they collide in every band deterministically).
     */
   private def textArrival(s: SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+      : (DataFrame, DataFrame) = {
     val d = Tables.documents(s, dir)
     val corpus = d.filter(col("doc_id") % 7 =!= 3)
       .select("doc_id", "text")
@@ -169,105 +213,110 @@ object Queries {
   }
 
   /** The write-once MinHash text index over the q153 corpus, probed by
-    * q154 — built per call for hermeticity outside Bench; within a
-    * Bench JVM `SharedStage.buildOnce` reuses it (the build lands on
-    * the first consumer in sorted order — the BASELINE.md charge-shift
-    * note applies).
+    * q154 and q174.
     */
   private def textIndexDir(s: SparkSession, dir: String): String = {
     val (corpus, _) = textArrival(s, dir)
-    val idx = "/tmp/graft_txtindex_" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    SharedStage.buildOnce(idx, s"txtindex|$dir|t0.6") {
+    storedIndex("txtindex", dir, s"txtindex|$dir|t0.6") { idx =>
       TextIndex.writeJaccardIndex(corpus, idx, threshold = 0.6)
     }
-    idx
   }
 
-  /** The write-once BM25 postings index over the full documents
-    * corpus, shared by q165 (single-query top-k) and q168 (batched
-    * per-query retrieval) — one artifact serving both retrieval
-    * shapes, the q148/q151 pattern. Built per call for hermeticity
-    * outside Bench; within a Bench JVM `SharedStage.buildOnce` reuses
-    * it (the build lands on the first consumer in sorted order).
+  /** fp lifecycle step: the base build (corpus minus its %11 == 5
+    * slice) plus the PROBED slice — the slice verdicts against the base
+    * and only its kept docs append (the survivors contract; at sf0.1
+    * one fp genuinely straddles the split). The commit stamps and the
+    * `evolve` columns pass through to the two writes.
     */
-  /** The partially-compacted fp artifact shared by q185 (as-of across
-    * a partial compact) and q186 (differential read over its
-    * delete + re-append window): the q178 composition — base %11!=5,
-    * append the %11==5 survivors, DELETE the ≡ 2 (mod 13) owners,
-    * re-append their even half (epochs 0..3) — then a partial compact
-    * below 1 folds epochs 0-1 into a checkpoint and VACUUM physically
-    * reclaims them, so every later read can only have served the
-    * checkpoint. Built per call for hermeticity outside Bench; within
-    * a Bench JVM `SharedStage.buildOnce` reuses it (the build lands
-    * on the first consumer in sorted order).
-    */
-  private def fpCbIndexDir(s: SparkSession, dir: String): String = {
-    val (corpus, _) = textArrival(s, dir)
-    val idx = "/tmp/graft_fpindex_cb_" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    SharedStage.buildOnce(idx, s"fpindexcb|$dir") {
-      Dedup.writeFingerprintIndex(
-        corpus.filter(col("doc_id") % 11 =!= 5), idx)
-      val slice = corpus.filter(col("doc_id") % 11 === 5)
-      val kept = Dedup.dedupAgainstIndex(idx, slice)
-        .filter(col("kept")).select("doc_id")
-      Dedup.appendFingerprintIndex(idx,
-        slice.join(kept, Seq("doc_id"), "left_semi"))
-      val doomedDir = idx + "_doomed"
-      Dedup.storedOwners(s, idx).filter(col("owner") % 13 === 2)
-        .select(col("owner").as("doc_id"))
-        .write.mode("overwrite").parquet(doomedDir)
-      val doomed = s.read.parquet(doomedDir)
-      Dedup.index.delete(idx, doomed)
-      Dedup.appendFingerprintIndex(idx,
-        corpus.join(doomed.filter(col("doc_id") % 2 === 0),
-          Seq("doc_id"), "left_semi"))
-      Dedup.index.compact(s, idx, below = Some(1))
-      Dedup.index.vacuum(s, idx)
-    }
-    idx
+  private def fpBaseAndSlice(corpus: DataFrame, idx: String,
+      baseTs: Option[Long] = None, sliceTs: Option[Long] = None,
+      evolve: Seq[(String, Column)] = Seq.empty): Unit = {
+    Dedup.writeFingerprintIndex(
+      corpus.filter(col("doc_id") % 11 =!= 5), idx, commitTs = baseTs)
+    val slice = corpus.filter(col("doc_id") % 11 === 5)
+    val kept = Dedup.dedupAgainstIndex(idx, slice)
+      .filter(col("kept")).select("doc_id")
+    Dedup.appendFingerprintIndex(idx,
+      slice.join(kept, Seq("doc_id"), "left_semi"), evolve = evolve,
+      commitTs = sliceTs)
   }
 
-  /** The TIMESTAMPED twin of [[fpCbIndexDir]] (r15 — r14 VERDICT #3),
-    * shared by q192 (timestamp-resolved as-of probes) and q193 (DESCRIBE
-    * HISTORY with commit_ts + persisted kinds): the exact q185
-    * composition with a caller-supplied monotone clock injected at every
-    * mutation (base 1000, append 2000, delete 3000, re-append 4000,
-    * partial compact below 1 5000 — the P9 per-job-constant precedent,
-    * so the gates stay deterministic), then vacuum. End state: serving
-    * epoch 4, floor 1 (checkpoint-backed), metas 1..4 stamped.
+  /** Lifecycle step: SNAPSHOT `ids` to `<idx>_doomed` (lineage over a
+    * mutating artifact would silently re-read the post-delete state),
+    * delete them from `idx` as one tombstone epoch, and return the
+    * snapshot for the caller's re-append.
     */
-  private def fpTsIndexDir(s: SparkSession, dir: String): String = {
-    val (corpus, _) = textArrival(s, dir)
-    val idx = "/tmp/graft_fpindex_ts_" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    SharedStage.buildOnce(idx, s"fpindexts|$dir") {
-      Dedup.writeFingerprintIndex(
-        corpus.filter(col("doc_id") % 11 =!= 5), idx,
-        commitTs = Some(1000L))
-      val slice = corpus.filter(col("doc_id") % 11 === 5)
-      val kept = Dedup.dedupAgainstIndex(idx, slice)
-        .filter(col("kept")).select("doc_id")
-      Dedup.appendFingerprintIndex(idx,
-        slice.join(kept, Seq("doc_id"), "left_semi"),
-        commitTs = Some(2000L))
-      val doomedDir = idx + "_doomed"
+  private def deleteSnapshot(family: IndexFamily, idx: String,
+      ids: DataFrame, commitTs: Option[Long] = None): DataFrame = {
+    val doomedDir = idx + "_doomed"
+    ids.write.mode("overwrite").parquet(doomedDir)
+    val doomed = ids.sparkSession.read.parquet(doomedDir)
+    family.delete(idx, doomed, commitTs)
+    doomed
+  }
+
+  /** fp lifecycle step: retract the live owners ≡ 2 (mod 13)
+    * ([[deleteSnapshot]]), then re-append their even half — the
+    * epoch-qualified tombstone suppresses the past and serves the
+    * re-append.
+    */
+  private def fpRetractOwners(s: SparkSession, corpus: DataFrame,
+      idx: String, deleteTs: Option[Long] = None,
+      reappendTs: Option[Long] = None): Unit = {
+    val doomed = deleteSnapshot(Dedup.index, idx,
       Dedup.storedOwners(s, idx).filter(col("owner") % 13 === 2)
-        .select(col("owner").as("doc_id"))
-        .write.mode("overwrite").parquet(doomedDir)
-      val doomed = s.read.parquet(doomedDir)
-      Dedup.index.delete(idx, doomed,
-        commitTs = Some(3000L))
-      Dedup.appendFingerprintIndex(idx,
-        corpus.join(doomed.filter(col("doc_id") % 2 === 0),
-          Seq("doc_id"), "left_semi"),
-        commitTs = Some(4000L))
-      Dedup.index.compact(s, idx, below = Some(1),
-        commitTs = Some(5000L))
+        .select(col("owner").as("doc_id")), deleteTs)
+    Dedup.appendFingerprintIndex(idx,
+      corpus.join(doomed.filter(col("doc_id") % 2 === 0),
+        Seq("doc_id"), "left_semi"),
+      commitTs = reappendTs)
+  }
+
+  /** The fp gates' verdict shape: (doc_id, fp, owner, kept as a long),
+    * led by the `horizon` label columns and ordered by them, then
+    * doc_id.
+    */
+  private def fpVerdicts(verdicts: DataFrame, horizon: String*)
+      : DataFrame =
+    verdicts.select(horizon.map(col) ++ Seq(col("doc_id"), col("fp"),
+        col("owner"), col("kept").cast("long").as("kept")): _*)
+      .orderBy((horizon :+ "doc_id").map(col): _*)
+
+  /** The as-of gates' union: `probe` at each (label, asOf) horizon,
+    * labelled `as_of` and unioned left-deep in the given order.
+    */
+  private def asOfUnion(horizons: (Long, Option[Int])*)(
+      probe: Option[Int] => DataFrame): DataFrame =
+    horizons.map { case (label, asOf) =>
+      probe(asOf).withColumn("as_of", lit(label))
+    }.reduce(_ unionByName _)
+
+  /** The partially-compacted fp artifact: the q178 composition — base
+    * %11!=5, append the %11==5 survivors, DELETE the ≡ 2 (mod 13)
+    * owners, re-append their even half (epochs 0..3) — then a partial
+    * compact below 1 folds epochs 0-1 into a checkpoint and VACUUM
+    * physically reclaims them, so every later read can only have
+    * served the checkpoint. End state: serving epoch 4, floor 1.
+    * `stamps` are the five mutations' commit timestamps in order
+    * (empty: unstamped). Unstamped (`fpindex_cb`) it serves q185 (as-of
+    * across a partial compact), q186 (differential read over its
+    * delete + re-append window), q189 and q190; stamped with a
+    * caller-supplied monotone clock (`fpindex_ts`: base 1000, append
+    * 2000, delete 3000, re-append 4000, compact 5000 — the P9
+    * per-job-constant precedent, so the gates stay deterministic) it
+    * serves q192 (timestamp-resolved as-of probes) and q193 (DESCRIBE
+    * HISTORY with commit_ts + persisted kinds).
+    */
+  private def fpCompactedBelowDir(s: SparkSession, dir: String,
+      tag: String, stamps: Seq[Long]): String = {
+    val (corpus, _) = textArrival(s, dir)
+    val ts = stamps.lift
+    storedIndex(s"fpindex_$tag", dir, s"fpindex$tag|$dir") { idx =>
+      fpBaseAndSlice(corpus, idx, ts(0), ts(1))
+      fpRetractOwners(s, corpus, idx, ts(2), ts(3))
+      Dedup.index.compact(s, idx, below = Some(1), commitTs = ts(4))
       Dedup.index.vacuum(s, idx)
     }
-    idx
   }
 
   /** The ADDITIVELY-EVOLVED fp artifact (r15 — r14 VERDICT #2, q191):
@@ -278,19 +327,9 @@ object Queries {
     */
   private def fpEvoIndexDir(s: SparkSession, dir: String): String = {
     val (corpus, _) = textArrival(s, dir)
-    val idx = "/tmp/graft_fpindex_evo_" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    SharedStage.buildOnce(idx, s"fpindexevo|$dir") {
-      Dedup.writeFingerprintIndex(
-        corpus.filter(col("doc_id") % 11 =!= 5), idx)
-      val slice = corpus.filter(col("doc_id") % 11 === 5)
-      val kept = Dedup.dedupAgainstIndex(idx, slice)
-        .filter(col("kept")).select("doc_id")
-      Dedup.appendFingerprintIndex(idx,
-        slice.join(kept, Seq("doc_id"), "left_semi"),
-        evolve = Seq("src_tag" -> lit("wave-b")))
+    storedIndex("fpindex_evo", dir, s"fpindexevo|$dir") { idx =>
+      fpBaseAndSlice(corpus, idx, evolve = Seq("src_tag" -> lit("wave-b")))
     }
-    idx
   }
 
   /** The mutated-but-uncompacted text artifact shared by q182 (as-of
@@ -302,29 +341,25 @@ object Queries {
     */
   private def txtAsOfIndexDir(s: SparkSession, dir: String): String = {
     val (corpus, _) = textArrival(s, dir)
-    val idx = "/tmp/graft_txtindex_asof_" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    SharedStage.buildOnce(idx, s"txtindexasof|$dir|t0.6") {
+    storedIndex("txtindex_asof", dir, s"txtindexasof|$dir|t0.6") { idx =>
       TextIndex.writeJaccardIndex(
         corpus.filter(col("doc_id") % 11 =!= 5), idx, threshold = 0.6)
       TextIndex.appendJaccardIndex(idx,
         corpus.filter(col("doc_id") % 11 === 5))
-      val doomedDir = idx + "_doomed"
-      TextIndex.storedDocIds(s, idx).filter(col("doc_id") % 13 === 2)
-        .write.mode("overwrite").parquet(doomedDir)
-      TextIndex.index.delete(idx, s.read.parquet(doomedDir))
+      deleteSnapshot(TextIndex.index, idx,
+        TextIndex.storedDocIds(s, idx).filter(col("doc_id") % 13 === 2))
     }
-    idx
   }
 
-  private def bm25IndexDir(s: SparkSession, dir: String): String = {
-    val idx = "/tmp/graft_bm25index_" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    SharedStage.buildOnce(idx, s"bm25index|$dir") {
+  /** The write-once BM25 postings index over the full documents
+    * corpus, shared by q165 (single-query top-k) and q168 (batched
+    * per-query retrieval) — one artifact serving both retrieval
+    * shapes, the q148/q151 pattern.
+    */
+  private def bm25IndexDir(s: SparkSession, dir: String): String =
+    storedIndex("bm25index", dir, s"bm25index|$dir") { idx =>
       Bm25.writeBm25Index(Tables.documents(s, dir), idx)
     }
-    idx
-  }
 
   /** q51's rolling fingerprint behind its LOUD ASCII gate premise: the
     * oracle's recursive walk is per-CHARACTER (ord/substr) while the
@@ -734,15 +769,7 @@ object Queries {
     // an incoming side are computed or emitted, never corpus×corpus.
     // Oracle = the exact O(n·m) pair set under the same predicate.
     "q147_incremental_dedup" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val corpus = e.filter(col("vec_id") % 7 =!= 3)
-        .select("vec_id", "embedding")
-      val incoming = e.filter(col("vec_id") % 7 === 3)
-        .select("vec_id", "embedding")
-        .unionByName(corpus.filter(col("vec_id") % 10 === 0)
-          .select((col("vec_id") + lit(5000000L)).as("vec_id"),
-            transform(col("embedding").cast("array<double>"),
-              x => x * lit(1.001d)).as("embedding")))
+      val (corpus, incoming) = vecArrival(s, dir)
       Ann.cosinePairsCpIncremental(corpus, incoming, threshold = 0.4)
     }),
 
@@ -756,15 +783,7 @@ object Queries {
     // between an artifact and its probe REFUSES loudly (spec-pinned);
     // at 100 TB the index write amortizes across every arriving shard.
     "q148_incremental_dedup_indexed" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val corpus = e.filter(col("vec_id") % 7 =!= 3)
-        .select("vec_id", "embedding")
-      val incoming = e.filter(col("vec_id") % 7 === 3)
-        .select("vec_id", "embedding")
-        .unionByName(corpus.filter(col("vec_id") % 10 === 0)
-          .select((col("vec_id") + lit(5000000L)).as("vec_id"),
-            transform(col("embedding").cast("array<double>"),
-              x => x * lit(1.001d)).as("embedding")))
+      val (corpus, incoming) = vecArrival(s, dir)
       Ann.cosinePairsCpIndexed(cpIndexDir(s, dir), incoming,
         threshold = 0.4)
     }),
@@ -799,29 +818,11 @@ object Queries {
     // count, and the append premise refuses past the derivation
     // point). Torn-append invisibility and both refusals spec-pinned.
     "q152_incremental_dedup_appended" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val corpus = e.filter(col("vec_id") % 7 =!= 3)
-        .select("vec_id", "embedding")
-      val incoming = e.filter(col("vec_id") % 7 === 3)
-        .select("vec_id", "embedding")
-        .unionByName(corpus.filter(col("vec_id") % 10 === 0)
-          .select((col("vec_id") + lit(5000000L)).as("vec_id"),
-            transform(col("embedding").cast("array<double>"),
-              x => x * lit(1.001d)).as("embedding")))
-      val idx = "/tmp/graft_cpindex_app_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      SharedStage.buildOnce(idx, s"cpindexapp|$dir|t0.4") {
-        // parameters PINNED for the corpus the index will serve after
-        // the append (the planned-growth sizing appendCpIndex's
-        // scaladoc prescribes) — derived from the FINAL count, so the
-        // gate never straddles a k-chooser step between base and
-        // grown counts at some future SF (r11 review), and the
-        // pinned-parameter append path gets gate coverage
-        val k = graft.plans.CrossPolytope.chooseHashesPerBand(
-          corpus.count(), 0.4, 64, 1e-4)
-        val b = graft.plans.CrossPolytope.bandsFor(0.4, k, 64, 1e-4)
-        Ann.writeCpIndex(corpus.filter(col("vec_id") % 11 =!= 5), idx,
-          threshold = 0.4, hashesPerBand = k, bands = b)
+      val (corpus, incoming) = vecArrival(s, dir)
+      val idx = storedIndex("cpindex_app", dir,
+          s"cpindexapp|$dir|t0.4") { idx =>
+        writePinnedCpIndex(corpus,
+          corpus.filter(col("vec_id") % 11 =!= 5), idx)
         Ann.appendCpIndex(idx, corpus.filter(col("vec_id") % 11 === 5))
       }
       Ann.cosinePairsCpIndexed(idx, incoming, threshold = 0.4)
@@ -880,9 +881,8 @@ object Queries {
     // rot its parameters (TextIndex.appendJaccardIndex scaladoc).
     "q155_text_dedup_appended" -> ((s, dir) => {
       val (corpus, incoming) = textArrival(s, dir)
-      val idx = "/tmp/graft_txtindex_app_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      SharedStage.buildOnce(idx, s"txtindexapp|$dir|t0.6") {
+      val idx = storedIndex("txtindex_app", dir,
+          s"txtindexapp|$dir|t0.6") { idx =>
         TextIndex.writeJaccardIndex(
           corpus.filter(col("doc_id") % 11 =!= 5), idx, threshold = 0.6)
         TextIndex.appendJaccardIndex(idx,
@@ -904,21 +904,10 @@ object Queries {
     // declaratively (base min, else slice min, else incoming min).
     "q159_exact_dedup_indexed" -> ((s, dir) => {
       val (corpus, incoming) = textArrival(s, dir)
-      val idx = "/tmp/graft_fpindex_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      SharedStage.buildOnce(idx, s"fpindex|$dir") {
-        Dedup.writeFingerprintIndex(
-          corpus.filter(col("doc_id") % 11 =!= 5), idx)
-        val slice = corpus.filter(col("doc_id") % 11 === 5)
-        val kept = Dedup.dedupAgainstIndex(idx, slice)
-          .filter(col("kept")).select("doc_id")
-        Dedup.appendFingerprintIndex(idx,
-          slice.join(kept, Seq("doc_id"), "left_semi"))
+      val idx = storedIndex("fpindex", dir, s"fpindex|$dir") { idx =>
+        fpBaseAndSlice(corpus, idx)
       }
-      Dedup.dedupAgainstIndex(idx, incoming)
-        .select(col("doc_id"), col("fp"), col("owner"),
-          col("kept").cast("long").as("kept"))
-        .orderBy(col("doc_id"))
+      fpVerdicts(Dedup.dedupAgainstIndex(idx, incoming))
     }),
 
     // ---- COMPACTION (r12, r11 VERDICT #1): the fourth quarter of the
@@ -938,24 +927,12 @@ object Queries {
     // exact O(n·m) oracle is unchanged. Parameters pin from the FINAL
     // count (the q152 planned-growth sizing).
     "q161_cp_dedup_compacted" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val corpus = e.filter(col("vec_id") % 7 =!= 3)
-        .select("vec_id", "embedding")
-      val incoming = e.filter(col("vec_id") % 7 === 3)
-        .select("vec_id", "embedding")
-        .unionByName(corpus.filter(col("vec_id") % 10 === 0)
-          .select((col("vec_id") + lit(5000000L)).as("vec_id"),
-            transform(col("embedding").cast("array<double>"),
-              x => x * lit(1.001d)).as("embedding")))
-      val idx = "/tmp/graft_cpindex_cmp_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      SharedStage.buildOnce(idx, s"cpindexcmp|$dir|t0.4") {
-        val k = graft.plans.CrossPolytope.chooseHashesPerBand(
-          corpus.count(), 0.4, 64, 1e-4)
-        val b = graft.plans.CrossPolytope.bandsFor(0.4, k, 64, 1e-4)
+      val (corpus, incoming) = vecArrival(s, dir)
+      val idx = storedIndex("cpindex_cmp", dir,
+          s"cpindexcmp|$dir|t0.4") { idx =>
+        writePinnedCpIndex(corpus,
+          corpus.filter(col("vec_id") % 11 =!= 5), idx)
         val slice = corpus.filter(col("vec_id") % 11 === 5)
-        Ann.writeCpIndex(corpus.filter(col("vec_id") % 11 =!= 5), idx,
-          threshold = 0.4, hashesPerBand = k, bands = b)
         Ann.appendCpIndex(idx, slice.filter(col("vec_id") % 13 =!= 7))
         Ann.index.compact(s, idx)
         Ann.appendCpIndex(idx, slice.filter(col("vec_id") % 13 === 7))
@@ -968,9 +945,8 @@ object Queries {
     // carry: MinHash banding is count-independent).
     "q162_text_dedup_compacted" -> ((s, dir) => {
       val (corpus, incoming) = textArrival(s, dir)
-      val idx = "/tmp/graft_txtindex_cmp_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      SharedStage.buildOnce(idx, s"txtindexcmp|$dir|t0.6") {
+      val idx = storedIndex("txtindex_cmp", dir,
+          s"txtindexcmp|$dir|t0.6") { idx =>
         TextIndex.writeJaccardIndex(
           corpus.filter(col("doc_id") % 11 =!= 5), idx, threshold = 0.6)
         TextIndex.appendJaccardIndex(idx,
@@ -987,23 +963,12 @@ object Queries {
     // gate proves the rewrite, not a lucky union with the sprawl).
     "q163_fp_dedup_compacted" -> ((s, dir) => {
       val (corpus, incoming) = textArrival(s, dir)
-      val idx = "/tmp/graft_fpindex_cmp_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      SharedStage.buildOnce(idx, s"fpindexcmp|$dir") {
-        Dedup.writeFingerprintIndex(
-          corpus.filter(col("doc_id") % 11 =!= 5), idx)
-        val slice = corpus.filter(col("doc_id") % 11 === 5)
-        val kept = Dedup.dedupAgainstIndex(idx, slice)
-          .filter(col("kept")).select("doc_id")
-        Dedup.appendFingerprintIndex(idx,
-          slice.join(kept, Seq("doc_id"), "left_semi"))
+      val idx = storedIndex("fpindex_cmp", dir, s"fpindexcmp|$dir") { idx =>
+        fpBaseAndSlice(corpus, idx)
         Dedup.index.compact(s, idx)
         Dedup.index.vacuum(s, idx)
       }
-      Dedup.dedupAgainstIndex(idx, incoming)
-        .select(col("doc_id"), col("fp"), col("owner"),
-          col("kept").cast("long").as("kept"))
-        .orderBy(col("doc_id"))
+      fpVerdicts(Dedup.dedupAgainstIndex(idx, incoming))
     }),
 
     // The exact-dedup ingestion loop as a STREAMING gate (r11 VERDICT
@@ -1091,9 +1056,7 @@ object Queries {
     // q86 scores bit-for-bit under the same oracle.
     "q166_bm25_index_appended" -> ((s, dir) => {
       val d = Tables.documents(s, dir)
-      val idx = "/tmp/graft_bm25index_app_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      SharedStage.buildOnce(idx, s"bm25indexapp|$dir") {
+      val idx = storedIndex("bm25index_app", dir, s"bm25indexapp|$dir") { idx =>
         Bm25.writeBm25Index(d.filter(col("doc_id") % 11 =!= 5), idx)
         Bm25.appendBm25Index(idx, d.filter(col("doc_id") % 11 === 5))
         Bm25.index.compact(s, idx)
@@ -1123,32 +1086,13 @@ object Queries {
     // serve the re-append) is live in both the probe and the rewrite.
     "q171_fp_dedup_deleted" -> ((s, dir) => {
       val (corpus, incoming) = textArrival(s, dir)
-      val idx = "/tmp/graft_fpindex_del_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      SharedStage.buildOnce(idx, s"fpindexdel|$dir") {
-        Dedup.writeFingerprintIndex(
-          corpus.filter(col("doc_id") % 11 =!= 5), idx)
-        val slice = corpus.filter(col("doc_id") % 11 === 5)
-        val kept = Dedup.dedupAgainstIndex(idx, slice)
-          .filter(col("kept")).select("doc_id")
-        Dedup.appendFingerprintIndex(idx,
-          slice.join(kept, Seq("doc_id"), "left_semi"))
-        val doomedDir = idx + "_doomed"
-        Dedup.storedOwners(s, idx).filter(col("owner") % 13 === 2)
-          .select(col("owner").as("doc_id"))
-          .write.mode("overwrite").parquet(doomedDir)
-        val doomed = s.read.parquet(doomedDir)
-        Dedup.index.delete(idx, doomed)
-        Dedup.appendFingerprintIndex(idx,
-          corpus.join(doomed.filter(col("doc_id") % 2 === 0),
-            Seq("doc_id"), "left_semi"))
+      val idx = storedIndex("fpindex_del", dir, s"fpindexdel|$dir") { idx =>
+        fpBaseAndSlice(corpus, idx)
+        fpRetractOwners(s, corpus, idx)
         Dedup.index.compact(s, idx)
         Dedup.index.vacuum(s, idx)
       }
-      Dedup.dedupAgainstIndex(idx, incoming)
-        .select(col("doc_id"), col("fp"), col("owner"),
-          col("kept").cast("long").as("kept"))
-        .orderBy(col("doc_id"))
+      fpVerdicts(Dedup.dedupAgainstIndex(idx, incoming))
     }),
 
     // BM25 family: deletion is the additivity story in REVERSE — the
@@ -1159,9 +1103,7 @@ object Queries {
     // documents-minus-deleted, bit-for-bit, under the q86 formula.
     "q172_bm25_deleted" -> ((s, dir) => {
       val d = Tables.documents(s, dir)
-      val idx = "/tmp/graft_bm25index_del_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      SharedStage.buildOnce(idx, s"bm25indexdel|$dir") {
+      val idx = storedIndex("bm25index_del", dir, s"bm25indexdel|$dir") { idx =>
         Bm25.writeBm25Index(d, idx)
         Bm25.index.delete(idx,
           d.filter(col("doc_id") % 13 === 2).select("doc_id"))
@@ -1181,15 +1123,11 @@ object Queries {
     // q153 oracle with the corpus minus the still-deleted docs.
     "q173_text_dedup_deleted" -> ((s, dir) => {
       val (corpus, incoming) = textArrival(s, dir)
-      val idx = "/tmp/graft_txtindex_del_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      SharedStage.buildOnce(idx, s"txtindexdel|$dir|t0.6") {
+      val idx = storedIndex("txtindex_del", dir,
+          s"txtindexdel|$dir|t0.6") { idx =>
         TextIndex.writeJaccardIndex(corpus, idx, threshold = 0.6)
-        val doomedDir = idx + "_doomed"
-        TextIndex.storedDocIds(s, idx).filter(col("doc_id") % 13 === 2)
-          .write.mode("overwrite").parquet(doomedDir)
-        val doomed = s.read.parquet(doomedDir)
-        TextIndex.index.delete(idx, doomed)
+        val doomed = deleteSnapshot(TextIndex.index, idx,
+          TextIndex.storedDocIds(s, idx).filter(col("doc_id") % 13 === 2))
         TextIndex.appendJaccardIndex(idx,
           corpus.join(doomed.filter(col("doc_id") % 2 === 0),
             Seq("doc_id"), "left_semi"))
@@ -1206,23 +1144,10 @@ object Queries {
     // probed by the q147 shard. With base-build-only construction,
     // every corpus vector is live, so the delete set is declarative.
     "q176_cp_dedup_deleted" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val corpus = e.filter(col("vec_id") % 7 =!= 3)
-        .select("vec_id", "embedding")
-      val incoming = e.filter(col("vec_id") % 7 === 3)
-        .select("vec_id", "embedding")
-        .unionByName(corpus.filter(col("vec_id") % 10 === 0)
-          .select((col("vec_id") + lit(5000000L)).as("vec_id"),
-            transform(col("embedding").cast("array<double>"),
-              x => x * lit(1.001d)).as("embedding")))
-      val idx = "/tmp/graft_cpindex_del_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      SharedStage.buildOnce(idx, s"cpindexdel|$dir|t0.4") {
-        val k = graft.plans.CrossPolytope.chooseHashesPerBand(
-          corpus.count(), 0.4, 64, 1e-4)
-        val b = graft.plans.CrossPolytope.bandsFor(0.4, k, 64, 1e-4)
-        Ann.writeCpIndex(corpus, idx, threshold = 0.4,
-          hashesPerBand = k, bands = b)
+      val (corpus, incoming) = vecArrival(s, dir)
+      val idx = storedIndex("cpindex_del", dir,
+          s"cpindexdel|$dir|t0.4") { idx =>
+        writePinnedCpIndex(corpus, corpus, idx)
         Ann.index.delete(idx,
           corpus.filter(col("vec_id") % 13 === 2).select("vec_id"))
         Ann.appendCpIndex(idx,
@@ -1243,9 +1168,7 @@ object Queries {
       val d = Tables.documents(s, dir)
       val corpus = d.filter(col("doc_id") % 7 =!= 3)
       val incoming = d.filter(col("doc_id") % 7 === 3)
-      val idx = "/tmp/graft_dhashidx_del_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      SharedStage.buildOnce(idx, s"dhashidxdel|$dir") {
+      val idx = storedIndex("dhashidx_del", dir, s"dhashidxdel|$dir") { idx =>
         Multimodal.writeDHashIndex(corpus, idx)
         Multimodal.index.delete(idx,
           corpus.filter(col("doc_id") % 13 === 2 &&
@@ -1294,34 +1217,12 @@ object Queries {
     // probe can ever see again).
     "q178_fp_dedup_asof" -> ((s, dir) => {
       val (corpus, incoming) = textArrival(s, dir)
-      val idx = "/tmp/graft_fpindex_asof_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      SharedStage.buildOnce(idx, s"fpindexasof|$dir") {
-        Dedup.writeFingerprintIndex(
-          corpus.filter(col("doc_id") % 11 =!= 5), idx)
-        val slice = corpus.filter(col("doc_id") % 11 === 5)
-        val kept = Dedup.dedupAgainstIndex(idx, slice)
-          .filter(col("kept")).select("doc_id")
-        Dedup.appendFingerprintIndex(idx,
-          slice.join(kept, Seq("doc_id"), "left_semi"))
-        val doomedDir = idx + "_doomed"
-        Dedup.storedOwners(s, idx).filter(col("owner") % 13 === 2)
-          .select(col("owner").as("doc_id"))
-          .write.mode("overwrite").parquet(doomedDir)
-        val doomed = s.read.parquet(doomedDir)
-        Dedup.index.delete(idx, doomed)
-        Dedup.appendFingerprintIndex(idx,
-          corpus.join(doomed.filter(col("doc_id") % 2 === 0),
-            Seq("doc_id"), "left_semi"))
+      val idx = storedIndex("fpindex_asof", dir, s"fpindexasof|$dir") { idx =>
+        fpBaseAndSlice(corpus, idx)
+        fpRetractOwners(s, corpus, idx)
       }
-      val at1 = Dedup.dedupAgainstIndex(idx, incoming, asOf = Some(1))
-        .withColumn("as_of", lit(1L))
-      val at2 = Dedup.dedupAgainstIndex(idx, incoming, asOf = Some(2))
-        .withColumn("as_of", lit(2L))
-      at1.unionByName(at2)
-        .select(col("as_of"), col("doc_id"), col("fp"), col("owner"),
-          col("kept").cast("long").as("kept"))
-        .orderBy(col("as_of"), col("doc_id"))
+      fpVerdicts(asOfUnion(1L -> Some(1), 2L -> Some(2))(asOf =>
+        Dedup.dedupAgainstIndex(idx, incoming, asOf = asOf)), "as_of")
     }),
 
     // BM25 family: the additivity story rewound — (N, Σdl) come from
@@ -1332,20 +1233,16 @@ object Queries {
     // is q172's gate; here both horizons ride one artifact.
     "q179_bm25_asof" -> ((s, dir) => {
       val d = Tables.documents(s, dir)
-      val idx = "/tmp/graft_bm25index_asof_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      SharedStage.buildOnce(idx, s"bm25indexasof|$dir") {
+      val idx = storedIndex("bm25index_asof", dir,
+          s"bm25indexasof|$dir") { idx =>
         Bm25.writeBm25Index(d.filter(col("doc_id") % 11 =!= 5), idx)
         Bm25.appendBm25Index(idx, d.filter(col("doc_id") % 11 === 5))
         Bm25.index.delete(idx,
           d.filter(col("doc_id") % 13 === 2).select("doc_id"))
       }
       val terms = Seq("spark", "hash", "window")
-      val at0 = Bm25.topKIndexed(s, idx, terms, k = 50, asOf = Some(0))
-        .withColumn("as_of", lit(0L))
-      val at1 = Bm25.topKIndexed(s, idx, terms, k = 50, asOf = Some(1))
-        .withColumn("as_of", lit(1L))
-      at0.unionByName(at1)
+      asOfUnion(0L -> Some(0), 1L -> Some(1))(asOf =>
+          Bm25.topKIndexed(s, idx, terms, k = 50, asOf = asOf))
         .select(col("as_of"), col("doc_id"), col("score_micro"),
           col("n_terms"))
         .orderBy(col("as_of"), col("score_micro").desc, col("doc_id"))
@@ -1368,19 +1265,14 @@ object Queries {
           asciiGuardedText("q180")(col("doc_id"), col("text")))
       val corpus = d.filter(col("doc_id") % 20 =!= 3)
       val bench = d.filter(col("doc_id") % 20 === 3)
-      val idx = "/tmp/graft_deconindex_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      SharedStage.buildOnce(idx, s"deconindex|$dir|w60") {
+      val idx = storedIndex("deconindex", dir, s"deconindex|$dir|w60") { idx =>
         TextDedup.writeDeconIndex(
           bench.filter(col("doc_id") % 3 =!= 1), idx, w = 60)
         TextDedup.appendDeconIndex(idx,
           bench.filter(col("doc_id") % 3 === 1))
-        val doomedDir = idx + "_doomed"
-        TextDedup.storedDeconDocIds(s, idx)
-          .filter(col("doc_id") % 13 === 2)
-          .write.mode("overwrite").parquet(doomedDir)
-        val doomed = s.read.parquet(doomedDir)
-        TextDedup.index.delete(idx, doomed)
+        val doomed = deleteSnapshot(TextDedup.index, idx,
+          TextDedup.storedDeconDocIds(s, idx)
+            .filter(col("doc_id") % 13 === 2))
         TextDedup.appendDeconIndex(idx,
           bench.join(doomed.filter(col("doc_id") % 3 === 0),
             Seq("doc_id"), "left_semi"))
@@ -1413,26 +1305,18 @@ object Queries {
       val planted = corpus.filter(length(col("text")) >= 120)
         .orderBy(col("doc_id")).limit(1)
         .select(lit(899992L).as("doc_id"), col("text"))
-      val idx = "/tmp/graft_deconidx_asof_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      SharedStage.buildOnce(idx, s"deconidxasof|$dir|w60") {
+      val idx = storedIndex("deconidx_asof", dir,
+          s"deconidxasof|$dir|w60") { idx =>
         TextDedup.writeDeconIndex(
           bench.filter(col("doc_id") % 3 =!= 1), idx, w = 60)
         TextDedup.appendDeconIndex(idx,
           bench.filter(col("doc_id") % 3 === 1).unionByName(planted))
-        val doomedDir = idx + "_doomed"
-        TextDedup.storedDeconDocIds(s, idx)
-          .filter(col("doc_id") % 13 === 2)
-          .write.mode("overwrite").parquet(doomedDir)
-        TextDedup.index.delete(idx, s.read.parquet(doomedDir))
+        deleteSnapshot(TextDedup.index, idx,
+          TextDedup.storedDeconDocIds(s, idx)
+            .filter(col("doc_id") % 13 === 2))
       }
-      val at1 = TextDedup
-        .decontaminateAgainstIndex(corpus, idx, asOf = Some(1))
-        .withColumn("as_of", lit(1L))
-      val at2 = TextDedup
-        .decontaminateAgainstIndex(corpus, idx, asOf = Some(2))
-        .withColumn("as_of", lit(2L))
-      at1.unionByName(at2)
+      asOfUnion(1L -> Some(1), 2L -> Some(2))(asOf =>
+          TextDedup.decontaminateAgainstIndex(corpus, idx, asOf = asOf))
         .select(col("as_of"), col("doc_id"), col("orig_len"),
           col("clean_len"), col("n_cut"), col("chars_removed"),
           col("clean_md5"))
@@ -1451,13 +1335,9 @@ object Queries {
     "q182_text_dedup_asof" -> ((s, dir) => {
       val (_, incoming) = textArrival(s, dir)
       val idx = txtAsOfIndexDir(s, dir)
-      val at1 = TextIndex.jaccardPairsIndexed(idx, incoming,
-          threshold = 0.6, asOf = Some(1))
-        .withColumn("as_of", lit(1L))
-      val at2 = TextIndex.jaccardPairsIndexed(idx, incoming,
-          threshold = 0.6, asOf = Some(2))
-        .withColumn("as_of", lit(2L))
-      at1.unionByName(at2)
+      asOfUnion(1L -> Some(1), 2L -> Some(2))(asOf =>
+          TextIndex.jaccardPairsIndexed(idx, incoming, threshold = 0.6,
+            asOf = asOf))
         .select(col("as_of"), col("doc_a"), col("doc_b"),
           col("jaccard"))
         .orderBy(col("as_of"), col("doc_a"), col("doc_b"))
@@ -1468,34 +1348,18 @@ object Queries {
     // currency step), so the FROZEN (k, bands) are identical at every
     // horizon and a historical probe hashes under the stored rotations.
     "q183_cp_dedup_asof" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val corpus = e.filter(col("vec_id") % 7 =!= 3)
-        .select("vec_id", "embedding")
-      val incoming = e.filter(col("vec_id") % 7 === 3)
-        .select("vec_id", "embedding")
-        .unionByName(corpus.filter(col("vec_id") % 10 === 0)
-          .select((col("vec_id") + lit(5000000L)).as("vec_id"),
-            transform(col("embedding").cast("array<double>"),
-              x => x * lit(1.001d)).as("embedding")))
-      val idx = "/tmp/graft_cpindex_asof_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      SharedStage.buildOnce(idx, s"cpindexasof|$dir|t0.4") {
-        val k = graft.plans.CrossPolytope.chooseHashesPerBand(
-          corpus.count(), 0.4, 64, 1e-4)
-        val b = graft.plans.CrossPolytope.bandsFor(0.4, k, 64, 1e-4)
-        Ann.writeCpIndex(corpus.filter(col("vec_id") % 11 =!= 5), idx,
-          threshold = 0.4, hashesPerBand = k, bands = b)
+      val (corpus, incoming) = vecArrival(s, dir)
+      val idx = storedIndex("cpindex_asof", dir,
+          s"cpindexasof|$dir|t0.4") { idx =>
+        writePinnedCpIndex(corpus,
+          corpus.filter(col("vec_id") % 11 =!= 5), idx)
         Ann.appendCpIndex(idx, corpus.filter(col("vec_id") % 11 === 5))
         Ann.index.delete(idx,
           corpus.filter(col("vec_id") % 13 === 2).select("vec_id"))
       }
-      val at1 = Ann.cosinePairsCpIndexed(idx, incoming,
-          threshold = 0.4, asOf = Some(1))
-        .withColumn("as_of", lit(1L))
-      val at2 = Ann.cosinePairsCpIndexed(idx, incoming,
-          threshold = 0.4, asOf = Some(2))
-        .withColumn("as_of", lit(2L))
-      at1.unionByName(at2)
+      asOfUnion(1L -> Some(1), 2L -> Some(2))(asOf =>
+          Ann.cosinePairsCpIndexed(idx, incoming, threshold = 0.4,
+            asOf = asOf))
         .select(col("as_of"), col("vec_a"), col("vec_b"))
         .orderBy(col("as_of"), col("vec_a"), col("vec_b"))
     }),
@@ -1507,9 +1371,7 @@ object Queries {
       val d = Tables.documents(s, dir)
       val corpus = d.filter(col("doc_id") % 7 =!= 3)
       val incoming = d.filter(col("doc_id") % 7 === 3)
-      val idx = "/tmp/graft_dhashidx_asof_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      SharedStage.buildOnce(idx, s"dhashidxasof|$dir") {
+      val idx = storedIndex("dhashidx_asof", dir, s"dhashidxasof|$dir") { idx =>
         Multimodal.writeDHashIndex(
           corpus.filter(col("doc_id") % 11 =!= 5), idx)
         Multimodal.appendDHashIndex(idx,
@@ -1519,13 +1381,8 @@ object Queries {
               col("doc_id") % 3 === 0)
             .select(col("doc_id").as("media_id")))
       }
-      val at1 = Multimodal.imageDHashNearIndexed(idx, incoming,
-          asOf = Some(1))
-        .withColumn("as_of", lit(1L))
-      val at2 = Multimodal.imageDHashNearIndexed(idx, incoming,
-          asOf = Some(2))
-        .withColumn("as_of", lit(2L))
-      at1.unionByName(at2)
+      asOfUnion(1L -> Some(1), 2L -> Some(2))(asOf =>
+          Multimodal.imageDHashNearIndexed(idx, incoming, asOf = asOf))
         .select(col("as_of"), col("media_a"), col("media_b"),
           col("hamming"))
         .orderBy(col("as_of"), col("media_a"), col("media_b"))
@@ -1547,17 +1404,10 @@ object Queries {
     // probe by its epoch number.
     "q185_fp_compact_below" -> ((s, dir) => {
       val (_, incoming) = textArrival(s, dir)
-      val idx = fpCbIndexDir(s, dir)
-      val at1 = Dedup.dedupAgainstIndex(idx, incoming, asOf = Some(1))
-        .withColumn("as_of", lit(1L))
-      val at2 = Dedup.dedupAgainstIndex(idx, incoming, asOf = Some(2))
-        .withColumn("as_of", lit(2L))
-      val srv = Dedup.dedupAgainstIndex(idx, incoming)
-        .withColumn("as_of", lit(4L))
-      at1.unionByName(at2).unionByName(srv)
-        .select(col("as_of"), col("doc_id"), col("fp"), col("owner"),
-          col("kept").cast("long").as("kept"))
-        .orderBy(col("as_of"), col("doc_id"))
+      val idx = fpCompactedBelowDir(s, dir, "cb", Nil)
+      fpVerdicts(asOfUnion(1L -> Some(1), 2L -> Some(2), 4L -> None)(
+        asOf => Dedup.dedupAgainstIndex(idx, incoming, asOf = asOf)),
+        "as_of")
     }),
 
     // ---- DIFFERENTIAL reads (r14, r13 VERDICT #2 — CDC out of a
@@ -1572,7 +1422,7 @@ object Queries {
     // recomputes both sides from the declarative owner map, knowing
     // nothing about epochs, tombstones, or the checkpoint.
     "q186_fp_changes_between" -> ((s, dir) => {
-      val idx = fpCbIndexDir(s, dir)
+      val idx = fpCompactedBelowDir(s, dir, "cb", Nil)
       Dedup.fingerprintIndexChanges(s, idx, fromEpoch = 1, toEpoch = 3)
         .orderBy(col("change"), col("owner"))
     }),
@@ -1614,14 +1464,11 @@ object Queries {
     // claim is that delta-patching IS re-verdicting.
     "q189_fp_incremental_reverdict" -> ((s, dir) => {
       val (_, incoming) = textArrival(s, dir)
-      val idx = fpCbIndexDir(s, dir)
+      val idx = fpCompactedBelowDir(s, dir, "cb", Nil)
       val prior = Dedup.dedupAgainstIndex(idx, incoming, asOf = Some(1))
       val changes = Dedup.fingerprintIndexChanges(s, idx,
         fromEpoch = 1, toEpoch = 4)
-      Dedup.patchVerdicts(prior, changes)
-        .select(col("doc_id"), col("fp"), col("owner"),
-          col("kept").cast("long").as("kept"))
-        .orderBy(col("doc_id"))
+      fpVerdicts(Dedup.patchVerdicts(prior, changes))
     }),
 
     // ---- DESCRIBE HISTORY (r14): the layout's mutation log from its
@@ -1635,7 +1482,7 @@ object Queries {
     // deterministic end state as a constant table: a structural gate
     // (the q07 precedent), not a recompute.
     "q190_epoch_history" -> ((s, dir) => {
-      val idx = fpCbIndexDir(s, dir)
+      val idx = fpCompactedBelowDir(s, dir, "cb", Nil)
       Dedup.index.history(s, idx, "q190_epoch_history")
         .select(col("epoch").cast("long").as("epoch"),
           col("floor_at_commit").cast("long").as("floor_at_commit"),
@@ -1673,20 +1520,18 @@ object Queries {
     // unstamped-history refusals are spec-pinned (EpochAsOfSpec).
     "q192_fp_dedup_asof_time" -> ((s, dir) => {
       val (_, incoming) = textArrival(s, dir)
-      val idx = fpTsIndexDir(s, dir)
+      val idx = fpCompactedBelowDir(s, dir, "ts",
+        Seq(1000L, 2000L, 3000L, 4000L, 5000L))
       val resolved = Seq(2500L, 3500L, 9999L)
         .map(ts => ts -> Dedup.index.epochAtTime(s, idx, ts))
       require(resolved == Seq(2500L -> 1, 3500L -> 2, 9999L -> 4),
         "q192 premise violated: the injected commit timestamps must " +
           s"resolve to epochs 1/2/4, got $resolved — the artifact's " +
           "clock or composition drifted")
-      resolved.map { case (ts, e) =>
+      fpVerdicts(resolved.map { case (ts, e) =>
         Dedup.dedupAgainstIndex(idx, incoming, asOf = Some(e))
           .withColumn("as_of_ts", lit(ts))
-      }.reduce(_ unionByName _)
-        .select(col("as_of_ts"), col("doc_id"), col("fp"), col("owner"),
-          col("kept").cast("long").as("kept"))
-        .orderBy(col("as_of_ts"), col("doc_id"))
+      }.reduce(_ unionByName _), "as_of_ts")
     }),
 
     // ---- DESCRIBE HISTORY with commit timestamps + PERSISTED kinds
@@ -1698,7 +1543,8 @@ object Queries {
     // servingStateAtTime resolves against. Constant-table structural
     // oracle (the q07/q190 precedent).
     "q193_epoch_history_ts" -> ((s, dir) => {
-      val idx = fpTsIndexDir(s, dir)
+      val idx = fpCompactedBelowDir(s, dir, "ts",
+        Seq(1000L, 2000L, 3000L, 4000L, 5000L))
       Dedup.index.history(s, idx, "q193_epoch_history_ts")
         .select(col("epoch").cast("long").as("epoch"),
           col("floor_at_commit").cast("long").as("floor_at_commit"),
@@ -1948,9 +1794,7 @@ object Queries {
     // corpus's distinct words.
     "q160_bpe_encode_frozen" -> ((s, dir) => {
       val d = Tables.documents(s, dir)
-      val idx = "/tmp/graft_bpemerges_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      SharedStage.buildOnce(idx, s"bpemerges|$dir|k6") {
+      val idx = storedIndex("bpemerges", dir, s"bpemerges|$dir|k6") { idx =>
         Bpe.writeMerges(d.filter(col("doc_id") % 3 =!= 1), idx, k = 6)
       }
       Bpe.encodeWithStoredMerges(idx, d)
@@ -1973,9 +1817,7 @@ object Queries {
       val d = Tables.documents(s, dir)
       val corpus = d.filter(col("doc_id") % 7 =!= 3)
       val incoming = d.filter(col("doc_id") % 7 === 3)
-      val idx = "/tmp/graft_dhashindex_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      SharedStage.buildOnce(idx, s"dhashindex|$dir") {
+      val idx = storedIndex("dhashindex", dir, s"dhashindex|$dir") { idx =>
         Multimodal.writeDHashIndex(
           corpus.filter(col("doc_id") % 11 =!= 5), idx)
         Multimodal.appendDHashIndex(idx,
@@ -2135,8 +1977,7 @@ object Queries {
     // JSON sink + schema'd JSON scan (second text source format),
     // verified by aggregate parity like the CSV roundtrip.
     "q41_json_roundtrip" -> ((s, dir) => {
-      val out = "/tmp/graft_json_roundtrip_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
+      val out = artifactDir("json_roundtrip", dir)
       val c = cleaned(s, dir)
       c.write.mode("overwrite").json(out)
       val back = s.read.schema(c.schema).json(out)
@@ -2299,8 +2140,7 @@ object Queries {
     // — asserted in SourcesAndDedupSpec), and the aggregate over the
     // pruned read must match the oracle computing the same slice.
     "q53_partition_prune" -> ((s, dir) => {
-      val out = "/tmp/graft_partitioned_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
+      val out = artifactDir("partitioned", dir)
       cleaned(s, dir).write.mode("overwrite")
         .partitionBy("status").parquet(out)
       s.read.parquet(out).filter(col("status") === "approved")
@@ -2333,8 +2173,7 @@ object Queries {
     // ORC sink + schema'd ORC scan — the third columnar format as a
     // gate-visible query (parity check mirrors q41's JSON roundtrip).
     "q54_orc_roundtrip" -> ((s, dir) => {
-      val out = "/tmp/graft_orc_roundtrip_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
+      val out = artifactDir("orc_roundtrip", dir)
       val c = cleaned(s, dir)
       c.write.mode("overwrite").orc(out)
       val back = s.read.schema(c.schema).orc(out)
@@ -2574,8 +2413,7 @@ object Queries {
     // which rows carry the late column. Oracle recomputes from the
     // cleaned CTE (same pattern as q07's roundtrip parity).
     "q68_schema_merge" -> ((s, dir) => {
-      val out = "/tmp/graft_schema_merge_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
+      val out = artifactDir("schema_merge", dir)
       val c = cleaned(s, dir)
       // deterministic batch split on the row key's parity of length+last
       // digit is overkill — parity of try_cast to split evenly: use the
@@ -2609,8 +2447,7 @@ object Queries {
     // cleaned CTE oracle (q07 pattern). File-count mechanics are asserted
     // in SourcesAndDedupSpec; the gate proves no row was lost or doubled.
     "q71_compaction" -> ((s, dir) => {
-      val base = "/tmp/graft_compaction_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
+      val base = artifactDir("compaction", dir)
       cleaned(s, dir).repartition(64)
         .write.mode("overwrite").parquet(s"$base/small")
       val compacted = graft.sources.Compaction.compactParquet(
@@ -2629,8 +2466,7 @@ object Queries {
     // correction doubles pending amounts (×2 is an exponent bump —
     // exact in binary FP, so the decimal-cast parity is unaffected).
     "q73_partition_upsert" -> ((s, dir) => {
-      val base = "/tmp/graft_partition_upsert_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
+      val base = artifactDir("partition_upsert", dir)
       val c = cleaned(s, dir)
       c.write.mode("overwrite").partitionBy("status").parquet(base)
       c.filter(col("status") === "pending")
@@ -2782,8 +2618,7 @@ object Queries {
     // oracle aggregates the cleaned CTE directly: parity proves the
     // encode→decode cycle lossless for every row and column.
     "q83_xml_roundtrip" -> ((s, dir) => {
-      val out = "/tmp/graft_xml_roundtrip_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
+      val out = artifactDir("xml_roundtrip", dir)
       val c = cleaned(s, dir)
       c.write.mode("overwrite").option("rowTag", "txn").format("xml")
         .save(out)
@@ -3029,7 +2864,7 @@ object Queries {
     // whole shard lifecycle gated against the closed-form raster oracle.
     "q105_binaryfile_roundtrip" -> ((s, dir) =>
       Multimodal.binaryRoundtripFeatures(Tables.documents(s, dir),
-          "/tmp/graft_binshard_" + dir.replaceAll("[^A-Za-z0-9._-]", "_"))
+          artifactDir("binshard", dir))
         .orderBy(col("media_id"))),
 
     // Per-node triangle counting over the co-purchase graph (customers
@@ -3216,8 +3051,7 @@ object Queries {
       // path keyed by the sanitized sfDir: runs at different scale
       // factors must not clobber each other's roundtrip artifacts (and
       // the suffix stays traceable to its source, unlike a hash)
-      val out = "/tmp/graft_csv_roundtrip_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
+      val out = artifactDir("csv_roundtrip", dir)
       CsvSource.writeCsv(cleaned(s, dir), out)
       val schema = StructType(Seq(
         StructField("transaction_id", StringType),

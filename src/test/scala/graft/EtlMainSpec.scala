@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Stats
 import graft.sources.CsvSource
 
 /** E1: the CLI's pipeline and report end to end through [[EtlMain.run]],
@@ -68,6 +69,20 @@ class EtlMainSpec extends AnyFunSuite {
       "negative_amount" -> 0L, "cancelled_rows" -> 0L,
       "unknown_status" -> 1L))
     assert(report.quarantined == 2)
+  }
+
+  test("E1: run's status counts equal Stats.statusCounts over the table") {
+    // U+FF5A sorts after U+1F600 in String (UTF-16) order but before it
+    // in Spark's (UTF-8 byte) order
+    val (_, out, report) = runOn(Seq(
+      "t01,u01,10.00,2024-01-01,\uff5a",
+      "t02,u02,20.00,2024-01-02,\ud83d\ude00",
+      "t03,u03,30.00,2024-01-03,completed"))
+    assert(report.statusCounts.map(_._1) ==
+      Seq("completed", "\uff5a", "\ud83d\ude00"))
+    assert(report.statusCounts == Stats.statusCounts(
+      spark.read.parquet(s"$out/transactions")).collect().toSeq
+      .map(r => (r.getString(0), r.getLong(1))))
   }
 
   test("E1: run on a header-only CSV completes and reports zeros") {
